@@ -18,7 +18,6 @@ import os
 import time
 import urllib.request
 from contextlib import contextmanager
-from datetime import datetime, timezone
 
 _TICK = os.sysconf("SC_CLK_TCK")
 
@@ -89,12 +88,6 @@ class ProcMeter:
                 continue
 
 
-def _ts(s: str) -> float:
-    return datetime.strptime(s, "%Y-%m-%dT%H:%M:%S.%f%Z").replace(
-        tzinfo=timezone.utc
-    ).timestamp()
-
-
 class StageScraper:
     """Reads jobs and stages from the status REST API of a session
     started with ``spark.ui.enabled=true``."""
@@ -156,44 +149,41 @@ class StageScraper:
                 t["shuffle_bytes"] += s["shuffleWriteBytes"]
         return out
 
-    def stage_windows(self, groups) -> list[tuple[float, float, float]]:
-        """(submission, completion, task_s, shuffle_bytes) of every stage
-        that ran for ``groups`` — for attributing stages by time."""
-        jobs, stages = self.settle(groups)
-        sids = {sid for j in jobs for sid in j["stageIds"]}
-        return [
-            (_ts(s["submissionTime"]), _ts(s["completionTime"]),
-             s["executorRunTime"] / 1000.0, s["shuffleWriteBytes"])
-            for sid, s in stages.items()
-            if sid in sids and s["status"] == "COMPLETE"
-        ]
-
 
 class Tracer:
+    """``own_s`` is the time the tracer itself took inside the pass
+    (setting job groups and recording spans): the overhead it adds."""
+
     def __init__(self, spark, pass_id: str):
+        t0 = time.perf_counter()
         self.sc = spark.sparkContext
         self.pass_id = pass_id
         self.spans: list[dict] = []
         self._stack: list[str] = []
         self.glue = f"{pass_id}:-"
         self.sc.setJobGroup(self.glue, "benchmark glue")
+        self.own_s = time.perf_counter() - t0
 
     @contextmanager
     def span(self, name: str):
+        t0 = time.perf_counter()
         group = f"{self.pass_id}:{name}"
         rec = {"name": name, "pass": self.pass_id, "group": group,
                "parent": self._stack[-1] if self._stack else None,
                "start": time.time()}
         self._stack.append(name)
         self.sc.setJobGroup(group, name)
+        self.own_s += time.perf_counter() - t0
         try:
             yield rec
         finally:
+            t0 = time.perf_counter()
             rec["end"] = time.time()
             self._stack.pop()
             outer = f"{self.pass_id}:{self._stack[-1]}" if self._stack else self.glue
             self.sc.setJobGroup(outer, "benchmark")
             self.spans.append(rec)
+            self.own_s += time.perf_counter() - t0
 
     def groups(self) -> list[str]:
         return [self.glue] + [s["group"] for s in self.spans]

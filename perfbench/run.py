@@ -2,17 +2,17 @@
 """smaph_spark benchmark: one command, every end-to-end metric, output
 checks, and a traced run for the per-layer metrics.
 
-    python3 perfbench/run.py --workload er_batch --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload er --seed 1 --seconds 8 --trace 0
 
 Run it from the repository root. One driver process runs Spark in
 ``local[4]`` as a closed loop: the next pass starts only after the
 previous one returned. ``--trace 0`` prints the end-to-end metrics of
-BENCHMARK.json; ``--trace 1`` runs with the Spark UI on, traces spans
-around the public calls into each layer and prints the per-layer
-metrics. The last line of stdout is the result object; the line before
-it (``perfbench-report``) carries the details: samples, sizing counts,
-pairwise F1, throughput, persisted RDDs and any failed check. The exit
-code is non-zero when any output check fails.
+BENCHMARK.json; ``--trace 1`` runs with the Spark UI on, traces every
+pass with spans around the public calls into each layer and prints the
+per-layer metrics. The last line of stdout is the result object; the
+line before it (``perfbench-report``) carries the details: samples,
+sizing counts, pairwise F1, throughput, persisted RDDs and any failed
+check. The exit code is non-zero when any output check fails.
 
 All inputs, Spark scratch space and temp files live under
 ``perfbench/_work``.
@@ -33,19 +33,15 @@ ROOT = os.path.dirname(HERE)
 WORK = os.path.join(HERE, "_work")
 
 # sizes: "default" is what the benchmark measures, "tiny" is the
-# self-test's. cc_local_threshold sits between the two ER workloads'
-# edge counts: er_batch's match graph is larger (distributed CC),
-# er_incremental's delta matches plus history pseudo-edges smaller
-# (driver union-find), as with the default threshold at full scale.
+# self-test's. cc_local_threshold sits between the ER workload's two
+# edge counts: the batch run's match graph is larger (distributed CC),
+# a delta's matches plus the history pseudo-edges smaller (driver
+# union-find), as with the default threshold at full scale.
 SIZES = {
-    "default": {"sf": 0.01, "batch_pairs": 5000, "incremental_pairs": 5000,
-                "cc_local_threshold": 3000},
-    "tiny": {"sf": 0.002, "batch_pairs": 1200, "incremental_pairs": 1200,
-             "cc_local_threshold": 1000},
+    "default": {"sf": 0.01, "er_pairs": 5000, "cc_local_threshold": 2000},
+    "tiny": {"sf": 0.002, "er_pairs": 1200, "cc_local_threshold": 500},
 }
-SETUP_REPS = 3
 CORES = 4
-DRIVER_MEM = "2g"
 
 
 def _parse(argv):
@@ -68,7 +64,6 @@ def _environment() -> None:
     os.makedirs(tmp, exist_ok=True)
     os.environ["TMPDIR"] = tmp
     os.environ["SMAPH_SPARK_LOCAL_DIR"] = os.path.join(WORK, "spark-local")
-    os.environ["SMAPH_DRIVER_MEM"] = DRIVER_MEM
     os.environ["SPARK_GRAFT_CPUS"] = str(CORES)
     os.environ["PYSPARK_PYTHON"] = sys.executable
     os.environ["PYTHONPATH"] = os.pathsep.join(
@@ -81,12 +76,8 @@ def _session(trace: bool):
 
     conf = {
         "spark.ui.showConsoleProgress": "false",
-        # a heap committed and touched up front: the JVM's resident size
-        # then no longer follows GC timing, which swung peak_rss_mb by
-        # +-20% between identical runs
         "spark.driver.extraJavaOptions":
-            f"-Djava.io.tmpdir={os.path.join(WORK, 'tmp')} "
-            f"-Xms{DRIVER_MEM} -XX:+AlwaysPreTouch",
+            f"-Djava.io.tmpdir={os.path.join(WORK, 'tmp')}",
         "spark.sql.warehouse.dir": os.path.join(WORK, "warehouse"),
         "spark.driver.host": "127.0.0.1",
         "spark.driver.bindAddress": "127.0.0.1",
@@ -116,19 +107,16 @@ def _warm_up(spark) -> None:
 
 
 def _setup(wl, trace: bool) -> tuple:
-    """Start the session once, then load the artifacts and warm up
-    SETUP_REPS times. Returns (session, session start seconds, per-rep
+    """Start the session, load the artifacts and warm up. Returns
+    (session, session start seconds, artifact load and warm-up
     seconds)."""
     t0 = time.perf_counter()
     spark = _session(trace)
     session_s = time.perf_counter() - t0
-    reps = []
-    for _ in range(SETUP_REPS):
-        t0 = time.perf_counter()
-        wl.load_artifacts(spark)
-        _warm_up(spark)
-        reps.append(time.perf_counter() - t0)
-    return spark, session_s, reps
+    t0 = time.perf_counter()
+    wl.load_artifacts(spark)
+    _warm_up(spark)
+    return spark, session_s, time.perf_counter() - t0
 
 
 def _quartiles(xs):
@@ -165,24 +153,24 @@ def main(argv=None) -> int:
     meter = ProcMeter()
     wl = W.WORKLOADS[args.workload](SIZES[args.size], args.seed, WORK,
                                     checks, pins, meter)
-    spark, session_s, setup_reps = _setup(wl, bool(args.trace))
+    spark, session_s, load_s = _setup(wl, bool(args.trace))
+    t0 = time.perf_counter()
     wl.prepare(spark)  # input generation: not part of set-up time
-    setup_s = session_s + W.median(setup_reps) + wl.timed_setup(spark)
+    prepare_s = time.perf_counter() - t0
+    setup_s = session_s + load_s + wl.timed_setup(spark)
     # a warm-up pass whose checks failed is one failed operation
     attempted = failed = checks.failed_ops()
     passes, rdds, spans = [], [], []
     scraper = StageScraper(spark) if args.trace else None
     meter.reset_peak()
     t_start = time.perf_counter()
-    # trace runs alternate untraced and traced passes after the first
-    # (untraced) one; the warm untraced passes are the overhead reference
-    i, min_passes = 0, max(wl.min_passes, 3 if args.trace else 1)
-    while i < min_passes or time.perf_counter() - t_start < args.seconds:
+    i = 0
+    while i < wl.min_passes or time.perf_counter() - t_start < args.seconds:
         W.clear_pass_state(spark)
         n_failures = len(checks.failures)
         checks.op = f"pass {i}"
         attempted += wl.ops_per_pass
-        traced = bool(args.trace) and i % 2 == 1
+        traced = bool(args.trace)
         raised = False
         try:
             if traced:
@@ -204,27 +192,26 @@ def main(argv=None) -> int:
     peak_rss = sum(mb for _, mb in rss_by_name.values())
     spark.stop()
 
-    untraced = [p for p in passes if "layer" not in p]
-    walls = [p["wall_s"] for p in untraced]
-    layers = [_layer_metrics(p, W.median(walls[1:] or walls))
-              for p in passes if "layer" in p]
+    walls = [p["wall_s"] for p in passes]
+    layers = [_layer_metrics(p) for p in passes if "layer" in p]
     report = {
         "workload": args.workload, "seed": args.seed, "size": args.size,
-        "trace": args.trace, "passes": len(untraced),
+        "trace": args.trace, "passes": len(passes),
         "wall_s": {"median": W.median(walls), "quartiles": _quartiles(walls),
                    "samples": walls},
-        "cpu_s_samples": [p["cpu_s"] for p in untraced],
+        "cpu_s_samples": [p["cpu_s"] for p in passes if "cpu_s" in p],
         "setup_s": setup_s, "session_start_s": session_s,
-        "setup_rep_s": setup_reps,
+        "load_and_warm_up_s": load_s, "input_generation_s": prepare_s,
         "failed_frac": failed / attempted,
         "peak_rss_by_process": rss_by_name,
         "persisted_rdds": rdds, "facts": wl.facts, "digests": wl.digests(),
         "failures": [f"{op}: {what}" for op, what in checks.failures],
     }
-    for k in ("records", "pair_wall_s", "relational_wall_s"):
-        if untraced and k in untraced[0]:
-            report[k] = W.median([p[k] for p in untraced])
-    if "records" in report:
+    for k in ("records", "batch_wall_s", "delta_wall_s", "pair_wall_s",
+              "relational_wall_s"):
+        if any(k in p for p in passes):
+            report[k] = W.median([p[k] for p in passes if k in p])
+    if "records" in report and walls:
         report["records_per_s"] = report["records"] / W.median(walls)
     print("perfbench-report " + json.dumps(report, default=str), flush=True)
 
@@ -250,7 +237,7 @@ def main(argv=None) -> int:
     return 0 if correct else 1
 
 
-def _layer_metrics(tp: dict, reference_wall: float) -> dict:
+def _layer_metrics(tp: dict) -> dict:
     """Per-layer values of one traced pass, plus its Spark totals."""
     layer = dict(tp["layer"])
     totals = tp["totals"].values()
@@ -259,7 +246,7 @@ def _layer_metrics(tp: dict, reference_wall: float) -> dict:
         layer[f"spark.{k}"] = sum(t[k] for t in totals)
     layer["spark.task_s"] = task_s
     layer["trace.coverage"] = tp["covered"] / task_s if task_s else 0.0
-    layer["trace.overhead_s"] = tp["wall_s"] - reference_wall
+    layer["trace.overhead_s"] = tp["tracer_s"]
     return layer
 
 

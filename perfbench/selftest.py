@@ -2,8 +2,8 @@
 """Self-test of the benchmark at tiny size (sf0.002 star tables, a
 300-cluster files corpus), seed 0:
 
-* every workload of BENCHMARK.json, and ``er_incremental``, runs
-  untraced and traced, exits 0 with ``correct: true``, and prints
+* every workload of BENCHMARK.json runs untraced and traced, exits 0
+  with ``correct: true``, and prints
   exactly the end-to-end (untraced) or per-layer (traced) metrics
   BENCHMARK.json names, each with its unit;
 * a tampered pinned digest makes the command fail.
@@ -50,15 +50,12 @@ def _fail(msg: str) -> None:
 def main() -> None:
     with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
         bench = json.load(fh)
-    names = [w["name"] for w in bench["workloads"]] + ["er_incremental"]
+    names = [w["name"] for w in bench["workloads"]]
     want = {0: {m["name"]: m["unit"] for m in bench["end_to_end"]},
             1: {m["name"]: m["unit"] for m in bench["per_layer"]}}
 
     if "--repin" in sys.argv:
         pins = {}
-        if os.path.exists(EXPECTED):
-            with open(EXPECTED) as fh:
-                pins = json.load(fh)
         for w in names:
             code, report, _ = _run(w, 0, expected="")
             if code != 0:
