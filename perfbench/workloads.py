@@ -71,14 +71,14 @@ def per_layer_names() -> list[tuple[str, str]]:
     return [(n, _UNITS.get(n.split(".", 1)[1], "count")) for n in names]
 
 
-def round_floats(pdf, digits: int = FLOAT_DIGITS):
-    """Float columns rounded to ``digits`` significant digits: Spark
+def round_floats(pdf):
+    """Float columns rounded to FLOAT_DIGITS significant digits: Spark
     merges partial double sums in shuffle-fetch order, so their last
     bits are not fixed from run to run."""
     pdf = pdf.copy()
     for c in pdf.columns:
         if pdf[c].dtype.kind == "f":
-            pdf[c] = [float(f"{v:.{digits}g}") for v in pdf[c]]
+            pdf[c] = [float(f"{v:.{FLOAT_DIGITS}g}") for v in pdf[c]]
     return pdf
 
 
@@ -149,7 +149,6 @@ class ER:
     name = "er"
     f1_floor = 0.99
     ops_per_pass = 2   # the batch run and the delta batch
-    min_passes = 1
     n_buckets = 50     # one bucket = 2% of the corpus
     n_deltas = 10
     warm_bucket = 10
@@ -443,7 +442,6 @@ class Registry:
     name = "registry"
     queries = PAIR_QUERIES + RELATIONAL_QUERIES
     ops_per_pass = len(queries)
-    min_passes = 1
 
     def __init__(self, size: dict, seed: int, work: str, checks: Checks,
                  expected: dict, meter):
