@@ -437,7 +437,7 @@ class Registry:
     the driver. The order is fixed: the first queries after set-up pay
     the JVM's and the Python workers' first-touch costs, and a
     seed-shuffled order moved ~5 s of that between queries, swinging
-    the sweep between 43 and 53 s over five seeds."""
+    the sweep between 43 and 53 s over five seeds on a 4-core host."""
 
     name = "registry"
     queries = PAIR_QUERIES + RELATIONAL_QUERIES
