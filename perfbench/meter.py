@@ -2,7 +2,8 @@
 
 * ``ProcMeter``: CPU seconds and peak resident memory of the Spark JVM
   plus its Python workers, read from ``/proc`` for every descendant of
-  this process (the benchmark's own Python is excluded).
+  this process (the benchmark's own Python is excluded). The same
+  process list lets the run wait, at its end, until each has ended.
 * ``StageScraper``: per-job-group task seconds, shuffle bytes and
   job/stage/task counts from Spark's status REST API. Any failure to
   reach the API or to see a job settle raises.
@@ -37,6 +38,28 @@ def _children_map() -> dict[int, list[int]]:
     return kids
 
 
+def _start_time(pid: int) -> str | None:
+    """Start time of a live process, None once it has ended (a zombie
+    has ended too: only reaping is left, by its parent or by init)."""
+    try:
+        with open(f"/proc/{pid}/stat") as fh:
+            f = fh.read().rsplit(")", 1)[1].split()
+    except OSError:
+        return None
+    return None if f[0] in ("Z", "X") else f[19]
+
+
+def wait_ended(procs: dict[int, str], timeout: float) -> dict[int, str]:
+    """Wait up to ``timeout`` seconds for the processes of
+    ``ProcMeter.started`` to end; return those still running."""
+    deadline = time.monotonic() + timeout
+    while True:
+        alive = {p: s for p, s in procs.items() if _start_time(p) == s}
+        if not alive or time.monotonic() > deadline:
+            return alive
+        time.sleep(0.05)
+
+
 class ProcMeter:
     def __init__(self, root_pid: int | None = None):
         self.root = root_pid or os.getpid()
@@ -47,6 +70,16 @@ class ProcMeter:
             for c in kids.get(todo.pop(), []):
                 out.append(c)
                 todo.append(c)
+        return out
+
+    def started(self) -> dict[int, str]:
+        """{pid: start time} of every live descendant; the start time
+        tells a process from a later one that reuses its pid."""
+        out = {}
+        for pid in self.pids():
+            start = _start_time(pid)
+            if start is not None:
+                out[pid] = start
         return out
 
     def cpu_s(self) -> float:

@@ -23,7 +23,9 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import signal
 import statistics
+import subprocess
 import sys
 import time
 import traceback
@@ -138,7 +140,7 @@ def main(argv=None) -> int:
     _environment()
 
     from perfbench import workloads as W
-    from perfbench.meter import ProcMeter, StageScraper, Tracer
+    from perfbench.meter import ProcMeter
 
     if args.workload not in W.WORKLOADS:
         print(f"perfbench: unknown workload {args.workload!r}; "
@@ -149,8 +151,64 @@ def main(argv=None) -> int:
         with open(args.expected) as fh:
             pins = json.load(fh).get(
                 f"{args.size}/{args.seed}/{args.workload}", {})
-    checks = W.Checks()
     meter = ProcMeter()
+    # a terminated run still stops what it started, in the finally below
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(128 + signal.SIGTERM))
+    try:
+        return _run(args, pins, meter)
+    finally:
+        _stop_processes(meter)
+
+
+def _stop_processes(meter, grace: float = 30.0) -> None:
+    """Stop the Spark session and its JVM, and wait until every process
+    this run started has ended, on every path out of ``main``.
+    ``SparkSession.stop`` leaves the JVM up (it exits only once it sees
+    EOF on its stdin), and the Python workers it forked outlive it
+    briefly; whatever is still running after ``grace`` seconds is
+    killed."""
+    from pyspark import SparkContext
+    from perfbench.meter import wait_ended
+
+    procs = meter.started()
+    sc = SparkContext._active_spark_context
+    if sc is not None:
+        try:
+            sc.stop()
+        except Exception:
+            traceback.print_exc()
+    gateway = SparkContext._gateway
+    jvm = getattr(gateway, "proc", None)
+    if gateway is not None:
+        try:
+            gateway.shutdown()
+        except Exception:
+            traceback.print_exc()
+    if jvm is not None:
+        if jvm.stdin is not None:
+            jvm.stdin.close()
+        try:
+            jvm.wait(timeout=grace)
+        except subprocess.TimeoutExpired:
+            jvm.kill()
+            jvm.wait()
+    left = wait_ended(procs, grace)
+    for pid in left:
+        try:
+            os.kill(pid, signal.SIGKILL)
+        except OSError:
+            pass
+    left = wait_ended(left, grace)
+    if left:
+        print(f"perfbench: processes still running: {sorted(left)}",
+              file=sys.stderr)
+
+
+def _run(args, pins, meter) -> int:
+    from perfbench import workloads as W
+    from perfbench.meter import StageScraper, Tracer
+
+    checks = W.Checks()
     wl = W.WORKLOADS[args.workload](SIZES[args.size], args.seed, WORK,
                                     checks, pins, meter)
     spark, session_s, load_s = _setup(wl, bool(args.trace))
