@@ -48,8 +48,6 @@ class ERConfig:
                                      # always takes that path.
 
     # --- execution ------------------------------------------------------------
-    pair_repartition: int | None = None  # override shuffle width for the
-                                         # block self-join (None → session)
     broadcast_payload: bool = True       # broadcast the per-record pair
                                          # payload into the feature joins
                                          # (disable at >~1e9 records and

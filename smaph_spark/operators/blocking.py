@@ -16,6 +16,13 @@ Skew control (north_rule, and SURVEY §4 item 1): a popular path
 (bounded recall loss, counted and logged like the reference logs its
 binding caps — DefaultBindingGenerator.java:135-136); blocks larger
 than ``max_block_size * block_salt_buckets`` are dropped entirely.
+
+The cap is shared: the standalone band self-joins (dedup dd03
+``minhash_lsh_pairs``, dd04 ``simhash_pairs``, dd06
+``cosine_near_dup_lsh``, dd09 ``cdc_containment_pairs``) cap their
+``(block_key, record_id)`` frames through ``cap_and_salt_blocks`` and
+summarise the metrics with ``cap_counts``, then pair through
+``pairs.block_pairs`` and ``pairs.attach_sides`` like the ER pipeline.
 """
 
 from __future__ import annotations
@@ -73,11 +80,18 @@ def generate_blocks(normalized: DataFrame, cfg: ERConfig) -> DataFrame:
 def cap_and_salt_blocks(
     blocks: DataFrame, cfg: ERConfig
 ) -> tuple[DataFrame, DataFrame]:
-    """Apply the frequency cap (F3 analogue) and salting.
+    """blocks(block_key, record_id) -> (salted(join_key, block_key,
+    record_id), block_metrics): the frequency cap (F3 analogue) and
+    salting.
 
-    Returns (salted_blocks with column ``join_key``, block_metrics).
     block_metrics has one row per affected block: (block_key, n_records,
     action ∈ {salted, dropped}) — "no silent caps".
+
+    The key is cast to STRING up front: the salted key is built as
+    `key#bucket`, and with a non-string key (dd09's long chunk hashes)
+    ANSI type coercion would resolve the when/otherwise to the key's
+    type and throw CAST_INVALID_INPUT the moment any key actually lands
+    in the salted band (round-4 review — reproduced).
     """
     # ONE shuffle (round-6): the per-key count rides a window over the
     # key partitioning instead of a separate groupBy + self-join (two
@@ -87,7 +101,9 @@ def cap_and_salt_blocks(
     # dropped; the window would have kept them as one NULL block).
     from pyspark.sql import Window as W
 
-    blocks = blocks.filter(F.col("block_key").isNotNull())
+    blocks = blocks.withColumn(
+        "block_key", F.col("block_key").cast("string")
+    ).filter(F.col("block_key").isNotNull())
     enriched = blocks.withColumn(
         "n_records", F.count("*").over(W.partitionBy("block_key"))
     )
@@ -123,3 +139,15 @@ def cap_and_salt_blocks(
         ),
     ).select("join_key", "block_key", "record_id")
     return salted, metrics
+
+
+def cap_counts(block_metrics: DataFrame) -> tuple[int, int, int]:
+    """(salted keys, dropped keys, records in dropped keys) of a
+    ``cap_and_salt_blocks`` metrics frame, in one collect."""
+    action = F.col("action")
+    row = block_metrics.agg(
+        F.count_if(action == "salted"),
+        F.count_if(action == "dropped"),
+        F.sum(F.when(action == "dropped", F.col("n_records"))),
+    ).first()
+    return int(row[0]), int(row[1]), int(row[2] or 0)

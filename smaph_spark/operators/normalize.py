@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from smaph_spark.config import ERConfig
-from smaph_spark.plans.star_queries import WS_RE
+from smaph_spark.plans.star_queries import WS_RE, widen
 
 _MERSENNE = np.uint64((1 << 61) - 1)
 
@@ -140,14 +140,7 @@ def normalize_files(files: DataFrame, cfg: ERConfig) -> DataFrame:
     read"). On a real cluster with many input splits the repartition
     is a no-op; the width tracks defaultParallelism, never a local
     constant."""
-    spark = files.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    try:
-        n_parts = files.rdd.getNumPartitions()
-    except Exception:
-        n_parts = target
-    if n_parts < target:
-        files = files.repartition(target)
+    files = widen(files)
     minhash_udf = make_minhash_udf(cfg)
     norm_content = F.lower(F.regexp_replace(F.col("content"), WS_RE, " "))
     base = (

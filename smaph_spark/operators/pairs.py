@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -41,20 +41,10 @@ FEATURE_COLS = [
 
 
 @F.pandas_udf(T.DoubleType())
-def _jw_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    return pd.Series(K.jaro_winkler_batch(a.to_numpy(), b.to_numpy()))
-
-
-@F.pandas_udf(T.DoubleType())
-def _ned_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    return pd.Series(K.norm_edit_distance_batch(a.to_numpy(), b.to_numpy()))
-
-
-@F.pandas_udf(T.DoubleType())
 def _minhash_agree_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Positional minhash agreement via numpy (used where the arrays
-    are already Python-side). For the hot pair path use
-    :func:`minhash_agreement_col` instead — it never leaves the JVM."""
+    """Positional minhash agreement rate via numpy — the unbiased
+    MinHash Jaccard estimate (dd03's rerank). The ER pair path computes
+    the same value inside :func:`_pair_kernel_udf`."""
     A = np.stack(a.to_numpy())
     B = np.stack(b.to_numpy())
     return pd.Series((A == B).mean(axis=1))
@@ -94,47 +84,55 @@ def _pair_kernel_udf(
     )
 
 
-def minhash_agreement_col(l: str, r: str):
-    """Minhash agreement rate as a pure JVM column expression:
-    |array_intersect| / |array|. For minhash signatures, shared values
-    across DIFFERENT permutation slots are ~impossible (64-bit values),
-    so set intersection equals positional agreement w.h.p. — and the
-    arrays stay inside whole-stage codegen instead of crossing Arrow
-    (20 GB of signature traffic at 10M pairs measured as the pair-stage
-    bottleneck)."""
-    return F.coalesce(
-        F.try_divide(
-            F.size(F.array_intersect(F.col(l), F.col(r))).cast("double"),
-            F.size(F.col(l)).cast("double"),
-        ),
-        F.lit(0.0),
+def block_pairs(salted: DataFrame, *aggs: Column) -> DataFrame:
+    """salted(join_key, block_key, record_id) -> one row per pair
+    (left_id, right_id[, *aggs]) — THE key self-join of the ER pipeline
+    and of the standalone band/chunk joins (dedup dd03/dd04/dd06/dd09).
+
+    Self-equi-join on the (salted) key; `<` dedups the unordered pair
+    inside a key; pairs met under several keys collapse to one row:
+    ``distinct`` without aggregates, else grouped by the pair with the
+    caller's aggregates over the matching keys (ER keeps
+    ``min(block_key)``, dd09 counts shared chunks).
+    """
+    left = salted.select(
+        "join_key", "block_key", F.col("record_id").alias("left_id")
     )
+    right = salted.select("join_key", F.col("record_id").alias("right_id"))
+    joined = left.join(right, "join_key").filter(
+        F.col("left_id") < F.col("right_id")
+    )
+    if not aggs:
+        return joined.select("left_id", "right_id").distinct()
+    return joined.groupBy("left_id", "right_id").agg(*aggs)
+
+
+def attach_sides(pairs: DataFrame, payload: DataFrame) -> DataFrame:
+    """pairs(left_id, right_id, ...) + payload(record_id, c, ...) ->
+    pairs + ``l_<c>`` and ``r_<c>`` for every payload column c, by two
+    inner joins keyed on left_id and right_id (a broadcast hint on
+    ``payload`` carries through to both)."""
+    cols = [c for c in payload.columns if c != "record_id"]
+    for side, key in (("l", "left_id"), ("r", "right_id")):
+        pairs = pairs.join(
+            payload.select(
+                F.col("record_id").alias(key),
+                *[F.col(c).alias(f"{side}_{c}") for c in cols],
+            ),
+            key,
+        )
+    return pairs
 
 
 def generate_pairs(salted_blocks: DataFrame, cfg: ERConfig) -> DataFrame:
     """salted_blocks(join_key, block_key, record_id) ->
     pairs(left_id, right_id, block_key).
 
-    Self-equi-join on the salted key; `<` dedups the unordered pair
-    inside a block; dropDuplicates dedups across key families (J1).
     block_key kept = the first key (min) that produced the pair, for
-    the same-block pairwise-F1 contract.
+    the same-block pairwise-F1 contract; the per-pair groupBy also
+    dedups across key families (J1).
     """
-    left = salted_blocks.select(
-        F.col("join_key"),
-        F.col("block_key"),
-        F.col("record_id").alias("left_id"),
-    )
-    right = salted_blocks.select(
-        F.col("join_key"), F.col("record_id").alias("right_id")
-    )
-    pairs = (
-        left.join(right, "join_key")
-        .filter(F.col("left_id") < F.col("right_id"))
-        .groupBy("left_id", "right_id")
-        .agg(F.min("block_key").alias("block_key"))
-    )
-    return pairs
+    return block_pairs(salted_blocks, F.min("block_key").alias("block_key"))
 
 
 def attach_pair_features(
@@ -170,13 +168,7 @@ def attach_pair_features(
         # up to ~1 GB; at 10^12 rows set broadcast_payload=False and
         # pre-bucket `normalized` on record_id instead.
         payload = F.broadcast(payload)
-    l = payload.select([F.col(c).alias(f"l_{c}") for c in payload.columns])
-    r = payload.select([F.col(c).alias(f"r_{c}") for c in payload.columns])
-    df = (
-        pairs.join(l, pairs.left_id == l.l_record_id)
-        .join(r, pairs.right_id == r.r_record_id)
-        .drop("l_record_id", "r_record_id")
-    )
+    df = attach_sides(pairs, payload)
     # try_divide: empty/null content makes the denominators 0 — ANSI mode
     # (Spark 4 default) would throw DIVIDE_BY_ZERO on plain `/`
     df = (

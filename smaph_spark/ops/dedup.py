@@ -21,8 +21,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from smaph_spark.config import ERConfig
-from smaph_spark.operators.blocking import cap_and_salt_blocks
+from smaph_spark.operators.blocking import cap_and_salt_blocks, cap_counts
 from smaph_spark.operators.normalize import make_minhash_udf
+from smaph_spark.operators.pairs import (
+    _minhash_agree_udf, attach_sides, block_pairs,
+)
 from smaph_spark.plans.star_queries import WS_RE, load, register, widen
 
 
@@ -36,55 +39,41 @@ CAP_METRICS: dict[str, dict] = {}
 
 
 def log_cap_metrics(query: str, metrics: DataFrame) -> dict:
-    """Aggregate a cap_band_keys metrics frame and LOG it (round-2
+    """Summarise a cap_and_salt_blocks metrics frame and LOG it (round-2
     VERDICT: dd03/dd04/dd06 computed these counts and discarded them —
     a silent cap). Returns the summary and records it in CAP_METRICS
     for callers/tests."""
-    acts = {
-        r["action"]: (int(r["n"]), int(r["records"]))
-        for r in metrics.groupBy("action")
-        .agg(F.count("*").alias("n"), F.sum("n_records").alias("records"))
-        .collect()
-    }
-    out = {
-        "salted_band_keys": acts.get("salted", (0, 0))[0],
-        "dropped_band_keys": acts.get("dropped", (0, 0))[0],
-        "records_in_dropped_bands": acts.get("dropped", (0, 0))[1],
-    }
+    out = dict(zip(
+        ("salted_band_keys", "dropped_band_keys", "records_in_dropped_bands"),
+        cap_counts(metrics),
+    ))
     CAP_METRICS[query] = out
     level = logging.WARNING if out["dropped_band_keys"] else logging.INFO
     _LOG.log(level, "%s band-cap metrics: %s", query, out)
     return out
 
 
-def cap_band_keys(
-    keys: DataFrame, cfg: ERConfig, key_col: str, id_col: str
-) -> tuple[DataFrame, DataFrame]:
-    """Hot-key guard for standalone band self-joins (round-1 VERDICT:
-    dd03/dd04 skipped the ER pipeline's skew cap, so one degenerate
-    band key went quadratic). Reuses cap_and_salt_blocks (blocking.py):
-    oversized bands are salted into sub-buckets, pathological ones
-    dropped — both logged in the returned metrics frame (block_key,
-    n_records, action), never silently. Salting trades bounded recall
-    for a hard O(max_block_size²) per-band pair bound, same contract as
-    the ER blocking stage.
+def bit_band_blocks(
+    sigs: DataFrame, sig: str, n_bands: int, bits: int
+) -> DataFrame:
+    """sigs(record_id, <sig> long) -> blocks(record_id, block_key), one
+    row per band: ``"<i>:" + ((sig >>> bits*i) & mask)`` for i <
+    n_bands — dd04's 4×16-bit SimHash chunks and dd06's hyperplane
+    bands."""
+    mask = (1 << bits) - 1
+    keys = F.array(
+        *[
+            F.concat(
+                F.lit(f"{i}:"),
+                F.shiftrightunsigned(sig, bits * i)
+                .bitwiseAND(F.lit(mask))
+                .cast("string"),
+            )
+            for i in range(n_bands)
+        ]
+    )
+    return sigs.select("record_id", F.explode(keys).alias("block_key"))
 
-    The key is cast to STRING up front: cap_and_salt_blocks builds the
-    salted key as `key#bucket`, and with a non-string key (dd09's long
-    chunk hashes) ANSI type coercion would resolve the when/otherwise
-    to the key's type and throw CAST_INVALID_INPUT the moment any key
-    actually lands in the salted band (round-4 review — reproduced)."""
-    blocks = keys.select(
-        F.col(key_col).cast("string").alias("block_key"),
-        F.col(id_col).alias("record_id"),
-    )
-    salted, metrics = cap_and_salt_blocks(blocks, cfg)
-    return (
-        salted.select(
-            F.col("join_key").alias(key_col), F.col("record_id").alias(id_col)
-        ),
-        metrics,
-    )
 
 # ---------------------------------------------------------------------------
 # exact dedup — hash groupBy
@@ -243,40 +232,30 @@ def minhash_lsh_pairs(
 ) -> tuple[DataFrame, DataFrame]:
     """fp(doc_id, minhash, bands) -> (pairs, cap_metrics).
 
-    Band self-join guarded by the hot-key cap (cap_band_keys) so a
-    degenerate band key stays bounded; estimated Jaccard from the full
+    Band self-join guarded by the hot-key cap (cap_and_salt_blocks) so
+    a degenerate band key stays bounded; estimated Jaccard from the full
     signatures is the rerank."""
     keys = fp.select(
-        "doc_id",
+        F.col("doc_id").alias("record_id"),
         F.explode(
             F.zip_with(
                 "bands",
                 F.array([F.lit(i) for i in range(cfg.lsh_bands)]),
                 lambda h, i: F.concat(i.cast("string"), F.lit(":"), h.cast("string")),
             )
-        ).alias("band_key"),
+        ).alias("block_key"),
     )
-    capped, cap_metrics = cap_band_keys(
-        keys, cfg, key_col="band_key", id_col="doc_id"
-    )
-    a = capped.select(F.col("doc_id").alias("a_doc"), "band_key")
-    b = capped.select(F.col("doc_id").alias("b_doc"), "band_key")
-    cand = (
-        a.join(b, "band_key")
-        .filter(F.col("a_doc") < F.col("b_doc"))
-        .select("a_doc", "b_doc")
-        .distinct()
-    )
-    from smaph_spark.operators.pairs import _minhash_agree_udf
-
-    pa = fp.select(F.col("doc_id").alias("a_doc"), F.col("minhash").alias("a_mh"))
-    pb = fp.select(F.col("doc_id").alias("b_doc"), F.col("minhash").alias("b_mh"))
+    salted, cap_metrics = cap_and_salt_blocks(keys, cfg)
+    payload = fp.select(F.col("doc_id").alias("record_id"), "minhash")
     pairs = (
-        cand.join(pa, "a_doc")
-        .join(pb, "b_doc")
-        .withColumn("jaccard_est", _minhash_agree_udf("a_mh", "b_mh"))
+        attach_sides(block_pairs(salted), payload)
+        .withColumn("jaccard_est", _minhash_agree_udf("l_minhash", "r_minhash"))
         .filter(F.col("jaccard_est") >= 0.5)
-        .select("a_doc", "b_doc", F.round("jaccard_est", 4).alias("jaccard_est"))
+        .select(
+            F.col("left_id").alias("a_doc"),
+            F.col("right_id").alias("b_doc"),
+            F.round("jaccard_est", 4).alias("jaccard_est"),
+        )
     )
     return pairs, cap_metrics
 
@@ -341,37 +320,18 @@ def simhash_pairs(
 ) -> tuple[DataFrame, DataFrame]:
     """sig(doc_id, sim) -> (pairs, cap_metrics). Banded hamming join on
     4×16-bit chunks, hot-chunk keys capped/salted like dd03."""
-    chunks = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.concat(
-                        F.lit(f"{c}:"),
-                        F.shiftrightunsigned("sim", 16 * c)
-                        .bitwiseAND(F.lit(0xFFFF))
-                        .cast("string"),
-                    )
-                    for c in range(4)
-                ]
-            )
-        ).alias("chunk_key"),
+    sig = sig.select(F.col("doc_id").alias("record_id"), "sim")
+    salted, cap_metrics = cap_and_salt_blocks(
+        bit_band_blocks(sig, "sim", 4, 16), cfg
     )
-    capped, cap_metrics = cap_band_keys(
-        chunks, cfg, key_col="chunk_key", id_col="doc_id"
-    )
-    a = capped.join(sig, "doc_id").select(
-        F.col("doc_id").alias("a_doc"), F.col("sim").alias("a_sim"), "chunk_key"
-    )
-    b = capped.join(sig, "doc_id").select(
-        F.col("doc_id").alias("b_doc"), F.col("sim").alias("b_sim"), "chunk_key"
-    )
-    ham = F.bit_count(F.col("a_sim").bitwiseXOR(F.col("b_sim")))
+    ham = F.bit_count(F.col("l_sim").bitwiseXOR(F.col("r_sim")))
     pairs = (
-        a.join(b, "chunk_key")
-        .filter(F.col("a_doc") < F.col("b_doc"))
-        .select("a_doc", "b_doc", ham.alias("hamming"))
-        .distinct()
+        attach_sides(block_pairs(salted), sig)
+        .select(
+            F.col("left_id").alias("a_doc"),
+            F.col("right_id").alias("b_doc"),
+            ham.alias("hamming"),
+        )
         .filter(F.col("hamming") <= max_hamming)
     )
     return pairs, cap_metrics
@@ -580,46 +540,22 @@ def cosine_near_dup_lsh(
         # (round-2 VERDICT), cheap but a needless job at scale
         dim = len(e.select(emb_col).first()[0])
     sig_udf = make_hyperplane_udf(dim=dim, n_planes=n_planes)
-    n_bands = n_planes // band_bits
-    mask = (1 << band_bits) - 1
     sig = e.select(
-        F.col(id_col).alias("_vid"), F.col(emb_col).alias("_emb"),
-        sig_udf(emb_col).alias("_sig"),
+        F.col(id_col).alias("record_id"), F.col(emb_col).alias("emb"),
+        sig_udf(emb_col).alias("sig"),
     )
-    bands = sig.select(
-        "_vid",
-        F.explode(
-            F.array(
-                *[
-                    F.concat(
-                        F.lit(f"{b}:"),
-                        F.shiftrightunsigned("_sig", band_bits * b)
-                        .bitwiseAND(F.lit(mask))
-                        .cast("string"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("band_key"),
+    salted, cap_metrics = cap_and_salt_blocks(
+        bit_band_blocks(sig, "sig", n_planes // band_bits, band_bits), cfg
     )
-    capped, cap_metrics = cap_band_keys(
-        bands, cfg, key_col="band_key", id_col="_vid"
-    )
-    cand = (
-        capped.select(F.col("_vid").alias("a_vec"), "band_key")
-        .join(capped.select(F.col("_vid").alias("b_vec"), "band_key"), "band_key")
-        .filter(F.col("a_vec") < F.col("b_vec"))
-        .select("a_vec", "b_vec")
-        .distinct()
-    )
-    pa = sig.select(F.col("_vid").alias("a_vec"), F.col("_emb").alias("a_emb"))
-    pb = sig.select(F.col("_vid").alias("b_vec"), F.col("_emb").alias("b_emb"))
     pairs = (
-        cand.join(pa, "a_vec")
-        .join(pb, "b_vec")
-        .withColumn("cos_raw", _cosine("a_emb", "b_emb"))
+        attach_sides(block_pairs(salted), sig.select("record_id", "emb"))
+        .withColumn("cos_raw", _cosine("l_emb", "r_emb"))
         .filter(F.col("cos_raw") >= threshold)
-        .select("a_vec", "b_vec", F.round("cos_raw", 4).alias("cos"))
+        .select(
+            F.col("left_id").alias("a_vec"),
+            F.col("right_id").alias("b_vec"),
+            F.round("cos_raw", 4).alias("cos"),
+        )
     )
     return pairs, cap_metrics
 
@@ -881,14 +817,17 @@ def cdc_containment_pairs(
     min(|a|, |b|) — the asymmetric-size measure partial-file
     duplication needs (a file embedded inside a bigger one scores ~1.0
     where Jaccard dilutes it). The chunk-hash self-join is guarded by
-    the SAME hot-key cap as the LSH band joins (cap_band_keys): a chunk
-    shared by thousands of docs (a common license header) is salted or
-    dropped with logged counts instead of going quadratic — bounded
-    recall, never silent."""
+    the SAME hot-key cap as the LSH band joins (cap_and_salt_blocks): a
+    chunk shared by thousands of docs (a common license header) is
+    salted or dropped with logged counts instead of going quadratic —
+    bounded recall, never silent."""
     cfg = cfg or ERConfig()
     chunker = make_cdc_chunk_udf()
     doc_chunks = (
-        docs.select("doc_id", F.explode(chunker(F.col(text_col))).alias("chunk_hash"))
+        docs.select(
+            F.col("doc_id").alias("record_id"),
+            F.explode(chunker(F.col(text_col))).alias("block_key"),
+        )
         .distinct()
         # persisted: five consumers (sizes agg, cap counts + join, both
         # self-join sides) would otherwise each re-run the chunker UDF
@@ -896,36 +835,29 @@ def cdc_containment_pairs(
         # eager checkpoint of the pair result below
         .persist()
     )
-    sizes = doc_chunks.groupBy("doc_id").agg(F.count("*").alias("n_chunks"))
-    capped, metrics = cap_band_keys(
-        doc_chunks.select("chunk_hash", "doc_id"), cfg, "chunk_hash", "doc_id"
-    )
+    sizes = doc_chunks.groupBy("record_id").agg(F.count("*").alias("n"))
+    salted, metrics = cap_and_salt_blocks(doc_chunks, cfg)
     log_cap_metrics(metrics_query, metrics)
-    a = capped.select("chunk_hash", F.col("doc_id").alias("a_doc"))
-    b = capped.select("chunk_hash", F.col("doc_id").alias("b_doc"))
-    pairs = (
-        a.join(b, "chunk_hash")
-        .filter(F.col("a_doc") < F.col("b_doc"))
-        .groupBy("a_doc", "b_doc")
-        .agg(F.count("*").alias("n_shared_chunks"))
-    )
-    na = sizes.select(F.col("doc_id").alias("a_doc"), F.col("n_chunks").alias("a_n"))
-    nb = sizes.select(F.col("doc_id").alias("b_doc"), F.col("n_chunks").alias("b_n"))
+    pairs = block_pairs(salted, F.count("*").alias("n_shared_chunks"))
     result = (
-        pairs.join(na, "a_doc")
-        .join(nb, "b_doc")
+        attach_sides(pairs, sizes)
         .withColumn(
             "containment",
             F.round(
                 F.try_divide(
                     F.col("n_shared_chunks").cast("double"),
-                    F.least("a_n", "b_n").cast("double"),
+                    F.least("l_n", "r_n").cast("double"),
                 ),
                 4,
             ),
         )
         .filter(F.col("containment") >= min_containment)
-        .select("a_doc", "b_doc", "n_shared_chunks", "containment")
+        .select(
+            F.col("left_id").alias("a_doc"),
+            F.col("right_id").alias("b_doc"),
+            "n_shared_chunks",
+            "containment",
+        )
     ).localCheckpoint(eager=True)
     doc_chunks.unpersist()
     return result

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from smaph_spark.config import ERConfig
+from smaph_spark.operators.pairs import attach_sides
 from smaph_spark.pipeline import ERPipeline
 from smaph_spark.plans.star_queries import WS_RE, load, register
 
@@ -408,16 +409,10 @@ def er_blocking_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def er_document_match_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     res, id_map = run_document_er(spark, sf_dir)
-    l = id_map.select(F.col("record_id").alias("left_id"), F.col("doc_id").alias("a_doc"))
-    r = id_map.select(F.col("record_id").alias("right_id"), F.col("doc_id").alias("b_doc"))
-    return (
-        res.matches.join(l, "left_id")
-        .join(r, "right_id")
-        .select(
-            F.least("a_doc", "b_doc").alias("a_doc"),
-            F.greatest("a_doc", "b_doc").alias("b_doc"),
-            F.round("score", 4).alias("score"),
-        )
+    return attach_sides(res.matches, id_map).select(
+        F.least("l_doc_id", "r_doc_id").alias("a_doc"),
+        F.greatest("l_doc_id", "r_doc_id").alias("b_doc"),
+        F.round("score", 4).alias("score"),
     )
 
 

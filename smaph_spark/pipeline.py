@@ -27,7 +27,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from smaph_spark.config import ERConfig
-from smaph_spark.operators.blocking import cap_and_salt_blocks, generate_blocks
+from smaph_spark.operators.blocking import (
+    cap_and_salt_blocks, cap_counts, generate_blocks,
+)
 from smaph_spark.operators.clustering import (
     connected_components, history_pseudo_edges,
 )
@@ -182,17 +184,10 @@ class ERPipeline:
         def _blocks():
             blocks = generate_blocks(normalized, cfg)
             salted, block_metrics = cap_and_salt_blocks(blocks, cfg)
-            acts = {
-                r["action"]: (int(r["n"]), int(r["records"]))
-                for r in block_metrics.groupBy("action")
-                .agg(F.count("*").alias("n"), F.sum("n_records").alias("records"))
-                .collect()
-            }
-            self._metrics["s2_block_caps"] = {
-                "salted_blocks": acts.get("salted", (0, 0))[0],
-                "dropped_blocks": acts.get("dropped", (0, 0))[0],
-                "records_in_dropped_blocks": acts.get("dropped", (0, 0))[1],
-            }
+            self._metrics["s2_block_caps"] = dict(zip(
+                ("salted_blocks", "dropped_blocks", "records_in_dropped_blocks"),
+                cap_counts(block_metrics),
+            ))
             return salted
 
         salted = self._load_or_compute("s2_blocks", _blocks)

@@ -6,7 +6,12 @@ these tests pin the plan itself (dd02/dd05 have their own plan tests in
 test_dedup_scale.py)."""
 
 import __spark_entry__  # noqa: F401 — populate the registry
+from smaph_spark.config import ERConfig
+from smaph_spark.operators.blocking import cap_and_salt_blocks, generate_blocks
+from smaph_spark.operators.normalize import normalize_files
+from smaph_spark.operators.pairs import attach_pair_features, generate_pairs
 from smaph_spark.plans.star_queries import QUERIES
+from smaph_spark.sources.synthetic import generate_files_corpus
 
 SF = "/root/testdata/sf0.001"
 
@@ -75,3 +80,34 @@ def test_er05_banded_equi_join_only(spark):
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
     assert plan.count("BroadcastExchange") >= 1
+
+
+def test_er_pair_stage_payload_joins_broadcast(spark):
+    """Under the default ERConfig both payload joins of the ER pair
+    stage are map-side: the broadcast hint on the payload must survive
+    attach_sides's per-side projection. Size-based broadcasting is off,
+    so only the hint can produce them."""
+    cfg = ERConfig()
+    files, _, _ = generate_files_corpus(n_clusters=10, seed=3)
+    norm = normalize_files(spark.createDataFrame(files), cfg).drop("content")
+    salted, _ = cap_and_salt_blocks(generate_blocks(norm, cfg), cfg)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        feat = attach_pair_features(generate_pairs(salted, cfg), norm, cfg)
+        plan = feat._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, old)
+    assert plan.count("BroadcastHashJoin [left_id#") == 1, plan
+    assert plan.count("BroadcastHashJoin [right_id#") == 1, plan
+
+
+def test_band_dedup_queries_equi_join_only(spark):
+    """dd03/dd04/dd06 pair through the banded equi self-join, never a
+    cross product."""
+    for name in ("dd03_minhash_lsh_pairs", "dd04_simhash_pairs",
+                 "dd06_embedding_dup_lsh"):
+        plan = _plan(spark, name)
+        assert "CartesianProduct" not in plan, name
+        assert "BroadcastNestedLoopJoin" not in plan, name
