@@ -24,8 +24,6 @@ class ERConfig:
     minhash_seed: int = 0x5A17  # deterministic hash family (north_rule)
 
     # --- blocking ----------------------------------------------------------
-    use_name_blocking: bool = True   # (lang, basename-stem) key family
-    use_lsh_blocking: bool = True    # minhash band key family
     max_block_size: int = 200        # hot-key cap: blocks above this are
                                      # salted into sub-blocks (quadratic
                                      # pair-join guard; drops are logged)
@@ -33,7 +31,6 @@ class ERConfig:
 
     # --- pair scoring -------------------------------------------------------
     match_threshold: float = 0.60    # accept pair iff score >= threshold
-    sha_equal_shortcut: bool = True  # identical sha256 ⇒ match (exact dups)
 
     # --- clustering ----------------------------------------------------------
     cc_max_iterations: int = 20      # hash-min CC bound (~cluster diameter)

@@ -36,35 +36,30 @@ from smaph_spark.config import ERConfig
 def generate_blocks(normalized: DataFrame, cfg: ERConfig) -> DataFrame:
     """normalized -> blocks(block_key string, record_id long).
 
-    One row per (record, key). Key families unioned and deduplicated
+    One row per (record, key). Both key families unioned
     (ref: candidate-set union J1, QueryInformation.allCandidates).
     """
-    keys = []
-    if cfg.use_name_blocking:
-        keys.append(
-            F.array(F.concat(F.lit("N:"), F.col("lang"), F.lit(":"), F.col("name")))
-        )
-    if cfg.use_lsh_blocking:
-        # tag each band key with its band index so bands don't collide;
-        # empty/null content gets NO LSH keys (all empty files would
-        # otherwise share one sentinel minhash and form a single
-        # quadratic block — exact dups are still caught by the name
-        # family + sha shortcut)
-        zipped = F.zip_with(
-            F.col("bands"),
-            F.array([F.lit(i) for i in range(cfg.lsh_bands)]),
-            lambda h, i: F.concat(
-                F.lit("L:"), i.cast("string"), F.lit(":"), h.cast("string")
-            ),
-        )
-        keys.append(
-            F.when(F.coalesce(F.col("n_chars"), F.lit(0)) > 0, zipped).otherwise(
-                F.array().cast("array<string>")
-            )
-        )
-    if not keys:
-        raise ValueError("at least one blocking family must be enabled")
-    all_keys = keys[0] if len(keys) == 1 else F.concat(*keys)
+    name_key = F.array(
+        F.concat(F.lit("N:"), F.col("lang"), F.lit(":"), F.col("name"))
+    )
+    # tag each band key with its band index so bands don't collide;
+    # empty/null content gets NO LSH keys (all empty files would
+    # otherwise share one sentinel minhash and form a single quadratic
+    # block — exact dups are still caught by the name family + sha
+    # shortcut)
+    band_keys = F.zip_with(
+        F.col("bands"),
+        F.array([F.lit(i) for i in range(cfg.lsh_bands)]),
+        lambda h, i: F.concat(
+            F.lit("L:"), i.cast("string"), F.lit(":"), h.cast("string")
+        ),
+    )
+    all_keys = F.concat(
+        name_key,
+        F.when(F.coalesce(F.col("n_chars"), F.lit(0)) > 0, band_keys).otherwise(
+            F.array().cast("array<string>")
+        ),
+    )
     # No dropDuplicates (round-6): the key families are disjoint by
     # construction — the name key is "N:"-prefixed and unique per
     # record, each LSH band key carries its band index ("L:<i>:") so

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from smaph_spark.config import ERConfig
 from smaph_spark.operators.pairs import attach_sides
 from smaph_spark.pipeline import ERPipeline
-from smaph_spark.plans.star_queries import WS_RE, load, register
+from smaph_spark.plans.star_queries import WS_RE, load, register, widen
 
 _DOC_CFG = ERConfig(shingle_k=5, num_minhash=64, lsh_bands=16,
                     match_threshold=0.55)
@@ -94,11 +94,11 @@ def documents_as_files(spark: SparkSession, sf_dir: str) -> DataFrame:
 _RESULT_CACHE: dict[str, tuple] = {}
 
 
-def run_document_er(spark: SparkSession, sf_dir: str, use_cache: bool = True):
+def run_document_er(spark: SparkSession, sf_dir: str):
     # key by (application, sf_dir): cached DataFrames die with their
     # SparkContext, so a new session must not see a stale entry
     key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    if use_cache and key in _RESULT_CACHE:
+    if key in _RESULT_CACHE:
         return _RESULT_CACHE[key]
     files = documents_as_files(spark, sf_dir)
     model, threshold = get_document_scorer(spark)
@@ -108,8 +108,7 @@ def run_document_er(spark: SparkSession, sf_dir: str, use_cache: bool = True):
     id_map = files.select(
         F.xxhash64("repo", "path", "commit").alias("record_id"), "doc_id"
     )
-    if use_cache:
-        _RESULT_CACHE[key] = (res, id_map)
+    _RESULT_CACHE[key] = (res, id_map)
     return res, id_map
 
 
@@ -207,13 +206,7 @@ def _tokenband_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     localCheckpoint materializes the ~1 MB node table once per query
     call."""
     d = load(spark, sf_dir, "documents").filter(F.length(F.trim("text")) > 0)
-    target = spark.sparkContext.defaultParallelism
-    try:
-        if d.rdd.getNumPartitions() < target:
-            d = d.repartition(target)
-    except Exception:
-        pass
-    return d.select(
+    return widen(d).select(
         "doc_id", "lang", "source",
         F.size(F.split(F.trim("text"), WS_RE)).alias("n_toks"),
     ).localCheckpoint(eager=True)

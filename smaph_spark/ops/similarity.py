@@ -139,7 +139,6 @@ def lsh_topk(
     n_planes: int = 32,
     band_bits: int = 4,
     multiprobe_bits: int = 1,
-    log_scan_fraction: bool = True,
     dim: int = 64,
     metrics_key: str = "sim02_lsh_topk",
 ) -> DataFrame:
@@ -198,9 +197,8 @@ def lsh_topk(
         q.join(n, "band_key")
         .filter(F.col("q_vec") != F.col("n_vec"))
         .dropDuplicates(["q_vec", "n_vec"])
+        .persist()
     )
-    if log_scan_fraction:
-        cand = cand.persist()
     scored = cand.withColumn("cos_raw", _cosine("q_emb", "n_emb"))
     w = W.partitionBy("q_vec").orderBy(F.desc("cos_raw"), F.asc("n_vec"))
     result = (
@@ -208,19 +206,18 @@ def lsh_topk(
         .filter(F.col("rnk") <= k)
         .select("q_vec", "n_vec", F.round("cos_raw", 4).alias("cos"), "rnk")
     )
-    if log_scan_fraction:
-        n_cand, result = _count_candidates_and_release(cand, result)
-        # counts on the RAW input (no hyperplane UDF re-run)
-        n_q = e.filter(query_filter).count()
-        n_vecs = e.count()
-        frac = n_cand / max(n_q * (n_vecs - 1), 1)
-        SCAN_METRICS[metrics_key] = {
-            "candidates": n_cand, "queries": n_q, "vectors": n_vecs,
-            "scan_fraction": round(frac, 4),
-        }
-        _LOG.info("%s LSH candidate scan fraction: %.4f "
-                  "(%d of %d possible)", metrics_key, frac, n_cand,
-                  n_q * (n_vecs - 1))
+    n_cand, result = _count_candidates_and_release(cand, result)
+    # counts on the RAW input (no hyperplane UDF re-run)
+    n_q = e.filter(query_filter).count()
+    n_vecs = e.count()
+    frac = n_cand / max(n_q * (n_vecs - 1), 1)
+    SCAN_METRICS[metrics_key] = {
+        "candidates": n_cand, "queries": n_q, "vectors": n_vecs,
+        "scan_fraction": round(frac, 4),
+    }
+    _LOG.info("%s LSH candidate scan fraction: %.4f "
+              "(%d of %d possible)", metrics_key, frac, n_cand,
+              n_q * (n_vecs - 1))
     return result
 
 
@@ -297,7 +294,6 @@ def ivf_topk(
     n_cells: int = 16,
     n_probe: int = 4,
     seed: int = 7,
-    log_scan_metrics: bool = True,
     metrics_key: str = "sim03_ivf_topk",
 ) -> DataFrame:
     """IVF-style ANN: every vector lives in ONE cell (nearest
@@ -331,9 +327,8 @@ def ivf_topk(
             "cell",
         )
         .filter(F.col("q_vec") != F.col("n_vec"))
+        .persist()
     )
-    if log_scan_metrics:
-        cand = cand.persist()
     scored = cand.withColumn("cos_raw", _cosine("q_emb", "n_emb"))
     w = W.partitionBy("q_vec").orderBy(F.desc("cos_raw"), F.asc("n_vec"))
     result = (
@@ -341,23 +336,22 @@ def ivf_topk(
         .filter(F.col("rnk") <= k)
         .select("q_vec", "n_vec", F.round("cos_raw", 4).alias("cos"), "rnk")
     )
-    if log_scan_metrics:
-        # no-silent-caps (round-3 VERDICT item 5): the probed fraction
-        # IS the speed/recall trade — record it like sim02 does
-        n_cand, result = _count_candidates_and_release(cand, result)
-        n_q = e.filter(query_filter).count()
-        n_vecs = e.count()
-        frac = n_cand / max(n_q * (n_vecs - 1), 1)
-        SCAN_METRICS[metrics_key] = {
-            "candidates": n_cand, "queries": n_q, "vectors": n_vecs,
-            "n_cells": n_cells, "n_probe": n_probe,
-            "probed_cell_fraction": round(n_probe / n_cells, 4),
-            "scan_fraction": round(frac, 4),
-        }
-        _LOG.info(
-            "%s IVF scan: %d candidates (%.4f of all pairs), probing "
-            "%d/%d cells", metrics_key, n_cand, frac, n_probe, n_cells,
-        )
+    # no-silent-caps (round-3 VERDICT item 5): the probed fraction
+    # IS the speed/recall trade — record it like sim02 does
+    n_cand, result = _count_candidates_and_release(cand, result)
+    n_q = e.filter(query_filter).count()
+    n_vecs = e.count()
+    frac = n_cand / max(n_q * (n_vecs - 1), 1)
+    SCAN_METRICS[metrics_key] = {
+        "candidates": n_cand, "queries": n_q, "vectors": n_vecs,
+        "n_cells": n_cells, "n_probe": n_probe,
+        "probed_cell_fraction": round(n_probe / n_cells, 4),
+        "scan_fraction": round(frac, 4),
+    }
+    _LOG.info(
+        "%s IVF scan: %d candidates (%.4f of all pairs), probing "
+        "%d/%d cells", metrics_key, n_cand, frac, n_probe, n_cells,
+    )
     return result
 
 
@@ -498,7 +492,6 @@ def pq_topk(
     train_sample: int = 2048,
     rerank: int = 64,
     codebook_path: str | None = None,
-    log_scan_metrics: bool = True,
     metrics_key: str = "sim04_pq_topk",
 ) -> DataFrame:
     """PQ-ADC top-k: encode every vector to m centroid ids, scan the
@@ -606,26 +599,25 @@ def pq_topk(
         .filter(F.col("rnk") <= k)
         .select("q_vec", "n_vec", F.round("cos_raw", 4).alias("cos"), "rnk")
     )
-    if log_scan_metrics:
-        # no-silent-caps (round-3 VERDICT item 5): the PQ scan touches
-        # EVERY code (scan_fraction 1.0 by design) but at m sub-byte
-        # lookups per vector instead of 8*dim bytes; the shortlist cap
-        # bounds what reaches the exact rerank
-        n_vecs = e.count()
-        code_bits = m * max(int(np.ceil(np.log2(n_centroids))), 1)
-        SCAN_METRICS[metrics_key] = {
-            "queries": len(q_rows), "vectors": n_vecs,
-            "scan_fraction": 1.0, "rerank_shortlist": rerank,
-            "code_bits_per_vector": code_bits,
-            "compression_ratio": round(dim * 64 / code_bits, 1),
-            "codebook_source": codebook_source,
-        }
-        _LOG.info(
-            "%s PQ-ADC scan: %d codes x %d queries at %d bits/vector "
-            "(%.0fx compression), rerank shortlist %d, codebooks %s",
-            metrics_key, n_vecs, len(q_rows), code_bits,
-            dim * 64 / code_bits, rerank, codebook_source,
-        )
+    # no-silent-caps (round-3 VERDICT item 5): the PQ scan touches
+    # EVERY code (scan_fraction 1.0 by design) but at m sub-byte
+    # lookups per vector instead of 8*dim bytes; the shortlist cap
+    # bounds what reaches the exact rerank
+    n_vecs = e.count()
+    code_bits = m * max(int(np.ceil(np.log2(n_centroids))), 1)
+    SCAN_METRICS[metrics_key] = {
+        "queries": len(q_rows), "vectors": n_vecs,
+        "scan_fraction": 1.0, "rerank_shortlist": rerank,
+        "code_bits_per_vector": code_bits,
+        "compression_ratio": round(dim * 64 / code_bits, 1),
+        "codebook_source": codebook_source,
+    }
+    _LOG.info(
+        "%s PQ-ADC scan: %d codes x %d queries at %d bits/vector "
+        "(%.0fx compression), rerank shortlist %d, codebooks %s",
+        metrics_key, n_vecs, len(q_rows), code_bits,
+        dim * 64 / code_bits, rerank, codebook_source,
+    )
     return result
 
 

@@ -7,8 +7,8 @@ features → stage 4 threshold filter → stage 5 checkpointed hash-min CC
 → clusters sink.
 
 Resumability (north_rule): when ``checkpoint_dir`` is set, every stage
-writes a parquet snapshot + ``_metrics.json`` (row counts, elapsed,
-per-partition row counts, top-k skew keys). A re-run with the same
+writes a parquet snapshot + ``_metrics.json`` (row count, elapsed
+seconds, snapshot path). A re-run with the same
 config fingerprint reads the snapshot instead of recomputing; the
 per-row invariant sha256(content) is verified against the source table
 after every stage that carries content columns.
@@ -48,16 +48,6 @@ class PipelineResult:
     stage_metrics: dict = field(default_factory=dict)
 
 
-def _partition_histogram(df: DataFrame) -> list[int]:
-    return [
-        int(r["n"])
-        for r in df.groupBy(F.spark_partition_id().alias("pid"))
-        .agg(F.count("*").alias("n"))
-        .orderBy("pid")
-        .collect()
-    ]
-
-
 class ERPipeline:
     """Stage-by-stage runner with optional snapshot-resume."""
 
@@ -67,13 +57,11 @@ class ERPipeline:
         cfg: ERConfig | None = None,
         checkpoint_dir: str | None = None,
         scorer_model=None,
-        collect_partition_metrics: bool = False,
     ):
         self.spark = spark
         self.cfg = cfg or ERConfig()
         self.checkpoint_dir = checkpoint_dir
         self.scorer_model = scorer_model
-        self.collect_partition_metrics = collect_partition_metrics
         self._metrics: dict = {}
         # scorer identity keys the snapshots too: a retrained model with
         # a coincidentally-equal threshold must not resume pair scores
@@ -162,15 +150,13 @@ class ERPipeline:
         if path:
             m["rows"] = df.count()
             m["path"] = path
-            if self.collect_partition_metrics:
-                m["partition_rows"] = _partition_histogram(df)
             with open(os.path.join(path, "_metrics.json"), "w") as fh:
                 json.dump(m, fh)
         self._metrics[stage] = m
         return df
 
     # -- stages ----------------------------------------------------------------
-    def run(self, files: DataFrame, gold_pairs: DataFrame | None = None) -> PipelineResult:
+    def run(self, files: DataFrame) -> PipelineResult:
         cfg = self.cfg
         self._input_fp = self._input_fingerprint(files)
 
@@ -180,68 +166,32 @@ class ERPipeline:
         normalized = self._load_or_compute(
             "s1_normalized", lambda: normalize_files(files, cfg).drop("content")
         )
-
-        def _blocks():
-            blocks = generate_blocks(normalized, cfg)
-            salted, block_metrics = cap_and_salt_blocks(blocks, cfg)
-            self._metrics["s2_block_caps"] = dict(zip(
-                ("salted_blocks", "dropped_blocks", "records_in_dropped_blocks"),
-                cap_counts(block_metrics),
-            ))
-            return salted
-
-        salted = self._load_or_compute("s2_blocks", _blocks)
-
-        def _pairs():
-            pairs = generate_pairs(salted, cfg)
-            feat = attach_pair_features(pairs, normalized, cfg)
-            if self.scorer_model is not None:
-                return gbt_score(self.scorer_model, feat)
-            return rule_score(feat, cfg)
-
-        pairs_scored = self._load_or_compute("s3_pairs_scored", _pairs)
-
-        matches = self._load_or_compute(
-            "s4_matches",
-            lambda: filter_matches(pairs_scored, cfg).filter(F.col("is_match")),
-        )
-
-        def _clusters():
-            clusters, history = connected_components(
-                matches, cfg, all_records=normalized
-            )
-            self._metrics["s5_cc_iterations"] = history
-            return clusters
-
-        clusters = self._load_or_compute("s5_clusters", _clusters)
-
-        return PipelineResult(
-            normalized=normalized,
-            blocks=salted,
-            pairs_scored=pairs_scored,
-            matches=matches,
-            clusters=clusters,
-            stage_metrics=dict(self._metrics),
-        )
+        return self._resolve(normalized, lambda: generate_blocks(normalized, cfg))
 
     def run_incremental(
         self,
         history_files: DataFrame,
         new_files: DataFrame,
         history_clusters: DataFrame,
-        history_normalized: DataFrame | None = None,
+        history_normalized: DataFrame,
         history_ids: DataFrame | None = None,
         skip_overlap_check: bool = False,
     ) -> PipelineResult:
         """Resolve a NEW batch against an already-resolved history —
         the production mode of a continuously-ingesting ER deployment.
 
-        Only pairs touching at least one new record are featurized and
-        scored: the quadratic stage shrinks from O(|all|·avg_block) to
-        O(|new|·avg_block). History-history matches enter the final
-        connected components as pseudo-edges (record_id, cluster_id)
-        from ``history_clusters``, so a new record bridging two old
-        clusters merges them exactly as a full-batch run would.
+        There is one mode: ``history_normalized`` (the previous run's
+        ``.normalized`` output, or its snapshot) is reused, so the
+        expensive Arrow minhash/sha pass of stage 1 runs over the DELTA
+        only. Stage 2 reuses the history's block keys and generates the
+        delta's; stages 2-5 are then the very stages ``run`` executes,
+        with two differences passed in as data: only pairs touching at
+        least one new record are featurized and scored (the quadratic
+        stage shrinks from O(|all|·avg_block) to O(|new|·avg_block)),
+        and history-history matches enter the final connected
+        components as pseudo-edges (record_id, cluster_id) from
+        ``history_clusters``, so a new record bridging two old clusters
+        merges them exactly as a full-batch run would.
 
         Result is IDENTICAL to ``run(history ∪ new)`` provided
         ``history_clusters`` came from this pipeline (same config +
@@ -254,28 +204,18 @@ class ERPipeline:
         ``max_block_size`` drops or re-salts history-history pairs the
         history-only run had scored (and vice versa). With capping
         effectively disabled (large ``max_block_size``) it is exact.
-
-        Pass ``history_normalized`` (the previous run's ``.normalized``
-        output, or its snapshot) to skip re-normalizing history — then
-        the expensive Arrow minhash/sha pass runs over the DELTA only
-        and every per-record stage is O(|delta|); without it, stage 1
-        re-reads all of history (blocking's key explode + shuffle is
-        over the union either way — at cluster scale that key table is
-        the thing to keep bucketed on disk between runs).
         """
         cfg = self.cfg
-        # BOTH modes assume history/delta record ids are disjoint (the
-        # union normalize keeps an overlapping record twice, duplicating
-        # its pairs; the O(delta) key union likewise) — verify up front
-        # instead of assuming (round-4 review: the guard must cover the
-        # -inc branch too, not only deltanorm). One narrow semi-join
-        # count, delta ids broadcast. The default scans history_files
-        # once per delta batch, which partially offsets the O(delta)
-        # win on large histories (round-4 ADVICE) — callers that
-        # maintain a history id index (dd07-style digest table, or the
-        # snapshotted s2_history_keys) pass it as ``history_ids``
-        # (DataFrame with record_id), and callers that already
-        # anti-joined the delta against history set
+        # history/delta record ids must be disjoint (the O(delta) key
+        # union would keep an overlapping record twice, duplicating its
+        # pairs) — verify up front instead of assuming. One narrow
+        # semi-join count, delta ids broadcast. The default scans
+        # history_files once per delta batch, which partially offsets
+        # the O(delta) win on large histories (round-4 ADVICE) —
+        # callers that maintain a history id index (dd07-style digest
+        # table, or the snapshotted s2_history_keys) pass it as
+        # ``history_ids`` (DataFrame with record_id), and callers that
+        # already anti-joined the delta against history set
         # ``skip_overlap_check=True``.
         rid = F.xxhash64("repo", "path", "commit").alias("record_id")
         if not skip_overlap_check:
@@ -295,99 +235,91 @@ class ERPipeline:
                     "history first (e.g. dd07-style digest anti-join) or "
                     "run a full batch"
                 )
-        files = history_files.unionByName(new_files)
-        # the two modes snapshot DIFFERENT things under s1_normalized
-        # (delta-only vs full union) — the mode must be part of the
-        # snapshot key or one mode resumes the other's stage. The
-        # history/delta SPLIT must be in the key too: two runs over the
-        # same union but different splits produce different
-        # s3_pairs_scored (delta-touching pairs only) and, in
-        # -deltanorm mode, different s1_normalized (delta-only rows)
-        mode = "-deltanorm" if history_normalized is not None else "-inc"
+        # the history/delta SPLIT is part of the snapshot key: two runs
+        # over the same union but different splits produce different
+        # s1_normalized (delta-only rows) and s3_pairs_scored
+        # (delta-touching pairs only)
         self._input_fp = (
-            self._input_fingerprint(files)
+            self._input_fingerprint(history_files.unionByName(new_files))
             + "-new" + self._input_fingerprint(new_files)
-            + mode
+        )
+        new_norm = self._load_or_compute(
+            "s1_normalized",
+            lambda: normalize_files(new_files, cfg).drop("content"),
         )
 
-        if history_normalized is not None:
-            new_norm = self._load_or_compute(
-                "s1_normalized",
-                lambda: normalize_files(new_files, cfg).drop("content"),
-            )
-            normalized = history_normalized.unionByName(new_norm)
-
-            # O(delta) blocking (round-3 VERDICT item 7): the raw
-            # block-key table is a pure per-record function, so
-            # history's keys are computed ONCE and snapshotted under
-            # the HISTORY fingerprint (shared by every later delta
-            # batch against the same history — at cluster scale this
-            # is the table you keep bucketed by block_key on disk
-            # between runs). Only the delta's keys are generated
-            # fresh; cap/salt counts still see the union, so capping
-            # decisions match the full-batch run exactly.
-            hist_path = None
-            if self.checkpoint_dir:
-                hist_fp = self._input_fingerprint(history_files)
-                hist_path = os.path.join(
-                    self.checkpoint_dir,
-                    f"fp={cfg.fingerprint()}-hist={hist_fp}",
-                    "s2_history_keys",
-                )
-            hist_keys = self._load_or_compute(
+        # O(delta) blocking (round-3 VERDICT item 7): the raw block-key
+        # table is a pure per-record function, so history's keys are
+        # computed ONCE and snapshotted under the HISTORY fingerprint
+        # (shared by every later delta batch against the same history —
+        # at cluster scale this is the table you keep bucketed by
+        # block_key on disk between runs). Only the delta's keys are
+        # generated fresh; cap/salt counts still see the union, so
+        # capping decisions match the full-batch run exactly.
+        hist_path = None
+        if self.checkpoint_dir:
+            hist_fp = self._input_fingerprint(history_files)
+            hist_path = os.path.join(
+                self.checkpoint_dir,
+                f"fp={cfg.fingerprint()}-hist={hist_fp}",
                 "s2_history_keys",
-                lambda: generate_blocks(history_normalized, cfg)
-                .repartition("block_key"),
-                path=hist_path,
             )
+        hist_keys = self._load_or_compute(
+            "s2_history_keys",
+            lambda: generate_blocks(history_normalized, cfg)
+            .repartition("block_key"),
+            path=hist_path,
+        )
 
-            def _blocks():
-                # (history/delta disjointness already verified at entry,
-                # so the per-side dedup covers the union)
-                delta_keys = generate_blocks(new_norm, cfg)
-                self._metrics["s2_delta_key_rows"] = delta_keys.count()
-                blocks = hist_keys.unionByName(delta_keys)
-                salted, _ = cap_and_salt_blocks(blocks, cfg)
-                return salted
+        def _keys():
+            delta_keys = generate_blocks(new_norm, cfg)
+            self._metrics["s2_delta_key_rows"] = delta_keys.count()
+            return hist_keys.unionByName(delta_keys)
 
-        else:
-            normalized = self._load_or_compute(
-                "s1_normalized",
-                lambda: normalize_files(files, cfg).drop("content"),
-            )
+        return self._resolve(
+            history_normalized.unionByName(new_norm), _keys,
+            new_ids=new_files.select(rid).distinct(),
+            history_clusters=history_clusters,
+        )
 
-            def _blocks():
-                blocks = generate_blocks(normalized, cfg)
-                salted, _ = cap_and_salt_blocks(blocks, cfg)
-                return salted
+    def _resolve(
+        self,
+        normalized: DataFrame,
+        block_keys,
+        new_ids: DataFrame | None = None,
+        history_clusters: DataFrame | None = None,
+    ) -> PipelineResult:
+        """Stages 2-5 over ``normalized`` and the raw key table that
+        ``block_keys()`` builds. Given ``new_ids`` (record_id), only
+        pairs touching one of them are scored; given
+        ``history_clusters``, they re-enter CC as pseudo-edges."""
+        cfg = self.cfg
+
+        def _blocks():
+            salted, block_metrics = cap_and_salt_blocks(block_keys(), cfg)
+            self._metrics["s2_block_caps"] = dict(zip(
+                ("salted_blocks", "dropped_blocks", "records_in_dropped_blocks"),
+                cap_counts(block_metrics),
+            ))
+            return salted
 
         salted = self._load_or_compute("s2_blocks", _blocks)
 
-        new_ids = new_files.select(
-            F.xxhash64("repo", "path", "commit").alias("record_id"),
-            F.lit(True).alias("_new"),
-        ).distinct()
-
         def _pairs():
             pairs = generate_pairs(salted, cfg)
-            flagged = (
-                pairs.join(
-                    new_ids.withColumnRenamed("record_id", "left_id")
-                    .withColumnRenamed("_new", "_new_l"),
-                    "left_id", "left",
-                )
-                .join(
-                    new_ids.withColumnRenamed("record_id", "right_id")
-                    .withColumnRenamed("_new", "_new_r"),
-                    "right_id", "left",
-                )
-                .filter(F.col("_new_l") | F.col("_new_r"))
-                .drop("_new_l", "_new_r")
-            )
-            feat = attach_pair_features(flagged, normalized, cfg)
+            if new_ids is not None:
+                for side in ("left", "right"):
+                    pairs = pairs.join(new_ids.select(
+                        F.col("record_id").alias(f"{side}_id"),
+                        F.lit(True).alias(f"_new_{side}"),
+                    ), f"{side}_id", "left")
+                pairs = pairs.filter(
+                    F.col("_new_left") | F.col("_new_right")
+                ).drop("_new_left", "_new_right")
+            feat = attach_pair_features(pairs, normalized, cfg)
             if self.scorer_model is not None:
                 return gbt_score(self.scorer_model, feat)
-            return rule_score(feat, cfg)
+            return rule_score(feat)
 
         pairs_scored = self._load_or_compute("s3_pairs_scored", _pairs)
 
@@ -397,10 +329,11 @@ class ERPipeline:
         )
 
         def _clusters():
-            # history cluster memberships ride into CC as pseudo-edges;
-            # canonicalized (min, max) like every match pair
-            old_edges = history_pseudo_edges(history_clusters)
-            edges = matches.select("left_id", "right_id").unionByName(old_edges)
+            edges = matches.select("left_id", "right_id")
+            if history_clusters is not None:
+                # history cluster memberships ride into CC as
+                # pseudo-edges, canonicalized (min, max) like every match
+                edges = edges.unionByName(history_pseudo_edges(history_clusters))
             clusters, history = connected_components(
                 edges, cfg, all_records=normalized
             )
@@ -420,8 +353,6 @@ class ERPipeline:
 
     def stage_metrics_resumed(self) -> bool:
         """True iff every snapshot-backed stage was read from disk."""
-        stages = [k for k in self._metrics if k.startswith("s") and k[1].isdigit()
-                  and "_" in k and k.split("_")[0][1:].isdigit()]
         snapshot_stages = [
             k for k in ("s1_normalized", "s2_blocks", "s3_pairs_scored",
                          "s4_matches", "s5_clusters") if k in self._metrics

@@ -153,7 +153,8 @@ def test_er04_incremental_equals_full_flagship(spark):
     full = ERPipeline(spark, cfg, scorer_model=model).run(files.drop("doc_id"))
     hist_res = ERPipeline(spark, cfg, scorer_model=model).run(history)
     inc = ERPipeline(spark, cfg, scorer_model=model).run_incremental(
-        history, delta, hist_res.clusters
+        history, delta, hist_res.clusters,
+        history_normalized=hist_res.normalized,
     )
     full_set = {(r["record_id"], r["cluster_id"]) for r in full.clusters.collect()}
     inc_set = {(r["record_id"], r["cluster_id"]) for r in inc.clusters.collect()}

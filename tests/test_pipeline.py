@@ -138,6 +138,17 @@ def test_block_cap_metrics_logged(spark):
     caps = pipe._metrics["s2_block_caps"]
     assert caps["salted_blocks"] + caps["dropped_blocks"] > 0
 
+    # the delta path caps the same union key table, so it logs the
+    # same counts as the batch run over history ∪ delta
+    bucket = F.pmod(F.xxhash64("repo", "path", "commit"), F.lit(5))
+    history, delta = files.filter(bucket < 4), files.filter(bucket >= 4)
+    hist_res = ERPipeline(spark, cfg).run(history)
+    inc = ERPipeline(spark, cfg).run_incremental(
+        history, delta, hist_res.clusters,
+        history_normalized=hist_res.normalized,
+    )
+    assert inc.stage_metrics["s2_block_caps"] == caps
+
 
 def test_cc_local_and_distributed_paths_agree(spark):
     """The driver union-find fast path (cc_local_threshold) must yield
@@ -240,7 +251,10 @@ def test_incremental_er_equals_full_batch(spark):
     full = ERPipeline(spark, ERConfig()).run(files)
     hist_res = ERPipeline(spark, ERConfig()).run(history)
     inc_pipe = ERPipeline(spark, ERConfig())
-    inc = inc_pipe.run_incremental(history, delta, hist_res.clusters)
+    inc = inc_pipe.run_incremental(
+        history, delta, hist_res.clusters,
+        history_normalized=hist_res.normalized,
+    )
 
     full_set = {
         (r["record_id"], r["cluster_id"]) for r in full.clusters.collect()
@@ -267,9 +281,9 @@ def test_incremental_er_equals_full_batch(spark):
 
 
 def test_incremental_er_with_history_normalized(spark):
-    """Passing the history run's normalized output must skip
-    re-normalizing history (delta-only stage 1) and still produce the
-    exact full-batch clustering."""
+    """Reusing the history run's normalized output (delta-only stage 1)
+    must still produce the exact full-batch clustering, with every
+    record normalized exactly once."""
     files_pdf, _, _ = generate_files_corpus(n_clusters=50, seed=4242)
     files = spark.createDataFrame(files_pdf)
     bucket = F.pmod(F.xxhash64("repo", "path", "commit"), F.lit(5))
@@ -289,35 +303,6 @@ def test_incremental_er_with_history_normalized(spark):
     assert inc.normalized.select("record_id").distinct().count() == files.count()
 
 
-def test_incremental_modes_do_not_share_snapshots(spark, tmp_path):
-    """With checkpoint_dir set, the delta-only-normalize mode and the
-    full-union mode must not resume each other's s1 snapshot (they
-    cache different contents under the same stage name)."""
-    files_pdf, _, _ = generate_files_corpus(n_clusters=30, seed=9001)
-    files = spark.createDataFrame(files_pdf)
-    bucket = F.pmod(F.xxhash64("repo", "path", "commit"), F.lit(5))
-    history, delta = files.filter(bucket < 4), files.filter(bucket >= 4)
-    hist_res = ERPipeline(spark, ERConfig()).run(history)
-    ckpt = str(tmp_path)
-    n_total = files.count()
-
-    # union mode first: snapshots full-union normalization
-    p1 = ERPipeline(spark, ERConfig(), checkpoint_dir=ckpt)
-    r1 = p1.run_incremental(history, delta, hist_res.clusters)
-    # delta mode second: must NOT load the union snapshot as "delta"
-    p2 = ERPipeline(spark, ERConfig(), checkpoint_dir=ckpt)
-    r2 = p2.run_incremental(
-        history, delta, hist_res.clusters,
-        history_normalized=hist_res.normalized,
-    )
-    assert r1.normalized.count() == n_total
-    assert r2.normalized.count() == n_total  # no duplicated history
-    assert r2.normalized.select("record_id").distinct().count() == n_total
-    c1 = {(r["record_id"], r["cluster_id"]) for r in r1.clusters.collect()}
-    c2 = {(r["record_id"], r["cluster_id"]) for r in r2.clusters.collect()}
-    assert c1 == c2
-
-
 def test_incremental_splits_do_not_share_snapshots(spark, tmp_path):
     """Round-3 ADVICE (medium): two incremental runs over the SAME total
     corpus but a DIFFERENT history/delta split cache different
@@ -335,7 +320,8 @@ def test_incremental_splits_do_not_share_snapshots(spark, tmp_path):
     for history, delta in (split_a, split_b):
         hist_res = ERPipeline(spark, ERConfig()).run(history)
         p = ERPipeline(spark, ERConfig(), checkpoint_dir=ckpt)
-        r = p.run_incremental(history, delta, hist_res.clusters)
+        r = p.run_incremental(history, delta, hist_res.clusters,
+                              history_normalized=hist_res.normalized)
         # the run must have computed its own pair scores, not resumed
         # the other split's snapshot
         assert not p._metrics["s3_pairs_scored"].get("resumed_from_snapshot")
@@ -428,22 +414,6 @@ def test_incremental_rejects_history_delta_overlap(spark):
         ERPipeline(spark, ERConfig()).run_incremental(
             history, overlapping_delta, hist_res.clusters,
             history_normalized=hist_res.normalized,
-        )
-
-
-def test_incremental_rejects_overlap_in_both_modes(spark):
-    """Round-4 review: the overlap guard must cover the -inc branch
-    (no history_normalized) too, where union normalization would
-    silently duplicate the overlapping record's pairs."""
-    files_pdf, _, _ = generate_files_corpus(n_clusters=15, seed=717)
-    files = spark.createDataFrame(files_pdf)
-    bucket = F.pmod(F.xxhash64("repo", "path", "commit"), F.lit(5))
-    history = files.filter(bucket < 4)
-    overlapping_delta = files.filter(bucket >= 3)
-    hist_res = ERPipeline(spark, ERConfig()).run(history)
-    with pytest.raises(ValueError, match="BOTH history"):
-        ERPipeline(spark, ERConfig()).run_incremental(
-            history, overlapping_delta, hist_res.clusters
         )
 
 
