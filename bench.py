@@ -436,7 +436,7 @@ def main_dd09_scaling() -> None:
             )
         fh.write(
             "\nHot-chunk cap behavior under corpus growth: salted/"
-            "dropped counts come from the same cap_band_keys guard as "
+            "dropped counts come from the same cap_and_salt_blocks guard as "
             "the LSH band joins (bounded recall, logged — never a "
             "silent quadratic blow-up on a viral chunk).\n"
         )

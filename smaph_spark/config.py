@@ -33,16 +33,14 @@ class ERConfig:
     match_threshold: float = 0.60    # accept pair iff score >= threshold
 
     # --- clustering ----------------------------------------------------------
-    cc_max_iterations: int = 20      # hash-min CC bound (~cluster diameter)
-    cc_checkpoint_every: int = 3     # truncate lineage every k iterations
-    cc_local_threshold: int = 100_000  # <= this many match edges → run
-                                     # union-find on the driver (a few MB;
-                                     # the iterative hash-min machinery
-                                     # costs ~10 stages of fixed overhead
-                                     # that dwarfs tiny graphs). Above it,
-                                     # the distributed path runs — at
-                                     # 100 TB the match graph is huge and
-                                     # always takes that path.
+    cc_local_threshold: int = 100_000  # CC runs contraction rounds while
+                                     # more than this many edges remain,
+                                     # then one driver union-find over
+                                     # the rest (a few MB). Small match
+                                     # graphs skip the rounds, whose
+                                     # checkpoints and per-round jobs
+                                     # dwarf them; at 100 TB the match
+                                     # graph always starts with rounds.
 
     # --- execution ------------------------------------------------------------
     broadcast_payload: bool = True       # broadcast the per-record pair

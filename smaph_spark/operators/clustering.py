@@ -1,31 +1,37 @@
-"""Stage 5 — transitive clustering: hash-min connected components.
+"""Stage 5 — transitive clustering: connected components.
 
 Reference analogue: the linkback stage assembles a consistent solution
 from accepted candidates (GreedyLinkback.java:49-87 iterates argmax +
 overlap removal). In the ER recast this is transitive closure of
-accepted match pairs: iterative hash-min label propagation via
-DataFrame self-joins (SURVEY §4 item 2), with ``localCheckpoint`` every
-``cc_checkpoint_every`` iterations to truncate lineage, convergence
-detected when no label changes. Cluster id = min record_id of the
-component (deterministic).
+accepted match pairs. Cluster id = min record_id of the component
+(deterministic).
 
-Scale notes (round-6 optimization): the distributed path is hash-min +
-one pointer-jump per round **with edge contraction** — after each
-round the edge set is rewritten onto the surviving labels
-((lab(u), lab(v)), self-loops and duplicates dropped), so dense
-near-clique components collapse after ONE pass and every later round
-runs over a geometrically smaller graph. The previous implementation
-kept the FULL edge table through every iteration: at the sf1.0 gate
-corpus (913k token-band edges, 101 components) that cost 8-10
-iterations x ~12.5 task-seconds each (measured; see
-OPTIMIZATION_r06.md) where the contracted loop pays ~1.3x the first
-round. Iteration count stays O(log component diameter) on chains
-(pointer jumping), bounded by ``cc_max_iterations`` with a warning.
-When the contracted edge set falls under ``cc_local_threshold`` the
-round finishes with the driver union-find over the (tiny) supernode
-graph — the same documented bound as the all-local fast path, never
-the raw input. AQE handles skewed high-degree nodes; the blocking cap
-bounds max degree upstream.
+One path: the input edges are materialized once, then contraction
+rounds run while more than ``cc_local_threshold`` edges remain, and a
+single driver union-find labels whatever is left (the raw input when no
+round ran). A round is
+  1. hash-min: every node points at min(self, neighbours) — a pointer
+     forest whose chains strictly decrease to a root, the tree's min;
+  2. pointer jumping to closure (lab <- lab[lab] until nothing moves):
+     O(log depth) joins over the one-row-per-node table, so a 300-hop
+     chain collapses in one round;
+  3. contraction: edges are rewritten onto the new labels with
+     self-loops and duplicates dropped, so dense near-cliques collapse
+     after one round and every later round runs over a smaller graph
+     (measured at the sf1.0 gate corpus in OPTIMIZATION_r06.md).
+The per-round relabelings are composed back onto the original nodes,
+newest round first, after the finish.
+
+Termination needs no iteration cap. Every round strictly lowers the
+edge count: in each component the min node m is every neighbour's
+hash-min pick, so the edges at m become self-loops. The live supernode
+count at least halves every two rounds: a node that has an edge is
+either in a hash-min tree of >= 2 nodes (merged) or is an orphan root
+whose neighbours all point below it; after contraction all of an
+orphan's neighbours are smaller than it, so next round it joins a tree
+of >= 2 nodes. Rounds are therefore O(log nodes) (the halving argument
+of BTS, ICDE'24, PAPERS.md). AQE handles skewed high-degree nodes; the
+blocking cap bounds max degree upstream.
 """
 
 from __future__ import annotations
@@ -61,99 +67,34 @@ def connected_components(
 
     If ``all_records`` (DataFrame with record_id) is given, unmatched
     records appear as singleton clusters (cluster_id = record_id).
-    Returns (clusters, per-iteration metrics list).
+    Returns (clusters, history): one ``{"iteration",
+    "edges_after_contraction"}`` per round, then ``{"iteration",
+    "local_finish_edges"}`` if edges remained for the finish — or
+    ``{"local_union_find": True, "edges"}`` when no round ran — and a
+    last ``{"converged": True}``.
     """
     # ONE materialization of the (often expensive) upstream pair plan:
-    # previously the size probe, the edge canonicalization checkpoint
-    # and the local-path collect each re-ran the whole candidate join
-    # (er06/er07 recomputed the sf1.0 banded self-join 2-3x per query)
-    matches = matches.select("left_id", "right_id").localCheckpoint(eager=True)
-    n_edges = matches.count()
-    if n_edges <= cfg.cc_local_threshold:
-        # tiny match graph: the iterative machinery (eager checkpoints +
-        # per-iteration join/agg jobs) costs ~10 fixed stages — union-find
-        # over a driver-local edge list (bounded at cc_local_threshold
-        # rows, a few MB) produces the identical min-id labeling
-        return _local_connected_components(matches, all_records, n_edges)
-    # canonical undirected edge list over SUPERNODES (initially the raw
-    # nodes); rewritten (contracted) every round
-    E = (
-        matches.select(
-            F.least("left_id", "right_id").alias("src"),
-            F.greatest("left_id", "right_id").alias("dst"),
-        )
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    # full node -> component-label mapping, refined each round by
-    # composing with the round's supernode relabeling
-    labels = (
-        E.select(F.col("src").alias("record_id"))
-        .union(E.select(F.col("dst").alias("record_id")))
-        .distinct()
-        .withColumn("cluster_id", F.col("record_id"))
-        .localCheckpoint(eager=True)
-    )
-
+    # the size probe, the first round and the finish's collect all read
+    # this checkpoint instead of re-running the candidate join
+    edges = matches.select(
+        F.col("left_id").alias("src"), F.col("right_id").alias("dst")
+    ).localCheckpoint(eager=True)
+    n_edges = edges.count()
+    rounds: list[DataFrame] = []
     history: list[dict] = []
-    e_count = E.count()
-    labels_checkpointed = True
-    for it in range(cfg.cc_max_iterations):
-        if e_count == 0:
-            break
-        if 0 < e_count <= cfg.cc_local_threshold:
-            # the contracted supernode graph fits the documented local
-            # bound: finish with the driver union-find (identical min-id
-            # labels) instead of more distributed rounds. This is never
-            # the raw input — only a graph already shrunk below
-            # cc_local_threshold edges.
-            sub, _ = _local_connected_components(
-                E.select(
-                    F.col("src").alias("left_id"),
-                    F.col("dst").alias("right_id"),
-                ),
-                None,
-                e_count,
-            )
-            comp = F.broadcast(
-                sub.select(
-                    F.col("record_id").alias("_n"),
-                    F.col("cluster_id").alias("_c"),
-                )
-            )
-            labels = (
-                labels.join(comp, labels.cluster_id == F.col("_n"), "left")
-                .select(
-                    "record_id",
-                    F.coalesce("_c", "cluster_id").alias("cluster_id"),
-                )
-            )
-            labels_checkpointed = False
-            history.append(
-                {"iteration": it, "local_finish_edges": int(e_count)}
-            )
-            e_count = 0
-            break
-        # hash-min step: each supernode takes min(self, neighbours).
-        # The result is a pointer FOREST (every chain strictly
-        # decreases to a local-minimum root).
+    while n_edges > cfg.cc_local_threshold:
+        # one round (module docstring): 1. hash-min
         lab = (
-            E.select(F.col("src").alias("node"), F.col("dst").alias("nb"))
-            .union(E.select(F.col("dst").alias("node"), F.col("src").alias("nb")))
+            edges.select(F.col("src").alias("node"), F.col("dst").alias("nb"))
+            .union(edges.select(F.col("dst").alias("node"), F.col("src").alias("nb")))
             .groupBy("node")
             .agg(F.min("nb").alias("mn"))
             .select("node", F.least("node", "mn").alias("lab"))
             .localCheckpoint(eager=True)
         )
-        # pointer-jump TO CLOSURE (lab <- lab[lab] until fixpoint): the
-        # lab table is one row per supernode — tiny next to E — and
-        # each jump halves the remaining pointer depth, so this loop is
-        # O(log diameter) joins over a small table. Collapsing every
-        # hash-min tree to its root before contracting is what keeps
-        # the OUTER round count low on chain-shaped graphs (er03's
-        # token-band runs): a 300-hop chain closes in one outer round.
-        for _ in range(64):  # 2^64 depth bound — never binding
+        # 2. pointer-jump to closure
+        moved = None
+        while moved != 0:
             ptr = lab.select(
                 F.col("node").alias("pj_node"), F.col("lab").alias("pj_lab")
             )
@@ -170,36 +111,11 @@ def connected_components(
             )
             moved = stepped.filter(F.col("lab") != F.col("_old")).count()
             lab = stepped.select("node", "lab")
-            if moved == 0:
-                break
-        # compose the global mapping with this round's relabeling
-        # (labels' cluster_id values are exactly the previous round's
-        # supernode ids, so a left join + coalesce covers supernodes
-        # that had no remaining edges)
-        labels = (
-            labels.join(
-                lab.select(
-                    F.col("node").alias("_n"), F.col("lab").alias("_l")
-                ),
-                labels.cluster_id == F.col("_n"),
-                "left",
-            )
-            .select(
-                "record_id", F.coalesce("_l", "cluster_id").alias("cluster_id")
-            )
-        )
-        labels_checkpointed = False
-        if (it + 1) % cfg.cc_checkpoint_every == 0:
-            labels = labels.localCheckpoint(eager=True)
-            labels_checkpointed = True
-        # contract: rewrite edges onto the new labels, drop self-loops
-        # and duplicates — the graph shrinks geometrically, so round
-        # r+1 is much cheaper than round r (the old loop re-joined the
-        # FULL edge table every iteration)
+        # 3. contract the edges onto the round's labels
         sl = lab.select(F.col("node").alias("src"), F.col("lab").alias("_sl"))
         dl = lab.select(F.col("node").alias("dst"), F.col("lab").alias("_dl"))
-        E = (
-            E.join(sl, "src")
+        edges = (
+            edges.join(sl, "src")
             .join(dl, "dst")
             .select(
                 F.least("_sl", "_dl").alias("src"),
@@ -209,26 +125,33 @@ def connected_components(
             .distinct()
             .localCheckpoint(eager=True)
         )
-        e_count = E.count()
+        n_edges = edges.count()
         history.append(
-            {"iteration": it, "edges_after_contraction": int(e_count)}
+            {"iteration": len(rounds), "edges_after_contraction": n_edges}
         )
-    if not labels_checkpointed:
-        labels = labels.localCheckpoint(eager=True)
-    if e_count != 0:
-        # a component needing more contraction rounds than
-        # cc_max_iterations would be silently split — surface it
-        # (ADVICE round 1)
-        import warnings
+        rounds.append(lab)
 
-        warnings.warn(
-            f"hash-min CC did not converge in {cfg.cc_max_iterations} "
-            f"iterations ({e_count} contracted edges remain); clusters "
-            "may be split",
-            RuntimeWarning,
-            stacklevel=2,
+    labels = _union_find(edges, n_edges)
+    if not rounds:
+        history.append({"local_union_find": True, "edges": n_edges})
+    elif n_edges:
+        history.append(
+            {"iteration": len(rounds), "local_finish_edges": n_edges}
         )
-    history.append({"converged": e_count == 0})
+    history.append({"converged": True})
+    # compose node -> round label -> ... -> final label; a round label
+    # with no edge left in later rounds keeps itself (left join +
+    # coalesce). The first round's table covers every input node.
+    for lab in reversed(rounds):
+        nxt = labels.select(
+            F.col("record_id").alias("_n"), F.col("cluster_id").alias("_c")
+        )
+        labels = lab.join(nxt, F.col("lab") == F.col("_n"), "left").select(
+            F.col("node").alias("record_id"),
+            F.coalesce("_c", "lab").alias("cluster_id"),
+        )
+    if rounds:
+        labels = labels.localCheckpoint(eager=True)
 
     if all_records is not None:
         labels = (
@@ -241,13 +164,15 @@ def connected_components(
     return labels, history
 
 
-def _local_connected_components(
-    matches: DataFrame, all_records: DataFrame | None, n_edges: int
-) -> tuple[DataFrame, list[dict]]:
-    """Driver-side union-find for small match graphs (see
-    cc_local_threshold). Produces the same (record_id, cluster_id =
-    min record_id of component) labeling as the distributed hash-min
-    path; singletons handled identically via all_records."""
+def _union_find(edges: DataFrame, n_edges: int) -> DataFrame:
+    """Driver-side union-find over ``edges(src, dst)`` — at most
+    ``cc_local_threshold`` rows, a few MB — as a broadcast
+    (record_id, cluster_id = min node of its component) table."""
+    if not n_edges:
+        # the empty edge checkpoint is the empty label table; an empty
+        # driver-built DataFrame would be a Python RDD whose every scan
+        # starts Python workers
+        return F.broadcast(edges.toDF("record_id", "cluster_id"))
     parent: dict[int, int] = {}
 
     def find(x: int) -> int:
@@ -258,45 +183,22 @@ def _local_connected_components(
             parent[x], x = root, parent[x]
         return root
 
-    rows = matches.select("left_id", "right_id").collect()
-    for r in rows:
-        a, b = r["left_id"], r["right_id"]
+    for a, b in edges.collect():
         parent.setdefault(a, a)
         parent.setdefault(b, b)
         ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[rb] = ra
-    comp_min: dict[int, int] = {}
-    for node in parent:
-        root = find(node)
-        prev = comp_min.get(root)
-        if prev is None or node < prev:
-            comp_min[root] = node
-    labels_rows = [(node, comp_min[find(node)]) for node in parent]
-    spark = matches.sparkSession
-    if labels_rows:
-        # Arrow upload (one columnar batch) instead of pickling a row
-        # list: the label relation is re-serialized to executors on
-        # every downstream action, and the row path measured ~1 s per
-        # action at 50k labels
-        import pandas as pd
+        # the smaller root wins, so every root is its component's min
+        parent[max(ra, rb)] = min(ra, rb)
+    # Arrow upload (one columnar batch) instead of pickling a row list:
+    # the label relation is re-serialized to executors on every
+    # downstream action, and the row path measured ~1 s per action at
+    # 50k labels
+    import pandas as pd
 
-        labels = spark.createDataFrame(
-            pd.DataFrame(labels_rows, columns=["record_id", "cluster_id"]),
-            "record_id long, cluster_id long",
-        )
-    else:
-        labels = spark.createDataFrame(
-            [], "record_id long, cluster_id long"
-        )
-    if all_records is not None:
-        labels = (
-            all_records.select("record_id")
-            .join(F.broadcast(labels), "record_id", "left")
-            .withColumn(
-                "cluster_id", F.coalesce(F.col("cluster_id"), F.col("record_id"))
-            )
-        )
-    history = [{"local_union_find": True, "edges": int(n_edges)},
-               {"converged": True}]
-    return labels, history
+    pdf = pd.DataFrame(
+        [(node, find(node)) for node in parent],
+        columns=["record_id", "cluster_id"],
+    )
+    return F.broadcast(edges.sparkSession.createDataFrame(
+        pdf, "record_id long, cluster_id long"
+    ))

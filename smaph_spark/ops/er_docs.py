@@ -39,8 +39,10 @@ def get_document_scorer(spark: SparkSession):
     train-feature fingerprint must match _DOC_CFG's (round-2 ADVICE:
     a scorer trained under shingle_k=7/num_minhash=128 was silently
     applied to shingle_k=5/num_minhash=64 features); on mismatch or a
-    missing artifact it retrains ON _DOC_CFG features. Artifact-write
-    policy (round-5 review, same as the PQ codebook): query time may
+    missing artifact it retrains ON _DOC_CFG features. Any other load
+    failure (a corrupt model directory, unreadable metadata) raises
+    instead of silently retraining. Artifact-write policy (round-5
+    review, same as the PQ codebook): query time may
     BOOTSTRAP a missing artifact but never overwrites an existing one
     — a present-but-mismatched artifact is code/artifact skew for
     scripts/train_scorer.py to resolve deliberately."""
@@ -49,23 +51,19 @@ def get_document_scorer(spark: SparkSession):
             load_scorer, load_scorer_meta, save_scorer, train_default_scorer,
         )
 
-        want_fp = _DOC_CFG.feature_fingerprint()
         try:
             meta = load_scorer_meta(_MODEL_PATH)
-            if meta.get("train_feature_fingerprint") != want_fp:
-                raise ValueError(
-                    "train/serve feature-config skew: artifact fp "
-                    f"{meta.get('train_feature_fingerprint')} != {want_fp}"
-                )
+        except FileNotFoundError:
+            meta = None
+        if meta and meta.get("train_feature_fingerprint") == \
+                _DOC_CFG.feature_fingerprint():
+            # a corrupt artifact raises here: it is not a retrain case
             model, threshold, _ = load_scorer(_MODEL_PATH)
-        except Exception:
-            artifact_exists = os.path.exists(
-                os.path.join(_MODEL_PATH, "scorer_meta.json")
-            )
+        else:
             model, threshold, stats, _ = train_default_scorer(
                 spark, cfg=_DOC_CFG
             )
-            if not artifact_exists:
+            if meta is None:
                 try:
                     save_scorer(model, _MODEL_PATH, threshold, stats,
                                 train_cfg=_DOC_CFG)

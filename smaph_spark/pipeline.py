@@ -3,8 +3,8 @@
 Query-lifecycle mapping (SURVEY §3.1 "Spark lifecycle equivalent"):
 stage 1 narrow fingerprinting (Arrow UDF) → stage 2 explode block keys
 + shuffle on block_key (salted) → stage 3 block-local self-join + pair
-features → stage 4 threshold filter → stage 5 checkpointed hash-min CC
-→ clusters sink.
+features → stage 4 threshold filter → stage 5 CC (contraction rounds,
+then one driver union-find) → clusters sink.
 
 Resumability (north_rule): when ``checkpoint_dir`` is set, every stage
 writes a parquet snapshot + ``_metrics.json`` (row count, elapsed

@@ -121,6 +121,30 @@ def test_scorer_retrains_on_feature_fingerprint_mismatch(
         ERConfig().feature_fingerprint()
 
 
+def test_corrupt_scorer_artifact_raises(spark, monkeypatch, tmp_path):
+    """A matching meta file plus a broken model/ directory is a corrupt
+    artifact, not a retrain case: the load must fail loudly and never
+    fall back to training a replacement inside the query."""
+    import shutil
+
+    import smaph_spark.operators.model_io as mio
+
+    def never(*a, **kw):
+        raise AssertionError("train_default_scorer must not be called")
+
+    path = tmp_path / "scorer"
+    (path / "model" / "metadata").mkdir(parents=True)
+    (path / "model" / "metadata" / "part-00000").write_text("{truncated")
+    shutil.copy(os.path.join(er_docs._MODEL_PATH, "scorer_meta.json"), path)
+    monkeypatch.setattr(mio, "train_default_scorer", never)
+    monkeypatch.setattr(er_docs, "_MODEL_PATH", str(path))
+    monkeypatch.setattr(er_docs, "_SCORER_CACHE", {})
+    with pytest.raises(Exception) as exc:
+        er_docs.get_document_scorer(spark)
+    assert not isinstance(exc.value, AssertionError)
+    assert er_docs._SCORER_CACHE == {}
+
+
 def test_er01_er02_share_one_pipeline_run(spark):
     """er01 and er02 both consume the flagship pipeline; the driver
     executing both must pay blocking+scoring once (round-2 VERDICT

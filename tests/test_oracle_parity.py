@@ -31,9 +31,13 @@ def test_rows_only_runs(spark, name):
     assert len(df.schema.fields) > 0
 
 
-#: {scale: {query: (rows, sorted-row sha256)}} for the rows-only
-#: queries built on the shared candidate stage (operators/pairs.py
-#: block_pairs / attach_sides); computed before that stage was shared
+#: {scale: {query: (rows, sorted-row sha256)}} for rows-only queries:
+#: dd03/dd04/dd06/dd09/er01/er02 (the shared candidate stage,
+#: operators/pairs.py block_pairs / attach_sides) were computed before
+#: that stage was shared; er06 (CC labels) and sim02/sim03/sim04 (the
+#: shared top-k rerank) before connected_components was reduced to one
+#: path. sim03's KMeans is partition-sensitive; its pins hold at both
+#: local[2] and local[4].
 ROW_PINS = {
     "sf0.001": {
         "dd03_minhash_lsh_pairs": (28, "ca6c63095bd0d7f5075d35b09b50269b537bfff1b7f4680dfe6df40e024d2ace"),
@@ -42,6 +46,10 @@ ROW_PINS = {
         "dd09_cdc_containment_pairs": (24, "89f7a48f6d19d6bcbdc9fa1f8020d0c0427adc2a5bc312ae3c86fc763760456f"),
         "er01_document_clusters": (476, "5fd29e4c83ebafc065061189d458009f55e6a871beafcf47619959eb81c13b4c"),
         "er02_document_match_pairs": (28, "f9aa2d184577f349518df6cdfca81f02d5d1b8fe5bae55fe3d976f90458c31bb"),
+        "er06_greedy_step_features": (53, "a62e3188f5af9ff087b67991dbb7bc528172abbdd5000922c67f2280e2b55130"),
+        "sim02_lsh_topk": (50, "5c9e98126dd5a5a6bbba8eabaadfc64cc7e4bb3f75089b29aa5a4ecdbbafcfdf"),
+        "sim03_ivf_topk": (50, "8cc10621ab76a26c9ee97583e62486604965235467ae13ed025c3a886efb0c64"),
+        "sim04_pq_topk": (50, "663152960bbda8aa6cbb833ebaf2f7f41c36b125f62a1a63fec4b80c88174f3e"),
     },
     "sf0.01": {
         "dd03_minhash_lsh_pairs": (25, "6ed27a7170c7be2ea07a4520524d37338b353ce467eeadaa7d5b37652fe870de"),
@@ -50,6 +58,10 @@ ROW_PINS = {
         "dd09_cdc_containment_pairs": (25, "1bd81d83d6b8e467e88e5afdad8896f20c47687497044971c28a5da1f9c25b1a"),
         "er01_document_clusters": (476, "17bc8e6bc448ad104f4ccdbe6753233512d717aff3283438f2f06cfd5474a334"),
         "er02_document_match_pairs": (25, "30977222668a23f01fa0d5c118ca996dfdeda258078e97b59561dd91c17a938f"),
+        "er06_greedy_step_features": (71, "1717af07109d718c0290c0e138162b4ce85c412316e96f98b6f4ad89041471c4"),
+        "sim02_lsh_topk": (50, "f9010e50977dd7cb578ebd091c914477a61c262b8bcf3d575247919d8950a9bc"),
+        "sim03_ivf_topk": (50, "fc47c01396309f698a618ea2d2b05848619b6d98f67f0712fc88f7cfd5f4f23e"),
+        "sim04_pq_topk": (50, "e00a90336cf3f7715cad8c9195f7e3358d18e5dd9dfaf38e1002ae6cce1b3267"),
     },
 }
 PINNED = ROW_PINS.get(os.path.basename(os.path.normpath(SF_DIR)), {})

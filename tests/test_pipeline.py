@@ -150,29 +150,63 @@ def test_block_cap_metrics_logged(spark):
     assert inc.stage_metrics["s2_block_caps"] == caps
 
 
-def test_cc_local_and_distributed_paths_agree(spark):
-    """The driver union-find fast path (cc_local_threshold) must yield
-    exactly the distributed hash-min labeling."""
+def _reference_components(edges, records):
+    """Plain-Python union-find: {record: min record of its component}."""
+    comp = {r: {r} for r in records}
+    for a, b in edges:
+        if comp[a] is not comp[b]:
+            merged = comp[a] | comp[b]
+            for r in merged:
+                comp[r] = merged
+    return {r: min(c) for r, c in comp.items()}
+
+
+@pytest.mark.parametrize("threshold", [0, 3, 100_000],
+                         ids=["rounds", "round_then_finish", "union_find"])
+def test_cc_local_and_distributed_paths_agree(spark, threshold):
+    """Every cc_local_threshold gives the reference min-id labeling:
+    0 runs contraction rounds only, 3 runs one round and then finishes
+    with the driver union-find mid-run, 100k runs the union-find over
+    the raw input. Duplicate, reversed and self-loop edges and an
+    unmatched record must not change the components."""
     from dataclasses import replace
 
     from smaph_spark.operators.clustering import connected_components
 
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (3, 4)],
-        "left_id long, right_id long",
-    )
-    recs = spark.createDataFrame(
-        [(i,) for i in [1, 2, 3, 4, 10, 11, 20, 21, 22, 99]], "record_id long"
-    )
-    cfg_local = ERConfig()  # threshold 100k -> local path
-    cfg_dist = replace(ERConfig(), cc_local_threshold=0)  # force distributed
-    loc, hist_l = connected_components(edges, cfg_local, all_records=recs)
-    dist, hist_d = connected_components(edges, cfg_dist, all_records=recs)
-    l = sorted((r["record_id"], r["cluster_id"]) for r in loc.collect())
-    d = sorted((r["record_id"], r["cluster_id"]) for r in dist.collect())
-    assert l == d
-    assert hist_l[0].get("local_union_find") is True
-    assert any("iteration" in h for h in hist_d)
+    # 31 and 41 are hash-min roots nothing points at, so their edges
+    # survive the first contraction round
+    pairs = [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (3, 4),
+             (5, 6), (6, 7), (7, 8), (8, 9), (30, 32), (32, 31),
+             (40, 42), (42, 41), (2, 1), (1, 2), (22, 22)]
+    records = [1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11, 20, 21, 22,
+               30, 31, 32, 40, 41, 42, 99]
+    edges = spark.createDataFrame(pairs, "left_id long, right_id long")
+    recs = spark.createDataFrame([(i,) for i in records], "record_id long")
+    cfg = replace(ERConfig(), cc_local_threshold=threshold)
+    labels, hist = connected_components(edges, cfg, all_records=recs)
+    got = {r["record_id"]: r["cluster_id"] for r in labels.collect()}
+    assert got == _reference_components(pairs, records)
+
+    assert hist[-1] == {"converged": True}
+    rounds = [h for h in hist[:-1] if "edges_after_contraction" in h]
+    assert [h["iteration"] for h in rounds] == list(range(len(rounds)))
+    if threshold == 100_000:
+        assert hist == [{"local_union_find": True, "edges": len(pairs)},
+                        {"converged": True}]
+        return
+    assert rounds and all(set(h) == {"iteration", "edges_after_contraction"}
+                          for h in rounds)
+    finish = hist[len(rounds):-1]
+    if threshold == 0:
+        assert finish == [] and rounds[-1]["edges_after_contraction"] == 0
+    else:
+        assert rounds[-1]["edges_after_contraction"] <= threshold
+        assert finish == [{
+            "iteration": len(rounds),
+            "local_finish_edges": rounds[-1]["edges_after_contraction"],
+        }]
+        assert finish[0]["local_finish_edges"] > 0
+
 
 def test_stage_path_keyed_by_scorer_identity(spark, tmp_path):
     """A retrained scorer with an identical config/threshold must not
@@ -207,24 +241,35 @@ def test_input_fingerprint_duplicates_do_not_cancel(spark):
     assert ERPipeline._input_fingerprint(a) != ERPipeline._input_fingerprint(b)
 
 
-def test_cc_long_chain_converges_within_log_iterations(spark):
-    """Pointer jumping must label a chain FAR longer than the iteration
-    cap: a 300-hop path converges in O(log d) iterations, where plain
-    neighbour propagation would need 300 (> cc_max_iterations=20) and
-    silently split the component."""
+@pytest.mark.parametrize("threshold,shuffle_seed", [(0, None), (5, 0)],
+                         ids=["ordered", "shuffled_finish"])
+def test_cc_long_chain_converges_within_log_iterations(
+    spark, threshold, shuffle_seed
+):
+    """Pointer jumping must label a 300-hop path in O(log d) rounds,
+    where plain neighbour propagation would need 300 and a cap on the
+    rounds would silently split the component. The ordered path
+    0-1-...-300 collapses in one round; with shuffled ids the path
+    has many hash-min roots and takes several rounds, and threshold 5
+    finishes the contracted path with the driver union-find."""
+    import random
     import warnings
     from dataclasses import replace
 
     from smaph_spark.operators.clustering import connected_components
 
-    n = 301  # single path 0-1-2-...-300
+    n = 301  # single path over ids 0..300
+    ids = list(range(n))
+    if shuffle_seed is not None:
+        random.Random(shuffle_seed).shuffle(ids)
     edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "left_id long, right_id long"
+        [(ids[i], ids[i + 1]) for i in range(n - 1)],
+        "left_id long, right_id long",
     )
-    cfg = replace(ERConfig(), cc_local_threshold=0)
+    cfg = replace(ERConfig(), cc_local_threshold=threshold)
     with warnings.catch_warnings():
-        # non-convergence warning = failure (RuntimeWarning only: the
-        # blanket filter also trips py4j's benign socket-GC unraisable)
+        # no RuntimeWarning of any kind (the blanket filter would also
+        # trip py4j's benign socket-GC unraisable)
         warnings.simplefilter("error", RuntimeWarning)
         labels, hist = connected_components(edges, cfg)
     rows = labels.collect()
@@ -232,6 +277,7 @@ def test_cc_long_chain_converges_within_log_iterations(spark):
     assert {r["cluster_id"] for r in rows} == {0}
     n_iters = sum(1 for h in hist if "iteration" in h)
     assert n_iters <= 12, hist
+    assert any("local_finish_edges" in h for h in hist) == (threshold > 0)
 
 
 def test_incremental_er_equals_full_batch(spark):
