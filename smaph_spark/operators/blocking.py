@@ -23,11 +23,17 @@ The cap is shared: the standalone band self-joins (dedup dd03
 ``(block_key, record_id)`` frames through ``cap_and_salt_blocks`` and
 summarise the metrics with ``cap_counts``, then pair through
 ``pairs.block_pairs`` and ``pairs.attach_sides`` like the ER pipeline.
+
+The ER pipeline does not run ``cap_counts``: it passes an
+``Observation`` to ``cap_and_salt_blocks``, which attaches the same
+three counts to the sized key table, so they are collected by the
+action that materializes the salted frame (the stage-2 snapshot write,
+or the first action over the persisted frame) with no job of its own.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from smaph_spark.config import ERConfig
@@ -73,7 +79,7 @@ def generate_blocks(normalized: DataFrame, cfg: ERConfig) -> DataFrame:
 
 
 def cap_and_salt_blocks(
-    blocks: DataFrame, cfg: ERConfig
+    blocks: DataFrame, cfg: ERConfig, *, observation: Observation | None = None
 ) -> tuple[DataFrame, DataFrame]:
     """blocks(block_key, record_id) -> (salted(join_key, block_key,
     record_id), block_metrics): the frequency cap (F3 analogue) and
@@ -87,6 +93,13 @@ def cap_and_salt_blocks(
     ANSI type coercion would resolve the when/otherwise to the key's
     type and throw CAST_INVALID_INPUT the moment any key actually lands
     in the salted band (round-4 review — reproduced).
+
+    Given ``observation``, the ``cap_counts`` triple is observed on the
+    sized key table as ``salted_blocks``, ``dropped_blocks`` and
+    ``records_in_dropped_blocks``; read it only after an action has
+    executed ``salted``. Observed metrics reject DISTINCT, so a key is
+    counted as the sum of ``1 / n_records`` over its ``n_records`` rows,
+    rounded — exact, since each key's rows sum to 1.
     """
     # ONE shuffle (round-6): the per-key count rides a window over the
     # key partitioning instead of a separate groupBy + self-join (two
@@ -104,6 +117,21 @@ def cap_and_salt_blocks(
     )
 
     drop_limit = cfg.max_block_size * cfg.block_salt_buckets
+    if observation is not None:
+        n = F.col("n_records")
+
+        def keys(cond):
+            return F.round(F.coalesce(
+                F.sum(F.when(cond, 1.0 / n)), F.lit(0.0)
+            )).cast("long")
+
+        enriched = enriched.observe(
+            observation,
+            keys((n > cfg.max_block_size) & (n <= drop_limit))
+            .alias("salted_blocks"),
+            keys(n > drop_limit).alias("dropped_blocks"),
+            F.count_if(n > drop_limit).alias("records_in_dropped_blocks"),
+        )
     metrics = (
         enriched.filter(F.col("n_records") > cfg.max_block_size)
         .groupBy("block_key")

@@ -22,6 +22,12 @@ round ran). A round is
 The per-round relabelings are composed back onto the original nodes,
 newest round first, after the finish.
 
+Every count is observed (``pyspark.sql.Observation``) on the eager
+``localCheckpoint`` that materializes the counted frame: the input edge
+count, each round's contracted edge count and each pointer jump's
+``moved`` count (``count_if(lab != _old)``) ride the checkpoint's job
+instead of starting one of their own.
+
 Termination needs no iteration cap. Every round strictly lowers the
 edge count: in each component the min node m is every neighbour's
 hash-min pick, so the edges at m become self-loops. The live supernode
@@ -36,7 +42,7 @@ blocking cap bounds max degree upstream.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from smaph_spark.config import ERConfig
@@ -74,12 +80,11 @@ def connected_components(
     last ``{"converged": True}``.
     """
     # ONE materialization of the (often expensive) upstream pair plan:
-    # the size probe, the first round and the finish's collect all read
-    # this checkpoint instead of re-running the candidate join
-    edges = matches.select(
+    # the first round and the finish's collect read this checkpoint
+    # instead of re-running the candidate join
+    edges, n_edges = _checkpoint(matches.select(
         F.col("left_id").alias("src"), F.col("right_id").alias("dst")
-    ).localCheckpoint(eager=True)
-    n_edges = edges.count()
+    ), F.count(F.lit(1)))
     rounds: list[DataFrame] = []
     history: list[dict] = []
     while n_edges > cfg.cc_local_threshold:
@@ -98,23 +103,21 @@ def connected_components(
             ptr = lab.select(
                 F.col("node").alias("pj_node"), F.col("lab").alias("pj_lab")
             )
-            stepped = (
-                lab.join(ptr, lab.lab == ptr.pj_node, "left")
-                .select(
+            lab, moved = _checkpoint(
+                lab.join(ptr, lab.lab == ptr.pj_node, "left").select(
                     "node",
                     F.least(
                         F.col("lab"), F.coalesce("pj_lab", F.col("lab"))
                     ).alias("lab"),
                     F.col("lab").alias("_old"),
-                )
-                .localCheckpoint(eager=True)
+                ),
+                F.count_if(F.col("lab") != F.col("_old")),
             )
-            moved = stepped.filter(F.col("lab") != F.col("_old")).count()
-            lab = stepped.select("node", "lab")
+            lab = lab.select("node", "lab")
         # 3. contract the edges onto the round's labels
         sl = lab.select(F.col("node").alias("src"), F.col("lab").alias("_sl"))
         dl = lab.select(F.col("node").alias("dst"), F.col("lab").alias("_dl"))
-        edges = (
+        edges, n_edges = _checkpoint(
             edges.join(sl, "src")
             .join(dl, "dst")
             .select(
@@ -122,10 +125,9 @@ def connected_components(
                 F.greatest("_sl", "_dl").alias("dst"),
             )
             .filter(F.col("src") != F.col("dst"))
-            .distinct()
-            .localCheckpoint(eager=True)
+            .distinct(),
+            F.count(F.lit(1)),
         )
-        n_edges = edges.count()
         history.append(
             {"iteration": len(rounds), "edges_after_contraction": n_edges}
         )
@@ -162,6 +164,15 @@ def connected_components(
             )
         )
     return labels, history
+
+
+def _checkpoint(df: DataFrame, metric: Column) -> tuple[DataFrame, int]:
+    """Eager local checkpoint of ``df`` and the value of the aggregate
+    ``metric`` over its rows, observed on the checkpoint's own job: no
+    Spark job runs only to count."""
+    obs = Observation()
+    df = df.observe(obs, metric.alias("v")).localCheckpoint(eager=True)
+    return df, obs.get["v"]
 
 
 def _union_find(edges: DataFrame, n_edges: int) -> DataFrame:

@@ -153,12 +153,14 @@ def tune_gbt_scorer(
     report) where report records per-subset CV metrics — the analogue
     of the reference's printed tune table."""
     from pyspark.ml import Pipeline
-    from pyspark.ml.classification import GBTClassifier, LogisticRegression
+    from pyspark.ml.classification import GBTClassifier
     from pyspark.ml.evaluation import BinaryClassificationEvaluator
     from pyspark.ml.feature import VectorAssembler
     from pyspark.ml.tuning import CrossValidator, ParamGridBuilder
 
-    from smaph_spark.operators.scoring import make_scaler_stage
+    from smaph_spark.operators.scoring import (
+        linear_classifier, make_scaler_stage,
+    )
 
     if model_family not in ("gbt", "linear"):
         raise ValueError(f"unknown model_family {model_family!r}")
@@ -188,7 +190,7 @@ def tune_gbt_scorer(
             assembler = VectorAssembler(inputCols=list(cols),
                                         outputCol="raw_features")
             scaler = make_scaler_stage(normalizer)
-            lr = LogisticRegression(labelCol="label", featuresCol="features")
+            lr = linear_classifier(labelCol="label", featuresCol="features")
             grid = (
                 ParamGridBuilder()
                 .addGrid(lr.regParam, [0.001, 0.01, 0.1])

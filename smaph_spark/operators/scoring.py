@@ -178,6 +178,28 @@ def make_scaler_stage(normalizer: str):
     raise ValueError(f"unknown normalizer {normalizer!r}")
 
 
+def linear_classifier(**params):
+    """``LogisticRegression(**params)`` whose fitted models carry no
+    training summary — the one estimator every in-session linear fit
+    goes through (``train_linear_scorer`` and the tune grid in
+    ``model_io``). Spark 4.1's summary holds the SparkSession, whose
+    ``observationManager`` is not transient, so once any Observation
+    has run in the session (the ER pipeline's counts) transforming with
+    a summary-bearing model fails with ``NotSerializableException:
+    ObservationManager``. Nothing here reads ``.summary``. Works under
+    ``Pipeline.fit``, ``CrossValidator`` and save/load."""
+    from pyspark.ml.classification import LogisticRegression
+
+    class _SummaryFreeLR(LogisticRegression):
+        def _fit(self, dataset):
+            model = super()._fit(dataset)
+            jvm = dataset.sparkSession.sparkContext._jvm
+            model._java_obj.setSummary(jvm.scala.Option.empty())
+            return model
+
+    return _SummaryFreeLR(**params)
+
+
 def train_linear_scorer(labeled_feat: DataFrame,
                         feature_cols: list[str] | None = None,
                         normalizer: str = "zscore",
@@ -195,13 +217,12 @@ def train_linear_scorer(labeled_feat: DataFrame,
     ScaleFeatureNormalizer.java:62-66. Score via :func:`gbt_score`
     (probability column, same contract)."""
     from pyspark.ml import Pipeline
-    from pyspark.ml.classification import LogisticRegression
     from pyspark.ml.feature import VectorAssembler
 
     cols = feature_cols or FEATURE_COLS
     assembler = VectorAssembler(inputCols=cols, outputCol="raw_features")
     scaler = make_scaler_stage(normalizer)
-    lr = LogisticRegression(
+    lr = linear_classifier(
         labelCol="label", featuresCol="features", regParam=reg_param,
         elasticNetParam=elastic_net, maxIter=max_iter,
     )

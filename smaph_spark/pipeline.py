@@ -12,6 +12,17 @@ seconds, snapshot path). A re-run with the same
 config fingerprint reads the snapshot instead of recomputing; the
 per-row invariant sha256(content) is verified against the source table
 after every stage that carries content columns.
+
+Counts ride the actions that already run. A stage's ``rows`` is
+observed (``pyspark.sql.Observation``) by its snapshot write, not
+counted by a job of its own; each stage runs lazily inside that write,
+so its ``elapsed_sec`` is compute plus write. Stage 2's cap counts
+(``s2_block_caps``) and the delta's ``s2_delta_key_rows`` are observed
+on the key table and read at the end of the run, after the stage-2
+write or, without snapshots, after the CC input checkpoint has first
+executed the persisted stage (recounted only when AQE dropped that
+stage, see ``_resolve``). The counts that keep a job of their own are
+the history/delta overlap check and ``verify_content_sha``.
 """
 
 from __future__ import annotations
@@ -23,7 +34,7 @@ import re
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from smaph_spark.config import ERConfig
@@ -63,6 +74,9 @@ class ERPipeline:
         self.checkpoint_dir = checkpoint_dir
         self.scorer_model = scorer_model
         self._metrics: dict = {}
+        # stage_metrics key -> (Observation on the stage-2 key table,
+        # recount), read at the end of _resolve
+        self._observed: dict = {}
         # scorer identity keys the snapshots too: a retrained model with
         # a coincidentally-equal threshold must not resume pair scores
         # produced by the old model (round-2 ADVICE). Spark ML stage
@@ -129,7 +143,11 @@ class ERPipeline:
         """``path`` overrides the run-scoped snapshot location — used for
         artifacts shared ACROSS runs (the history block-key table is
         keyed by the history fingerprint alone, so successive delta
-        batches against the same history all reuse one snapshot)."""
+        batches against the same history all reuse one snapshot).
+
+        With a snapshot, ``rows`` is observed by the write itself (no
+        count job), and ``elapsed_sec`` is compute plus write: the
+        stage's plan runs lazily inside its own write."""
         if path is None:
             path = self._stage_path(stage)
         if path and os.path.exists(os.path.join(path, "_SUCCESS")):
@@ -138,7 +156,10 @@ class ERPipeline:
         t0 = time.time()
         df = compute()
         if path:
-            df.write.mode("overwrite").parquet(path)
+            obs = Observation()
+            df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+                "overwrite"
+            ).parquet(path)
             df = self.spark.read.parquet(path)
         else:
             # no snapshot to re-read from: persist so downstream stages
@@ -148,7 +169,7 @@ class ERPipeline:
             df = df.persist()
         m = {"elapsed_sec": round(time.time() - t0, 3)}
         if path:
-            m["rows"] = df.count()
+            m["rows"] = obs.get["rows"]
             m["path"] = path
             with open(os.path.join(path, "_metrics.json"), "w") as fh:
                 json.dump(m, fh)
@@ -273,8 +294,13 @@ class ERPipeline:
 
         def _keys():
             delta_keys = generate_blocks(new_norm, cfg)
-            self._metrics["s2_delta_key_rows"] = delta_keys.count()
-            return hist_keys.unionByName(delta_keys)
+            obs = Observation()
+            self._observed["s2_delta_key_rows"] = (
+                obs, lambda: {"rows": delta_keys.count()}
+            )
+            return hist_keys.unionByName(
+                delta_keys.observe(obs, F.count(F.lit(1)).alias("rows"))
+            )
 
         return self._resolve(
             history_normalized.unionByName(new_norm), _keys,
@@ -294,13 +320,17 @@ class ERPipeline:
         pairs touching one of them are scored; given
         ``history_clusters``, they re-enter CC as pseudo-edges."""
         cfg = self.cfg
+        self._observed.clear()
 
         def _blocks():
-            salted, block_metrics = cap_and_salt_blocks(block_keys(), cfg)
-            self._metrics["s2_block_caps"] = dict(zip(
+            obs = Observation()
+            salted, block_metrics = cap_and_salt_blocks(
+                block_keys(), cfg, observation=obs
+            )
+            self._observed["s2_block_caps"] = (obs, lambda: dict(zip(
                 ("salted_blocks", "dropped_blocks", "records_in_dropped_blocks"),
                 cap_counts(block_metrics),
-            ))
+            )))
             return salted
 
         salted = self._load_or_compute("s2_blocks", _blocks)
@@ -341,6 +371,17 @@ class ERPipeline:
             return clusters
 
         clusters = self._load_or_compute("s5_clusters", _clusters)
+
+        # every observed node sits in stage 2, which by now the stage-2
+        # write, or without snapshots the first action over the
+        # persisted stage (at the latest CC's input checkpoint), has
+        # run. Without snapshots AQE can drop that stage from the plan
+        # that ran it once a join there proved empty (an empty input,
+        # or no candidate pair at all), and Spark then reports an empty
+        # metrics map; only then recount.
+        for key, (obs, recount) in self._observed.items():
+            got = recount() if obs._jo.getAsJava().isEmpty() else obs.get
+            self._metrics[key] = got["rows"] if key == "s2_delta_key_rows" else got
 
         return PipelineResult(
             normalized=normalized,

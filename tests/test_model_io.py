@@ -165,6 +165,33 @@ def test_linear_baseline_scorer_f1(spark):
         assert "raw_features" not in scored.columns
 
 
+def test_linear_family_after_observation(spark):
+    """Once an Observation has run in the session (the ER pipeline
+    observes its counts), an in-session linear fit must still train,
+    score and CV-tune: Spark 4.1's LogisticRegression training summary
+    holds the session, whose ObservationManager does not serialize, so
+    the fits drop the summary."""
+    from pyspark.sql import Observation
+
+    from smaph_spark.operators.scoring import train_linear_scorer
+
+    obs = Observation()
+    spark.range(3).observe(obs, F.count(F.lit(1)).alias("n")).collect()
+    assert obs.get == {"n": 3}
+
+    _, _, feat = _labeled_feature_frame(spark, seed=13)
+    n = feat.count()
+    model = train_linear_scorer(feat)
+    scores = gbt_score(model, feat).select("score").collect()
+    assert len(scores) == n and all(0.0 <= r["score"] <= 1.0 for r in scores)
+    tuned, report = tune_gbt_scorer(
+        feat, feature_subsets=[["jaccard_est", "name_jw", "same_lang"]],
+        folds=2, parallelism=2, model_family="linear",
+    )
+    assert report["model_family"] == "linear"
+    assert len(gbt_score(tuned, feat).select("score").collect()) == n
+
+
 def test_tune_linear_family_small_grid(spark):
     """M5 with model_family='linear': the CV grid sweeps
     regParam x elasticNetParam (liblinear C-sweep analogue) and the

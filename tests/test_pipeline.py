@@ -124,30 +124,140 @@ def test_checkpoint_not_resumed_for_different_input(spark, corpus, tmp_path_fact
     assert ERPipeline.verify_content_sha(other, res2.normalized) == 0
 
 
-def test_block_cap_metrics_logged(spark):
+def _cap_reference(normalized, cfg):
+    """cap_counts over the key table of ``normalized``, as a
+    ``s2_block_caps`` dict."""
+    from smaph_spark.operators.blocking import (
+        cap_and_salt_blocks, cap_counts, generate_blocks,
+    )
+
+    _, block_metrics = cap_and_salt_blocks(generate_blocks(normalized, cfg), cfg)
+    return dict(zip(
+        ("salted_blocks", "dropped_blocks", "records_in_dropped_blocks"),
+        cap_counts(block_metrics),
+    ))
+
+
+def test_block_cap_metrics_logged(spark, tmp_path):
     """Oversized blocks are salted/dropped with logged counts, never
     silently (reference logs binding caps,
-    DefaultBindingGenerator.java:135-136)."""
+    DefaultBindingGenerator.java:135-136). The counts observed on the
+    key table equal ``cap_counts`` over the same key table, with
+    snapshots (observed by the stage-2 write) and without (observed
+    when the persisted stage first runs)."""
+    # 90% of the files share a handful of hot paths: their name keys
+    # are dropped, and near-duplicate clusters salt LSH band keys
     files_pdf, _, _ = generate_files_corpus(
         n_clusters=40, hot_path_fraction=0.9, seed=7
     )
     files = spark.createDataFrame(files_pdf)
     cfg = ERConfig(max_block_size=4, block_salt_buckets=2)
-    pipe = ERPipeline(spark, cfg)
-    pipe.run(files)
-    caps = pipe._metrics["s2_block_caps"]
-    assert caps["salted_blocks"] + caps["dropped_blocks"] > 0
-
-    # the delta path caps the same union key table, so it logs the
-    # same counts as the batch run over history ∪ delta
     bucket = F.pmod(F.xxhash64("repo", "path", "commit"), F.lit(5))
     history, delta = files.filter(bucket < 4), files.filter(bucket >= 4)
-    hist_res = ERPipeline(spark, cfg).run(history)
-    inc = ERPipeline(spark, cfg).run_incremental(
+    for ckpt in (None, str(tmp_path)):
+        res = ERPipeline(spark, cfg, checkpoint_dir=ckpt).run(files)
+        caps = res.stage_metrics["s2_block_caps"]
+        assert caps == _cap_reference(res.normalized, cfg), ckpt
+        assert caps["salted_blocks"] > 0 and caps["dropped_blocks"] > 0
+        assert caps["records_in_dropped_blocks"] > caps["dropped_blocks"]
+
+        # the delta path caps the same union key table, so it logs the
+        # same counts as the batch run over history ∪ delta
+        hist_res = ERPipeline(spark, cfg, checkpoint_dir=ckpt).run(history)
+        inc = ERPipeline(spark, cfg, checkpoint_dir=ckpt).run_incremental(
+            history, delta, hist_res.clusters,
+            history_normalized=hist_res.normalized,
+        )
+        assert inc.stage_metrics["s2_block_caps"] == caps, ckpt
+
+
+def test_snapshot_rows_are_exact(spark, corpus, tmp_path):
+    """Each snapshot stage's ``rows`` (observed by its write) equals the
+    row count of the parquet it wrote, for ``run`` and
+    ``run_incremental``; the delta's observed ``s2_delta_key_rows``
+    equals a count of the delta's block keys."""
+    from smaph_spark.operators.blocking import generate_blocks
+
+    files, _, _ = corpus
+    cfg = ERConfig()
+    ckpt = str(tmp_path)
+    bucket = F.pmod(F.xxhash64("repo", "path", "commit"), F.lit(5))
+    history, delta = files.filter(bucket < 4), files.filter(bucket >= 4)
+    hist_res = ERPipeline(spark, cfg, checkpoint_dir=ckpt).run(history)
+    inc = ERPipeline(spark, cfg, checkpoint_dir=ckpt).run_incremental(
         history, delta, hist_res.clusters,
         history_normalized=hist_res.normalized,
     )
-    assert inc.stage_metrics["s2_block_caps"] == caps
+    for res in (hist_res, inc):
+        written = {k: m for k, m in res.stage_metrics.items()
+                   if isinstance(m, dict) and "path" in m}
+        assert {"s1_normalized", "s2_blocks", "s3_pairs_scored",
+                "s4_matches", "s5_clusters"} <= set(written)
+        for stage, m in written.items():
+            assert m["rows"] == spark.read.parquet(m["path"]).count(), stage
+    assert "s2_history_keys" in inc.stage_metrics
+    delta_norm = spark.read.parquet(inc.stage_metrics["s1_normalized"]["path"])
+    assert inc.stage_metrics["s2_delta_key_rows"] == (
+        generate_blocks(delta_norm, cfg).count()
+    )
+
+
+def _solo_files(spark, ids):
+    """Files that share no block key with any other file: unique names
+    and 100 random words of content each."""
+    import random
+
+    rng = random.Random(5)
+    words = ["w%05d" % rng.randrange(100_000) for _ in range(100 * max(ids) + 100)]
+    return spark.createDataFrame(
+        [(f"zz/solo{i}", f"solo_{i}_unique.txt", "c0", "text",
+          " ".join(words[i * 100:(i + 1) * 100])) for i in ids],
+        "repo string, path string, commit string, lang string, content string",
+    )
+
+
+def test_no_snapshot_runs_without_matches_finish(spark):
+    """Without snapshots the stage-2 counts are read after CC, and they
+    stay exact when nothing matches: a delta that matches nothing in a
+    real history, an incremental run with no candidate pair at all and
+    an empty input. In the last two AQE drops stage 2 from the plan
+    that runs it (a join side is empty), Spark reports no observed
+    metrics, and the pipeline recounts."""
+    from smaph_spark.operators.blocking import generate_blocks
+
+    cfg = ERConfig()
+    files_pdf, _, _ = generate_files_corpus(n_clusters=30, seed=5)
+    for history, delta in (
+        (spark.createDataFrame(files_pdf), _solo_files(spark, range(4))),
+        (_solo_files(spark, range(4)), _solo_files(spark, range(4, 8))),
+    ):
+        hist_res = ERPipeline(spark, cfg).run(history)
+        inc = ERPipeline(spark, cfg).run_incremental(
+            history, delta, hist_res.clusters,
+            history_normalized=hist_res.normalized,
+        )
+        assert inc.matches.count() == 0
+        new_norm = inc.normalized.join(
+            hist_res.normalized, "record_id", "left_anti")
+        want = {r["record_id"]: r["cluster_id"]
+                for r in hist_res.clusters.collect()}
+        want.update({r["record_id"]: r["record_id"]
+                     for r in new_norm.collect()})
+        assert len(want) == hist_res.normalized.count() + 4
+        assert {r["record_id"]: r["cluster_id"]
+                for r in inc.clusters.collect()} == want
+        sm = inc.stage_metrics
+        assert sm["s2_block_caps"] == _cap_reference(inc.normalized, cfg)
+        assert sm["s2_delta_key_rows"] == (
+            generate_blocks(new_norm, cfg).count()
+        )
+
+    res = ERPipeline(spark, cfg).run(spark.createDataFrame([], delta.schema))
+    assert res.clusters.count() == 0
+    assert res.stage_metrics["s2_block_caps"] == {
+        "salted_blocks": 0, "dropped_blocks": 0,
+        "records_in_dropped_blocks": 0,
+    }
 
 
 def _reference_components(edges, records):
@@ -188,6 +298,17 @@ def test_cc_local_and_distributed_paths_agree(spark, threshold):
     assert got == _reference_components(pairs, records)
 
     assert hist[-1] == {"converged": True}
+    # the observed counts: the same history as counting each checkpoint
+    assert hist == {
+        0: [{"iteration": 0, "edges_after_contraction": 2},
+            {"iteration": 1, "edges_after_contraction": 0},
+            {"converged": True}],
+        3: [{"iteration": 0, "edges_after_contraction": 2},
+            {"iteration": 1, "local_finish_edges": 2},
+            {"converged": True}],
+        100_000: [{"local_union_find": True, "edges": len(pairs)},
+                  {"converged": True}],
+    }[threshold]
     rounds = [h for h in hist[:-1] if "edges_after_contraction" in h]
     assert [h["iteration"] for h in rounds] == list(range(len(rounds)))
     if threshold == 100_000:
@@ -278,6 +399,9 @@ def test_cc_long_chain_converges_within_log_iterations(
     n_iters = sum(1 for h in hist if "iteration" in h)
     assert n_iters <= 12, hist
     assert any("local_finish_edges" in h for h in hist) == (threshold > 0)
+    rounds = [h["edges_after_contraction"] for h in hist
+              if "edges_after_contraction" in h]
+    assert rounds == ([0] if shuffle_seed is None else [100, 35, 13, 5])
 
 
 def test_incremental_er_equals_full_batch(spark):
@@ -493,3 +617,49 @@ def test_incremental_overlap_guard_index_and_skip(spark):
         skip_overlap_check=True,
     )
     assert res.clusters.count() == files.count()
+
+
+def _jobs_in_group(spark, group, fn):
+    """(fn(), number of Spark jobs fn started), counted per job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+#: Spark jobs measured at local[4] (the test session); the asserts allow
+#: 2 more for AQE's run-to-run jitter
+ER_RUN_JOBS, CC_ROUND_THEN_FINISH_JOBS = 19, 24
+
+
+def test_spark_job_counts(spark, tmp_path):
+    """No Spark job runs only to count: a snapshotted ERPipeline.run
+    (stage rows, cap counts) and a CC run that contracts once and then
+    finishes on the driver (edge and pointer-jump counts) read their
+    counts from Observations on the writes and checkpoints."""
+    from dataclasses import replace
+
+    from smaph_spark.operators.clustering import connected_components
+
+    # a corpus no other test persists, so no stage is served from cache
+    files_pdf, _, _ = generate_files_corpus(n_clusters=80, seed=43)
+    files = spark.createDataFrame(files_pdf)
+    pipe = ERPipeline(spark, ERConfig(), checkpoint_dir=str(tmp_path))
+    _, n_run = _jobs_in_group(spark, "er_run", lambda: pipe.run(files))
+    assert n_run <= ER_RUN_JOBS + 2
+
+    pairs = [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (3, 4),
+             (5, 6), (6, 7), (7, 8), (8, 9), (30, 32), (32, 31),
+             (40, 42), (42, 41), (2, 1), (1, 2), (22, 22)]
+    edges = spark.createDataFrame(pairs, "left_id long, right_id long")
+    recs = spark.createDataFrame([(i,) for i in range(100)], "record_id long")
+    cfg = replace(ERConfig(), cc_local_threshold=3)
+    (_, hist), n_cc = _jobs_in_group(
+        spark, "cc_round_then_finish",
+        lambda: connected_components(edges, cfg, all_records=recs),
+    )
+    assert any("local_finish_edges" in h for h in hist)
+    assert n_cc <= CC_ROUND_THEN_FINISH_JOBS + 2
