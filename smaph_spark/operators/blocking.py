@@ -27,8 +27,8 @@ summarise the metrics with ``cap_counts``, then pair through
 The ER pipeline does not run ``cap_counts``: it passes an
 ``Observation`` to ``cap_and_salt_blocks``, which attaches the same
 three counts to the sized key table, so they are collected by the
-action that materializes the salted frame (the stage-2 snapshot write,
-or the first action over the persisted frame) with no job of its own.
+action that materializes the salted frame (the stage-2 snapshot write
+or checkpoint) with no job of its own.
 """
 
 from __future__ import annotations

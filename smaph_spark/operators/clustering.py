@@ -82,7 +82,7 @@ def connected_components(
     # ONE materialization of the (often expensive) upstream pair plan:
     # the first round and the finish's collect read this checkpoint
     # instead of re-running the candidate join
-    edges, n_edges = _checkpoint(matches.select(
+    edges, n_edges = checkpoint(matches.select(
         F.col("left_id").alias("src"), F.col("right_id").alias("dst")
     ), F.count(F.lit(1)))
     rounds: list[DataFrame] = []
@@ -103,7 +103,7 @@ def connected_components(
             ptr = lab.select(
                 F.col("node").alias("pj_node"), F.col("lab").alias("pj_lab")
             )
-            lab, moved = _checkpoint(
+            lab, moved = checkpoint(
                 lab.join(ptr, lab.lab == ptr.pj_node, "left").select(
                     "node",
                     F.least(
@@ -117,7 +117,7 @@ def connected_components(
         # 3. contract the edges onto the round's labels
         sl = lab.select(F.col("node").alias("src"), F.col("lab").alias("_sl"))
         dl = lab.select(F.col("node").alias("dst"), F.col("lab").alias("_dl"))
-        edges, n_edges = _checkpoint(
+        edges, n_edges = checkpoint(
             edges.join(sl, "src")
             .join(dl, "dst")
             .select(
@@ -166,10 +166,11 @@ def connected_components(
     return labels, history
 
 
-def _checkpoint(df: DataFrame, metric: Column) -> tuple[DataFrame, int]:
+def checkpoint(df: DataFrame, metric: Column) -> tuple[DataFrame, int]:
     """Eager local checkpoint of ``df`` and the value of the aggregate
     ``metric`` over its rows, observed on the checkpoint's own job: no
-    Spark job runs only to count."""
+    Spark job runs only to count. Also materializes each ER stage run
+    without a snapshot (``ERPipeline._load_or_compute``)."""
     obs = Observation()
     df = df.observe(obs, metric.alias("v")).localCheckpoint(eager=True)
     return df, obs.get["v"]

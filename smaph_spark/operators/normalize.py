@@ -28,8 +28,6 @@ from pyspark.sql import types as T
 from smaph_spark.config import ERConfig
 from smaph_spark.plans.star_queries import WS_RE, widen
 
-_MERSENNE = np.uint64((1 << 61) - 1)
-
 
 def _hash_family(num: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
     """Deterministic multiply-add family over uint64 (north_rule:

@@ -392,73 +392,15 @@ def mm_feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# resize + frame-sample plumbing (mm03): the pixel work is stubbed (no
-# PIL/cv2/ffmpeg in this container) but the Spark-side contract is real
-# — batch shape, deterministic sampling, fixed schemas, exploded frames
+# frame-sample plumbing (mm03): the frame decode is stubbed (no ffmpeg)
+# but the Spark-side contract is real — batch shape, deterministic
+# sampling, a fixed schema, exploded frames
 # ---------------------------------------------------------------------------
-
-RESIZE_SCHEMA = (
-    "doc_id long, target_w int, target_h int, scale_x double, "
-    "scale_y double, resized_sha string, resizer string"
-)
-
-
-def resize_rgb(img: np.ndarray, target_w: int, target_h: int) -> np.ndarray:
-    """Nearest-neighbour resample of an (h, w, 3) uint8 array — pure
-    numpy index selection, no codec. Source index for output pixel i is
-    floor(i * src / dst) (the classic NN grid; deterministic, exact for
-    integer down/up-sampling factors)."""
-    h, w = img.shape[:2]
-    ys = (np.arange(target_h) * h) // target_h
-    xs = (np.arange(target_w) * w) // target_w
-    return img[ys][:, xs]
 
 FRAME_SCHEMA = (
     "doc_id long, frame_idx int, frame_offset_bytes long, "
     "frame_sha string, sampler string"
 )
-
-
-def resize_images(
-    binary_df: DataFrame, target_w: int = 224, target_h: int = 224
-) -> DataFrame:
-    """binary(doc_id, payload) -> per-image resize result.
-
-    BMP payloads are REALLY resampled (round-3 VERDICT item 6):
-    pure-numpy decode → nearest-neighbour resize to (target_w,
-    target_h) → sha256 of the resized RGB bytes in `resized_sha`
-    (resizer="bmp-numpy"), so the whole decode→transform chain is
-    end-to-end real for the one format that needs no codec. Compressed
-    formats keep the declared stub (fake-decoded dimensions,
-    resized_sha NULL, resizer="stub-meta") — PIL.Image.resize is the
-    single swap point for a deployment."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": pdf["doc_id"].astype("int64"),
-                   "target_w": target_w, "target_h": target_h,
-                   "scale_x": [], "scale_y": [], "resized_sha": [],
-                   "resizer": []}
-            for p in pdf["payload"]:
-                try:
-                    img = decode_image(p)
-                    h, w = img.shape[:2]
-                    resized = resize_rgb(img, target_w, target_h)
-                    out["resized_sha"].append(
-                        hashlib.sha256(
-                            np.ascontiguousarray(resized).tobytes()
-                        ).hexdigest()[:16]
-                    )
-                    out["resizer"].append("bmp-numpy")
-                except (NotImplementedError, ValueError):
-                    w, h, _ = fake_decode_meta(p)
-                    out["resized_sha"].append(None)
-                    out["resizer"].append("stub-meta")
-                out["scale_x"].append(round(target_w / w, 6))
-                out["scale_y"].append(round(target_h / h, 6))
-            yield pd.DataFrame(out)
-
-    return binary_df.mapInPandas(op, schema=RESIZE_SCHEMA)
 
 
 def sample_frames(

@@ -13,16 +13,16 @@ config fingerprint reads the snapshot instead of recomputing; the
 per-row invariant sha256(content) is verified against the source table
 after every stage that carries content columns.
 
-Counts ride the actions that already run. A stage's ``rows`` is
-observed (``pyspark.sql.Observation``) by its snapshot write, not
-counted by a job of its own; each stage runs lazily inside that write,
-so its ``elapsed_sec`` is compute plus write. Stage 2's cap counts
-(``s2_block_caps``) and the delta's ``s2_delta_key_rows`` are observed
-on the key table and read at the end of the run, after the stage-2
-write or, without snapshots, after the CC input checkpoint has first
-executed the persisted stage (recounted only when AQE dropped that
-stage, see ``_resolve``). The counts that keep a job of their own are
-the history/delta overlap check and ``verify_content_sha``.
+Every stage is materialized once, where it is computed: by its
+snapshot write, or without ``checkpoint_dir`` by the eager observed
+local checkpoint CC uses for its own counts (``clustering.checkpoint``).
+Counts ride those actions (``pyspark.sql.Observation``), and each is
+read right after the action that executed it: a stage's ``rows``, and
+stage 2's cap counts (``s2_block_caps``) and the delta's
+``s2_delta_key_rows``, observed on the key table. A stage's
+``elapsed_sec`` is its own compute plus its write or checkpoint. The
+counts that keep a job of their own are the history/delta overlap check
+and ``verify_content_sha``.
 """
 
 from __future__ import annotations
@@ -38,11 +38,9 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from smaph_spark.config import ERConfig
-from smaph_spark.operators.blocking import (
-    cap_and_salt_blocks, cap_counts, generate_blocks,
-)
+from smaph_spark.operators.blocking import cap_and_salt_blocks, generate_blocks
 from smaph_spark.operators.clustering import (
-    connected_components, history_pseudo_edges,
+    checkpoint, connected_components, history_pseudo_edges,
 )
 from smaph_spark.operators.normalize import normalize_files
 from smaph_spark.operators.pairs import attach_pair_features, generate_pairs
@@ -74,9 +72,6 @@ class ERPipeline:
         self.checkpoint_dir = checkpoint_dir
         self.scorer_model = scorer_model
         self._metrics: dict = {}
-        # stage_metrics key -> (Observation on the stage-2 key table,
-        # recount), read at the end of _resolve
-        self._observed: dict = {}
         # scorer identity keys the snapshots too: a retrained model with
         # a coincidentally-equal threshold must not resume pair scores
         # produced by the old model (round-2 ADVICE). Spark ML stage
@@ -145,9 +140,11 @@ class ERPipeline:
         keyed by the history fingerprint alone, so successive delta
         batches against the same history all reuse one snapshot).
 
-        With a snapshot, ``rows`` is observed by the write itself (no
-        count job), and ``elapsed_sec`` is compute plus write: the
-        stage's plan runs lazily inside its own write."""
+        The stage is materialized here: by its snapshot write, or
+        without one by an eager local checkpoint. ``rows`` is observed
+        by that action (no count job), so it is read here in both
+        modes, and ``elapsed_sec`` is the stage's own compute plus its
+        write (snapshot) or checkpoint (no snapshot)."""
         if path is None:
             path = self._stage_path(stage)
         if path and os.path.exists(os.path.join(path, "_SUCCESS")):
@@ -161,15 +158,11 @@ class ERPipeline:
                 "overwrite"
             ).parquet(path)
             df = self.spark.read.parquet(path)
+            rows = obs.get["rows"]
         else:
-            # no snapshot to re-read from: persist so downstream stages
-            # (and the CC iterations) don't re-execute the whole DAG —
-            # without this the match join recomputed once per terminal
-            # action, the dominant serial overhead in the bench job
-            df = df.persist()
-        m = {"elapsed_sec": round(time.time() - t0, 3)}
+            df, rows = checkpoint(df, F.count(F.lit(1)))
+        m = {"elapsed_sec": round(time.time() - t0, 3), "rows": rows}
         if path:
-            m["rows"] = obs.get["rows"]
             m["path"] = path
             with open(os.path.join(path, "_metrics.json"), "w") as fh:
                 json.dump(m, fh)
@@ -182,7 +175,7 @@ class ERPipeline:
         self._input_fp = self._input_fingerprint(files)
 
         # content is consumed entirely inside stage 1 (sha + minhash);
-        # carrying the ~KB content column through persist/snapshot and
+        # carrying the ~KB content column through checkpoint/snapshot and
         # the pair joins is pure bandwidth waste at scale
         normalized = self._load_or_compute(
             "s1_normalized", lambda: normalize_files(files, cfg).drop("content")
@@ -292,20 +285,16 @@ class ERPipeline:
             path=hist_path,
         )
 
-        def _keys():
-            delta_keys = generate_blocks(new_norm, cfg)
-            obs = Observation()
-            self._observed["s2_delta_key_rows"] = (
-                obs, lambda: {"rows": delta_keys.count()}
-            )
-            return hist_keys.unionByName(
-                delta_keys.observe(obs, F.count(F.lit(1)).alias("rows"))
-            )
-
+        delta_obs = Observation()
+        delta_keys = generate_blocks(new_norm, cfg).observe(
+            delta_obs, F.count(F.lit(1)).alias("rows")
+        )
         return self._resolve(
-            history_normalized.unionByName(new_norm), _keys,
+            history_normalized.unionByName(new_norm),
+            lambda: hist_keys.unionByName(delta_keys),
             new_ids=new_files.select(rid).distinct(),
             history_clusters=history_clusters,
+            delta_obs=delta_obs,
         )
 
     def _resolve(
@@ -314,26 +303,28 @@ class ERPipeline:
         block_keys,
         new_ids: DataFrame | None = None,
         history_clusters: DataFrame | None = None,
+        delta_obs: Observation | None = None,
     ) -> PipelineResult:
         """Stages 2-5 over ``normalized`` and the raw key table that
         ``block_keys()`` builds. Given ``new_ids`` (record_id), only
         pairs touching one of them are scored; given
-        ``history_clusters``, they re-enter CC as pseudo-edges."""
+        ``history_clusters``, they re-enter CC as pseudo-edges.
+        ``delta_obs`` observes ``rows`` on the delta's part of the key
+        table (``run_incremental``)."""
         cfg = self.cfg
-        self._observed.clear()
-
-        def _blocks():
-            obs = Observation()
-            salted, block_metrics = cap_and_salt_blocks(
-                block_keys(), cfg, observation=obs
-            )
-            self._observed["s2_block_caps"] = (obs, lambda: dict(zip(
-                ("salted_blocks", "dropped_blocks", "records_in_dropped_blocks"),
-                cap_counts(block_metrics),
-            )))
-            return salted
-
-        salted = self._load_or_compute("s2_blocks", _blocks)
+        caps_obs = Observation()
+        salted = self._load_or_compute(
+            "s2_blocks",
+            lambda: cap_and_salt_blocks(
+                block_keys(), cfg, observation=caps_obs
+            )[0],
+        )
+        # the stage-2 action has just run the observed nodes; a resumed
+        # stage ran none
+        if not self._metrics["s2_blocks"].get("resumed_from_snapshot"):
+            self._metrics["s2_block_caps"] = caps_obs.get
+            if delta_obs is not None:
+                self._metrics["s2_delta_key_rows"] = delta_obs.get["rows"]
 
         def _pairs():
             pairs = generate_pairs(salted, cfg)
@@ -371,18 +362,6 @@ class ERPipeline:
             return clusters
 
         clusters = self._load_or_compute("s5_clusters", _clusters)
-
-        # every observed node sits in stage 2, which by now the stage-2
-        # write, or without snapshots the first action over the
-        # persisted stage (at the latest CC's input checkpoint), has
-        # run. Without snapshots AQE can drop that stage from the plan
-        # that ran it once a join there proved empty (an empty input,
-        # or no candidate pair at all), and Spark then reports an empty
-        # metrics map; only then recount.
-        for key, (obs, recount) in self._observed.items():
-            got = recount() if obs._jo.getAsJava().isEmpty() else obs.get
-            self._metrics[key] = got["rows"] if key == "s2_delta_key_rows" else got
-
         return PipelineResult(
             normalized=normalized,
             blocks=salted,

@@ -120,14 +120,17 @@ def test_greedy_step_features_reference_goldens(spark):
 def test_er06_greedy_query_runs(spark):
     """The registered distributed query emits one feature row per
     multi-member token-band cluster, candidates disjoint from their
-    partial solutions."""
+    partial solutions, and leaves no frame in the session's
+    CacheManager (its relatedness table is a local checkpoint)."""
     from smaph_spark.ops import er_docs  # noqa: F401 — populates registry
     from smaph_spark.plans.star_queries import QUERIES
 
+    spark.catalog.clearCache()
     df = QUERIES["er06_greedy_step_features"].fn(
         spark, "/root/testdata/sf0.001"
     )
     rows = df.collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     assert len(rows) > 0
     assert all(r["covered_tokens_incr"] >= 1.0 for r in rows)
     assert all(0.0 <= r["covered_tokens_incr_ratio"] <= 1.0 for r in rows)

@@ -143,8 +143,8 @@ def test_block_cap_metrics_logged(spark, tmp_path):
     silently (reference logs binding caps,
     DefaultBindingGenerator.java:135-136). The counts observed on the
     key table equal ``cap_counts`` over the same key table, with
-    snapshots (observed by the stage-2 write) and without (observed
-    when the persisted stage first runs)."""
+    snapshots (observed by the stage-2 write) and without (observed by
+    the stage-2 checkpoint)."""
     # 90% of the files share a handful of hot paths: their name keys
     # are dropped, and near-duplicate clusters salt LSH band keys
     files_pdf, _, _ = generate_files_corpus(
@@ -217,12 +217,12 @@ def _solo_files(spark, ids):
 
 
 def test_no_snapshot_runs_without_matches_finish(spark):
-    """Without snapshots the stage-2 counts are read after CC, and they
-    stay exact when nothing matches: a delta that matches nothing in a
-    real history, an incremental run with no candidate pair at all and
-    an empty input. In the last two AQE drops stage 2 from the plan
-    that runs it (a join side is empty), Spark reports no observed
-    metrics, and the pipeline recounts."""
+    """Without snapshots the stage-2 counts are read right after the
+    stage-2 checkpoint, and they stay exact when nothing matches: a
+    delta that matches nothing in a real history, an incremental run
+    with no candidate pair at all and an empty input. The checkpoint
+    runs stage 2 as a plan of its own, so no empty join downstream can
+    drop the observed nodes from it."""
     from smaph_spark.operators.blocking import generate_blocks
 
     cfg = ERConfig()
@@ -258,6 +258,32 @@ def test_no_snapshot_runs_without_matches_finish(spark):
         "salted_blocks": 0, "dropped_blocks": 0,
         "records_in_dropped_blocks": 0,
     }
+
+
+def test_no_snapshot_stage_rows_are_exact(spark, corpus, result, tmp_path):
+    """Without snapshots each stage's ``rows`` is observed by its
+    checkpoint: it equals the count of the stage's frame and the
+    ``rows`` a snapshot run writes for the same stage."""
+    files, _, _ = corpus
+    _, res = result
+    snap = ERPipeline(spark, ERConfig(), checkpoint_dir=str(tmp_path)).run(files)
+    frames = {
+        "s1_normalized": res.normalized, "s2_blocks": res.blocks,
+        "s3_pairs_scored": res.pairs_scored, "s4_matches": res.matches,
+        "s5_clusters": res.clusters,
+    }
+    for stage, df in frames.items():
+        rows = res.stage_metrics[stage]["rows"]
+        assert rows == df.count() == snap.stage_metrics[stage]["rows"], stage
+
+
+def test_no_snapshot_run_caches_nothing(spark):
+    """A no-snapshot run materializes its stages as local checkpoints:
+    it leaves no frame in the session's CacheManager."""
+    spark.catalog.clearCache()
+    files_pdf, _, _ = generate_files_corpus(n_clusters=30, seed=11)
+    ERPipeline(spark, ERConfig()).run(spark.createDataFrame(files_pdf))
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def _reference_components(edges, records):
@@ -632,14 +658,15 @@ def _jobs_in_group(spark, group, fn):
 
 #: Spark jobs measured at local[4] (the test session); the asserts allow
 #: 2 more for AQE's run-to-run jitter
-ER_RUN_JOBS, CC_ROUND_THEN_FINISH_JOBS = 19, 24
+ER_RUN_JOBS, ER_RUN_NO_SNAPSHOT_JOBS, CC_ROUND_THEN_FINISH_JOBS = 19, 14, 24
 
 
 def test_spark_job_counts(spark, tmp_path):
-    """No Spark job runs only to count: a snapshotted ERPipeline.run
-    (stage rows, cap counts) and a CC run that contracts once and then
-    finishes on the driver (edge and pointer-jump counts) read their
-    counts from Observations on the writes and checkpoints."""
+    """No Spark job runs only to count: an ERPipeline.run with
+    snapshots and one without (stage rows, cap counts) and a CC run
+    that contracts once and then finishes on the driver (edge and
+    pointer-jump counts) read their counts from Observations on the
+    writes and checkpoints."""
     from dataclasses import replace
 
     from smaph_spark.operators.clustering import connected_components
@@ -650,6 +677,10 @@ def test_spark_job_counts(spark, tmp_path):
     pipe = ERPipeline(spark, ERConfig(), checkpoint_dir=str(tmp_path))
     _, n_run = _jobs_in_group(spark, "er_run", lambda: pipe.run(files))
     assert n_run <= ER_RUN_JOBS + 2
+    _, n_plain = _jobs_in_group(
+        spark, "er_run_no_snapshot", lambda: ERPipeline(spark, ERConfig()).run(files)
+    )
+    assert n_plain <= ER_RUN_NO_SNAPSHOT_JOBS + 2
 
     pairs = [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (3, 4),
              (5, 6), (6, 7), (7, 8), (8, 9), (30, 32), (32, 31),

@@ -248,36 +248,3 @@ def test_heavy_hitters_non_string_key(spark):
                         metrics_key="sk02long").collect()
     assert [(r["user_id"], r["n"]) for r in got] == [(7, 41)]
     assert got[0].asDict()["user_id"] == 7 and isinstance(got[0]["user_id"], int)
-
-
-def test_hll_native_sketch_parity(spark):
-    """Round-4 VERDICT item 10: the DataSketches-HLL path (mergeable
-    binary sketch columns, hourly -> event_type union) must agree with
-    both the exact distinct count and the approx_count_distinct path
-    within the HLL error envelope — and merging partial sketches must
-    equal sketching the whole stream (the mergeability contract)."""
-    from smaph_spark.ops.sketches import (
-        exact_event_stats, sketch_event_stats, sketch_event_stats_hll_native,
-    )
-    from smaph_spark.plans.star_queries import load
-
-    events = load(spark, "/root/testdata/sf0.001", "events")
-    native = {r["event_type"]: r["approx_users"]
-              for r in sketch_event_stats_hll_native(events).collect()}
-    acd = {r["event_type"]: r["approx_users"]
-           for r in sketch_event_stats(events).collect()}
-    exact = {r["event_type"]: r["exact_users"]
-             for r in exact_event_stats(events).collect()}
-    assert set(native) == set(exact) == set(acd)
-    for et, n in exact.items():
-        assert abs(native[et] - n) <= max(3, 0.05 * n), (et, native[et], n)
-        assert abs(acd[et] - n) <= max(3, 0.05 * n), (et, acd[et], n)
-
-    # mergeability: union of per-hour sketches == one global sketch
-    one_shot = (
-        events.groupBy("event_type")
-        .agg(F.hll_sketch_estimate(
-            F.hll_sketch_agg("user_id", F.lit(12))).alias("u"))
-    )
-    flat = {r["event_type"]: r["u"] for r in one_shot.collect()}
-    assert flat == native
