@@ -66,8 +66,7 @@ HEADLINE = [
 ]
 
 # synthetic ER corpus for the pairs/sec metric (cached across runs)
-ER_BENCH = {"n_clusters": 6000, "avg_cluster_size": 3.0,
-            "singleton_fraction": 0.4, "seed": 42}
+ER_BENCH = {"n_clusters": 6000, "singleton_fraction": 0.4, "seed": 42}
 
 # bigger corpus for the N-vs-4N scaling evidence: the 6k-cluster corpus
 # finishes in ~15 s where fixed overheads (scheduling, python-worker

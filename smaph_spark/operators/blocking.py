@@ -20,15 +20,17 @@ than ``max_block_size * block_salt_buckets`` are dropped entirely.
 The cap is shared: the standalone band self-joins (dedup dd03
 ``minhash_lsh_pairs``, dd04 ``simhash_pairs``, dd06
 ``cosine_near_dup_lsh``, dd09 ``cdc_containment_pairs``) cap their
-``(block_key, record_id)`` frames through ``cap_and_salt_blocks`` and
-summarise the metrics with ``cap_counts``, then pair through
-``pairs.block_pairs`` and ``pairs.attach_sides`` like the ER pipeline.
+``(block_key, record_id)`` frames through ``cap_and_salt_blocks`` (via
+``dedup.capped_blocks``), then pair through ``pairs.block_pairs`` and
+``pairs.attach_sides`` like the ER pipeline.
 
-The ER pipeline does not run ``cap_counts``: it passes an
-``Observation`` to ``cap_and_salt_blocks``, which attaches the same
-three counts to the sized key table, so they are collected by the
-action that materializes the salted frame (the stage-2 snapshot write
-or checkpoint) with no job of its own.
+Every package caller observes its counts: it passes an ``Observation``
+to ``cap_and_salt_blocks``, which attaches the three counts to the
+sized key table, so they are collected by the action that materializes
+the salted frame (the stage-2 snapshot write or checkpoint, or the dd
+queries' eager checkpoint) with no job of its own. ``cap_counts``
+computes the same triple from the metrics frame in a collect of its
+own; it is the reference the tests compare the Observation against.
 """
 
 from __future__ import annotations

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from smaph_spark.operators.clustering import checkpoint
+
 
 def pairwise_prf(predicted: DataFrame, gold: DataFrame) -> dict:
     """predicted(left_id, right_id [, is_match]) vs
@@ -137,11 +139,9 @@ def grouped_prf(
     # above max_groups, keep a deterministic hash-sample of groups (the
     # macro/bootstrap estimates become a group sample; micro counts are
     # still exact over the sampled groups) and say so, never silently.
-    # count + collect (+ the sampling filter) reuse one materialization
-    # of the heavy full_outer join instead of re-running it per action
-    cached = per_group.persist()
-    per_group = cached
-    n_total = per_group.count()
+    # the group count rides the one checkpoint of the heavy full_outer
+    # join, which the collect (+ the sampling filter) then reads
+    per_group, n_total = checkpoint(per_group, F.count("*"))
     sampled = False
     if n_total > max_groups:
         import warnings
@@ -158,11 +158,9 @@ def grouped_prf(
         )
         sampled = True
     rows = per_group.collect()
-    cached.unpersist()  # per_group may be the filtered child — release
-    per_group = rows    # the cached parent, not a derived no-op handle
-    tp = np.array([r["tp"] for r in per_group], dtype=np.float64)
-    fp = np.array([r["fp"] for r in per_group], dtype=np.float64)
-    fn = np.array([r["fn"] for r in per_group], dtype=np.float64)
+    tp = np.array([r["tp"] for r in rows], dtype=np.float64)
+    fp = np.array([r["fp"] for r in rows], dtype=np.float64)
+    fn = np.array([r["fn"] for r in rows], dtype=np.float64)
     n = len(tp)
 
     def macro_micro(w):
@@ -263,50 +261,45 @@ def bcubed_prf(clusters: DataFrame, gold_clusters: DataFrame) -> DataFrame:
     ).select(
         F.col("p.cluster_id").alias("pc"), F.col("g.cluster_id").alias("gc")
     )
-    cells = merged.groupBy("pc", "gc").agg(F.count("*").alias("n_cell")).persist()
-    # EVERY action on the persisted frame sits inside the try, so a
-    # failed Spark job cannot leak cached partitions (round-5 review —
-    # the guard-fail path and the probe itself included)
-    try:
-        n_m = cells.agg(F.sum("n_cell")).collect()[0][0] or 0
-        if not (n_c == d_c and n_g == d_g and n_c == n_g == n_m):
-            raise ValueError(
-                "bcubed_prf: clusterings must cover the same records "
-                f"exactly once each (pred rows={n_c}/distinct {d_c}, gold "
-                f"rows={n_g}/distinct {d_g}, joined={n_m}); records in "
-                "only one side or duplicate record_ids would silently "
-                "mis-score"
-            )
-        # cluster sizes derive FROM the cells (cells partition merged),
-        # so the clusters×gold join executes once, not three times
-        p_sizes = cells.groupBy("pc").agg(F.sum("n_cell").alias("n_p"))
-        g_sizes = cells.groupBy("gc").agg(F.sum("n_cell").alias("n_g"))
-        per_cell = (
-            cells.join(p_sizes, "pc").join(g_sizes, "gc")
-            .select(
-                "n_cell",
-                (F.col("n_cell") * F.col("n_cell") / F.col("n_p")).alias("psum"),
-                (F.col("n_cell") * F.col("n_cell") / F.col("n_g")).alias("rsum"),
-            )
+    # the joined record count rides the checkpoint of the cells, which
+    # every later read (both size aggs, the final join) reuses
+    cells, n_m = checkpoint(
+        merged.groupBy("pc", "gc").agg(F.count("*").alias("n_cell")),
+        F.coalesce(F.sum("n_cell"), F.lit(0)),
+    )
+    if not (n_c == d_c and n_g == d_g and n_c == n_g == n_m):
+        raise ValueError(
+            "bcubed_prf: clusterings must cover the same records "
+            f"exactly once each (pred rows={n_c}/distinct {d_c}, gold "
+            f"rows={n_g}/distinct {d_g}, joined={n_m}); records in "
+            "only one side or duplicate record_ids would silently "
+            "mis-score"
         )
-        agg = per_cell.agg(
-            F.sum("n_cell").alias("n_records"),
-            F.sum("psum").alias("ps"),
-            F.sum("rsum").alias("rs"),
+    # cluster sizes derive FROM the cells (cells partition merged),
+    # so the clusters×gold join executes once, not three times
+    p_sizes = cells.groupBy("pc").agg(F.sum("n_cell").alias("n_p"))
+    g_sizes = cells.groupBy("gc").agg(F.sum("n_cell").alias("n_g"))
+    per_cell = (
+        cells.join(p_sizes, "pc").join(g_sizes, "gc")
+        .select(
+            "n_cell",
+            (F.col("n_cell") * F.col("n_cell") / F.col("n_p")).alias("psum"),
+            (F.col("n_cell") * F.col("n_cell") / F.col("n_g")).alias("rsum"),
         )
-        prec = F.try_divide(F.col("ps"), F.col("n_records"))
-        rec = F.try_divide(F.col("rs"), F.col("n_records"))
-        # NULL (not 0.0) on empty input in every column, matching the
-        # SQL twin's NULL propagation exactly (round-5 review)
-        f1 = F.try_divide(F.lit(2) * prec * rec, prec + rec)
-        # one-row result: materialize eagerly so the cells cache can be
-        # released before returning (no persisted-frame leak per call)
-        out = agg.select(
-            "n_records",
-            F.round(prec, 6).alias("bcubed_precision"),
-            F.round(rec, 6).alias("bcubed_recall"),
-            F.round(f1, 6).alias("bcubed_f1"),
-        ).localCheckpoint(eager=True)
-    finally:
-        cells.unpersist()
-    return out
+    )
+    agg = per_cell.agg(
+        F.sum("n_cell").alias("n_records"),
+        F.sum("psum").alias("ps"),
+        F.sum("rsum").alias("rs"),
+    )
+    prec = F.try_divide(F.col("ps"), F.col("n_records"))
+    rec = F.try_divide(F.col("rs"), F.col("n_records"))
+    # NULL (not 0.0) on empty input in every column, matching the
+    # SQL twin's NULL propagation exactly (round-5 review)
+    f1 = F.try_divide(F.lit(2) * prec * rec, prec + rec)
+    return agg.select(
+        "n_records",
+        F.round(prec, 6).alias("bcubed_precision"),
+        F.round(rec, 6).alias("bcubed_recall"),
+        F.round(f1, 6).alias("bcubed_f1"),
+    )

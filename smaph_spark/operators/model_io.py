@@ -252,7 +252,9 @@ def train_default_scorer(spark: SparkSession, cfg: ERConfig | None = None,
         F.greatest(lid, rid).alias("right_id"),
         "is_match",
     )
-    feat = labeled_pair_features(spark, files, labeled_ids, cfg).persist()
+    feat = labeled_pair_features(
+        spark, files, labeled_ids, cfg
+    ).localCheckpoint(eager=True)
     if tune:
         model, report = tune_gbt_scorer(
             feat, model_family=model_family, normalizer=normalizer
@@ -269,7 +271,6 @@ def train_default_scorer(spark: SparkSession, cfg: ERConfig | None = None,
     )
     threshold, _ = sweep_threshold(scored)
     stats = fit_normalizer(feat, normalizer)
-    feat.unpersist()
     return model, threshold, stats, report
 
 

@@ -16,12 +16,12 @@ import logging
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from smaph_spark.config import ERConfig
-from smaph_spark.operators.blocking import cap_and_salt_blocks, cap_counts
+from smaph_spark.operators.blocking import cap_and_salt_blocks
 from smaph_spark.operators.normalize import make_minhash_udf
 from smaph_spark.operators.pairs import (
     _minhash_agree_udf, attach_sides, block_pairs,
@@ -38,19 +38,26 @@ _LOG = logging.getLogger("smaph_spark.dedup")
 CAP_METRICS: dict[str, dict] = {}
 
 
-def log_cap_metrics(query: str, metrics: DataFrame) -> dict:
-    """Summarise a cap_and_salt_blocks metrics frame and LOG it (round-2
-    VERDICT: dd03/dd04/dd06 computed these counts and discarded them —
-    a silent cap). Returns the summary and records it in CAP_METRICS
-    for callers/tests."""
-    out = dict(zip(
-        ("salted_band_keys", "dropped_band_keys", "records_in_dropped_bands"),
-        cap_counts(metrics),
-    ))
+def capped_blocks(query: str, keys: DataFrame, cfg: ERConfig) -> DataFrame:
+    """Cap and salt ``keys(block_key, record_id)`` (cap_and_salt_blocks)
+    and materialize the salted key table with one eager local
+    checkpoint. Its cap counts are observed on that checkpoint's job
+    (no job runs only to count them) and are recorded in
+    CAP_METRICS[query] and LOGGED (round-2 VERDICT: dd03/dd04/dd06
+    computed these counts and discarded them — a silent cap)."""
+    obs = Observation()
+    salted, _ = cap_and_salt_blocks(keys, cfg, observation=obs)
+    salted = salted.localCheckpoint(eager=True)
+    counts = obs.get
+    out = {
+        "salted_band_keys": counts["salted_blocks"],
+        "dropped_band_keys": counts["dropped_blocks"],
+        "records_in_dropped_bands": counts["records_in_dropped_blocks"],
+    }
     CAP_METRICS[query] = out
     level = logging.WARNING if out["dropped_band_keys"] else logging.INFO
     _LOG.log(level, "%s band-cap metrics: %s", query, out)
-    return out
+    return salted
 
 
 def bit_band_blocks(
@@ -227,14 +234,13 @@ def _doc_minhash(spark: SparkSession, sf_dir: str, cfg: ERConfig) -> DataFrame:
     )
 
 
-def minhash_lsh_pairs(
-    fp: DataFrame, cfg: ERConfig
-) -> tuple[DataFrame, DataFrame]:
-    """fp(doc_id, minhash, bands) -> (pairs, cap_metrics).
+def minhash_lsh_pairs(fp: DataFrame, cfg: ERConfig) -> DataFrame:
+    """fp(doc_id, minhash, bands) -> pairs(a_doc, b_doc, jaccard_est).
 
-    Band self-join guarded by the hot-key cap (cap_and_salt_blocks) so
-    a degenerate band key stays bounded; estimated Jaccard from the full
-    signatures is the rerank."""
+    Band self-join guarded by the hot-key cap (capped_blocks, counts in
+    CAP_METRICS["dd03_minhash_lsh_pairs"]) so a degenerate band key
+    stays bounded; estimated Jaccard from the full signatures is the
+    rerank."""
     keys = fp.select(
         F.col("doc_id").alias("record_id"),
         F.explode(
@@ -245,9 +251,9 @@ def minhash_lsh_pairs(
             )
         ).alias("block_key"),
     )
-    salted, cap_metrics = cap_and_salt_blocks(keys, cfg)
+    salted = capped_blocks("dd03_minhash_lsh_pairs", keys, cfg)
     payload = fp.select(F.col("doc_id").alias("record_id"), "minhash")
-    pairs = (
+    return (
         attach_sides(block_pairs(salted), payload)
         .withColumn("jaccard_est", _minhash_agree_udf("l_minhash", "r_minhash"))
         .filter(F.col("jaccard_est") >= 0.5)
@@ -257,7 +263,6 @@ def minhash_lsh_pairs(
             F.round("jaccard_est", 4).alias("jaccard_est"),
         )
     )
-    return pairs, cap_metrics
 
 
 @register(
@@ -268,20 +273,17 @@ def minhash_lsh_pairs(
 def dd_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     cfg = ERConfig(shingle_k=5, num_minhash=64, lsh_bands=16,
                    max_block_size=500, block_salt_buckets=8)
-    fp = _doc_minhash(spark, sf_dir, cfg)
-    pairs, cap_metrics = minhash_lsh_pairs(fp, cfg)
-    log_cap_metrics("dd03_minhash_lsh_pairs", cap_metrics)
-    return pairs
+    return minhash_lsh_pairs(_doc_minhash(spark, sf_dir, cfg), cfg)
 
 
 # ---------------------------------------------------------------------------
 # SimHash near-dup (rows-only oracle)
 # ---------------------------------------------------------------------------
 
-def _make_simhash_udf(seed: int = 0x51A0):
+def _make_simhash_udf():
     """64-bit SimHash over whitespace tokens: sign-sum of token hashes,
     batch-vectorized numpy."""
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(0x51A0)
     mult = np.uint64(int(rng.integers(1, 1 << 62)) | 1)
 
     @F.pandas_udf(T.LongType())
@@ -317,15 +319,16 @@ def _fnv1a(s: str) -> int:
 
 def simhash_pairs(
     sig: DataFrame, cfg: ERConfig, max_hamming: int = 6
-) -> tuple[DataFrame, DataFrame]:
-    """sig(doc_id, sim) -> (pairs, cap_metrics). Banded hamming join on
-    4×16-bit chunks, hot-chunk keys capped/salted like dd03."""
+) -> DataFrame:
+    """sig(doc_id, sim) -> pairs(a_doc, b_doc, hamming). Banded hamming
+    join on 4×16-bit chunks, hot-chunk keys capped/salted like dd03
+    (counts in CAP_METRICS["dd04_simhash_pairs"])."""
     sig = sig.select(F.col("doc_id").alias("record_id"), "sim")
-    salted, cap_metrics = cap_and_salt_blocks(
-        bit_band_blocks(sig, "sim", 4, 16), cfg
+    salted = capped_blocks(
+        "dd04_simhash_pairs", bit_band_blocks(sig, "sim", 4, 16), cfg
     )
     ham = F.bit_count(F.col("l_sim").bitwiseXOR(F.col("r_sim")))
-    pairs = (
+    return (
         attach_sides(block_pairs(salted), sig)
         .select(
             F.col("left_id").alias("a_doc"),
@@ -334,7 +337,6 @@ def simhash_pairs(
         )
         .filter(F.col("hamming") <= max_hamming)
     )
-    return pairs, cap_metrics
 
 
 @register(
@@ -348,10 +350,7 @@ def dd_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sh = _make_simhash_udf()
     sig = d.select("doc_id", sh("text").alias("sim"))
-    cfg = ERConfig(max_block_size=500, block_salt_buckets=8)
-    pairs, cap_metrics = simhash_pairs(sig, cfg)
-    log_cap_metrics("dd04_simhash_pairs", cap_metrics)
-    return pairs
+    return simhash_pairs(sig, ERConfig(max_block_size=500, block_salt_buckets=8))
 
 
 # ---------------------------------------------------------------------------
@@ -373,13 +372,10 @@ _DD05_SQL = f"""
 
 
 def cosine_self_join(
-    e: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    emb_col: str = "emb",
-    n_buckets: int = 8,
+    e: DataFrame, threshold: float, n_buckets: int = 8
 ) -> DataFrame:
-    """EXACT all-pairs cosine >= threshold via distributed block-matrix GEMM.
+    """EXACT all-pairs cosine >= threshold via distributed block-matrix
+    GEMM over ``e(vec_id, emb)``.
 
     Vectors are hashed into ``n_buckets`` buckets; each of the
     B·(B+1)/2 bucket PAIRS becomes one cogrouped task that runs a
@@ -409,9 +405,9 @@ def cosine_self_join(
         # unambiguous for the cogroup analyzer
         pairs = spark.createDataFrame(pair_rows, ["pid", "bi", "bj"])
         src = e.select(
-            F.col(id_col).alias(f"{prefix}_id"),
-            F.col(emb_col).alias(f"{prefix}_emb"),
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_buckets)).alias(
+            F.col("vec_id").alias(f"{prefix}_id"),
+            F.col("emb").alias(f"{prefix}_emb"),
+            F.pmod(F.xxhash64(F.col("vec_id")), F.lit(n_buckets)).alias(
                 f"{prefix}_bkt"
             ),
         )
@@ -512,19 +508,13 @@ def dd_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
 # embedding near-dup, LSH-prefiltered (scale alternative to dd05)
 # ---------------------------------------------------------------------------
 
-def cosine_near_dup_lsh(
-    e: DataFrame,
-    threshold: float,
-    cfg: ERConfig | None = None,
-    n_planes: int = 32,
-    band_bits: int = 4,
-    id_col: str = "vec_id",
-    emb_col: str = "emb",
-    dim: int | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Approximate cosine near-dup: hyperplane-LSH band candidates
-    (hot bands capped/salted like dd03) + exact cosine rerank at
-    ``threshold``. Returns (pairs, cap_metrics).
+def cosine_near_dup_lsh(e: DataFrame, threshold: float) -> DataFrame:
+    """Approximate cosine near-dup over ``e(vec_id, emb)`` with 64-wide
+    embeddings (the testdata contract, TESTDATA.md): 32-plane
+    hyperplane-LSH signatures in 8 bands of 4 bits (hot bands
+    capped/salted like dd03, counts in
+    CAP_METRICS["dd06_embedding_dup_lsh"]) + exact cosine rerank at
+    ``threshold``. Returns pairs(a_vec, b_vec, cos).
 
     The scale alternative to the exact block-matrix ``cosine_self_join``
     (O(N²) FLOPs): candidate volume ~ sum of band-bucket C(n,2), linear
@@ -533,21 +523,15 @@ def cosine_near_dup_lsh(
     tests, never silently assumed."""
     from smaph_spark.ops.similarity import _cosine, make_hyperplane_udf
 
-    cfg = cfg or ERConfig(max_block_size=500, block_salt_buckets=8)
-    if dim is None:
-        # fallback only: callers that know the embedding width should
-        # pass it — this probe is a driver action over the input
-        # (round-2 VERDICT), cheap but a needless job at scale
-        dim = len(e.select(emb_col).first()[0])
-    sig_udf = make_hyperplane_udf(dim=dim, n_planes=n_planes)
     sig = e.select(
-        F.col(id_col).alias("record_id"), F.col(emb_col).alias("emb"),
-        sig_udf(emb_col).alias("sig"),
+        F.col("vec_id").alias("record_id"), "emb",
+        make_hyperplane_udf()("emb").alias("sig"),
     )
-    salted, cap_metrics = cap_and_salt_blocks(
-        bit_band_blocks(sig, "sig", n_planes // band_bits, band_bits), cfg
+    salted = capped_blocks(
+        "dd06_embedding_dup_lsh", bit_band_blocks(sig, "sig", 8, 4),
+        ERConfig(max_block_size=500, block_salt_buckets=8),
     )
-    pairs = (
+    return (
         attach_sides(block_pairs(salted), sig.select("record_id", "emb"))
         .withColumn("cos_raw", _cosine("l_emb", "r_emb"))
         .filter(F.col("cos_raw") >= threshold)
@@ -557,7 +541,6 @@ def cosine_near_dup_lsh(
             F.round("cos_raw", 4).alias("cos"),
         )
     )
-    return pairs, cap_metrics
 
 
 @register(
@@ -574,11 +557,7 @@ def dd_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("emb"),
     )
-    # dim=64 is the testdata embeddings contract (TESTDATA.md) — no
-    # driver probe job
-    pairs, cap_metrics = cosine_near_dup_lsh(e, threshold=0.4, dim=64)
-    log_cap_metrics("dd06_embedding_dup_lsh", cap_metrics)
-    return pairs
+    return cosine_near_dup_lsh(e, threshold=0.4)
 
 
 # ---------------------------------------------------------------------------
@@ -594,19 +573,12 @@ def dd_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # wikiapi/WATRelatednessComputer.java:62-101) recast set-at-a-time.
 # ---------------------------------------------------------------------------
 
-def incremental_new_texts(
-    history: DataFrame,
-    batch: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Rows of `batch` whose content digest is absent from `history`,
-    deduped within the batch (keep the min id per digest). Returns
-    (doc_id, text_md5)."""
-    h = history.select(F.md5(text_col).alias("text_md5")).distinct()
-    b = batch.select(
-        F.col(id_col).alias("doc_id"), F.md5(text_col).alias("text_md5")
-    )
+def incremental_new_texts(history: DataFrame, batch: DataFrame) -> DataFrame:
+    """Rows of `batch(doc_id, text)` whose content digest is absent from
+    `history(text)`, deduped within the batch (keep the min id per
+    digest). Returns (doc_id, text_md5)."""
+    h = history.select(F.md5("text").alias("text_md5")).distinct()
+    b = batch.select("doc_id", F.md5("text").alias("text_md5"))
     return (
         b.join(h, "text_md5", "left_anti")
         .groupBy("text_md5")
@@ -658,27 +630,24 @@ def dd_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 # lineage); no reference-code reuse — the reference has no chunking.
 # ---------------------------------------------------------------------------
 
-def make_cdc_chunk_udf(
-    avg_bits: int = 7, min_size: int = 32, max_size: int = 1024,
-    window: int = 64, seed: int = 0xCDC,
-):
+def make_cdc_chunk_udf():
     """Arrow UDF: text -> array<long> of content-defined chunk hashes.
 
     The gear rolling hash h_i = sum_{k<window} G[b_{i-k}] << k (mod
-    2^64) is a pure function of the last `window` bytes, so it is
-    computed VECTORIZED: map bytes through the seeded gear table, take
-    a sliding window view, and reduce with per-position shifts — no
-    per-byte Python loop. A position is a cut candidate when the low
-    `avg_bits` bits are zero (expected chunk ~2^avg_bits bytes);
-    min/max size are enforced in a sparse loop over candidates only.
-    Chunk ids are 8-byte blake2b of the chunk bytes (content-addressed,
-    engine/layout independent)."""
+    2^64) is a pure function of the last `window` = 64 bytes, so it is
+    computed VECTORIZED: map bytes through the seeded gear table and
+    reduce with per-position shifts — no per-byte Python loop. A
+    position is a cut candidate when the low 7 bits are zero (expected
+    chunk ~128 bytes); the 32-byte min and 1024-byte max chunk sizes
+    are enforced in a sparse loop over candidates only. Chunk ids are
+    8-byte blake2b of the chunk bytes (content-addressed, engine/layout
+    independent)."""
     import hashlib as _hl
 
-    rng = np.random.default_rng(seed)
+    window, min_size, max_size = 64, 32, 1024
+    rng = np.random.default_rng(0xCDC)
     gear = rng.integers(0, 2**63, size=256, dtype=np.uint64)
-    mask = np.uint64((1 << avg_bits) - 1)
-    shifts = np.arange(window - 1, -1, -1, dtype=np.uint64)
+    mask = np.uint64((1 << 7) - 1)
 
     def _chunk_hashes(raw: bytes) -> list[int]:
         n = len(raw)
@@ -738,31 +707,31 @@ def make_cdc_chunk_udf(
     return cdc_chunks.asNondeterministic()
 
 
-def cdc_chunk_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Per-doc chunk-sharing stats: (doc_id, n_chunks, n_shared_chunks,
-    shared_frac). A chunk is 'shared' when its content hash appears in
-    more than one document — the fraction is the partial-duplication
-    signal chunk-level dedup acts on. Plan: one narrow UDF projection,
-    explode, one hash-agg on chunk_hash (map-side combined), one
-    equi-join back on chunk_hash. No driver data."""
+def cdc_chunk_stats(docs: DataFrame) -> DataFrame:
+    """Per-doc chunk-sharing stats of ``docs(doc_id, text)``: (doc_id,
+    n_chunks, n_shared_chunks, shared_frac). A chunk is 'shared' when
+    its content hash appears in more than one document — the fraction
+    is the partial-duplication signal chunk-level dedup acts on. Plan:
+    one narrow UDF projection, explode, one hash-agg on chunk_hash
+    (map-side combined), one equi-join back on chunk_hash. No driver
+    data."""
     chunker = make_cdc_chunk_udf()
     chunks = (
-        docs.select("doc_id", chunker(F.col(text_col)).alias("chunks"))
+        docs.select("doc_id", chunker(F.col("text")).alias("chunks"))
         .select("doc_id", F.explode("chunks").alias("chunk_hash"))
     )
     # distinct docs per chunk (a doc repeating its own chunk is not
-    # cross-doc sharing). PERSIST before fanning out to the freq agg
-    # and the join side: without it every branch re-runs the chunker
-    # UDF over the full corpus (round-4 review: 4 ArrowEvalPython nodes
-    # in the plan, exchange reuse did not kick in under AQE). The
-    # (long, long) cache is tiny next to the text it derives from; the
-    # eager checkpoint of the per-doc result lets it be released before
-    # returning (same lifecycle as similarity._count_candidates_and_release).
-    doc_chunks = chunks.distinct().persist()
+    # cross-doc sharing). CHECKPOINTED before fanning out to the freq
+    # agg and the join side: without it every branch re-runs the
+    # chunker UDF over the full corpus (round-4 review: 4
+    # ArrowEvalPython nodes in the plan, exchange reuse did not kick in
+    # under AQE). The (long, long) table is tiny next to the text it
+    # derives from, and nothing is left to release.
+    doc_chunks = chunks.distinct().localCheckpoint(eager=True)
     freq = doc_chunks.groupBy("chunk_hash").agg(
         F.count("*").alias("n_docs_with_chunk")
     )
-    per_doc = (
+    return (
         doc_chunks.join(freq, "chunk_hash")
         .groupBy("doc_id")
         .agg(
@@ -781,9 +750,7 @@ def cdc_chunk_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
                 4,
             ),
         )
-    ).localCheckpoint(eager=True)
-    doc_chunks.unpersist()
-    return per_doc
+    )
 
 
 @register(
@@ -807,39 +774,34 @@ def dd_cdc_chunk_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def cdc_containment_pairs(
     docs: DataFrame,
-    text_col: str = "text",
     min_containment: float = 0.3,
     cfg: ERConfig | None = None,
     metrics_query: str = "dd09_cdc_containment_pairs",
 ) -> DataFrame:
-    """Candidate duplicate PAIRS from shared CDC chunks: (a_doc, b_doc,
-    n_shared_chunks, containment) where containment = shared /
-    min(|a|, |b|) — the asymmetric-size measure partial-file
-    duplication needs (a file embedded inside a bigger one scores ~1.0
+    """Candidate duplicate PAIRS from shared CDC chunks of
+    ``docs(doc_id, text)``: (a_doc, b_doc, n_shared_chunks, containment)
+    where containment = shared / min(|a|, |b|) — the asymmetric-size
+    measure partial-file duplication needs (a file embedded inside a bigger one scores ~1.0
     where Jaccard dilutes it). The chunk-hash self-join is guarded by
     the SAME hot-key cap as the LSH band joins (cap_and_salt_blocks): a
     chunk shared by thousands of docs (a common license header) is
-    salted or dropped with logged counts instead of going quadratic —
-    bounded recall, never silent."""
-    cfg = cfg or ERConfig()
-    chunker = make_cdc_chunk_udf()
+    salted or dropped with counts in CAP_METRICS[metrics_query] instead
+    of going quadratic — bounded recall, never silent."""
     doc_chunks = (
         docs.select(
             F.col("doc_id").alias("record_id"),
-            F.explode(chunker(F.col(text_col))).alias("block_key"),
+            F.explode(make_cdc_chunk_udf()("text")).alias("block_key"),
         )
         .distinct()
-        # persisted: five consumers (sizes agg, cap counts + join, both
-        # self-join sides) would otherwise each re-run the chunker UDF
-        # over the full corpus (round-4 review); released after the
-        # eager checkpoint of the pair result below
-        .persist()
+        # checkpointed: the sizes agg and the capped key table would
+        # otherwise each re-run the chunker UDF over the full corpus
+        # (round-4 review)
+        .localCheckpoint(eager=True)
     )
     sizes = doc_chunks.groupBy("record_id").agg(F.count("*").alias("n"))
-    salted, metrics = cap_and_salt_blocks(doc_chunks, cfg)
-    log_cap_metrics(metrics_query, metrics)
+    salted = capped_blocks(metrics_query, doc_chunks, cfg or ERConfig())
     pairs = block_pairs(salted, F.count("*").alias("n_shared_chunks"))
-    result = (
+    return (
         attach_sides(pairs, sizes)
         .withColumn(
             "containment",
@@ -858,9 +820,7 @@ def cdc_containment_pairs(
             "n_shared_chunks",
             "containment",
         )
-    ).localCheckpoint(eager=True)
-    doc_chunks.unpersist()
-    return result
+    )
 
 
 @register(

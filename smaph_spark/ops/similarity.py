@@ -100,9 +100,11 @@ def sim_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # LSH-bucketed ANN (scale path): random-hyperplane signatures, band join
 # ---------------------------------------------------------------------------
 
-def make_hyperplane_udf(dim: int, n_planes: int = 32, seed: int = 0xA11CE):
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((dim, n_planes))
+def make_hyperplane_udf():
+    """Arrow UDF: 64-wide embedding -> 32-bit random-hyperplane
+    signature (seeded planes), shared by sim02 and dd06."""
+    n_planes = 32
+    planes = np.random.default_rng(0xA11CE).standard_normal((64, n_planes))
 
     @F.pandas_udf(T.LongType())
     def signature(emb: pd.Series) -> pd.Series:
@@ -125,51 +127,31 @@ _LOG = logging.getLogger("smaph_spark.similarity")
 SCAN_METRICS: dict[str, dict] = {}
 
 
-def lsh_topk(
-    e: DataFrame,
-    query_filter,
-    k: int = 5,
-    n_planes: int = 32,
-    band_bits: int = 4,
-    multiprobe_bits: int = 1,
-    dim: int = 64,
-    metrics_key: str = "sim02_lsh_topk",
-) -> DataFrame:
-    """Hyperplane-LSH ANN: bucket join on band keys + exact rerank.
+def lsh_topk(e: DataFrame, query_filter, k: int = 5) -> DataFrame:
+    """Hyperplane-LSH ANN over 64-wide embeddings: bucket join on 8
+    band keys of 4 signature bits each + exact rerank.
 
     QUERIES are multi-probed (Lv et al., VLDB'07 idea recast for bitwise
     bands): besides its own band value, a query probes every band value
-    within ``multiprobe_bits`` bit-flips — the nearby buckets its true
-    neighbours most likely fell into. Probing multiplies only the QUERY
-    side's keys (index stays one key per band per vector), so the
-    candidate set grows ~(1 + band_bits)x per probe bit while recall
-    climbs the union of s-curves — the standard recall lever that does
-    not require re-indexing."""
-    if multiprobe_bits > 2:
-        # only 1- and 2-bit probe rings are generated; silently
-        # clamping would hand back less recall than the caller tuned for
-        raise ValueError("multiprobe_bits > 2 not implemented")
-    n_bands = n_planes // band_bits
+    one bit-flip away — the nearby buckets its true neighbours most
+    likely fell into. Probing multiplies only the QUERY side's keys
+    (index stays one key per band per vector), so the candidate set
+    grows ~(1 + band_bits)x while recall climbs the union of s-curves —
+    the standard recall lever that does not require re-indexing."""
+    band_bits = 4
     mask = (1 << band_bits) - 1
-    sig_udf = make_hyperplane_udf(dim=dim, n_planes=n_planes)
-    sig = e.withColumn("sig", sig_udf("emb"))
+    sig = e.withColumn("sig", make_hyperplane_udf()("emb"))
 
     def band_keys(probe: bool):
         keys = []
-        for b in range(n_bands):
+        for b in range(8):
             base = F.shiftrightunsigned("sig", band_bits * b).bitwiseAND(
                 F.lit(mask)
             )
             variants = [base]
-            if probe and multiprobe_bits >= 1:
+            if probe:
                 variants += [
                     base.bitwiseXOR(F.lit(1 << i)) for i in range(band_bits)
-                ]
-            if probe and multiprobe_bits >= 2:
-                variants += [
-                    base.bitwiseXOR(F.lit((1 << i) | (1 << j)))
-                    for i in range(band_bits)
-                    for j in range(i + 1, band_bits)
                 ]
             keys += [
                 F.concat(F.lit(f"{b}:"), v.cast("string")) for v in variants
@@ -200,13 +182,12 @@ def lsh_topk(
     n_q = e.filter(query_filter).count()
     n_vecs = e.count()
     frac = n_cand / max(n_q * (n_vecs - 1), 1)
-    SCAN_METRICS[metrics_key] = {
+    SCAN_METRICS["sim02_lsh_topk"] = {
         "candidates": n_cand, "queries": n_q, "vectors": n_vecs,
         "scan_fraction": round(frac, 4),
     }
-    _LOG.info("%s LSH candidate scan fraction: %.4f "
-              "(%d of %d possible)", metrics_key, frac, n_cand,
-              n_q * (n_vecs - 1))
+    _LOG.info("sim02_lsh_topk LSH candidate scan fraction: %.4f "
+              "(%d of %d possible)", frac, n_cand, n_q * (n_vecs - 1))
     return result
 
 
@@ -225,7 +206,7 @@ def sim_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # weak-similarity regime of this corpus (top-5 cosine ~0.3-0.5 →
     # per-bit agreement ~0.6; single-probe recall@5 plateaued ~0.7, the
     # probe ring lifts it ≥0.9 — asserted vs sim01 in tests)
-    return lsh_topk(e, F.col("vec_id") < 10, k=5, multiprobe_bits=1)
+    return lsh_topk(e, F.col("vec_id") < 10, k=5)
 
 
 # ---------------------------------------------------------------------------
@@ -234,17 +215,15 @@ def sim_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # IVF adapts its cells to the data distribution where LSH is oblivious.
 # ---------------------------------------------------------------------------
 
-def train_ivf_centroids(
-    e: DataFrame, n_cells: int = 16, seed: int = 7, emb_col: str = "emb"
-):
+def train_ivf_centroids(e: DataFrame, n_cells: int = 16):
     """Fit the coarse quantizer (pyspark.ml KMeans — distributed
     Lloyd's over the full table; at 100 TB fit on a sample). Returns a
     (n_cells, dim) numpy array of centroids."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    vecs = e.select(array_to_vector(F.col(emb_col)).alias("features"))
-    km = KMeans(k=n_cells, seed=seed, maxIter=20)
+    vecs = e.select(array_to_vector(F.col("emb")).alias("features"))
+    km = KMeans(k=n_cells, seed=7, maxIter=20)
     model = km.fit(vecs)
     return np.array(model.clusterCenters())
 
@@ -282,8 +261,6 @@ def ivf_topk(
     k: int = 5,
     n_cells: int = 16,
     n_probe: int = 4,
-    seed: int = 7,
-    metrics_key: str = "sim03_ivf_topk",
 ) -> DataFrame:
     """IVF-style ANN: every vector lives in ONE cell (nearest
     centroid); a query probes its `n_probe` nearest cells and exact-
@@ -291,7 +268,7 @@ def ivf_topk(
     scanned fraction to ~n_probe/n_cells of the table; the cell join is
     a plain equi-join on cell id, so Catalyst shuffles both sides once
     on a small int key (no cross product)."""
-    centroids = train_ivf_centroids(e, n_cells=n_cells, seed=seed)
+    centroids = train_ivf_centroids(e, n_cells=n_cells)
     assign1 = make_ivf_cells_udf(centroids, 1)
     probe = make_ivf_cells_udf(centroids, n_probe)
     indexed = e.withColumn("cell", assign1("emb")[0])
@@ -326,15 +303,15 @@ def ivf_topk(
     n_q = e.filter(query_filter).count()
     n_vecs = e.count()
     frac = n_cand / max(n_q * (n_vecs - 1), 1)
-    SCAN_METRICS[metrics_key] = {
+    SCAN_METRICS["sim03_ivf_topk"] = {
         "candidates": n_cand, "queries": n_q, "vectors": n_vecs,
         "n_cells": n_cells, "n_probe": n_probe,
         "probed_cell_fraction": round(n_probe / n_cells, 4),
         "scan_fraction": round(frac, 4),
     }
     _LOG.info(
-        "%s IVF scan: %d candidates (%.4f of all pairs), probing "
-        "%d/%d cells", metrics_key, n_cand, frac, n_probe, n_cells,
+        "sim03_ivf_topk IVF scan: %d candidates (%.4f of all pairs), "
+        "probing %d/%d cells", n_cand, frac, n_probe, n_cells,
     )
     return result
 
@@ -371,23 +348,23 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def train_pq_codebooks(
-    vectors: np.ndarray, m: int = 16, n_centroids: int = 16,
-    iters: int = 12, seed: int = 0xC0DE,
+    vectors: np.ndarray, m: int = 16, n_centroids: int = 16
 ) -> np.ndarray:
-    """Per-subspace Lloyd k-means over a TRAINING SAMPLE. Returns
-    (m, n_centroids, dim//m). The codebook is a model artifact (a few
-    KB) trained on a driver-side sample — standard PQ practice, like
-    sim03's coarse quantizer; encoding/scanning stay distributed."""
+    """Per-subspace Lloyd k-means (12 seeded iterations) over a
+    TRAINING SAMPLE. Returns (m, n_centroids, dim//m). The codebook is
+    a model artifact (a few KB) trained on a driver-side sample —
+    standard PQ practice, like sim03's coarse quantizer;
+    encoding/scanning stay distributed."""
     n, dim = vectors.shape
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
     sub = dim // m
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(0xC0DE)
     books = np.empty((m, n_centroids, sub))
     for j in range(m):
         x = vectors[:, j * sub:(j + 1) * sub]
         cent = x[rng.choice(n, size=n_centroids, replace=n < n_centroids)]
-        for _ in range(iters):
+        for _ in range(12):
             d2 = ((x[:, None, :] - cent[None, :, :]) ** 2).sum(-1)
             assign = d2.argmin(1)
             for c in range(n_centroids):
@@ -472,14 +449,13 @@ def pq_topk(
     query_filter,
     k: int = 5,
     m: int = 16,
-    n_centroids: int = 16,
     train_sample: int = 2048,
     rerank: int = 64,
     codebook_path: str | None = None,
     metrics_key: str = "sim04_pq_topk",
 ) -> DataFrame:
-    """PQ-ADC top-k: encode every vector to m centroid ids, scan the
-    compressed codes per query (approximate inner product = m table
+    """PQ-ADC top-k: encode every vector to m ids of 16 centroids, scan
+    the compressed codes per query (approximate inner product = m table
     lookups), keep the top-``rerank`` candidates, exact-cosine rerank
     to top-``k``. Deterministic: seeded codebooks, id tie-breaks.
     The embedding width is read from the data — no hardcoded dim to
@@ -494,6 +470,7 @@ def pq_topk(
     (round-4 ADVICE: scripts/train_pq_codebook.py is the sole artifact
     writer, so querying a different-dim dataset can't clobber it)."""
     spark = e.sparkSession
+    n_centroids = 16
     en = normalize_embeddings(e)
     books = None
     codebook_source = "trained"

@@ -95,10 +95,7 @@ class ERPipeline:
         history/delta splits of run_incremental — would collide on the
         path list and silently resume each other's snapshots (round-4
         review). In-memory frames fall back to a content hash."""
-        try:
-            paths = sorted(files.inputFiles())
-        except Exception:
-            paths = []
+        paths = sorted(files.inputFiles())
         if paths:
             plan = re.sub(
                 r"#\d+", "", files._jdf.queryExecution().logical().toString()

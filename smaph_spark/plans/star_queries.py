@@ -45,10 +45,7 @@ def widen(df: DataFrame) -> DataFrame:
     session, never a local constant."""
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
-    try:
-        if df.rdd.getNumPartitions() >= target:
-            return df
-    except Exception:
+    if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
 

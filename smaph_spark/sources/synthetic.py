@@ -160,7 +160,6 @@ def generate_files_corpus_spark(
 
 def generate_files_corpus(
     n_clusters: int = 100,
-    avg_cluster_size: float = 3.0,
     singleton_fraction: float = 0.5,
     mutation_strength: int = 3,
     hot_path_fraction: float = 0.05,

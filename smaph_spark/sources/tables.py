@@ -64,7 +64,7 @@ def load_jsonl_files(
     path: str,
     schema: str = FILES_SCHEMA,
     bad_records_col: str = "_corrupt_record",
-) -> tuple[DataFrame, DataFrame, DataFrame]:
+) -> tuple[DataFrame, DataFrame]:
     """Schema-enforced JSONL ingest that quarantines malformed rows
     instead of failing the job or silently dropping data.
 
@@ -73,8 +73,7 @@ def load_jsonl_files(
     PERMISSIVE + an explicit corrupt-record column keeps the scan
     single-pass and splits the output into (good, quarantine): good
     rows match ``schema`` exactly; quarantined rows carry the raw line
-    for offline triage. Returns (good, bad, cached); unpersist
-    ``cached`` when both sides are consumed.
+    for offline triage. Returns (good, bad).
 
     Scale notes: the split is two filters over ONE json scan (no
     second parse); schema is explicit, so Spark never runs the
@@ -97,9 +96,9 @@ def load_csv_files(
     schema: str = FILES_SCHEMA,
     bad_records_col: str = "_corrupt_record",
     **options,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
+) -> tuple[DataFrame, DataFrame]:
     """CSV twin of :func:`load_jsonl_files` (same quarantine contract
-    and (good, bad, cached) return; explicit schema avoids the
+    and (good, bad) return; explicit schema avoids the
     inference pre-pass)."""
     full_schema = f"{schema}, {bad_records_col} string"
     raw = (
@@ -115,22 +114,16 @@ def load_csv_files(
 
 def _split_quarantine(
     raw: DataFrame, bad_records_col: str
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(good, bad, cached) split on the corrupt-record column. Spark
-    forbids filtering raw file scans on ONLY the corrupt column
+) -> tuple[DataFrame, DataFrame]:
+    """(good, bad) split on the corrupt-record column. Spark forbids
+    filtering raw file scans on ONLY the corrupt column
     (QUERY_ONLY_CORRUPT_RECORD_COLUMN, since the pruned scan would
-    never parse the data columns), so the parsed frame is persisted
-    (memory-and-disk: one parse pass, spill-safe on corpus-sized
-    feeds) before both sides filter it — the documented pattern.
-    ``cached`` is the persisted handle itself: call
-    ``cached.unpersist()`` once both sides are consumed (unpersisting
-    the derived good/bad frames would be a no-op — uncaching matches
-    the exact persisted plan, not descendants)."""
-    from pyspark import StorageLevel
-
-    cached = raw.persist(StorageLevel.MEMORY_AND_DISK)
-    good = cached.filter(F.col(bad_records_col).isNull()).drop(bad_records_col)
-    bad = cached.filter(F.col(bad_records_col).isNotNull()).select(
+    never parse the data columns), so the parsed frame is materialized
+    by one eager local checkpoint (one parse pass, nothing to release)
+    before both sides filter it."""
+    parsed = raw.localCheckpoint(eager=True)
+    good = parsed.filter(F.col(bad_records_col).isNull()).drop(bad_records_col)
+    bad = parsed.filter(F.col(bad_records_col).isNotNull()).select(
         F.col(bad_records_col).alias("raw_line")
     )
-    return good, bad, cached
+    return good, bad

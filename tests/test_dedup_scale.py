@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from smaph_spark.config import ERConfig
 from smaph_spark.ops.dedup import (
+    CAP_METRICS,
     _make_simhash_udf,
     cosine_self_join,
     minhash_lsh_pairs,
@@ -31,9 +32,11 @@ def test_minhash_lsh_hot_band_capped(spark):
     fp = spark.createDataFrame(
         rows, "doc_id long, minhash array<int>, bands array<long>"
     )
-    pairs, metrics = minhash_lsh_pairs(fp, cfg)
-    acts = {r["action"]: r["n_records"] for r in metrics.collect()}
-    assert "salted" in acts or "dropped" in acts, "hot band must be logged"
+    pairs = minhash_lsh_pairs(fp, cfg)
+    caps = CAP_METRICS["dd03_minhash_lsh_pairs"]
+    assert caps["salted_band_keys"] + caps["dropped_band_keys"] > 0, (
+        "hot band must be logged"
+    )
     # bounded: each salt bucket holds ~n/4 docs; all-pairs would be 1770
     n_cand = pairs.count()
     max_per_bucket = -(-n // 4) + cfg.max_block_size
@@ -47,8 +50,11 @@ def test_simhash_hot_chunk_capped(spark):
     sig = spark.createDataFrame(
         [(i, 0x1234_5678_9ABC_DEF0) for i in range(n)], "doc_id long, sim long"
     )
-    pairs, metrics = simhash_pairs(sig, cfg)
-    assert metrics.count() > 0, "hot chunk keys must be logged"
+    pairs = simhash_pairs(sig, cfg)
+    caps = CAP_METRICS["dd04_simhash_pairs"]
+    assert caps["salted_band_keys"] + caps["dropped_band_keys"] > 0, (
+        "hot chunk keys must be logged"
+    )
     all_pairs = n * (n - 1) // 2
     assert pairs.count() < all_pairs  # salting bounded the block joins
 
@@ -187,10 +193,10 @@ def test_standalone_dedup_queries_log_cap_metrics(spark, tmp_path):
     )
     cfg = ERConfig(max_block_size=10, block_salt_buckets=4, lsh_bands=2,
                    num_minhash=4)
-    pairs, metrics = minhash_lsh_pairs(fp, cfg)
-    out = dd.log_cap_metrics("test_hot_band", metrics)
+    dd.CAP_METRICS.clear()
+    minhash_lsh_pairs(fp, cfg)
+    out = dd.CAP_METRICS["dd03_minhash_lsh_pairs"]
     assert out["salted_band_keys"] + out["dropped_band_keys"] > 0
-    assert dd.CAP_METRICS["test_hot_band"] == out
     # and the registered driver queries populate CAP_METRICS end-to-end
     dd.CAP_METRICS.clear()
     QUERIES["dd03_minhash_lsh_pairs"].fn(spark, "/root/testdata/sf0.001").count()
@@ -249,8 +255,7 @@ def test_dd03_jaccard_estimate_within_binomial_bound(spark, tmp_path):
     cfg = ERConfig(shingle_k=5, num_minhash=64, lsh_bands=16,
                    max_block_size=500, block_salt_buckets=8)
     fp = _doc_minhash(spark, str(tmp_path), cfg)
-    pairs, _ = minhash_lsh_pairs(fp, cfg)
-    got = pairs.collect()
+    got = minhash_lsh_pairs(fp, cfg).collect()
     assert len(got) >= 15, f"expected a rich pair set, got {len(got)}"
     w = cfg.num_minhash
     for r in got:
@@ -284,7 +289,7 @@ def test_dd04_hamming_values_and_banded_recall(spark):
         for off, ham in enumerate(int(v).bit_count() for v in x):
             exact[(ids[i], ids[i + 1 + off])] = ham
     cfg = ERConfig(max_block_size=500, block_salt_buckets=8)
-    pairs, _ = simhash_pairs(sig, cfg, max_hamming=6)
+    pairs = simhash_pairs(sig, cfg, max_hamming=6)
     got = {(r["a_doc"], r["b_doc"]): r["hamming"] for r in pairs.collect()}
     assert got, "expected near-dup pairs from the mutant corpus"
     # values: every emitted hamming equals the independent popcount
@@ -441,3 +446,25 @@ def test_cdc_containment_hot_chunk_capped_and_logged(spark):
     ms = CAP_METRICS["dd09salt"]
     assert ms["salted_band_keys"] > 0 and ms["dropped_band_keys"] == 0
     assert out  # pairs still produced from the salted sub-buckets
+
+
+def test_dd03_dd09_empty_input_records_zero_caps(spark):
+    """Empty input: the capped key table is checkpointed and its
+    observed cap counts read, so both pair functions must return no
+    rows and record all-zero caps, not block on an Observation that
+    never ran or raise on a pruned one."""
+    from smaph_spark.ops.dedup import cdc_containment_pairs
+
+    zero = {"salted_band_keys": 0, "dropped_band_keys": 0,
+            "records_in_dropped_bands": 0}
+    CAP_METRICS.clear()
+    fp = spark.createDataFrame(
+        [], "doc_id long, minhash array<int>, bands array<long>"
+    )
+    cfg = ERConfig(shingle_k=5, num_minhash=64, lsh_bands=16,
+                   max_block_size=500, block_salt_buckets=8)
+    assert minhash_lsh_pairs(fp, cfg).count() == 0
+    assert CAP_METRICS["dd03_minhash_lsh_pairs"] == zero
+    docs = spark.createDataFrame([], "doc_id long, text string")
+    assert cdc_containment_pairs(docs, metrics_query="dd09empty").count() == 0
+    assert CAP_METRICS["dd09empty"] == zero

@@ -303,20 +303,6 @@ def test_decode_corrupt_bmp_falls_back_not_crashes():
     assert _decode_meta(good)[3] == "bmp-numpy"
 
 
-def test_lsh_topk_rejects_unimplemented_probe_depth(spark):
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
-    from smaph_spark.ops.similarity import lsh_topk
-
-    e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").select(
-        "vec_id",
-        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("emb"),
-    )
-    with _pytest.raises(ValueError, match="multiprobe_bits"):
-        lsh_topk(e, F.col("vec_id") < 5, multiprobe_bits=3)
-
-
 def test_pq_ann_recall_and_determinism(spark):
     """PQ-ADC + exact rerank must recover most of the exact top-k, and
     be bit-deterministic across runs (seeded codebooks, id ties)."""

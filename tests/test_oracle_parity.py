@@ -19,16 +19,21 @@ ROWS_ONLY = sorted(n for n, s in QUERIES.items() if s.sql is None)
 
 @pytest.mark.parametrize("name", ORACLE_QUERIES)
 def test_oracle_parity(spark, name):
+    spark.catalog.clearCache()
     spec = QUERIES[name]
     res = check_query(spark, SF_DIR, name, spec.fn, spec.sql)
     assert res["ok"], res
+    # nothing the query materialized is left cached in the session
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 @pytest.mark.parametrize("name", ROWS_ONLY)
 def test_rows_only_runs(spark, name):
+    spark.catalog.clearCache()
     df = QUERIES[name].fn(spark, SF_DIR)
     assert df.count() >= 0
     assert len(df.schema.fields) > 0
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 #: {scale: {query: (rows, sorted-row sha256)}} for rows-only queries:

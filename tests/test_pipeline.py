@@ -659,6 +659,8 @@ def _jobs_in_group(spark, group, fn):
 #: Spark jobs measured at local[4] (the test session); the asserts allow
 #: 2 more for AQE's run-to-run jitter
 ER_RUN_JOBS, ER_RUN_NO_SNAPSHOT_JOBS, CC_ROUND_THEN_FINISH_JOBS = 19, 14, 24
+#: the dd03/dd09 queries, built and collected at sf0.001
+DD03_JOBS, DD09_JOBS = 9, 11
 
 
 def test_spark_job_counts(spark, tmp_path):
@@ -666,7 +668,8 @@ def test_spark_job_counts(spark, tmp_path):
     snapshots and one without (stage rows, cap counts) and a CC run
     that contracts once and then finishes on the driver (edge and
     pointer-jump counts) read their counts from Observations on the
-    writes and checkpoints."""
+    writes and checkpoints; so do the dd03 and dd09 queries (cap
+    counts on the capped key table's checkpoint)."""
     from dataclasses import replace
 
     from smaph_spark.operators.clustering import connected_components
@@ -694,3 +697,13 @@ def test_spark_job_counts(spark, tmp_path):
     )
     assert any("local_finish_edges" in h for h in hist)
     assert n_cc <= CC_ROUND_THEN_FINISH_JOBS + 2
+
+    from smaph_spark.ops.dedup import dd_cdc_containment, dd_minhash_lsh
+    from tests.test_ops import SF  # the sf0.001 tables
+
+    for query, jobs in ((dd_minhash_lsh, DD03_JOBS),
+                        (dd_cdc_containment, DD09_JOBS)):
+        _, n_q = _jobs_in_group(
+            spark, query.__name__, lambda: query(spark, SF).collect()
+        )
+        assert n_q <= jobs + 2, (query.__name__, n_q)
