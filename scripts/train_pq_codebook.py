@@ -7,7 +7,9 @@ refit on every call (repeated driver-side Lloyd k-means + broadcasts).
 This script fits them once from a deterministic sample of the largest
 local embeddings table and saves codebooks.npy + pq_meta.json (the
 fingerprint sidecar load_pq_codebooks verifies before loading). The
-artifact is committed; rerun this script to regenerate it.
+artifact is committed; rerun this script to regenerate it. This script
+is the only place the codebooks are trained or written: sim04 raises
+on a missing or mismatched artifact instead of refitting them.
 
 Usage: python scripts/train_pq_codebook.py [--sf-dir /root/testdata/sf0.1]
        [--m 16] [--n-centroids 16] [--train-sample 2048]

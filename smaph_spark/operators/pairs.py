@@ -40,16 +40,6 @@ FEATURE_COLS = [
 ]
 
 
-@F.pandas_udf(T.DoubleType())
-def _minhash_agree_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Positional minhash agreement rate via numpy — the unbiased
-    MinHash Jaccard estimate (dd03's rerank). The ER pair path computes
-    the same value inside :func:`_pair_kernel_udf`."""
-    A = np.stack(a.to_numpy())
-    B = np.stack(b.to_numpy())
-    return pd.Series((A == B).mean(axis=1))
-
-
 @F.pandas_udf(
     T.StructType(
         [

@@ -23,9 +23,7 @@ from pyspark.sql import types as T
 from smaph_spark.config import ERConfig
 from smaph_spark.operators.blocking import cap_and_salt_blocks
 from smaph_spark.operators.normalize import make_minhash_udf
-from smaph_spark.operators.pairs import (
-    _minhash_agree_udf, attach_sides, block_pairs,
-)
+from smaph_spark.operators.pairs import attach_sides, block_pairs
 from smaph_spark.plans.star_queries import WS_RE, load, register, widen
 
 
@@ -240,9 +238,13 @@ def minhash_lsh_pairs(fp: DataFrame, cfg: ERConfig) -> DataFrame:
     Band self-join guarded by the hot-key cap (capped_blocks, counts in
     CAP_METRICS["dd03_minhash_lsh_pairs"]) so a degenerate band key
     stays bounded; estimated Jaccard from the full signatures is the
-    rerank."""
+    rerank. The signatures are materialized once, so the key table and
+    the pair payload both read them without re-running the UDF."""
+    fp = fp.select(
+        F.col("doc_id").alias("record_id"), "minhash", "bands"
+    ).localCheckpoint(eager=True)
     keys = fp.select(
-        F.col("doc_id").alias("record_id"),
+        "record_id",
         F.explode(
             F.zip_with(
                 "bands",
@@ -252,10 +254,16 @@ def minhash_lsh_pairs(fp: DataFrame, cfg: ERConfig) -> DataFrame:
         ).alias("block_key"),
     )
     salted = capped_blocks("dd03_minhash_lsh_pairs", keys, cfg)
-    payload = fp.select(F.col("doc_id").alias("record_id"), "minhash")
+    # positional agreement rate (the unbiased MinHash Jaccard estimate)
+    # as a JVM expression: no Arrow round trip per candidate pair
+    agree = F.aggregate(
+        F.zip_with("l_minhash", "r_minhash", lambda a, b: (a == b).cast("int")),
+        F.lit(0), lambda acc, x: acc + x,
+    )
     return (
-        attach_sides(block_pairs(salted), payload)
-        .withColumn("jaccard_est", _minhash_agree_udf("l_minhash", "r_minhash"))
+        attach_sides(block_pairs(salted), fp.select("record_id", "minhash"))
+        .withColumn("jaccard_est", F.try_divide(
+            agree.cast("double"), F.size("l_minhash").cast("double")))
         .filter(F.col("jaccard_est") >= 0.5)
         .select(
             F.col("left_id").alias("a_doc"),
@@ -322,8 +330,11 @@ def simhash_pairs(
 ) -> DataFrame:
     """sig(doc_id, sim) -> pairs(a_doc, b_doc, hamming). Banded hamming
     join on 4×16-bit chunks, hot-chunk keys capped/salted like dd03
-    (counts in CAP_METRICS["dd04_simhash_pairs"])."""
-    sig = sig.select(F.col("doc_id").alias("record_id"), "sim")
+    (counts in CAP_METRICS["dd04_simhash_pairs"]). The signatures are
+    materialized once for the key table and the pair payload."""
+    sig = sig.select(
+        F.col("doc_id").alias("record_id"), "sim"
+    ).localCheckpoint(eager=True)
     salted = capped_blocks(
         "dd04_simhash_pairs", bit_band_blocks(sig, "sim", 4, 16), cfg
     )

@@ -33,42 +33,27 @@ _SCORER_CACHE: dict = {}
 
 
 def get_document_scorer(spark: SparkSession):
-    """Load the persisted GBT pairwise scorer (S8: the north_star says
+    """Load the committed GBT pairwise scorer (S8: the north_star says
     the trained scorer REPLACES the rule fallback in the flagship —
-    SmaphAnnotator.java:208-216 analogue). The artifact's recorded
-    train-feature fingerprint must match _DOC_CFG's (round-2 ADVICE:
-    a scorer trained under shingle_k=7/num_minhash=128 was silently
-    applied to shingle_k=5/num_minhash=64 features); on mismatch or a
-    missing artifact it retrains ON _DOC_CFG features. Any other load
-    failure (a corrupt model directory, unreadable metadata) raises
-    instead of silently retraining. Artifact-write policy (round-5
-    review, same as the PQ codebook): query time may
-    BOOTSTRAP a missing artifact but never overwrites an existing one
-    — a present-but-mismatched artifact is code/artifact skew for
-    scripts/train_scorer.py to resolve deliberately."""
+    SmaphAnnotator.java:208-216 analogue; like SMAPH's annotator, a
+    query only loads a model trained offline). A missing artifact
+    raises FileNotFoundError; an artifact whose recorded train-feature
+    fingerprint differs from _DOC_CFG's raises ValueError (round-2
+    ADVICE: a scorer trained under shingle_k=7/num_minhash=128 was
+    silently applied to shingle_k=5/num_minhash=64 features); a corrupt
+    model directory raises from the load. scripts/train_scorer.py is
+    the only place the scorer is trained or written."""
     if "scorer" not in _SCORER_CACHE:
-        from smaph_spark.operators.model_io import (
-            load_scorer, load_scorer_meta, save_scorer, train_default_scorer,
-        )
+        from smaph_spark.operators.model_io import load_scorer, load_scorer_meta
 
-        try:
-            meta = load_scorer_meta(_MODEL_PATH)
-        except FileNotFoundError:
-            meta = None
-        if meta and meta.get("train_feature_fingerprint") == \
-                _DOC_CFG.feature_fingerprint():
-            # a corrupt artifact raises here: it is not a retrain case
-            model, threshold, _ = load_scorer(_MODEL_PATH)
-        else:
-            model, threshold, stats, _ = train_default_scorer(
-                spark, cfg=_DOC_CFG
+        meta = load_scorer_meta(_MODEL_PATH)
+        if meta.get("train_feature_fingerprint") != _DOC_CFG.feature_fingerprint():
+            raise ValueError(
+                f"scorer artifact at {_MODEL_PATH} was trained on other "
+                "features than the flagship config; regenerate it with "
+                "scripts/train_scorer.py"
             )
-            if meta is None:
-                try:
-                    save_scorer(model, _MODEL_PATH, threshold, stats,
-                                train_cfg=_DOC_CFG)
-                except Exception:
-                    pass  # read-only checkout: keep the in-memory model
+        model, threshold, _ = load_scorer(_MODEL_PATH)
         _SCORER_CACHE["scorer"] = (model, threshold)
     return _SCORER_CACHE["scorer"]
 

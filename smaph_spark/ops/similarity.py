@@ -397,29 +397,23 @@ def save_pq_codebooks(books: np.ndarray, path: str) -> None:
 
 def load_pq_codebooks(
     path: str, m: int, n_centroids: int, dim: int
-) -> np.ndarray | None:
-    """Load the codebook artifact iff its fingerprint matches the
-    requested (m, n_centroids, dim); None on missing/mismatched
-    artifact (caller retrains)."""
-    meta_path = os.path.join(path, "pq_meta.json")
-    if not os.path.exists(meta_path):
-        return None
-    with open(meta_path) as fh:
+) -> np.ndarray:
+    """Load the codebook artifact, checking its fingerprint against the
+    requested (m, n_centroids, dim). A missing artifact raises
+    FileNotFoundError; a different fingerprint or array shape raises
+    ValueError. scripts/train_pq_codebook.py is the only place the
+    codebooks are trained or written."""
+    with open(os.path.join(path, "pq_meta.json")) as fh:
         meta = json.load(fh)
-    if (meta.get("m"), meta.get("n_centroids"), meta.get("dim")) != (
-        m, n_centroids, dim,
-    ):
-        _LOG.info(
-            "PQ codebook fingerprint mismatch at %s: artifact "
-            "(m=%s, n_centroids=%s, dim=%s) vs requested "
-            "(m=%d, n_centroids=%d, dim=%d) — retraining",
-            path, meta.get("m"), meta.get("n_centroids"), meta.get("dim"),
-            m, n_centroids, dim,
-        )
-        return None
     books = np.load(os.path.join(path, "codebooks.npy"))
-    if books.shape != (m, n_centroids, dim // m):
-        return None
+    want = (m, n_centroids, dim)
+    got = (meta.get("m"), meta.get("n_centroids"), meta.get("dim"))
+    if got != want or books.shape != (m, n_centroids, dim // m):
+        raise ValueError(
+            f"PQ codebook artifact at {path} has (m, n_centroids, dim) "
+            f"{got} and shape {books.shape}, not {want}; regenerate it "
+            "with scripts/train_pq_codebook.py"
+        )
     return books
 
 
@@ -439,7 +433,7 @@ def normalize_embeddings(e: DataFrame) -> DataFrame:
 
 def pq_training_sample(en: DataFrame, train_sample: int) -> np.ndarray:
     """Deterministic driver-side training sample (hash order, not data
-    order) — shared by pq_topk's retrain path and the trainer script."""
+    order) for the codebook trainer script."""
     rows = en.orderBy(F.xxhash64("vec_id")).limit(train_sample).collect()
     return np.stack([np.asarray(r["emb"]) for r in rows])
 
@@ -447,58 +441,40 @@ def pq_training_sample(en: DataFrame, train_sample: int) -> np.ndarray:
 def pq_topk(
     e: DataFrame,
     query_filter,
+    books: np.ndarray,
     k: int = 5,
-    m: int = 16,
-    train_sample: int = 2048,
     rerank: int = 64,
-    codebook_path: str | None = None,
     metrics_key: str = "sim04_pq_topk",
 ) -> DataFrame:
-    """PQ-ADC top-k: encode every vector to m ids of 16 centroids, scan
-    the compressed codes per query (approximate inner product = m table
-    lookups), keep the top-``rerank`` candidates, exact-cosine rerank
-    to top-``k``. Deterministic: seeded codebooks, id tie-breaks.
-    The embedding width is read from the data — no hardcoded dim to
-    fall out of sync.
+    """PQ-ADC top-k: encode every vector to m ids of n_centroids
+    centroids, scan the compressed codes per query (approximate inner
+    product = m table lookups), keep the top-``rerank`` candidates,
+    exact-cosine rerank to top-``k``. Deterministic: fixed codebooks,
+    id tie-breaks.
 
-    ``codebook_path``: load the codebooks from this artifact directory
-    when its (m, n_centroids, dim) fingerprint matches — skipping the
-    per-call training sample + Lloyd fit (round-3 VERDICT item 4: the
-    codebook is a model artifact like the GBT scorer, not a per-query
-    cost). On mismatch/missing artifact the codebooks are retrained
-    from a deterministic sample IN-MEMORY only — never saved here
-    (round-4 ADVICE: scripts/train_pq_codebook.py is the sole artifact
-    writer, so querying a different-dim dataset can't clobber it)."""
+    ``books`` (m, n_centroids, dim // m) are the trained codebooks
+    (load_pq_codebooks): a model artifact like the GBT scorer, never
+    fit per query (round-3 VERDICT item 4). Embeddings of another
+    width than the codebooks' raise ValueError."""
     spark = e.sparkSession
-    n_centroids = 16
+    m, n_centroids, sub = books.shape
+    dim = m * sub
     en = normalize_embeddings(e)
-    books = None
-    codebook_source = "trained"
-    if codebook_path is not None:
-        # one-row probe for the data width — enough to fingerprint-check
-        # the artifact without collecting the training sample
-        first = en.select(F.size("emb").alias("d")).first()
-        if first is not None:
-            books = load_pq_codebooks(
-                codebook_path, m=m, n_centroids=n_centroids, dim=int(first["d"])
-            )
-            if books is not None:
-                codebook_source = "artifact"
-    if books is None:
-        # retrain IN-MEMORY only (round-4 ADVICE): writing here would
-        # let a query over a different-dim dataset silently overwrite
-        # the committed artifact at query time — scripts/
-        # train_pq_codebook.py is the sole writer of codebook_path
-        train_mat = pq_training_sample(en, train_sample)
-        books = train_pq_codebooks(train_mat, m=m, n_centroids=n_centroids)
-    dim = books.shape[0] * books.shape[2]
     b_books = spark.sparkContext.broadcast(books)
-    sub = dim // m
+
+    def check_width(width: int) -> None:
+        if width != dim:
+            raise ValueError(
+                f"embedding width {width} does not match the {dim}-dim "
+                "PQ codebooks"
+            )
 
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
     def encode(emb: pd.Series) -> pd.Series:
         bk = b_books.value
         mat = np.stack(emb.to_numpy())  # (batch, dim)
+        # a narrower batch would otherwise encode to centroid 0 silently
+        check_width(mat.shape[1])
         codes = np.empty((len(emb), m), dtype=np.int32)
         for j in range(m):
             x = mat[:, j * sub:(j + 1) * sub]
@@ -512,6 +488,8 @@ def pq_topk(
     )
     # ADC tables per query: tables[q][j, c] = <q_subj, centroid_jc>
     q_rows = queries.collect()  # few rows by contract (same as sim01-03)
+    for r in q_rows:
+        check_width(len(r["q_emb"]))
     tables = {
         r["q_vec"]: np.stack([
             np.asarray(r["q_emb"])[j * sub:(j + 1) * sub] @ b_books.value[j].T
@@ -561,13 +539,12 @@ def pq_topk(
         "scan_fraction": 1.0, "rerank_shortlist": rerank,
         "code_bits_per_vector": code_bits,
         "compression_ratio": round(dim * 64 / code_bits, 1),
-        "codebook_source": codebook_source,
     }
     _LOG.info(
         "%s PQ-ADC scan: %d codes x %d queries at %d bits/vector "
-        "(%.0fx compression), rerank shortlist %d, codebooks %s",
+        "(%.0fx compression), rerank shortlist %d",
         metrics_key, n_vecs, len(q_rows), code_bits,
-        dim * 64 / code_bits, rerank, codebook_source,
+        dim * 64 / code_bits, rerank,
     )
     return result
 
@@ -583,4 +560,5 @@ def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("emb"),
     )
-    return pq_topk(e, F.col("vec_id") < 10, codebook_path=PQ_MODEL_PATH)
+    books = load_pq_codebooks(PQ_MODEL_PATH, m=16, n_centroids=16, dim=64)
+    return pq_topk(e, F.col("vec_id") < 10, books)

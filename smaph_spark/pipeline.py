@@ -186,7 +186,6 @@ class ERPipeline:
         history_clusters: DataFrame,
         history_normalized: DataFrame,
         history_ids: DataFrame | None = None,
-        skip_overlap_check: bool = False,
     ) -> PipelineResult:
         """Resolve a NEW batch against an already-resolved history —
         the production mode of a continuously-ingesting ER deployment.
@@ -225,27 +224,24 @@ class ERPipeline:
         # the O(delta) win on large histories (round-4 ADVICE) —
         # callers that maintain a history id index (dd07-style digest
         # table, or the snapshotted s2_history_keys) pass it as
-        # ``history_ids`` (DataFrame with record_id), and callers that
-        # already anti-joined the delta against history set
-        # ``skip_overlap_check=True``.
+        # ``history_ids`` (DataFrame with record_id).
         rid = F.xxhash64("repo", "path", "commit").alias("record_id")
-        if not skip_overlap_check:
-            hist_ids = (
-                history_ids.select("record_id")
-                if history_ids is not None
-                else history_files.select(rid)
+        hist_ids = (
+            history_ids.select("record_id")
+            if history_ids is not None
+            else history_files.select(rid)
+        )
+        overlap = hist_ids.join(
+            F.broadcast(new_files.select(rid).distinct()),
+            "record_id", "left_semi",
+        ).count()
+        if overlap:
+            raise ValueError(
+                f"run_incremental: {overlap} record(s) appear in BOTH "
+                "history and the new batch; dedupe the delta against "
+                "history first (e.g. dd07-style digest anti-join) or "
+                "run a full batch"
             )
-            overlap = hist_ids.join(
-                F.broadcast(new_files.select(rid).distinct()),
-                "record_id", "left_semi",
-            ).count()
-            if overlap:
-                raise ValueError(
-                    f"run_incremental: {overlap} record(s) appear in BOTH "
-                    "history and the new batch; dedupe the delta against "
-                    "history first (e.g. dd07-style digest anti-join) or "
-                    "run a full batch"
-                )
         # the history/delta SPLIT is part of the snapshot key: two runs
         # over the same union but different splits produce different
         # s1_normalized (delta-only rows) and s3_pairs_scored

@@ -1,7 +1,7 @@
 """Flagship query invariants (er01/er02 over the documents table):
 cluster output partitions the doc space, member lists are consistent,
-the trained-scorer path is active, and the scorer falls back to
-training when no artifact exists."""
+the trained-scorer path is active, and a missing, mismatched or
+corrupt scorer artifact raises instead of training a replacement."""
 
 import os
 
@@ -54,25 +54,6 @@ def test_flagship_uses_trained_scorer(spark):
     assert os.path.exists(os.path.join(er_docs._MODEL_PATH, "scorer_meta.json"))
 
 
-def test_scorer_fallback_trains_when_artifact_missing(spark, monkeypatch, tmp_path):
-    """No committed artifact -> train on the synthetic gold corpus and
-    persist to the (temporary) path."""
-    monkeypatch.setattr(er_docs, "_MODEL_PATH", str(tmp_path / "scorer"))
-    monkeypatch.setattr(er_docs, "_SCORER_CACHE", {})
-    import smaph_spark.operators.model_io as mio
-
-    orig = mio.train_default_scorer
-
-    def quick(spark_, **kw):
-        kw.update(n_clusters=20)
-        return orig(spark_, **kw)
-
-    monkeypatch.setattr(mio, "train_default_scorer", quick)
-    model, threshold = er_docs.get_document_scorer(spark)
-    assert type(model).__name__ == "PipelineModel"
-    # persisted for the next run
-    assert os.path.exists(str(tmp_path / "scorer" / "scorer_meta.json"))
-
 def test_committed_artifact_matches_flagship_feature_config():
     """Train/serve skew guard (round-2 ADVICE): the committed scorer
     must record the feature fingerprint of _DOC_CFG — the config whose
@@ -86,62 +67,46 @@ def test_committed_artifact_matches_flagship_feature_config():
     assert meta["train_cfg"]["num_minhash"] == er_docs._DOC_CFG.num_minhash
 
 
-def test_scorer_retrains_on_feature_fingerprint_mismatch(
-    spark, monkeypatch, tmp_path
-):
-    """An artifact trained under a DIFFERENT feature config must be
-    rejected and retrained, not silently applied (round-2 ADVICE)."""
-    from smaph_spark.config import ERConfig
-    import smaph_spark.operators.model_io as mio
-
-    calls = {"n": 0}
-    orig = mio.train_default_scorer
-
-    def quick(spark_, **kw):
-        calls["n"] += 1
-        kw.update(n_clusters=20)
-        return orig(spark_, **kw)
-
-    monkeypatch.setattr(mio, "train_default_scorer", quick)
-    monkeypatch.setattr(er_docs, "_MODEL_PATH", str(tmp_path / "scorer"))
-    monkeypatch.setattr(er_docs, "_SCORER_CACHE", {})
-    # plant an artifact trained under the DEFAULT config (shingle_k=7,
-    # num_minhash=128) — a different feature distribution than _DOC_CFG
-    model, thr, stats, _ = quick(spark, cfg=ERConfig())
-    mio.save_scorer(model, str(tmp_path / "scorer"), thr, stats,
-                    train_cfg=ERConfig())
-    assert calls["n"] == 1
-    er_docs.get_document_scorer(spark)
-    assert calls["n"] == 2, "fingerprint mismatch must trigger a retrain"
-    # artifact-write policy (round-5 review): the retrain is IN-MEMORY
-    # — the present-but-mismatched artifact is NOT overwritten at query
-    # time (scripts/train_scorer.py resolves the skew deliberately)
-    meta = mio.load_scorer_meta(str(tmp_path / "scorer"))
-    assert meta["train_feature_fingerprint"] == \
-        ERConfig().feature_fingerprint()
-
-
-def test_corrupt_scorer_artifact_raises(spark, monkeypatch, tmp_path):
-    """A matching meta file plus a broken model/ directory is a corrupt
-    artifact, not a retrain case: the load must fail loudly and never
-    fall back to training a replacement inside the query."""
+@pytest.mark.parametrize("artifact, error", [
+    ("missing", FileNotFoundError),
+    ("mismatched", ValueError),
+    ("corrupt", Exception),
+])
+def test_corrupt_scorer_artifact_raises(spark, monkeypatch, tmp_path,
+                                        artifact, error):
+    """A missing artifact, one trained on other features (round-2
+    ADVICE: the DEFAULT config's shingle_k=7/num_minhash=128
+    fingerprint vs _DOC_CFG's), and a corrupt one (a matching meta file
+    plus a broken model/ directory) all fail the load loudly: the query
+    never trains a replacement scorer (scripts/train_scorer.py is the
+    only trainer) and caches nothing."""
+    import json
     import shutil
 
     import smaph_spark.operators.model_io as mio
+    from smaph_spark.config import ERConfig
 
     def never(*a, **kw):
         raise AssertionError("train_default_scorer must not be called")
 
     path = tmp_path / "scorer"
-    (path / "model" / "metadata").mkdir(parents=True)
-    (path / "model" / "metadata" / "part-00000").write_text("{truncated")
-    shutil.copy(os.path.join(er_docs._MODEL_PATH, "scorer_meta.json"), path)
+    if artifact == "mismatched":
+        shutil.copytree(er_docs._MODEL_PATH, path)
+        meta = json.loads((path / "scorer_meta.json").read_text())
+        meta["train_feature_fingerprint"] = ERConfig().feature_fingerprint()
+        (path / "scorer_meta.json").write_text(json.dumps(meta))
+    elif artifact == "corrupt":
+        (path / "model" / "metadata").mkdir(parents=True)
+        (path / "model" / "metadata" / "part-00000").write_text("{truncated")
+        shutil.copy(os.path.join(er_docs._MODEL_PATH, "scorer_meta.json"), path)
     monkeypatch.setattr(mio, "train_default_scorer", never)
     monkeypatch.setattr(er_docs, "_MODEL_PATH", str(path))
     monkeypatch.setattr(er_docs, "_SCORER_CACHE", {})
-    with pytest.raises(Exception) as exc:
+    with pytest.raises(error) as exc:
         er_docs.get_document_scorer(spark)
     assert not isinstance(exc.value, AssertionError)
+    if artifact == "mismatched":
+        assert "scripts/train_scorer.py" in str(exc.value)
     assert er_docs._SCORER_CACHE == {}
 
 

@@ -306,7 +306,9 @@ def test_decode_corrupt_bmp_falls_back_not_crashes():
 def test_pq_ann_recall_and_determinism(spark):
     """PQ-ADC + exact rerank must recover most of the exact top-k, and
     be bit-deterministic across runs (seeded codebooks, id ties)."""
-    from smaph_spark.ops.similarity import pq_topk
+    from smaph_spark.ops.similarity import (
+        PQ_MODEL_PATH, load_pq_codebooks, pq_topk,
+    )
     from smaph_spark.plans.star_queries import QUERIES
 
     sf = "/root/testdata/sf0.001"
@@ -315,12 +317,14 @@ def test_pq_ann_recall_and_determinism(spark):
         F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("emb"),
     )
     qf = F.col("vec_id") < 10
-    got = pq_topk(e, qf).collect()
+    books = load_pq_codebooks(PQ_MODEL_PATH, m=16, n_centroids=16, dim=64)
+    got = pq_topk(e, qf, books).collect()
     exact = QUERIES["sim01_bruteforce_topk"].fn(spark, sf).collect()
     got_set = {(r["q_vec"], r["n_vec"]) for r in got}
     ex_set = {(r["q_vec"], r["n_vec"]) for r in exact}
     assert len(got_set & ex_set) / len(ex_set) >= 0.8
-    again = {(r["q_vec"], r["n_vec"], r["cos"], r["rnk"]) for r in pq_topk(e, qf).collect()}
+    again = {(r["q_vec"], r["n_vec"], r["cos"], r["rnk"])
+             for r in pq_topk(e, qf, books).collect()}
     first = {(r["q_vec"], r["n_vec"], r["cos"], r["rnk"]) for r in got}
     assert again == first
 
@@ -391,73 +395,64 @@ def test_ws_token_split_vertical_tab_cross_engine(spark):
 
 
 def test_pq_derives_dim_from_data(spark):
-    """Non-64-dim embeddings must work: dim comes from the sample."""
+    """Non-64-dim embeddings must work: m and the width come from the
+    codebooks, here 8 subspaces over 32-wide data."""
     import numpy as np
 
-    from smaph_spark.ops.similarity import pq_topk
+    from smaph_spark.ops.similarity import (
+        normalize_embeddings, pq_topk, pq_training_sample, train_pq_codebooks,
+    )
 
     rng = np.random.default_rng(5)
     rows = [(i, rng.standard_normal(32).tolist()) for i in range(120)]
     e = spark.createDataFrame(rows, "vec_id long, emb array<double>")
-    out = pq_topk(e, F.col("vec_id") < 3, k=3, m=8, train_sample=64, rerank=16)
+    books = train_pq_codebooks(
+        pq_training_sample(normalize_embeddings(e), 64), m=8, n_centroids=16)
+    out = pq_topk(e, F.col("vec_id") < 3, books, k=3, rerank=16)
     got = out.collect()
     assert len(got) == 9 and all(r["rnk"] <= 3 for r in got)
 
 
 def test_pq_codebook_artifact_roundtrip_and_mismatch_retrain(spark, tmp_path):
-    """Round-3 VERDICT item 4 + round-4 ADVICE: the PQ codebook is a
-    model artifact — loaded when the (m, n_centroids, dim) fingerprint
-    matches, retrained IN-MEMORY when it does not. Query-time retrains
-    never write: only scripts/train_pq_codebook.py (save_pq_codebooks)
-    owns the artifact, so a query over a different-dim dataset cannot
-    overwrite the committed codebook."""
+    """Round-3 VERDICT item 4: the PQ codebook is a model artifact that
+    scripts/train_pq_codebook.py alone trains and writes. A query loads
+    it or fails loudly: a missing artifact, a fingerprint other than
+    the requested one, and embeddings of another width than the
+    codebooks' all raise — nothing is retrained at query time."""
     import numpy as np
+    import pytest as _pytest
 
     from smaph_spark.ops.similarity import (
-        SCAN_METRICS, load_pq_codebooks, pq_topk, save_pq_codebooks,
-        train_pq_codebooks,
+        load_pq_codebooks, pq_topk, save_pq_codebooks, train_pq_codebooks,
     )
 
     rng = np.random.default_rng(11)
-    rows = [(i, rng.standard_normal(64).tolist()) for i in range(200)]
-    e = spark.createDataFrame(rows, "vec_id long, emb array<double>")
     path = str(tmp_path / "pq")
+    with _pytest.raises(FileNotFoundError):
+        load_pq_codebooks(path, m=16, n_centroids=16, dim=64)
 
-    # 1) first call: no artifact -> trains in-memory, writes NOTHING
-    out1 = pq_topk(e, F.col("vec_id") < 3, k=3, codebook_path=path,
-                   metrics_key="pqtest").collect()
-    assert SCAN_METRICS["pqtest"]["codebook_source"] == "trained"
-    assert load_pq_codebooks(path, m=16, n_centroids=16, dim=64) is None
+    books = train_pq_codebooks(rng.standard_normal((200, 64)), m=16, n_centroids=16)
+    save_pq_codebooks(books, path)
+    assert (load_pq_codebooks(path, m=16, n_centroids=16, dim=64) == books).all()
+    for m, n_centroids, dim in ((16, 16, 32), (8, 16, 64), (16, 8, 64)):
+        with _pytest.raises(ValueError, match="scripts/train_pq_codebook.py"):
+            load_pq_codebooks(path, m=m, n_centroids=n_centroids, dim=dim)
 
-    # the trainer script's path is the sole writer — same preprocessing
-    # + sample recipe as pq_topk's retrain, so the codebooks match
-    from smaph_spark.ops.similarity import (
-        normalize_embeddings, pq_training_sample,
-    )
-
-    mat = pq_training_sample(normalize_embeddings(e), 2048)
-    save_pq_codebooks(train_pq_codebooks(mat, m=16, n_centroids=16), path)
-
-    # 2) second call: fingerprint matches -> loads the artifact,
-    #    result identical (codebooks are deterministic either way)
-    out2 = pq_topk(e, F.col("vec_id") < 3, k=3, codebook_path=path,
-                   metrics_key="pqtest").collect()
-    assert SCAN_METRICS["pqtest"]["codebook_source"] == "artifact"
-    key = lambda rs: sorted((r["q_vec"], r["n_vec"], r["rnk"]) for r in rs)  # noqa: E731
-    assert key(out1) == key(out2)
-
-    # 3) mismatched artifact (wrong dim) -> refuses the load, retrains
-    #    in-memory, and leaves the on-disk artifact UNTOUCHED
-    wrong = train_pq_codebooks(rng.standard_normal((100, 32)), m=16, n_centroids=16)
-    save_pq_codebooks(wrong, path)
-    assert load_pq_codebooks(path, m=16, n_centroids=16, dim=64) is None
-    pq_topk(e, F.col("vec_id") < 3, k=3, codebook_path=path,
-            metrics_key="pqtest").collect()
-    assert SCAN_METRICS["pqtest"]["codebook_source"] == "trained"
-    # the wrong-dim artifact is still there, byte-identical intent:
-    # loadable under ITS fingerprint, not replaced by a 64-dim one
-    assert load_pq_codebooks(path, m=16, n_centroids=16, dim=32) is not None
-    assert load_pq_codebooks(path, m=16, n_centroids=16, dim=64) is None
+    # 32-wide data against 64-dim codebooks: the driver-side check on
+    # the query rows raises before any scan runs
+    schema = "vec_id long, emb array<double>"
+    narrow = spark.createDataFrame(
+        [(i, rng.standard_normal(32).tolist()) for i in range(100)], schema)
+    with _pytest.raises(ValueError, match="width 32"):
+        pq_topk(narrow, F.col("vec_id") < 3, books, k=3)
+    # 64-wide query rows over a 32-wide partition: the encode UDF's own
+    # check raises instead of coding that partition to centroid 0
+    mixed = spark.createDataFrame(
+        [(i, rng.standard_normal(64).tolist()) for i in range(100)], schema
+    ).union(spark.createDataFrame(
+        [(i + 100, rng.standard_normal(32).tolist()) for i in range(100)], schema))
+    with _pytest.raises(Exception, match="width 32"):
+        pq_topk(mixed, F.col("vec_id") < 3, books, k=3).collect()
 
 
 def test_sim03_sim04_scan_metrics_populated(spark):
@@ -476,7 +471,6 @@ def test_sim03_sim04_scan_metrics_populated(spark):
     pq = SCAN_METRICS["sim04_pq_topk"]
     assert pq["scan_fraction"] == 1.0 and pq["rerank_shortlist"] == 64
     assert pq["code_bits_per_vector"] == 64  # 16 subspaces x 4 bits
-    assert pq["codebook_source"] in ("artifact", "trained")
 
 
 def test_streaming_gate_robust_to_session_timezone(spark):

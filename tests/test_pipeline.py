@@ -616,8 +616,7 @@ def test_incremental_rejects_history_delta_overlap(spark):
 def test_incremental_overlap_guard_index_and_skip(spark):
     """Round-4 ADVICE: the disjointness guard must not force a full
     history rescan per delta batch — a caller-maintained id index
-    (dd07-style) drives the same check, and a caller that already
-    anti-joined the delta can skip it entirely."""
+    (dd07-style) drives the same check, and passes a clean delta."""
     files_pdf, _, _ = generate_files_corpus(n_clusters=15, seed=808)
     files = spark.createDataFrame(files_pdf)
     bucket = F.pmod(F.xxhash64("repo", "path", "commit"), F.lit(5))
@@ -635,12 +634,10 @@ def test_incremental_overlap_guard_index_and_skip(spark):
             history_normalized=hist_res.normalized,
             history_ids=hist_index,
         )
-    # skip flag: the overlapping delta sails through the guard (caller
-    # owns disjointness), and a genuinely clean delta still resolves
     res = ERPipeline(spark, ERConfig()).run_incremental(
         history, clean_delta, hist_res.clusters,
         history_normalized=hist_res.normalized,
-        skip_overlap_check=True,
+        history_ids=hist_index,
     )
     assert res.clusters.count() == files.count()
 
@@ -659,8 +656,8 @@ def _jobs_in_group(spark, group, fn):
 #: Spark jobs measured at local[4] (the test session); the asserts allow
 #: 2 more for AQE's run-to-run jitter
 ER_RUN_JOBS, ER_RUN_NO_SNAPSHOT_JOBS, CC_ROUND_THEN_FINISH_JOBS = 19, 14, 24
-#: the dd03/dd09 queries, built and collected at sf0.001
-DD03_JOBS, DD09_JOBS = 9, 11
+#: the dd03/dd09/sim04 queries, built and collected at sf0.001
+DD03_JOBS, DD09_JOBS, SIM04_JOBS = 9, 11, 14
 
 
 def test_spark_job_counts(spark, tmp_path):
@@ -669,7 +666,8 @@ def test_spark_job_counts(spark, tmp_path):
     that contracts once and then finishes on the driver (edge and
     pointer-jump counts) read their counts from Observations on the
     writes and checkpoints; so do the dd03 and dd09 queries (cap
-    counts on the capped key table's checkpoint)."""
+    counts on the capped key table's checkpoint). sim04 loads its
+    codebooks and runs no job to probe the data width."""
     from dataclasses import replace
 
     from smaph_spark.operators.clustering import connected_components
@@ -699,10 +697,12 @@ def test_spark_job_counts(spark, tmp_path):
     assert n_cc <= CC_ROUND_THEN_FINISH_JOBS + 2
 
     from smaph_spark.ops.dedup import dd_cdc_containment, dd_minhash_lsh
+    from smaph_spark.ops.similarity import sim_pq_topk
     from tests.test_ops import SF  # the sf0.001 tables
 
     for query, jobs in ((dd_minhash_lsh, DD03_JOBS),
-                        (dd_cdc_containment, DD09_JOBS)):
+                        (dd_cdc_containment, DD09_JOBS),
+                        (sim_pq_topk, SIM04_JOBS)):
         _, n_q = _jobs_in_group(
             spark, query.__name__, lambda: query(spark, SF).collect()
         )

@@ -111,3 +111,16 @@ def test_band_dedup_queries_equi_join_only(spark):
         plan = _plan(spark, name)
         assert "CartesianProduct" not in plan, name
         assert "BroadcastNestedLoopJoin" not in plan, name
+
+
+def test_dd03_dd04_run_no_python_after_signatures(spark):
+    """Each signature UDF runs once per document: dd03/dd04 materialize
+    their (record_id, signature) frame before the key table and the
+    pair payload both read it, and dd03's MinHash agreement rerank is a
+    JVM expression, so the collected result's plan evaluates no Python
+    (CIDR'22: every Python evaluation pays an Arrow round trip)."""
+    for name in ("dd03_minhash_lsh_pairs", "dd04_simhash_pairs"):
+        df = QUERIES[name].fn(spark, SF)
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "ArrowEvalPython" not in plan, (name, plan)
