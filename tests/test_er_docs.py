@@ -67,17 +67,40 @@ def test_committed_artifact_matches_flagship_feature_config():
     assert meta["train_cfg"]["num_minhash"] == er_docs._DOC_CFG.num_minhash
 
 
+def test_corrupt_scorer_artifact_raises(spark, monkeypatch, tmp_path):
+    """A matching meta file plus a broken model/ directory is a corrupt
+    artifact: the load must fail loudly, never train a replacement
+    inside the query, and cache nothing."""
+    import shutil
+
+    import smaph_spark.operators.model_io as mio
+
+    def never(*a, **kw):
+        raise AssertionError("train_default_scorer must not be called")
+
+    path = tmp_path / "scorer"
+    (path / "model" / "metadata").mkdir(parents=True)
+    (path / "model" / "metadata" / "part-00000").write_text("{truncated")
+    shutil.copy(os.path.join(er_docs._MODEL_PATH, "scorer_meta.json"), path)
+    monkeypatch.setattr(mio, "train_default_scorer", never)
+    monkeypatch.setattr(er_docs, "_MODEL_PATH", str(path))
+    monkeypatch.setattr(er_docs, "_SCORER_CACHE", {})
+    with pytest.raises(Exception) as exc:
+        er_docs.get_document_scorer(spark)
+    assert not isinstance(exc.value, AssertionError)
+    assert er_docs._SCORER_CACHE == {}
+
+
 @pytest.mark.parametrize("artifact, error", [
     ("missing", FileNotFoundError),
     ("mismatched", ValueError),
-    ("corrupt", Exception),
 ])
-def test_corrupt_scorer_artifact_raises(spark, monkeypatch, tmp_path,
-                                        artifact, error):
-    """A missing artifact, one trained on other features (round-2
+def test_missing_or_mismatched_scorer_artifact_raises(spark, monkeypatch,
+                                                      tmp_path, artifact,
+                                                      error):
+    """A missing artifact and one trained on other features (round-2
     ADVICE: the DEFAULT config's shingle_k=7/num_minhash=128
-    fingerprint vs _DOC_CFG's), and a corrupt one (a matching meta file
-    plus a broken model/ directory) all fail the load loudly: the query
+    fingerprint vs _DOC_CFG's) both fail the load loudly: the query
     never trains a replacement scorer (scripts/train_scorer.py is the
     only trainer) and caches nothing."""
     import json
@@ -95,16 +118,11 @@ def test_corrupt_scorer_artifact_raises(spark, monkeypatch, tmp_path,
         meta = json.loads((path / "scorer_meta.json").read_text())
         meta["train_feature_fingerprint"] = ERConfig().feature_fingerprint()
         (path / "scorer_meta.json").write_text(json.dumps(meta))
-    elif artifact == "corrupt":
-        (path / "model" / "metadata").mkdir(parents=True)
-        (path / "model" / "metadata" / "part-00000").write_text("{truncated")
-        shutil.copy(os.path.join(er_docs._MODEL_PATH, "scorer_meta.json"), path)
     monkeypatch.setattr(mio, "train_default_scorer", never)
     monkeypatch.setattr(er_docs, "_MODEL_PATH", str(path))
     monkeypatch.setattr(er_docs, "_SCORER_CACHE", {})
     with pytest.raises(error) as exc:
         er_docs.get_document_scorer(spark)
-    assert not isinstance(exc.value, AssertionError)
     if artifact == "mismatched":
         assert "scripts/train_scorer.py" in str(exc.value)
     assert er_docs._SCORER_CACHE == {}
