@@ -23,10 +23,11 @@ The per-round relabelings are composed back onto the original nodes,
 newest round first, after the finish.
 
 Every count is observed (``pyspark.sql.Observation``) on the eager
-``localCheckpoint`` that materializes the counted frame: the input edge
-count, each round's contracted edge count and each pointer jump's
-``moved`` count (``count_if(lab != _old)``) ride the checkpoint's job
-instead of starting one of their own.
+local checkpoint that materializes the counted frame
+(``session.checkpoint``): the input edge count, each round's contracted
+edge count and each pointer jump's ``moved`` count
+(``count_if(lab != _old)``) ride the checkpoint's job instead of
+starting one of their own.
 
 Termination needs no iteration cap. Every round strictly lowers the
 edge count: in each component the min node m is every neighbour's
@@ -42,10 +43,11 @@ blocking cap bounds max degree upstream.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from smaph_spark.config import ERConfig
+from smaph_spark.session import checkpoint
 
 
 def history_pseudo_edges(history_clusters: DataFrame) -> DataFrame:
@@ -89,13 +91,12 @@ def connected_components(
     history: list[dict] = []
     while n_edges > cfg.cc_local_threshold:
         # one round (module docstring): 1. hash-min
-        lab = (
+        lab, _ = checkpoint(
             edges.select(F.col("src").alias("node"), F.col("dst").alias("nb"))
             .union(edges.select(F.col("dst").alias("node"), F.col("src").alias("nb")))
             .groupBy("node")
             .agg(F.min("nb").alias("mn"))
             .select("node", F.least("node", "mn").alias("lab"))
-            .localCheckpoint(eager=True)
         )
         # 2. pointer-jump to closure
         moved = None
@@ -153,7 +154,7 @@ def connected_components(
             F.coalesce("_c", "lab").alias("cluster_id"),
         )
     if rounds:
-        labels = labels.localCheckpoint(eager=True)
+        labels, _ = checkpoint(labels)
 
     if all_records is not None:
         labels = (
@@ -164,16 +165,6 @@ def connected_components(
             )
         )
     return labels, history
-
-
-def checkpoint(df: DataFrame, metric: Column) -> tuple[DataFrame, int]:
-    """Eager local checkpoint of ``df`` and the value of the aggregate
-    ``metric`` over its rows, observed on the checkpoint's own job: no
-    Spark job runs only to count. Also materializes each ER stage run
-    without a snapshot (``ERPipeline._load_or_compute``)."""
-    obs = Observation()
-    df = df.observe(obs, metric.alias("v")).localCheckpoint(eager=True)
-    return df, obs.get["v"]
 
 
 def _union_find(edges: DataFrame, n_edges: int) -> DataFrame:

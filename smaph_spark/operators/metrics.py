@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from smaph_spark.operators.clustering import checkpoint
+from smaph_spark.session import checkpoint
 
 
 def pairwise_prf(predicted: DataFrame, gold: DataFrame) -> dict:

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from smaph_spark.config import ERConfig
 from smaph_spark.operators.pairs import FEATURE_COLS
+from smaph_spark.session import checkpoint
 
 
 # ---------------------------------------------------------------------------
@@ -252,9 +253,7 @@ def train_default_scorer(spark: SparkSession, cfg: ERConfig | None = None,
         F.greatest(lid, rid).alias("right_id"),
         "is_match",
     )
-    feat = labeled_pair_features(
-        spark, files, labeled_ids, cfg
-    ).localCheckpoint(eager=True)
+    feat, _ = checkpoint(labeled_pair_features(spark, files, labeled_ids, cfg))
     if tune:
         model, report = tune_gbt_scorer(
             feat, model_family=model_family, normalizer=normalizer

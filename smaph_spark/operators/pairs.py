@@ -10,11 +10,11 @@ Feature pack mirrors the reference's fixed-schema discipline
 (EntityFeaturePack.java:33-74 — static feature-name array, checked):
 FEATURE_COLS is the single source of truth for the scorer schema.
 
-JVM-vs-Python split: the minhash Jaccard estimate, size ratios, lang
-and sha equality are pure `pyspark.sql.functions` (whole-stage
-codegen); only the two string-edit kernels (Jaro-Winkler on names,
-normalized Levenshtein on paths) cross into Arrow-batched numpy
-(functions/kernels.py, batch-vectorized DP).
+JVM-vs-Python split: size ratios, lang and sha equality are pure
+`pyspark.sql.functions` (whole-stage codegen); the minhash Jaccard
+estimate and the two string-edit kernels (Jaro-Winkler on names,
+normalized Levenshtein on paths) cross into Arrow-batched numpy in one
+UDF, `_pair_kernel_udf` (functions/kernels.py, batch-vectorized DP).
 """
 
 from __future__ import annotations

@@ -25,6 +25,7 @@ from smaph_spark.operators.blocking import cap_and_salt_blocks
 from smaph_spark.operators.normalize import make_minhash_udf
 from smaph_spark.operators.pairs import attach_sides, block_pairs
 from smaph_spark.plans.star_queries import WS_RE, load, register, widen
+from smaph_spark.session import checkpoint
 
 
 _LOG = logging.getLogger("smaph_spark.dedup")
@@ -45,7 +46,7 @@ def capped_blocks(query: str, keys: DataFrame, cfg: ERConfig) -> DataFrame:
     computed these counts and discarded them — a silent cap)."""
     obs = Observation()
     salted, _ = cap_and_salt_blocks(keys, cfg, observation=obs)
-    salted = salted.localCheckpoint(eager=True)
+    salted, _ = checkpoint(salted)
     counts = obs.get
     out = {
         "salted_band_keys": counts["salted_blocks"],
@@ -240,9 +241,9 @@ def minhash_lsh_pairs(fp: DataFrame, cfg: ERConfig) -> DataFrame:
     stays bounded; estimated Jaccard from the full signatures is the
     rerank. The signatures are materialized once, so the key table and
     the pair payload both read them without re-running the UDF."""
-    fp = fp.select(
-        F.col("doc_id").alias("record_id"), "minhash", "bands"
-    ).localCheckpoint(eager=True)
+    fp, _ = checkpoint(
+        fp.select(F.col("doc_id").alias("record_id"), "minhash", "bands")
+    )
     keys = fp.select(
         "record_id",
         F.explode(
@@ -332,9 +333,7 @@ def simhash_pairs(
     join on 4×16-bit chunks, hot-chunk keys capped/salted like dd03
     (counts in CAP_METRICS["dd04_simhash_pairs"]). The signatures are
     materialized once for the key table and the pair payload."""
-    sig = sig.select(
-        F.col("doc_id").alias("record_id"), "sim"
-    ).localCheckpoint(eager=True)
+    sig, _ = checkpoint(sig.select(F.col("doc_id").alias("record_id"), "sim"))
     salted = capped_blocks(
         "dd04_simhash_pairs", bit_band_blocks(sig, "sim", 4, 16), cfg
     )
@@ -738,7 +737,7 @@ def cdc_chunk_stats(docs: DataFrame) -> DataFrame:
     # ArrowEvalPython nodes in the plan, exchange reuse did not kick in
     # under AQE). The (long, long) table is tiny next to the text it
     # derives from, and nothing is left to release.
-    doc_chunks = chunks.distinct().localCheckpoint(eager=True)
+    doc_chunks, _ = checkpoint(chunks.distinct())
     freq = doc_chunks.groupBy("chunk_hash").agg(
         F.count("*").alias("n_docs_with_chunk")
     )
@@ -798,16 +797,14 @@ def cdc_containment_pairs(
     chunk shared by thousands of docs (a common license header) is
     salted or dropped with counts in CAP_METRICS[metrics_query] instead
     of going quadratic — bounded recall, never silent."""
-    doc_chunks = (
+    # checkpointed: the sizes agg and the capped key table would
+    # otherwise each re-run the chunker UDF over the full corpus
+    # (round-4 review)
+    doc_chunks, _ = checkpoint(
         docs.select(
             F.col("doc_id").alias("record_id"),
             F.explode(make_cdc_chunk_udf()("text")).alias("block_key"),
-        )
-        .distinct()
-        # checkpointed: the sizes agg and the capped key table would
-        # otherwise each re-run the chunker UDF over the full corpus
-        # (round-4 review)
-        .localCheckpoint(eager=True)
+        ).distinct()
     )
     sizes = doc_chunks.groupBy("record_id").agg(F.count("*").alias("n"))
     salted = capped_blocks(metrics_query, doc_chunks, cfg or ERConfig())

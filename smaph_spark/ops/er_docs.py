@@ -19,6 +19,7 @@ from smaph_spark.config import ERConfig
 from smaph_spark.operators.pairs import attach_sides
 from smaph_spark.pipeline import ERPipeline
 from smaph_spark.plans.star_queries import WS_RE, load, register, widen
+from smaph_spark.session import checkpoint
 
 _DOC_CFG = ERConfig(shingle_k=5, num_minhash=64, lsh_bands=16,
                     match_threshold=0.55)
@@ -186,13 +187,13 @@ def _tokenband_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     as ONE task (~2 s at sf1.0) and every consumer branch (er04/er05/
     er06/er07 each fan out 2-4 branches) re-ran it. The repartition
     spreads the split across the session's parallelism and the eager
-    localCheckpoint materializes the ~1 MB node table once per query
+    checkpoint materializes the ~1 MB node table once per query
     call."""
     d = load(spark, sf_dir, "documents").filter(F.length(F.trim("text")) > 0)
-    return widen(d).select(
+    return checkpoint(widen(d).select(
         "doc_id", "lang", "source",
         F.size(F.split(F.trim("text"), WS_RE)).alias("n_toks"),
-    ).localCheckpoint(eager=True)
+    ))[0]
 
 
 #: the ONE home of the token-band predicate (round-5 review: er04's
@@ -471,7 +472,7 @@ def er_incremental_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         edges, cfg,
         all_records=t.select(F.col("doc_id").alias("record_id")),
     )
-    return _labels_membership_rows(labels).localCheckpoint(eager=True)
+    return _labels_membership_rows(labels)
 
 
 def incremental_minhash_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -558,14 +559,12 @@ def er_greedy_step_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (eagerly, so nothing stays in the cache manager):
     # greedy_step_features consumes rel in both the before-pairs and
     # the candidate×partial joins.
-    rel = (
-        _tokenband_candidate_pairs(t, keep_toks=True)
-        .select(
+    rel, _ = checkpoint(
+        _tokenband_candidate_pairs(t, keep_toks=True).select(
             F.col("left_id").alias("a_id"), F.col("right_id").alias("b_id"),
             (F.lit(1.0) / (F.lit(1.0) + F.abs(F.col("a_toks") - F.col("b_toks"))))
             .alias("rel"),
         )
-        .localCheckpoint(eager=True)
     )
     group_tokens = members.groupBy(F.col("cluster_id").alias("group_id")).agg(
         F.sum("n_toks").alias("query_tokens")

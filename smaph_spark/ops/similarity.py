@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from smaph_spark.plans.star_queries import load, register, widen
+from smaph_spark.session import checkpoint
 
 #: committed PQ-codebook artifact (scripts/train_pq_codebook.py
 #: regenerates) — same model-artifact treatment as the GBT scorer
@@ -127,6 +128,27 @@ _LOG = logging.getLogger("smaph_spark.similarity")
 SCAN_METRICS: dict[str, dict] = {}
 
 
+def _scanned_topk(key: str, cand: DataFrame, k: int, counts, **extra) -> DataFrame:
+    """Exact top-k rerank of the candidate pairs ``cand``, materialized
+    by one eager checkpoint whose job also counts the candidates. The
+    scan is recorded in SCAN_METRICS[key] and logged; ``counts()``,
+    called after that job, gives the input's ``queries`` and
+    ``vectors``."""
+    obs = Observation()
+    result, _ = checkpoint(
+        _exact_topk(cand.observe(obs, F.count(F.lit(1)).alias("n")), k)
+    )
+    n_cand, n_q, n_vecs = obs.get["n"], counts()["queries"], counts()["vectors"]
+    frac = n_cand / max(n_q * (n_vecs - 1), 1)
+    SCAN_METRICS[key] = {
+        "candidates": n_cand, "queries": n_q, "vectors": n_vecs, **extra,
+        "scan_fraction": round(frac, 4),
+    }
+    _LOG.info("%s candidate scan fraction: %.4f (%d of %d possible)",
+              key, frac, n_cand, n_q * (n_vecs - 1))
+    return result
+
+
 def lsh_topk(e: DataFrame, query_filter, k: int = 5) -> DataFrame:
     """Hyperplane-LSH ANN over 64-wide embeddings: bucket join on 8
     band keys of 4 signature bits each + exact rerank.
@@ -140,7 +162,13 @@ def lsh_topk(e: DataFrame, query_filter, k: int = 5) -> DataFrame:
     the standard recall lever that does not require re-indexing."""
     band_bits = 4
     mask = (1 << band_bits) - 1
-    sig = e.withColumn("sig", make_hyperplane_udf()("emb"))
+    # materialized once: both sides of the band join read the signature
+    # without re-running the UDF, and the input counts ride this job
+    sig, counts = checkpoint(
+        e.withColumn("sig", make_hyperplane_udf()("emb")),
+        F.struct(F.count(F.lit(1)).alias("vectors"),
+                 F.count_if(query_filter).alias("queries")),
+    )
 
     def band_keys(probe: bool):
         keys = []
@@ -173,22 +201,7 @@ def lsh_topk(e: DataFrame, query_filter, k: int = 5) -> DataFrame:
     )
     # the candidate count rides the (tiny, q*k-row) result's eager
     # checkpoint: the candidate join runs once, and nothing is cached
-    obs = Observation()
-    result = _exact_topk(
-        cand.observe(obs, F.count(F.lit(1)).alias("n")), k
-    ).localCheckpoint(eager=True)
-    n_cand = obs.get["n"]
-    # counts on the RAW input (no hyperplane UDF re-run)
-    n_q = e.filter(query_filter).count()
-    n_vecs = e.count()
-    frac = n_cand / max(n_q * (n_vecs - 1), 1)
-    SCAN_METRICS["sim02_lsh_topk"] = {
-        "candidates": n_cand, "queries": n_q, "vectors": n_vecs,
-        "scan_fraction": round(frac, 4),
-    }
-    _LOG.info("sim02_lsh_topk LSH candidate scan fraction: %.4f "
-              "(%d of %d possible)", frac, n_cand, n_q * (n_vecs - 1))
-    return result
+    return _scanned_topk("sim02_lsh_topk", cand, k, lambda: counts)
 
 
 @register(
@@ -252,7 +265,9 @@ def make_ivf_cells_udf(centroids: np.ndarray, n_probe: int):
         order = np.argsort(-sims, axis=1)[:, :n_probe]
         return pd.Series([row.astype(np.int32).tolist() for row in order])
 
-    return cells
+    # as make_hyperplane_udf: the cell join's inferred isnotnull(cell)
+    # filter would otherwise copy the UDF below its projection
+    return cells.asNondeterministic()
 
 
 def ivf_topk(
@@ -271,7 +286,13 @@ def ivf_topk(
     centroids = train_ivf_centroids(e, n_cells=n_cells)
     assign1 = make_ivf_cells_udf(centroids, 1)
     probe = make_ivf_cells_udf(centroids, n_probe)
-    indexed = e.withColumn("cell", assign1("emb")[0])
+    # the input counts ride the result's checkpoint job, observed on
+    # the indexed side (every vector, before the join)
+    scan = Observation()
+    indexed = e.withColumn("cell", assign1("emb")[0]).observe(
+        scan, F.count(F.lit(1)).alias("vectors"),
+        F.count_if(query_filter).alias("queries"),
+    )
     queries = (
         e.filter(query_filter)
         .withColumn("probe_cells", probe("emb"))
@@ -293,27 +314,12 @@ def ivf_topk(
         .filter(F.col("q_vec") != F.col("n_vec"))
     )
     # no-silent-caps (round-3 VERDICT item 5): the probed fraction
-    # IS the speed/recall trade — record it like sim02 does, observed
-    # on the result's eager checkpoint
-    obs = Observation()
-    result = _exact_topk(
-        cand.observe(obs, F.count(F.lit(1)).alias("n")), k
-    ).localCheckpoint(eager=True)
-    n_cand = obs.get["n"]
-    n_q = e.filter(query_filter).count()
-    n_vecs = e.count()
-    frac = n_cand / max(n_q * (n_vecs - 1), 1)
-    SCAN_METRICS["sim03_ivf_topk"] = {
-        "candidates": n_cand, "queries": n_q, "vectors": n_vecs,
-        "n_cells": n_cells, "n_probe": n_probe,
-        "probed_cell_fraction": round(n_probe / n_cells, 4),
-        "scan_fraction": round(frac, 4),
-    }
-    _LOG.info(
-        "sim03_ivf_topk IVF scan: %d candidates (%.4f of all pairs), "
-        "probing %d/%d cells", n_cand, frac, n_probe, n_cells,
+    # IS the speed/recall trade — recorded like sim02's
+    return _scanned_topk(
+        "sim03_ivf_topk", cand, k, lambda: scan.get,
+        n_cells=n_cells, n_probe=n_probe,
+        probed_cell_fraction=round(n_probe / n_cells, 4),
     )
-    return result
 
 
 @register(
@@ -486,13 +492,19 @@ def pq_topk(
     queries = en.filter(query_filter).select(
         F.col("vec_id").alias("q_vec"), F.col("emb").alias("q_emb")
     )
-    # ADC tables per query: tables[q][j, c] = <q_subj, centroid_jc>
-    q_rows = queries.collect()  # few rows by contract (same as sim01-03)
+    # ADC tables per query: tables[q][j, c] = <q_subj, centroid_jc>;
+    # the vector count rides this collect, observed before the filter
+    vecs = Observation()
+    q_rows = (  # few rows by contract (same as sim01-03)
+        en.observe(vecs, F.count(F.lit(1)).alias("n"))
+        .filter(query_filter).collect()
+    )
+    n_vecs = vecs.get["n"]
     for r in q_rows:
-        check_width(len(r["q_emb"]))
+        check_width(len(r["emb"]))
     tables = {
-        r["q_vec"]: np.stack([
-            np.asarray(r["q_emb"])[j * sub:(j + 1) * sub] @ b_books.value[j].T
+        r["vec_id"]: np.stack([
+            np.asarray(r["emb"])[j * sub:(j + 1) * sub] @ b_books.value[j].T
             for j in range(m)
         ])  # (m, n_centroids)
         for r in q_rows
@@ -532,7 +544,6 @@ def pq_topk(
     # EVERY code (scan_fraction 1.0 by design) but at m sub-byte
     # lookups per vector instead of 8*dim bytes; the shortlist cap
     # bounds what reaches the exact rerank
-    n_vecs = e.count()
     code_bits = m * max(int(np.ceil(np.log2(n_centroids))), 1)
     SCAN_METRICS[metrics_key] = {
         "queries": len(q_rows), "vectors": n_vecs,

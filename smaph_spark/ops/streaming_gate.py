@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from smaph_spark.plans.star_queries import QUERIES, load, register
+from smaph_spark.session import checkpoint
 from smaph_spark.streaming.windows import (
     run_to_memory,
     streaming_exact_dedup,
@@ -146,9 +147,9 @@ def _drain_sink(spark: SparkSession, name: str, cols: list[str]) -> DataFrame:
     each invocation registers a fresh sink table that would otherwise
     hold its full result in driver memory for the application lifetime
     (st01/st02 run repeatedly at the gate and in bench — round-4
-    review). localCheckpoint(eager) pins the data independently of the
+    review). The eager checkpoint pins the data independently of the
     view before it is dropped."""
-    out = spark.table(name).select(*cols).localCheckpoint(eager=True)
+    out, _ = checkpoint(spark.table(name).select(*cols))
     spark.catalog.dropTempView(name)
     return out
 

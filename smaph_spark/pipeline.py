@@ -15,7 +15,7 @@ after every stage that carries content columns.
 
 Every stage is materialized once, where it is computed: by its
 snapshot write, or without ``checkpoint_dir`` by the eager observed
-local checkpoint CC uses for its own counts (``clustering.checkpoint``).
+local checkpoint CC uses for its own counts (``session.checkpoint``).
 Counts ride those actions (``pyspark.sql.Observation``), and each is
 read right after the action that executed it: a stage's ``rows``, and
 stage 2's cap counts (``s2_block_caps``) and the delta's
@@ -39,12 +39,11 @@ from pyspark.sql import functions as F
 
 from smaph_spark.config import ERConfig
 from smaph_spark.operators.blocking import cap_and_salt_blocks, generate_blocks
-from smaph_spark.operators.clustering import (
-    checkpoint, connected_components, history_pseudo_edges,
-)
+from smaph_spark.operators.clustering import connected_components, history_pseudo_edges
 from smaph_spark.operators.normalize import normalize_files
 from smaph_spark.operators.pairs import attach_pair_features, generate_pairs
 from smaph_spark.operators.scoring import filter_matches, gbt_score, rule_score
+from smaph_spark.session import checkpoint
 
 
 @dataclass

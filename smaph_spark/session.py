@@ -1,4 +1,5 @@
-"""SparkSession factory tuned for the ER pipeline.
+"""SparkSession factory tuned for the ER pipeline, and the package's one
+materialization policy (``checkpoint``).
 
 Local-mode defaults mirror what a 1000-executor cluster deployment
 would set per-executor: AQE on (runtime coalesce + skew-join), shuffle
@@ -10,7 +11,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 
 def get_spark(
@@ -71,3 +72,19 @@ def get_spark(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def checkpoint(
+    df: DataFrame, metric: Column | None = None
+) -> tuple[DataFrame, object]:
+    """Eager local checkpoint of ``df``: THE materialization of a frame
+    that is read more than once (nothing is left in the cache manager
+    to release). With ``metric``, also the value of that aggregate over
+    the rows, observed on the checkpoint's own job so that no Spark job
+    runs only to count (a ``F.struct(...)`` metric yields a Row);
+    without one, ``(df, None)``."""
+    if metric is None:
+        return df.localCheckpoint(eager=True), None
+    obs = Observation()
+    df = df.observe(obs, metric.alias("v")).localCheckpoint(eager=True)
+    return df, obs.get["v"]

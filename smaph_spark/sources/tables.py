@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from smaph_spark.session import checkpoint
+
 FILES_SCHEMA = "repo string, path string, commit string, lang string, content string"
 
 
@@ -121,7 +123,7 @@ def _split_quarantine(
     never parse the data columns), so the parsed frame is materialized
     by one eager local checkpoint (one parse pass, nothing to release)
     before both sides filter it."""
-    parsed = raw.localCheckpoint(eager=True)
+    parsed, _ = checkpoint(raw)
     good = parsed.filter(F.col(bad_records_col).isNull()).drop(bad_records_col)
     bad = parsed.filter(F.col(bad_records_col).isNotNull()).select(
         F.col(bad_records_col).alias("raw_line")

@@ -107,6 +107,29 @@ def test_rows_only_pinned(spark, name):
     assert (len(pdf), _rows_sha256(pdf)) == PINNED[name]
 
 
+#: pinned queries built on Python-UDF signatures, cells, codes or
+#: chunks, re-run at a second shuffle parallelism
+SECOND_PARALLELISM = ("dd03_minhash_lsh_pairs", "dd04_simhash_pairs",
+                      "dd09_cdc_containment_pairs", "sim02_lsh_topk",
+                      "sim03_ivf_topk", "sim04_pq_topk")
+
+
+@pytest.mark.parametrize(
+    "name", [n for n in SECOND_PARALLELISM if n in PINNED]
+)
+def test_rows_only_pinned_at_7_shuffle_partitions(spark, name):
+    """The output does not depend on the parallelism: the same pins
+    hold with spark.sql.shuffle.partitions at 7."""
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        pdf = QUERIES[name].fn(spark, SF_DIR).toPandas()
+    finally:
+        spark.conf.set(key, old)
+    assert (len(pdf), _rows_sha256(pdf)) == PINNED[name]
+
+
 def test_contract_shape():
     q = entry_mod.queries()
     o = entry_mod.oracle_sql()

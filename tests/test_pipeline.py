@@ -656,8 +656,10 @@ def _jobs_in_group(spark, group, fn):
 #: Spark jobs measured at local[4] (the test session); the asserts allow
 #: 2 more for AQE's run-to-run jitter
 ER_RUN_JOBS, ER_RUN_NO_SNAPSHOT_JOBS, CC_ROUND_THEN_FINISH_JOBS = 19, 14, 24
-#: the dd03/dd09/sim04 queries, built and collected at sf0.001
-DD03_JOBS, DD09_JOBS, SIM04_JOBS = 9, 11, 14
+#: the dd03/dd09/sim02/sim03/sim04/er04 queries, built and collected at
+#: sf0.001
+DD03_JOBS, DD09_JOBS, SIM04_JOBS = 9, 11, 11
+SIM02_JOBS, SIM03_JOBS, ER04_JOBS = 8, 28, 16
 
 
 def test_spark_job_counts(spark, tmp_path):
@@ -666,8 +668,10 @@ def test_spark_job_counts(spark, tmp_path):
     that contracts once and then finishes on the driver (edge and
     pointer-jump counts) read their counts from Observations on the
     writes and checkpoints; so do the dd03 and dd09 queries (cap
-    counts on the capped key table's checkpoint). sim04 loads its
-    codebooks and runs no job to probe the data width."""
+    counts on the capped key table's checkpoint) and sim02/sim03/sim04
+    (scan counts on the signature checkpoint, the rerank's checkpoint
+    and the query collect). sim04 loads its codebooks and runs no job
+    to probe the data width; er04 returns its membership rows lazily."""
     from dataclasses import replace
 
     from smaph_spark.operators.clustering import connected_components
@@ -697,12 +701,16 @@ def test_spark_job_counts(spark, tmp_path):
     assert n_cc <= CC_ROUND_THEN_FINISH_JOBS + 2
 
     from smaph_spark.ops.dedup import dd_cdc_containment, dd_minhash_lsh
-    from smaph_spark.ops.similarity import sim_pq_topk
+    from smaph_spark.ops.er_docs import er_incremental_clusters
+    from smaph_spark.ops.similarity import sim_ivf_topk, sim_lsh_topk, sim_pq_topk
     from tests.test_ops import SF  # the sf0.001 tables
 
     for query, jobs in ((dd_minhash_lsh, DD03_JOBS),
                         (dd_cdc_containment, DD09_JOBS),
-                        (sim_pq_topk, SIM04_JOBS)):
+                        (sim_lsh_topk, SIM02_JOBS),
+                        (sim_ivf_topk, SIM03_JOBS),
+                        (sim_pq_topk, SIM04_JOBS),
+                        (er_incremental_clusters, ER04_JOBS)):
         _, n_q = _jobs_in_group(
             spark, query.__name__, lambda: query(spark, SF).collect()
         )

@@ -124,3 +124,79 @@ def test_dd03_dd04_run_no_python_after_signatures(spark):
         df.collect()
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "ArrowEvalPython" not in plan, (name, plan)
+
+
+def _python_udf_evals(spark, fn):
+    """Counter of the Python UDF calls (``name#resultId``) in the
+    ArrowEvalPython nodes of every SQL execution ``fn()`` starts, read
+    from the SQL status store (kept with the UI disabled). Only the
+    final plan counts: an adaptive plan's description also prints its
+    initial plan, which repeats every node."""
+    import collections
+    import re
+
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def executions():
+        seq = store.executionsList()
+        return {seq.apply(i).executionId(): seq.apply(i)
+                for i in range(seq.size())}
+
+    bus.waitUntilEmpty()
+    before = set(executions())
+    fn()
+    bus.waitUntilEmpty()
+    calls = collections.Counter()
+    for eid, ex in executions().items():
+        if eid in before:
+            continue
+        desc = ex.physicalPlanDescription()
+        tree = desc.split("== Initial Plan ==")[0].split("\n\n")[0]
+        for nid in re.findall(r"ArrowEvalPython \((\d+)\)", tree):
+            args = re.search(
+                rf"\n\({nid}\) ArrowEvalPython\n.*?\nArguments: \[(.*?)\], \[",
+                desc, re.S,
+            ).group(1)
+            depth, start = 0, 0
+            for i, ch in enumerate(args + ","):
+                depth += (ch in "([") - (ch in ")]")
+                if ch == "," and depth == 0:
+                    m = re.match(r"\s*(\w+)\(.*\)(#\d+)", args[start:i], re.S)
+                    calls[m.group(1) + m.group(2)] += 1
+                    start = i + 1
+    return calls
+
+
+def test_python_udfs_run_once_per_call(spark):
+    """Each Python UDF call is evaluated by one ArrowEvalPython node
+    over all the jobs one query call runs (CIDR'22: every evaluation
+    pays an Arrow round trip): dd03/dd04/sim02 materialize their
+    signatures once for both sides of the band join, and sim03's cell
+    UDFs are nondeterministic, so the cell join's inferred not-null
+    filter cannot copy them."""
+    for name in ("dd03_minhash_lsh_pairs", "dd04_simhash_pairs",
+                 "sim02_lsh_topk", "sim03_ivf_topk", "sim04_pq_topk"):
+        calls = _python_udf_evals(
+            spark, lambda: QUERIES[name].fn(spark, SF).collect()
+        )
+        assert calls, name
+        assert max(calls.values()) == 1, (name, calls)
+
+
+def test_one_checkpoint_helper():
+    """The materialization policy lives in one place: every eager
+    checkpoint in the package goes through session.checkpoint, and the
+    ANN queries read their scan counts from jobs that already run."""
+    import pathlib
+
+    import smaph_spark
+
+    root = pathlib.Path(smaph_spark.__file__).parent
+    sites = {
+        str(p.relative_to(root))
+        for p in root.rglob("*.py")
+        if "localCheckpoint(" in p.read_text()
+    }
+    assert sites == {"session.py"}, sites
+    assert ".count()" not in (root / "ops" / "similarity.py").read_text()
