@@ -24,13 +24,11 @@ engine-portable; Python's ``re`` would NOT (unicode word chars).
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: Java-default \W — shared by the Spark exprs, the python twin and
-#: the DuckDB oracle (see module docstring)
+#: Java-default \W — shared by the Spark exprs, the tests' Python twin
+#: and the DuckDB oracle (see module docstring)
 NON_WORD_RE = "[^0-9A-Za-z_]"
 
 
@@ -38,11 +36,6 @@ def clean_abbrev(col) -> F.Column:
     """Stands4AbbreviationExpansion.clean:157-159: strip non-word
     chars, lowercase."""
     return F.lower(F.regexp_replace(col, NON_WORD_RE, ""))
-
-
-def clean_abbrev_py(s: str) -> str:
-    """Python twin of :func:`clean_abbrev` (kernel goldens)."""
-    return re.sub(NON_WORD_RE, "", s).lower()
 
 
 def acronym_of(phrase_col) -> F.Column:

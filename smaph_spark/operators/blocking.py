@@ -28,9 +28,9 @@ Every package caller observes its counts: it passes an ``Observation``
 to ``cap_and_salt_blocks``, which attaches the three counts to the
 sized key table, so they are collected by the action that materializes
 the salted frame (the stage-2 snapshot write or checkpoint, or the dd
-queries' eager checkpoint) with no job of its own. ``cap_counts``
-computes the same triple from the metrics frame in a collect of its
-own; it is the reference the tests compare the Observation against.
+queries' eager checkpoint) with no job of its own. The tests compare
+that Observation against the same triple computed from the metrics
+frame in a collect of its own.
 """
 
 from __future__ import annotations
@@ -96,9 +96,9 @@ def cap_and_salt_blocks(
     type and throw CAST_INVALID_INPUT the moment any key actually lands
     in the salted band (round-4 review — reproduced).
 
-    Given ``observation``, the ``cap_counts`` triple is observed on the
-    sized key table as ``salted_blocks``, ``dropped_blocks`` and
-    ``records_in_dropped_blocks``; read it only after an action has
+    Given ``observation``, three counts are observed on the sized key
+    table: ``salted_blocks`` and ``dropped_blocks`` (keys) and
+    ``records_in_dropped_blocks``; read them only after an action has
     executed ``salted``. Observed metrics reject DISTINCT, so a key is
     counted as the sum of ``1 / n_records`` over its ``n_records`` rows,
     rounded — exact, since each key's rows sum to 1.
@@ -164,15 +164,3 @@ def cap_and_salt_blocks(
         ),
     ).select("join_key", "block_key", "record_id")
     return salted, metrics
-
-
-def cap_counts(block_metrics: DataFrame) -> tuple[int, int, int]:
-    """(salted keys, dropped keys, records in dropped keys) of a
-    ``cap_and_salt_blocks`` metrics frame, in one collect."""
-    action = F.col("action")
-    row = block_metrics.agg(
-        F.count_if(action == "salted"),
-        F.count_if(action == "dropped"),
-        F.sum(F.when(action == "dropped", F.col("n_records"))),
-    ).first()
-    return int(row[0]), int(row[1]), int(row[2] or 0)

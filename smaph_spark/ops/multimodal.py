@@ -71,32 +71,6 @@ def decode_image(payload: bytes) -> np.ndarray:
     return rows[..., ::-1].copy()  # stored BGR -> RGB
 
 
-def encode_bmp(img: np.ndarray) -> bytes:
-    """Encode an (h, w, 3) uint8 RGB array as an uncompressed 24-bit
-    BMP — the sink twin of :func:`decode_image` (and the test-payload
-    generator: synthetic images round-trip without any codec library)."""
-    h, w, _ = img.shape
-    row_size = (w * 3 + 3) // 4 * 4
-    data_size = row_size * h
-    header = (
-        b"BM"
-        + (54 + data_size).to_bytes(4, "little")
-        + b"\x00\x00\x00\x00"
-        + (54).to_bytes(4, "little")          # pixel data offset
-        + (40).to_bytes(4, "little")          # BITMAPINFOHEADER size
-        + w.to_bytes(4, "little")
-        + h.to_bytes(4, "little")             # positive => bottom-up
-        + (1).to_bytes(2, "little")           # planes
-        + (24).to_bytes(2, "little")          # bpp
-        + (0).to_bytes(4, "little")           # BI_RGB (uncompressed)
-        + data_size.to_bytes(4, "little")
-        + b"\x00" * 16                        # resolution + palette fields
-    )
-    rows = np.zeros((h, row_size), dtype=np.uint8)
-    rows[:, : w * 3] = img[::-1, :, ::-1].reshape(h, w * 3)  # RGB->BGR, flip
-    return header + rows.tobytes()
-
-
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
 
@@ -263,42 +237,6 @@ def _unfilter_wavefront(
         )
         rec[ys + 1, xs + 1] = (c + pred) & 0xFF
     return rec[1:, 1:].astype(np.uint8).reshape(height, width * bpp)
-
-
-def encode_png(img: np.ndarray, filter_type: int = 0) -> bytes:
-    """Encode an (h, w, 3) uint8 RGB array as an 8-bit truecolor PNG
-    (stdlib zlib) — the sink twin of :func:`decode_png` and the test
-    fixture generator. ``filter_type`` applies one filter to every
-    scanline (0=None default; 2=Up exercises the unfilter path)."""
-    import struct
-    import zlib
-
-    h, w, _ = img.shape
-
-    def chunk(ctype: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data)) + ctype + data
-            + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
-        )
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-    flat = img.reshape(h, w * 3)
-    if filter_type == 0:
-        lines = b"".join(b"\x00" + flat[y].tobytes() for y in range(h))
-    elif filter_type == 2:  # Up: raw[x] = recon[x] - recon_prev[x]
-        lines = b""
-        prev = np.zeros(w * 3, dtype=np.uint8)
-        for y in range(h):
-            lines += b"\x02" + (flat[y] - prev).tobytes()
-            prev = flat[y]
-    else:
-        raise ValueError("encoder supports filter types 0 and 2 only")
-    return (
-        _PNG_SIG
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(lines))
-        + chunk(b"IEND", b"")
-    )
 
 
 def fake_decode_meta(payload: bytes) -> tuple[int, int, float]:

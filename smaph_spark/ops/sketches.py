@@ -51,20 +51,6 @@ def sketch_event_stats(
     )
 
 
-def exact_event_stats(events: DataFrame) -> DataFrame:
-    """The exact twin sk01 is error-bounded against (tests only — at
-    scale this is the plan the sketch replaces)."""
-    return events.groupBy("event_type").agg(
-        F.count_distinct("user_id").alias("exact_users"),
-        F.expr(
-            "percentile_disc(0.5) WITHIN GROUP (ORDER BY value)"
-        ).alias("exact_p50"),
-        F.expr(
-            "percentile_disc(0.95) WITHIN GROUP (ORDER BY value)"
-        ).alias("exact_p95"),
-    )
-
-
 @register(
     "sk01_event_sketch_stats",
     None,  # sketch values are engine-specific — rows-only at the

@@ -363,16 +363,6 @@ class ERPipeline:
             stage_metrics=dict(self._metrics),
         )
 
-    def stage_metrics_resumed(self) -> bool:
-        """True iff every snapshot-backed stage was read from disk."""
-        snapshot_stages = [
-            k for k in ("s1_normalized", "s2_blocks", "s3_pairs_scored",
-                         "s4_matches", "s5_clusters") if k in self._metrics
-        ]
-        return bool(snapshot_stages) and all(
-            self._metrics[k].get("resumed_from_snapshot") for k in snapshot_stages
-        )
-
     # -- invariant -------------------------------------------------------------
     @staticmethod
     def verify_content_sha(source_files: DataFrame, normalized: DataFrame) -> int:

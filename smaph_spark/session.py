@@ -66,6 +66,19 @@ def get_spark(
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # one long-lived session reruns the same plans batch after
+        # batch, so their generated classes must stay cached. An ER run
+        # plus a delta batch needs ~150-210 whole-stage classes and the
+        # 69 registered queries ~930. At Spark's default of 100 entries
+        # every steady ER pass compiled 147 classes again and re-JITted
+        # them, which took more CPU than its tasks did. 2000 holds the
+        # whole set (~5 MB of bytecode).
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
+        # the cache is keyed by source text, and AQE numbers whole-stage
+        # classes in the order concurrent stages finish: a numbered
+        # class compiled again whenever that order changed, and once per
+        # number within one call. Unnumbered, each pipeline compiles once.
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     for k, v in {**blas_env, **(extra_conf or {})}.items():
         b = b.config(k, v)

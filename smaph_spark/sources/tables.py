@@ -15,6 +15,7 @@ logical behavior minus time travel.
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -24,13 +25,19 @@ FILES_SCHEMA = "repo string, path string, commit string, lang string, content st
 
 
 def iceberg_available(spark: SparkSession) -> bool:
-    """True iff an Iceberg SparkCatalog is loadable in this session."""
+    """True iff an Iceberg SparkCatalog is loadable in this session;
+    False only when its class is not on the classpath. Any other
+    failure of the probe raises."""
     try:
-        jvm = spark.sparkContext._jvm
-        jvm.java.lang.Class.forName("org.apache.iceberg.spark.SparkCatalog")
-        return True
-    except Exception:
-        return False
+        spark.sparkContext._jvm.java.lang.Class.forName(
+            "org.apache.iceberg.spark.SparkCatalog"
+        )
+    except Py4JJavaError as e:
+        cls = e.java_exception.getClass().getName()
+        if cls == "java.lang.ClassNotFoundException":
+            return False
+        raise
+    return True
 
 
 def load_files_table(

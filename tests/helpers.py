@@ -1,0 +1,120 @@
+"""Test-only references and fixture encoders: the exact twins and Python
+twins the package's operators are checked against, and the image
+encoders that build the decoders' test payloads. Nothing in the package
+calls them."""
+
+from __future__ import annotations
+
+import re
+import struct
+import zlib
+
+import numpy as np
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+from smaph_spark.functions.abbreviations import NON_WORD_RE
+from smaph_spark.ops.multimodal import _PNG_SIG
+
+
+def stage_metrics_resumed(stage_metrics: dict) -> bool:
+    """True iff every snapshot-backed stage of a run (its
+    ``PipelineResult.stage_metrics``) was read from disk."""
+    snapshot_stages = [
+        k for k in ("s1_normalized", "s2_blocks", "s3_pairs_scored",
+                    "s4_matches", "s5_clusters") if k in stage_metrics
+    ]
+    return bool(snapshot_stages) and all(
+        stage_metrics[k].get("resumed_from_snapshot") for k in snapshot_stages
+    )
+
+
+def cap_counts(block_metrics: DataFrame) -> tuple[int, int, int]:
+    """(salted keys, dropped keys, records in dropped keys) of a
+    ``cap_and_salt_blocks`` metrics frame, in one collect: the reference
+    the observed cap counts are compared against."""
+    action = F.col("action")
+    row = block_metrics.agg(
+        F.count_if(action == "salted"),
+        F.count_if(action == "dropped"),
+        F.sum(F.when(action == "dropped", F.col("n_records"))),
+    ).first()
+    return int(row[0]), int(row[1]), int(row[2] or 0)
+
+
+def exact_event_stats(events: DataFrame) -> DataFrame:
+    """The exact twin sk01 is error-bounded against (at scale this is
+    the plan the sketch replaces)."""
+    return events.groupBy("event_type").agg(
+        F.count_distinct("user_id").alias("exact_users"),
+        F.expr(
+            "percentile_disc(0.5) WITHIN GROUP (ORDER BY value)"
+        ).alias("exact_p50"),
+        F.expr(
+            "percentile_disc(0.95) WITHIN GROUP (ORDER BY value)"
+        ).alias("exact_p95"),
+    )
+
+
+def clean_abbrev_py(s: str) -> str:
+    """Python twin of ``abbreviations.clean_abbrev`` (kernel goldens)."""
+    return re.sub(NON_WORD_RE, "", s).lower()
+
+
+def encode_bmp(img: np.ndarray) -> bytes:
+    """Encode an (h, w, 3) uint8 RGB array as an uncompressed 24-bit
+    BMP — the twin of ``multimodal.decode_image``: synthetic images
+    round-trip without any codec library."""
+    h, w, _ = img.shape
+    row_size = (w * 3 + 3) // 4 * 4
+    data_size = row_size * h
+    header = (
+        b"BM"
+        + (54 + data_size).to_bytes(4, "little")
+        + b"\x00\x00\x00\x00"
+        + (54).to_bytes(4, "little")          # pixel data offset
+        + (40).to_bytes(4, "little")          # BITMAPINFOHEADER size
+        + w.to_bytes(4, "little")
+        + h.to_bytes(4, "little")             # positive => bottom-up
+        + (1).to_bytes(2, "little")           # planes
+        + (24).to_bytes(2, "little")          # bpp
+        + (0).to_bytes(4, "little")           # BI_RGB (uncompressed)
+        + data_size.to_bytes(4, "little")
+        + b"\x00" * 16                        # resolution + palette fields
+    )
+    rows = np.zeros((h, row_size), dtype=np.uint8)
+    rows[:, : w * 3] = img[::-1, :, ::-1].reshape(h, w * 3)  # RGB->BGR, flip
+    return header + rows.tobytes()
+
+
+def encode_png(img: np.ndarray, filter_type: int = 0) -> bytes:
+    """Encode an (h, w, 3) uint8 RGB array as an 8-bit truecolor PNG
+    (stdlib zlib) — the twin of ``multimodal.decode_png``.
+    ``filter_type`` applies one filter to every scanline (0=None
+    default; 2=Up exercises the unfilter path)."""
+    h, w, _ = img.shape
+
+    def chunk(ctype: bytes, data: bytes) -> bytes:
+        return (
+            struct.pack(">I", len(data)) + ctype + data
+            + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
+        )
+
+    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
+    flat = img.reshape(h, w * 3)
+    if filter_type == 0:
+        lines = b"".join(b"\x00" + flat[y].tobytes() for y in range(h))
+    elif filter_type == 2:  # Up: raw[x] = recon[x] - recon_prev[x]
+        lines = b""
+        prev = np.zeros(w * 3, dtype=np.uint8)
+        for y in range(h):
+            lines += b"\x02" + (flat[y] - prev).tobytes()
+            prev = flat[y]
+    else:
+        raise ValueError("encoder supports filter types 0 and 2 only")
+    return (
+        _PNG_SIG
+        + chunk(b"IHDR", ihdr)
+        + chunk(b"IDAT", zlib.compress(lines))
+        + chunk(b"IEND", b"")
+    )

@@ -8,10 +8,10 @@ from pyspark.sql import functions as F
 from smaph_spark.functions.abbreviations import (
     build_acronym_dictionary,
     clean_abbrev,
-    clean_abbrev_py,
     expand_abbreviations,
     is_abbreviation_of,
 )
+from tests.helpers import clean_abbrev_py
 
 SF = "/root/testdata/sf0.001"
 

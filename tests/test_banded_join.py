@@ -1,13 +1,15 @@
 """The shared candidate stage of ER and the standalone band joins:
-hot-key cap (blocking.cap_and_salt_blocks + cap_counts), key self-join
-(pairs.block_pairs) and two-sided payload attach (pairs.attach_sides),
-on empty input, NULL keys, planted hot keys and multi-key pairs."""
+hot-key cap (blocking.cap_and_salt_blocks, counted by helpers.cap_counts),
+key self-join (pairs.block_pairs) and two-sided payload attach
+(pairs.attach_sides), on empty input, NULL keys, planted hot keys and
+multi-key pairs."""
 
 from pyspark.sql import functions as F
 
 from smaph_spark.config import ERConfig
-from smaph_spark.operators.blocking import cap_and_salt_blocks, cap_counts
+from smaph_spark.operators.blocking import cap_and_salt_blocks
 from smaph_spark.operators.pairs import attach_sides, block_pairs, generate_pairs
+from tests.helpers import cap_counts
 
 
 def _blocks(spark, rows, key_type="string"):

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from smaph_spark.ops import multimodal, similarity
 from smaph_spark.plans.star_queries import QUERIES
+from tests.helpers import encode_bmp, encode_png
 
 SF = "/root/testdata/sf0.001"
 
@@ -85,7 +86,7 @@ def test_bmp_decode_roundtrip():
     rng = np.random.default_rng(5)
     for w, h in ((16, 8), (7, 5), (33, 2)):
         img = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
-        back = multimodal.decode_image(multimodal.encode_bmp(img))
+        back = multimodal.decode_image(encode_bmp(img))
         assert back.shape == (h, w, 3)
         assert (back == img).all()
 
@@ -99,7 +100,7 @@ def test_feature_extract_real_pixels_for_bmp(spark):
     rng = np.random.default_rng(9)
     img = rng.integers(0, 256, size=(6, 10, 3), dtype=np.uint8)
     df = spark.createDataFrame(
-        [(1, bytearray(multimodal.encode_bmp(img))),
+        [(1, bytearray(encode_bmp(img))),
          (2, bytearray(b"not-an-image"))],
         "doc_id long, payload binary",
     )
@@ -291,7 +292,7 @@ def test_decode_corrupt_bmp_falls_back_not_crashes():
     pass), labeled distinctly from the compressed-format stub."""
     import numpy as np
 
-    from smaph_spark.ops.multimodal import _decode_meta, encode_bmp
+    from smaph_spark.ops.multimodal import _decode_meta
 
     good = encode_bmp(
         (np.arange(9 * 8 * 3, dtype=np.uint8).reshape(9, 8, 3))
@@ -523,7 +524,7 @@ def test_png_roundtrip_all_filters():
     for w, h in ((16, 8), (7, 5), (1, 3)):
         img = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
         for ft in (0, 2):
-            back = multimodal.decode_png(multimodal.encode_png(img, ft))
+            back = multimodal.decode_png(encode_png(img, ft))
             assert back.shape == (h, w, 3) and (back == img).all(), (w, h, ft)
 
     def chunk(ctype, data):
@@ -603,7 +604,7 @@ def test_png_feature_extract_sha_pinned(spark):
 
     img = np.zeros((4, 4, 3), dtype=np.uint8)
     img[:, :, 0] = 255  # pure red: mean = 255/3 per pixel
-    payload = multimodal.encode_png(img)
+    payload = encode_png(img)
 
     def chunk(ctype, data):
         return (struct.pack(">I", len(data)) + ctype + data

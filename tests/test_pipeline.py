@@ -10,6 +10,7 @@ from smaph_spark.config import ERConfig
 from smaph_spark.operators.metrics import clusters_pairwise_prf, pairwise_prf
 from smaph_spark.pipeline import ERPipeline
 from smaph_spark.sources.synthetic import generate_files_corpus
+from tests.helpers import cap_counts, stage_metrics_resumed
 
 
 @pytest.fixture(scope="module")
@@ -98,9 +99,8 @@ def test_checkpoint_resume_reproduces(spark, corpus, tmp_path_factory):
     first = sorted(
         (r["record_id"], r["cluster_id"]) for r in res1.clusters.collect()
     )
-    pipe2 = ERPipeline(spark, cfg, checkpoint_dir=ckpt)
-    res2 = pipe2.run(files)
-    assert pipe2.stage_metrics_resumed(), "second run should resume"
+    res2 = ERPipeline(spark, cfg, checkpoint_dir=ckpt).run(files)
+    assert stage_metrics_resumed(res2.stage_metrics), "second run should resume"
     second = sorted(
         (r["record_id"], r["cluster_id"]) for r in res2.clusters.collect()
     )
@@ -117,9 +117,10 @@ def test_checkpoint_not_resumed_for_different_input(spark, corpus, tmp_path_fact
     ERPipeline(spark, cfg, checkpoint_dir=ckpt).run(files)
     other_pdf, _, _ = generate_files_corpus(n_clusters=10, seed=999)
     other = spark.createDataFrame(other_pdf)
-    pipe2 = ERPipeline(spark, cfg, checkpoint_dir=ckpt)
-    res2 = pipe2.run(other)
-    assert not pipe2.stage_metrics_resumed(), "different input must not resume"
+    res2 = ERPipeline(spark, cfg, checkpoint_dir=ckpt).run(other)
+    assert not stage_metrics_resumed(res2.stage_metrics), (
+        "different input must not resume"
+    )
     # and the output belongs to the new input, not the old one
     assert ERPipeline.verify_content_sha(other, res2.normalized) == 0
 
@@ -127,9 +128,7 @@ def test_checkpoint_not_resumed_for_different_input(spark, corpus, tmp_path_fact
 def _cap_reference(normalized, cfg):
     """cap_counts over the key table of ``normalized``, as a
     ``s2_block_caps`` dict."""
-    from smaph_spark.operators.blocking import (
-        cap_and_salt_blocks, cap_counts, generate_blocks,
-    )
+    from smaph_spark.operators.blocking import cap_and_salt_blocks, generate_blocks
 
     _, block_metrics = cap_and_salt_blocks(generate_blocks(normalized, cfg), cfg)
     return dict(zip(
@@ -715,3 +714,54 @@ def test_spark_job_counts(spark, tmp_path):
             spark, query.__name__, lambda: query(spark, SF).collect()
         )
         assert n_q <= jobs + 2, (query.__name__, n_q)
+
+
+def test_repeated_calls_compile_no_new_code(spark, monkeypatch):
+    """A long-lived session reruns the same plans batch after batch, so
+    the second call of each layer must find every generated class in
+    Spark's codegen cache: an ER run, a delta batch, and the dd03, sim04
+    and er01 queries compile nothing the first call did not. At the
+    default 100-entry cache one ER run alone evicted its own classes."""
+    from smaph_spark.ops import er_docs
+    from smaph_spark.ops.dedup import dd_minhash_lsh
+    from smaph_spark.ops.similarity import sim_pq_topk
+    from tests.test_ops import SF  # the sf0.001 tables
+
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def compiles(fn):
+        before = metrics.METRIC_COMPILATION_TIME().getCount()
+        fn()
+        return metrics.METRIC_COMPILATION_TIME().getCount() - before
+
+    files_pdf, _, _ = generate_files_corpus(n_clusters=80, seed=43)
+    files = spark.createDataFrame(files_pdf)
+    bucket = F.pmod(F.xxhash64("repo", "path", "commit"), F.lit(5))
+    history, delta = files.filter(bucket < 4), files.filter(bucket >= 4)
+
+    def er_run():
+        ERPipeline(spark, ERConfig()).run(files).clusters.collect()
+
+    hist = ERPipeline(spark, ERConfig()).run(history)
+
+    def er_delta():
+        ERPipeline(spark, ERConfig()).run_incremental(
+            history, delta, hist.clusters,
+            history_normalized=hist.normalized,
+        ).clusters.collect()
+
+    def er01():
+        # a fresh result cache, so the call runs the pipeline again
+        monkeypatch.setattr(er_docs, "_RESULT_CACHE", {})
+        er_docs.er_document_clusters(spark, SF).collect()
+
+    calls = {
+        "er_run": er_run,
+        "er_delta": er_delta,
+        "dd03": lambda: dd_minhash_lsh(spark, SF).collect(),
+        "sim04": lambda: sim_pq_topk(spark, SF).collect(),
+        "er01": er01,
+    }
+    for name, call in calls.items():
+        call()
+        assert compiles(call) == 0, name

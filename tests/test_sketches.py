@@ -10,8 +10,9 @@ from pyspark.sql import functions as F
 
 from smaph_spark.ops.dedup import incremental_new_texts
 from smaph_spark.ops.sampling import stratified_sample
-from smaph_spark.ops.sketches import exact_event_stats, sketch_event_stats
+from smaph_spark.ops.sketches import sketch_event_stats
 from smaph_spark.sources.sinks import write_partitioned_parquet
+from tests.helpers import exact_event_stats
 
 SF_DIR = os.environ.get("SMAPH_TEST_SF_DIR", "/root/testdata/sf0.001")
 

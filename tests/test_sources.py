@@ -83,6 +83,31 @@ def test_files_table_loader_parquet_fallback(spark, tmp_path):
             load_files_table(spark, "iceberg:cat.db.files")
 
 
+def test_iceberg_probe_swallows_only_class_not_found(spark, monkeypatch):
+    """The Iceberg probe answers False only for a missing catalog class
+    (this session ships no Iceberg jar); any other py4j failure of the
+    probe raises instead of reading as "not available"."""
+    from types import SimpleNamespace as NS
+
+    import pytest as _pytest
+    from py4j.protocol import Py4JJavaError
+    from pyspark.sql import SparkSession
+
+    from smaph_spark.sources.tables import iceberg_available
+
+    assert iceberg_available(spark) is False
+
+    denied = spark.sparkContext._jvm.java.lang.SecurityException("denied")
+
+    def for_name(name):
+        raise Py4JJavaError("An error occurred calling forName", denied)
+
+    fake = NS(_jvm=NS(java=NS(lang=NS(Class=NS(forName=for_name)))))
+    monkeypatch.setattr(SparkSession, "sparkContext", property(lambda s: fake))
+    with _pytest.raises(Py4JJavaError):
+        iceberg_available(spark)
+
+
 def test_nif_cluster_export(spark, tmp_path):
     """NIF-style turtle export (SmaphUtils.exportToNif:781-801 analogue):
     one valid absolute-IRI turtle statement per record, cluster
