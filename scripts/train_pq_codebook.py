@@ -36,18 +36,15 @@ def main() -> None:
     ap.add_argument("--out", default=os.path.join(REPO, "models", "pq_codebook"))
     args = ap.parse_args()
 
-    from pyspark.sql import functions as F
-
     from smaph_spark.ops.similarity import (
-        normalize_embeddings, pq_training_sample, save_pq_codebooks,
-        train_pq_codebooks,
+        embedding_vectors, normalize_embeddings, pq_training_sample,
+        save_pq_codebooks, train_pq_codebooks,
     )
     from smaph_spark.session import get_spark
 
     spark = get_spark("train_pq_codebook")
-    e = spark.read.parquet(os.path.join(args.sf_dir, "embeddings.parquet")).select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("emb"),
+    e = embedding_vectors(
+        spark.read.parquet(os.path.join(args.sf_dir, "embeddings.parquet"))
     )
     # SHARED normalization + sample recipe (the exact preprocessing
     # pq_topk applies at serve time — keeping them one function is what

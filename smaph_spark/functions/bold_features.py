@@ -16,7 +16,6 @@ kernels in functions/kernels.py.
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -44,30 +43,25 @@ def aggregation_udf(bolds_lists: pd.Series, bold: pd.Series) -> pd.Series:
     )
 
 
-def bold_stats_per_rank(
-    df: DataFrame,
-    query_col: str = "query",
-    bold_col: str = "bold",
-    rank_col: str = "rank",
-) -> DataFrame:
+def bold_stats_per_rank(df: DataFrame) -> DataFrame:
     """df(query, bold, rank) -> per-(query, rank) bold statistics
     (EntityFeaturePack.getBoldsEDCapitalizedWordcount recast as a
     groupBy agg): min_ed starts from 1.0, capitalized counts bolds with
     an uppercase first char, avg_wordcount averages the Java
     ``split("\\W+")`` length (trailing empties dropped, leading kept).
     Only min_ed leaves the JVM (one Arrow UDF before the agg)."""
-    first_upper = F.substring(F.col(bold_col), 1, 1).rlike(r"^\p{Lu}")
+    first_upper = F.substring(F.col("bold"), 1, 1).rlike(r"^\p{Lu}")
     # Java String.split drops trailing empty strings; Spark's split
     # keeps them — \W+ collapses runs, so at most one trailing empty.
     # All-non-word input is all-empty fields in Java -> 0 words.
-    wc = F.when(F.col(bold_col).rlike(r"^\W+$"), F.lit(0)).otherwise(
-        F.size(F.split(F.col(bold_col), r"\W+"))
-        - F.when(F.col(bold_col).rlike(r"\W$"), F.lit(1)).otherwise(F.lit(0))
+    wc = F.when(F.col("bold").rlike(r"^\W+$"), F.lit(0)).otherwise(
+        F.size(F.split(F.col("bold"), r"\W+"))
+        - F.when(F.col("bold").rlike(r"\W$"), F.lit(1)).otherwise(F.lit(0))
     )
     return (
-        df.withColumn("_ed", min_edit_dist_udf(F.col(query_col), F.col(bold_col)))
+        df.withColumn("_ed", min_edit_dist_udf(F.col("query"), F.col("bold")))
         .withColumn("_wc", wc)
-        .groupBy(query_col, rank_col)
+        .groupBy("query", "rank")
         .agg(
             F.least(F.min("_ed"), F.lit(1.0)).alias("min_ed"),
             F.sum(first_upper.cast("double")).alias("capitalized"),
@@ -105,21 +99,17 @@ def ned_lower_udf(segment: pd.Series, anchor: pd.Series) -> pd.Series:
     return pd.Series(K.norm_edit_distance_batch(segs, anchor.to_numpy()))
 
 
-def weighted_anchor_ed(
-    df: DataFrame,
-    segment_col: str = "segment",
-    anchor_col: str = "anchor",
-    occ_col: str = "occurrences",
-) -> DataFrame:
-    """X17: sqrt(occurrence)-weighted mean anchor edit distance as a
+def weighted_anchor_ed(df: DataFrame) -> DataFrame:
+    """df(segment, anchor, occurrences) -> per-segment X17:
+    sqrt(occurrence)-weighted mean anchor edit distance as a
     Spark aggregation over EXPLODED anchors
     (AnnotationFeaturePack.edAnchorsWeightSqrt, :135-144): one Arrow
     UDF for the NED term, then a pure-JVM weighted-mean agg — scales as
     a plain groupBy, no per-group Python."""
-    w = F.sqrt(F.col(occ_col).cast("double"))
+    w = F.sqrt(F.col("occurrences").cast("double"))
     return (
-        df.withColumn("_ned", ned_lower_udf(F.col(segment_col), F.col(anchor_col)))
-        .groupBy(segment_col)
+        df.withColumn("_ned", ned_lower_udf(F.col("segment"), F.col("anchor")))
+        .groupBy("segment")
         .agg(
             F.coalesce(
                 F.try_divide(F.sum(w * F.col("_ned")), F.sum(w)), F.lit(1.0)

@@ -139,7 +139,6 @@ def tune_gbt_scorer(
     max_depths: list[int] = (3, 5),
     max_iters: list[int] = (10, 30),
     folds: int = 3,
-    seed: int = 42,
     parallelism: int = 4,
     model_family: str = "gbt",
     normalizer: str = "zscore",
@@ -178,7 +177,7 @@ def tune_gbt_scorer(
         if model_family == "gbt":
             assembler = VectorAssembler(inputCols=list(cols), outputCol="features")
             gbt = GBTClassifier(
-                labelCol="label", featuresCol="features", seed=seed
+                labelCol="label", featuresCol="features", seed=42
             )
             grid = (
                 ParamGridBuilder()
@@ -204,7 +203,7 @@ def tune_gbt_scorer(
             estimatorParamMaps=grid,
             evaluator=evaluator,
             numFolds=folds,
-            seed=seed,
+            seed=42,
             parallelism=parallelism,
         )
         fitted = cv.fit(train)
@@ -234,6 +233,7 @@ def train_default_scorer(spark: SparkSession, cfg: ERConfig | None = None,
     baseline); ``normalizer``: 'zscore' or 'minmax' — selects both the
     sidecar stats table and, for the linear family, the in-pipeline
     scaler stage. Returns (model, threshold, normalizer_stats, report)."""
+    from smaph_spark.operators.normalize import record_id
     from smaph_spark.operators.scoring import (
         fit_normalizer, gbt_score, sweep_threshold, train_gbt_scorer,
         train_linear_scorer,
@@ -246,8 +246,7 @@ def train_default_scorer(spark: SparkSession, cfg: ERConfig | None = None,
     )
     files = spark.createDataFrame(files_pdf)
     labeled = spark.createDataFrame(labeled_pdf)
-    lid = F.xxhash64("l_repo", "l_path", "l_commit")
-    rid = F.xxhash64("r_repo", "r_path", "r_commit")
+    lid, rid = record_id("l_"), record_id("r_")
     labeled_ids = labeled.select(
         F.least(lid, rid).alias("left_id"),
         F.greatest(lid, rid).alias("right_id"),

@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -125,6 +125,12 @@ def make_minhash_udf(cfg: ERConfig):
     return minhash_udf.asNondeterministic()
 
 
+def record_id(prefix: str = "") -> Column:
+    """THE record id of a ``files`` row: xxhash64(repo, path, commit).
+    ``prefix`` reads one side of a labeled pair (``l_``/``r_``)."""
+    return F.xxhash64(f"{prefix}repo", f"{prefix}path", f"{prefix}commit")
+
+
 def normalize_files(files: DataFrame, cfg: ERConfig) -> DataFrame:
     """files(repo,path,commit,lang,content) -> + record_id, content_sha,
     name, n_chars, n_tokens, minhash, bands.
@@ -142,7 +148,7 @@ def normalize_files(files: DataFrame, cfg: ERConfig) -> DataFrame:
     minhash_udf = make_minhash_udf(cfg)
     norm_content = F.lower(F.regexp_replace(F.col("content"), WS_RE, " "))
     base = (
-        files.withColumn("record_id", F.xxhash64("repo", "path", "commit"))
+        files.withColumn("record_id", record_id())
         .withColumn("content_sha", F.sha2(F.col("content"), 256))
         .withColumn("basename", F.element_at(F.split(F.col("path"), "/"), -1))
         .withColumn(

@@ -41,9 +41,10 @@ def rule_score(pairs_feat: DataFrame) -> DataFrame:
     return pairs_feat.withColumn("score", score.cast("double"))
 
 
-def filter_matches(scored: DataFrame, cfg: ERConfig, threshold: float | None = None) -> DataFrame:
-    thr = cfg.match_threshold if threshold is None else threshold
-    return scored.withColumn("is_match", F.col("score") >= F.lit(thr))
+def filter_matches(scored: DataFrame, cfg: ERConfig) -> DataFrame:
+    return scored.withColumn(
+        "is_match", F.col("score") >= F.lit(cfg.match_threshold)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -141,19 +142,17 @@ def apply_normalizer(df: DataFrame, kind: str, stats: dict) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def train_gbt_scorer(labeled_feat: DataFrame, feature_cols: list[str] | None = None,
-                     max_iter: int = 30, seed: int = 42):
+def train_gbt_scorer(labeled_feat: DataFrame, max_iter: int = 30):
     """Fit a GBTClassifier on (features…, is_match). Returns the fitted
     pipeline model; scoring via :func:`gbt_score`."""
     from pyspark.ml import Pipeline
     from pyspark.ml.classification import GBTClassifier
     from pyspark.ml.feature import VectorAssembler
 
-    cols = feature_cols or FEATURE_COLS
-    assembler = VectorAssembler(inputCols=cols, outputCol="features")
+    assembler = VectorAssembler(inputCols=FEATURE_COLS, outputCol="features")
     gbt = GBTClassifier(
         labelCol="label", featuresCol="features", maxIter=max_iter,
-        maxDepth=4, seed=seed,
+        maxDepth=4, seed=42,
     )
     train = labeled_feat.withColumn("label", F.col("is_match").cast("double"))
     return Pipeline(stages=[assembler, gbt]).fit(train)
@@ -200,12 +199,7 @@ def linear_classifier(**params):
     return _SummaryFreeLR(**params)
 
 
-def train_linear_scorer(labeled_feat: DataFrame,
-                        feature_cols: list[str] | None = None,
-                        normalizer: str = "zscore",
-                        reg_param: float = 0.01,
-                        elastic_net: float = 0.0,
-                        max_iter: int = 100):
+def train_linear_scorer(labeled_feat: DataFrame, normalizer: str = "zscore"):
     """Linear-model baseline scorer (LibLinearModel.java:1-43 +
     LibLinearBindingRegressor analogue): logistic regression over the
     same pair features — the standard ablation control against the GBT
@@ -219,12 +213,11 @@ def train_linear_scorer(labeled_feat: DataFrame,
     from pyspark.ml import Pipeline
     from pyspark.ml.feature import VectorAssembler
 
-    cols = feature_cols or FEATURE_COLS
-    assembler = VectorAssembler(inputCols=cols, outputCol="raw_features")
+    assembler = VectorAssembler(inputCols=FEATURE_COLS, outputCol="raw_features")
     scaler = make_scaler_stage(normalizer)
     lr = linear_classifier(
-        labelCol="label", featuresCol="features", regParam=reg_param,
-        elasticNetParam=elastic_net, maxIter=max_iter,
+        labelCol="label", featuresCol="features", regParam=0.01,
+        elasticNetParam=0.0, maxIter=100,
     )
     train = labeled_feat.withColumn("label", F.col("is_match").cast("double"))
     return Pipeline(stages=[assembler, scaler, lr]).fit(train)

@@ -502,13 +502,12 @@ def cosine_self_join(
     survey_ref="embedding cosine near-dup (J5 relatedness-pair analogue)",
 )
 def dd_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from smaph_spark.ops.similarity import embedding_vectors
+
     # NOT widened: the heavy GEMM runs in the cogroup stage, already
     # parallel via the pid shuffle; widening the 2-task scan measured
     # 2.4s -> 4.5s (A/B, round 6) from the extra exchange
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("emb"),
-    )
+    e = embedding_vectors(load(spark, sf_dir, "embeddings"))
     return cosine_self_join(e, threshold=0.4).select(
         "a_vec", "b_vec", F.round("cos_raw", 4).alias("cos")
     )
@@ -560,13 +559,9 @@ def cosine_near_dup_lsh(e: DataFrame, threshold: float) -> DataFrame:
                "candidates (capped) + exact cosine rerank",
 )
 def dd_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # NOT widened: the heavy GEMM runs in the cogroup stage, already
-    # parallel via the pid shuffle; widening the 2-task scan measured
-    # 2.4s -> 4.5s (A/B, round 6) from the extra exchange
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("emb"),
-    )
+    from smaph_spark.ops.similarity import embedding_vectors
+
+    e = embedding_vectors(load(spark, sf_dir, "embeddings"))
     return cosine_near_dup_lsh(e, threshold=0.4)
 
 

@@ -3,8 +3,9 @@ table (documents → near-dup clusters). This is `entry(spark)`.
 
 documents rows are adapted to the files(repo,path,commit,lang,content)
 input shape (BASELINE.json input_hint): repo=source, path=doc_id,
-commit=md5(text), content=text — then the five pipeline stages run
-unchanged (normalize → block → pair → score → cluster).
+commit=md5(text), content=text, plus doc_id, which the normalize stage
+carries through — then the five pipeline stages run unchanged
+(normalize → block → pair → score → cluster).
 """
 
 from __future__ import annotations
@@ -16,8 +17,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from smaph_spark.config import ERConfig
+from smaph_spark.operators.clustering import connected_components, history_pseudo_edges
 from smaph_spark.operators.pairs import attach_sides
-from smaph_spark.pipeline import ERPipeline
+from smaph_spark.pipeline import ERPipeline, PipelineResult
 from smaph_spark.plans.star_queries import WS_RE, load, register, widen
 from smaph_spark.session import checkpoint
 
@@ -71,42 +73,48 @@ def documents_as_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _flagship_pipeline(spark: SparkSession) -> ERPipeline:
+    """THE flagship recipe, shared by er01/er02, the incremental
+    flagship and its equivalence test: _DOC_CFG at the committed
+    scorer's threshold, scored by that scorer."""
+    model, threshold = get_document_scorer(spark)
+    return ERPipeline(
+        spark, replace(_DOC_CFG, match_threshold=threshold), scorer_model=model
+    )
+
+
 #: PipelineResult cache keyed by sf_dir: er01 and er02 both consume the
 #: flagship pipeline — without this the driver pays blocking + scoring
 #: twice per round (round-2 VERDICT item 6). Stage outputs are eager
 #: local checkpoints, so the second query reuses materialized data.
-_RESULT_CACHE: dict[str, tuple] = {}
+_RESULT_CACHE: dict[tuple, PipelineResult] = {}
 
 
-def run_document_er(spark: SparkSession, sf_dir: str):
+def run_document_er(spark: SparkSession, sf_dir: str) -> PipelineResult:
+    """The flagship run over documents_as_files. Its ``normalized``
+    stage carries ``doc_id`` through, so record ids map to doc ids
+    without reading documents again."""
     # key by (application, sf_dir): checkpointed DataFrames die with their
     # SparkContext, so a new session must not see a stale entry
     key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    if key in _RESULT_CACHE:
-        return _RESULT_CACHE[key]
-    files = documents_as_files(spark, sf_dir)
-    model, threshold = get_document_scorer(spark)
-    cfg = replace(_DOC_CFG, match_threshold=threshold)
-    pipe = ERPipeline(spark, cfg, scorer_model=model)
-    res = pipe.run(files.drop("doc_id"))
-    id_map = files.select(
-        F.xxhash64("repo", "path", "commit").alias("record_id"), "doc_id"
-    )
-    _RESULT_CACHE[key] = (res, id_map)
-    return res, id_map
+    if key not in _RESULT_CACHE:
+        _RESULT_CACHE[key] = _flagship_pipeline(spark).run(
+            documents_as_files(spark, sf_dir)
+        )
+    return _RESULT_CACHE[key]
 
 
-def cluster_membership_rows(clusters: DataFrame, id_map: DataFrame) -> DataFrame:
-    """clusters(record_id, cluster_id) + id_map(record_id, doc_id) ->
-    one row per cluster: (canonical_doc, cluster_size, member_docs).
-    THE membership projection of both er01 and er04 (their row-equality
-    is test-pinned, so the shape lives in one place — round-4 review).
-    member_docs is a comma-joined string, not array<long>: the driver's
-    canonicalizer sorts rows pandas-side and lists are unhashable there
-    (same pattern as q21, star_queries.py)."""
+def _membership_rows(members: DataFrame) -> DataFrame:
+    """members(doc_id, cluster_id) -> one row per cluster:
+    (canonical_doc = min member, cluster_size, member_docs). THE
+    membership projection of er01, er03, er04 and the incremental
+    flagship (er01/incremental and er03/er04 row-equality is
+    test-pinned, and CC labels are min ids, so canonical_doc equals the
+    token-band cluster_id). member_docs is a comma-joined string, not
+    array<long>: the driver's canonicalizer sorts rows pandas-side and
+    lists are unhashable there (same pattern as q21, star_queries.py)."""
     return (
-        clusters.join(id_map, "record_id")
-        .groupBy("cluster_id")
+        members.groupBy("cluster_id")
         .agg(
             F.count("*").alias("cluster_size"),
             F.min("doc_id").alias("canonical_doc"),
@@ -118,14 +126,20 @@ def cluster_membership_rows(clusters: DataFrame, id_map: DataFrame) -> DataFrame
     )
 
 
+def _cluster_membership(res: PipelineResult) -> DataFrame:
+    """A flagship run's clusters as membership rows over doc ids."""
+    return _membership_rows(res.clusters.join(
+        res.normalized.select("record_id", "doc_id"), "record_id"
+    ))
+
+
 @register(
     "er01_document_clusters",
     None,  # full ER pipeline (MinHash blocking) — rows-only check
     survey_ref="flagship: SURVEY §3.1 lifecycle over documents",
 )
 def er_document_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    res, id_map = run_document_er(spark, sf_dir)
-    return cluster_membership_rows(res.clusters, id_map)
+    return _cluster_membership(run_document_er(spark, sf_dir))
 
 
 #: engine-vs-engine oracle for connected components itself (round-2
@@ -154,28 +168,6 @@ _ER03_SQL = rf"""
            string_agg(doc_id, ',' ORDER BY doc_id) AS member_docs
     FROM labels GROUP BY cluster_id
 """
-
-
-
-def _labels_membership_rows(labels: DataFrame) -> DataFrame:
-    """labels(record_id, cluster_id) -> (canonical_doc, cluster_size,
-    member_docs) — the membership projection BOTH er03 and er04 hash
-    against the SAME _ER03_SQL oracle, so the shape lives once
-    (round-5 review; the doc_id-mapped pipeline variant is
-    cluster_membership_rows above)."""
-    return (
-        labels.groupBy("cluster_id")
-        .agg(
-            F.count("*").alias("cluster_size"),
-            F.array_join(
-                F.sort_array(F.collect_list("record_id")), ","
-            ).alias("member_docs"),
-        )
-        .select(
-            F.col("cluster_id").alias("canonical_doc"),
-            "cluster_size", "member_docs",
-        )
-    )
 
 
 def _tokenband_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -290,6 +282,20 @@ def _tokenband_component_edges(t: DataFrame) -> DataFrame:
     return spokes.unionByName(rep_links)
 
 
+def _tokenband_labels(t: DataFrame) -> DataFrame:
+    """labels(record_id = doc_id, cluster_id) of the token-band
+    components of ``t``, from the closure-equivalent sparse edge set and
+    the pipeline's adaptive CC (local union-find under the edge
+    threshold, distributed hash-min beyond it: identical min-id labels
+    either way). er04's history clustering, er06 and er07 read only the
+    labels."""
+    labels, _ = connected_components(
+        _tokenband_component_edges(t), ERConfig(),
+        all_records=t.select(F.col("doc_id").alias("record_id")),
+    )
+    return labels
+
+
 @register(
     "er03_tokenband_graph_clusters",
     _ER03_SQL,
@@ -301,15 +307,13 @@ def er_tokenband_graph_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     (see _tokenband_candidate_pairs for the banded-join recast)."""
     t = _tokenband_docs(spark, sf_dir)
     edges = _tokenband_candidate_pairs(t).select("left_id", "right_id")
-    from smaph_spark.operators.clustering import connected_components
-
     # cc_local_threshold=0 forces the DISTRIBUTED hash-min path — this
     # query exists to give that operator engine-vs-engine parity
     cfg = replace(ERConfig(), cc_local_threshold=0)
     labels, _ = connected_components(
         edges, cfg, all_records=t.select(F.col("doc_id").alias("record_id"))
     )
-    return _labels_membership_rows(labels)
+    return _membership_rows(labels.withColumnRenamed("record_id", "doc_id"))
 
 
 _ER05_SQL = rf"""
@@ -385,8 +389,10 @@ def er_blocking_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ref="pairs_scored output (ScoredAnnotation analogue, SURVEY §1.2)",
 )
 def er_document_match_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    res, id_map = run_document_er(spark, sf_dir)
-    return attach_sides(res.matches, id_map).select(
+    res = run_document_er(spark, sf_dir)
+    return attach_sides(
+        res.matches, res.normalized.select("record_id", "doc_id")
+    ).select(
         F.least("l_doc_id", "r_doc_id").alias("a_doc"),
         F.greatest("l_doc_id", "r_doc_id").alias("b_doc"),
         F.round("score", 4).alias("score"),
@@ -439,40 +445,27 @@ def er_incremental_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     incremental flagship (run_incremental over documents_as_files)
     stays pytest-pinned to er01 row-equality in tests/test_er_docs.py
     via `incremental_minhash_membership`."""
-    from smaph_spark.operators.clustering import (
-        connected_components, history_pseudo_edges,
-    )
     from smaph_spark.ops.sampling import hash_bucket
 
     t = _tokenband_docs(spark, sf_dir)
     b = hash_bucket(F.col("doc_id"), 10)
     hist = t.filter(b < 8)
     delta = t.filter(b >= 8)
-    # the pipeline's ADAPTIVE CC config (local union-find under the
-    # edge threshold, distributed hash-min beyond it — identical
-    # min-id labels either way): er04's claim is the incremental FOLD,
-    # not distributed-CC parity, which er03 already pins with its
-    # forced-distributed config. At sf0.1 this cuts ~25 s of
-    # iterative-CC stage overhead per bench run.
-    cfg = ERConfig()
-    # connected_components checkpoints its input internally (round-6),
-    # so no caller-side persist is needed; the HISTORY clustering uses
-    # the closure-equivalent sparse edge set (identical labels — see
-    # _tokenband_component_edges) while the FOLD below still unions the
-    # real delta-touching banded pairs with the history pseudo-edges,
-    # which is er04's subject matter.
-    hist_clusters, _ = connected_components(
-        _tokenband_component_edges(hist), cfg,
-        all_records=hist.select(F.col("doc_id").alias("record_id")),
-    )
+    # the pipeline's ADAPTIVE CC config throughout: er04's claim is the
+    # incremental FOLD, not distributed-CC parity, which er03 already
+    # pins with its forced-distributed config. At sf0.1 this cuts
+    # ~25 s of iterative-CC stage overhead per bench run. The HISTORY
+    # clustering uses the closure-equivalent sparse edge set while the
+    # FOLD below still unions the real delta-touching banded pairs with
+    # the history pseudo-edges, which is er04's subject matter.
     edges = _tokenband_delta_pairs(hist, delta).unionByName(
-        history_pseudo_edges(hist_clusters)
+        history_pseudo_edges(_tokenband_labels(hist))
     )
     labels, _ = connected_components(
-        edges, cfg,
+        edges, ERConfig(),
         all_records=t.select(F.col("doc_id").alias("record_id")),
     )
-    return _labels_membership_rows(labels)
+    return _membership_rows(labels.withColumnRenamed("record_id", "doc_id"))
 
 
 def incremental_minhash_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -485,21 +478,14 @@ def incremental_minhash_membership(spark: SparkSession, sf_dir: str) -> DataFram
 
     files = documents_as_files(spark, sf_dir)
     b = hash_bucket(F.col("doc_id"), 10)
-    history = files.filter(b < 8).drop("doc_id")
-    delta = files.filter(b >= 8).drop("doc_id")
-    model, threshold = get_document_scorer(spark)
-    cfg = replace(_DOC_CFG, match_threshold=threshold)
-    hist_res = ERPipeline(spark, cfg, scorer_model=model).run(history)
-    inc = ERPipeline(spark, cfg, scorer_model=model).run_incremental(
+    history, delta = files.filter(b < 8), files.filter(b >= 8)
+    hist_res = _flagship_pipeline(spark).run(history)
+    return _cluster_membership(_flagship_pipeline(spark).run_incremental(
         history, delta, hist_res.clusters,
         # the production path: history's normalize output is reused,
         # the Arrow minhash pass runs over the delta only
         history_normalized=hist_res.normalized,
-    )
-    id_map = files.select(
-        F.xxhash64("repo", "path", "commit").alias("record_id"), "doc_id"
-    )
-    return cluster_membership_rows(inc.clusters, id_map)
+    ))
 
 
 @register(
@@ -520,19 +506,13 @@ def er_greedy_step_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate pairs — deterministic, no model in the loop). The joins
     shuffle on the cluster id only, so group-bounded work at any
     corpus size."""
-    from smaph_spark.operators.clustering import connected_components
     from smaph_spark.operators.greedy_features import greedy_step_features
 
     t = _tokenband_docs(spark, sf_dir)
-    # labels via the closure-equivalent sparse edges (identical
-    # clusters, see _tokenband_component_edges); the rel table below
-    # still carries the REAL banded candidate pairs — that is the
+    # labels via the closure-equivalent sparse edges; the rel table
+    # below still carries the REAL banded candidate pairs — that is the
     # feature semantics, not just connectivity
-    cfg = ERConfig()
-    labels, _ = connected_components(
-        _tokenband_component_edges(t), cfg,
-        all_records=t.select(F.col("doc_id").alias("record_id")),
-    )
+    labels = _tokenband_labels(t)
     toks = t.select(F.col("doc_id").alias("record_id"), "n_toks")
     members = labels.join(toks, "record_id")
     # candidate = max doc_id per multi-member cluster; partial = rest
@@ -638,20 +618,13 @@ def er_bcubed_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     pins precision at exactly 1.0 — round-5 review). The eval is
     fully aggregation-shaped: it never materializes record pairs
     (scale-safe at any corpus size)."""
-
-    from smaph_spark.operators.clustering import connected_components
     from smaph_spark.operators.metrics import bcubed_prf
 
     t = _tokenband_docs(spark, sf_dir)
-    # the clustering is the SAME token-band components, derived from
-    # the closure-equivalent sparse edge set (see
-    # _tokenband_component_edges) — er07 consumes only the labels, so
-    # materializing the full 913k-pair candidate join (recomputed 2-3x
-    # per run before round 6) bought nothing
-    labels, _ = connected_components(
-        _tokenband_component_edges(t), ERConfig(),
-        all_records=t.select(F.col("doc_id").alias("record_id")),
-    )
+    # er07 consumes only the labels, so materializing the full
+    # 913k-pair candidate join (recomputed 2-3x per run before round 6)
+    # bought nothing
+    labels = _tokenband_labels(t)
     gold = t.select(
         F.col("doc_id").alias("record_id"),
         (F.col("doc_id") % 7).alias("cluster_id"),

@@ -35,18 +35,14 @@ def hash_bucket(col, n_buckets: int = 10):
     return md5_prefix_int(col) % n_buckets
 
 
-def deterministic_split(
-    df: DataFrame, id_col: str, train: int = 8, val: int = 1, test: int = 1
-) -> DataFrame:
-    """Add `bucket` + `split` columns: buckets [0,train) -> 'train',
-    [train, train+val) -> 'val', rest -> 'test' out of train+val+test
-    equal-weight buckets."""
-    n = train + val + test
-    b = hash_bucket(F.col(id_col), n)
+def deterministic_split(df: DataFrame, id_col: str) -> DataFrame:
+    """Add `bucket` + `split` columns over 10 equal-weight buckets:
+    [0, 8) -> 'train', 8 -> 'val', 9 -> 'test'."""
+    b = hash_bucket(F.col(id_col), 10)
     return df.withColumn("bucket", b).withColumn(
         "split",
-        F.when(F.col("bucket") < train, F.lit("train"))
-        .when(F.col("bucket") < train + val, F.lit("val"))
+        F.when(F.col("bucket") < 8, F.lit("train"))
+        .when(F.col("bucket") < 9, F.lit("val"))
         .otherwise(F.lit("test")),
     )
 

@@ -30,6 +30,16 @@ PQ_MODEL_PATH = os.path.join(
 )
 
 
+def embedding_vectors(embeddings: DataFrame) -> DataFrame:
+    """embeddings(vec_id, embedding) -> (vec_id, emb array<double>), the
+    frame every embedding query and the PQ codebook trainer start from.
+    Whether the scan is widened first stays the caller's choice."""
+    return embeddings.select(
+        "vec_id",
+        F.transform("embedding", lambda x: x.cast("double")).alias("emb"),
+    )
+
+
 def _dot(x, y):
     return F.aggregate(
         F.zip_with(x, y, lambda p, q: p * q), F.lit(0.0), lambda acc, v: acc + v
@@ -83,10 +93,7 @@ def _exact_topk(cand: DataFrame, k: int) -> DataFrame:
     survey_ref="ANN baseline: brute-force cosine top-k (W1 top-k shape)",
 )
 def sim_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = widen(load(spark, sf_dir, "embeddings")).select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("emb"),
-    )
+    e = embedding_vectors(widen(load(spark, sf_dir, "embeddings")))
     q = e.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("q_vec"), F.col("emb").alias("q_emb")
     )
@@ -211,10 +218,7 @@ def lsh_topk(e: DataFrame, query_filter, k: int = 5) -> DataFrame:
                "join → rerank; scanned fraction logged",
 )
 def sim_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = widen(load(spark, sf_dir, "embeddings")).select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("emb"),
-    )
+    e = embedding_vectors(widen(load(spark, sf_dir, "embeddings")))
     # 8 bands of 4 bits + 1-bit multi-probe: sized for the
     # weak-similarity regime of this corpus (top-5 cosine ~0.3-0.5 →
     # per-bit agreement ~0.6; single-probe recall@5 plateaued ~0.7, the
@@ -335,10 +339,7 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rows — caught by the round-6 row-identity cross-check against
     # the round-start tree and reverted (the other embedding queries'
     # outputs are layout-independent and keep the widen).
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("emb"),
-    )
+    e = embedding_vectors(load(spark, sf_dir, "embeddings"))
     return ivf_topk(e, F.col("vec_id") < 10, k=5, n_cells=16, n_probe=4)
 
 
@@ -450,7 +451,6 @@ def pq_topk(
     books: np.ndarray,
     k: int = 5,
     rerank: int = 64,
-    metrics_key: str = "sim04_pq_topk",
 ) -> DataFrame:
     """PQ-ADC top-k: encode every vector to m ids of n_centroids
     centroids, scan the compressed codes per query (approximate inner
@@ -545,17 +545,16 @@ def pq_topk(
     # lookups per vector instead of 8*dim bytes; the shortlist cap
     # bounds what reaches the exact rerank
     code_bits = m * max(int(np.ceil(np.log2(n_centroids))), 1)
-    SCAN_METRICS[metrics_key] = {
+    SCAN_METRICS["sim04_pq_topk"] = {
         "queries": len(q_rows), "vectors": n_vecs,
         "scan_fraction": 1.0, "rerank_shortlist": rerank,
         "code_bits_per_vector": code_bits,
         "compression_ratio": round(dim * 64 / code_bits, 1),
     }
     _LOG.info(
-        "%s PQ-ADC scan: %d codes x %d queries at %d bits/vector "
-        "(%.0fx compression), rerank shortlist %d",
-        metrics_key, n_vecs, len(q_rows), code_bits,
-        dim * 64 / code_bits, rerank,
+        "sim04_pq_topk PQ-ADC scan: %d codes x %d queries at %d "
+        "bits/vector (%.0fx compression), rerank shortlist %d",
+        n_vecs, len(q_rows), code_bits, dim * 64 / code_bits, rerank,
     )
     return result
 
@@ -567,9 +566,6 @@ def pq_topk(
                "ADC scan + exact rerank (Jégou et al., TPAMI'11)",
 )
 def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = widen(load(spark, sf_dir, "embeddings")).select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("emb"),
-    )
+    e = embedding_vectors(widen(load(spark, sf_dir, "embeddings")))
     books = load_pq_codebooks(PQ_MODEL_PATH, m=16, n_centroids=16, dim=64)
     return pq_topk(e, F.col("vec_id") < 10, books)

@@ -29,18 +29,14 @@ from pyspark.sql import functions as F
 from smaph_spark.plans.star_queries import load, register
 
 
-def sketch_event_stats(
-    events: DataFrame,
-    rsd: float = 0.02,
-    percentile_accuracy: int = 10_000,
-) -> DataFrame:
-    """Per event_type: HLL++ distinct users (relative std dev `rsd`)
-    and approx p50/p95 of `value` (rank error <= 1/accuracy), plus the
+def sketch_event_stats(events: DataFrame) -> DataFrame:
+    """Per event_type: HLL++ distinct users (relative std dev 0.02)
+    and approx p50/p95 of `value` (rank error <= 1/10000), plus the
     exact row count (a plain long agg, always cheap)."""
     return events.groupBy("event_type").agg(
-        F.approx_count_distinct("user_id", rsd=rsd).alias("approx_users"),
+        F.approx_count_distinct("user_id", rsd=0.02).alias("approx_users"),
         F.percentile_approx(
-            "value", [0.5, 0.95], percentile_accuracy
+            "value", [0.5, 0.95], 10_000
         ).alias("value_pcts"),
         F.count("*").alias("n_events"),
     ).select(

@@ -169,10 +169,11 @@ def tx_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
 # winnowing fingerprint (rolling hash + local-min selection) — Arrow UDF
 # ---------------------------------------------------------------------------
 
-def make_fingerprint_udf(k: int = 8, window: int = 4, seed: int = 0xF1E5):
+def make_fingerprint_udf():
     """Winnowing (Schleimer et al., SIGMOD'03 public algorithm):
-    k-gram rolling hashes, per-window minimum selection; returns the
-    sorted distinct selected hashes as the document fingerprint."""
+    8-gram rolling hashes, minimum selection per window of 4; returns
+    the sorted distinct selected hashes as the document fingerprint."""
+    k, window = 8, 4
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def fingerprint(texts: pd.Series) -> pd.Series:

@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 from smaph_spark.config import ERConfig
 from smaph_spark.operators.blocking import cap_and_salt_blocks, generate_blocks
 from smaph_spark.operators.clustering import connected_components, history_pseudo_edges
-from smaph_spark.operators.normalize import normalize_files
+from smaph_spark.operators.normalize import normalize_files, record_id
 from smaph_spark.operators.pairs import attach_pair_features, generate_pairs
 from smaph_spark.operators.scoring import filter_matches, gbt_score, rule_score
 from smaph_spark.session import checkpoint
@@ -93,7 +93,9 @@ class ERPipeline:
         different filtered SLICES of the same parquet source — e.g. the
         history/delta splits of run_incremental — would collide on the
         path list and silently resume each other's snapshots (round-4
-        review). In-memory frames fall back to a content hash."""
+        review). In-memory frames fall back to a content hash, one
+        aggregation job, so it is computed only when ``checkpoint_dir``
+        is set: snapshot paths are its only reader."""
         paths = sorted(files.inputFiles())
         if paths:
             plan = re.sub(
@@ -168,7 +170,8 @@ class ERPipeline:
     # -- stages ----------------------------------------------------------------
     def run(self, files: DataFrame) -> PipelineResult:
         cfg = self.cfg
-        self._input_fp = self._input_fingerprint(files)
+        if self.checkpoint_dir:
+            self._input_fp = self._input_fingerprint(files)
 
         # content is consumed entirely inside stage 1 (sha + minhash);
         # carrying the ~KB content column through checkpoint/snapshot and
@@ -224,7 +227,7 @@ class ERPipeline:
         # callers that maintain a history id index (dd07-style digest
         # table, or the snapshotted s2_history_keys) pass it as
         # ``history_ids`` (DataFrame with record_id).
-        rid = F.xxhash64("repo", "path", "commit").alias("record_id")
+        rid = record_id().alias("record_id")
         hist_ids = (
             history_ids.select("record_id")
             if history_ids is not None
@@ -241,14 +244,15 @@ class ERPipeline:
                 "history first (e.g. dd07-style digest anti-join) or "
                 "run a full batch"
             )
-        # the history/delta SPLIT is part of the snapshot key: two runs
-        # over the same union but different splits produce different
-        # s1_normalized (delta-only rows) and s3_pairs_scored
-        # (delta-touching pairs only)
-        self._input_fp = (
-            self._input_fingerprint(history_files.unionByName(new_files))
-            + "-new" + self._input_fingerprint(new_files)
-        )
+        if self.checkpoint_dir:
+            # the history/delta SPLIT is part of the snapshot key: two
+            # runs over the same union but different splits produce
+            # different s1_normalized (delta-only rows) and
+            # s3_pairs_scored (delta-touching pairs only)
+            self._input_fp = (
+                self._input_fingerprint(history_files.unionByName(new_files))
+                + "-new" + self._input_fingerprint(new_files)
+            )
         new_norm = self._load_or_compute(
             "s1_normalized",
             lambda: normalize_files(new_files, cfg).drop("content"),
@@ -370,7 +374,7 @@ class ERPipeline:
         of the source table equals the carried content_sha. Returns the
         number of violations (0 = pass)."""
         src = source_files.select(
-            F.xxhash64("repo", "path", "commit").alias("record_id"),
+            record_id().alias("record_id"),
             F.sha2("content", 256).alias("expected_sha"),
         )
         return (

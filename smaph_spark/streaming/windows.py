@@ -15,16 +15,16 @@ from pyspark.sql import functions as F
 
 
 def streaming_hourly_event_counts(
-    spark: SparkSession, events_dir: str, schema, watermark: str = "1 hour"
+    spark: SparkSession, events_dir: str, schema
 ) -> DataFrame:
     """Streaming twin of q19_hourly_event_counts: tumbling 1-hour window
-    counts per event_type with a watermark for late data."""
+    counts per event_type with a 1-hour watermark for late data."""
     events = spark.readStream.schema(schema).parquet(events_dir)
     # watermarks require TIMESTAMP (LTZ); the parquet column is NTZ —
     # session TZ is pinned UTC so the cast is a no-op on the wall clock
     events = events.withColumn("ts", F.col("ts").cast("timestamp"))
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("sum_value"))
         .select(

@@ -131,35 +131,32 @@ def test_missing_or_mismatched_scorer_artifact_raises(spark, monkeypatch,
 def test_er01_er02_share_one_pipeline_run(spark):
     """er01 and er02 both consume the flagship pipeline; the driver
     executing both must pay blocking+scoring once (round-2 VERDICT
-    item 6): the PipelineResult is cached per (app, sf_dir)."""
-    res1, ids1 = er_docs.run_document_er(spark, SF)
-    res2, ids2 = er_docs.run_document_er(spark, SF)
-    assert res1 is res2 and ids1 is ids2
+    item 6): the PipelineResult is cached per (app, sf_dir), and the
+    cached call starts no Spark job."""
+    from tests.test_pipeline import _jobs_in_group
+
+    res1 = er_docs.run_document_er(spark, SF)
+    res2, n_jobs = _jobs_in_group(
+        spark, "er_cached", lambda: er_docs.run_document_er(spark, SF)
+    )
+    assert res1 is res2
+    assert n_jobs == 0
 
 
 def test_er04_incremental_equals_full_flagship(spark):
     """Folding the 20% delta into the resolved 80% history must yield
     EXACTLY the full-batch flagship clustering (same GBT scorer path),
     and er04's summary must agree with the full run's."""
-    from dataclasses import replace
-
-    from smaph_spark.config import ERConfig  # noqa: F401 (style parity)
-    from smaph_spark.ops.er_docs import (
-        _DOC_CFG, documents_as_files, get_document_scorer,
-    )
+    from smaph_spark.ops.er_docs import _flagship_pipeline, documents_as_files
     from smaph_spark.ops.sampling import hash_bucket
-    from smaph_spark.pipeline import ERPipeline
 
     files = documents_as_files(spark, SF)
     b = hash_bucket(F.col("doc_id"), 10)
-    history = files.filter(b < 8).drop("doc_id")
-    delta = files.filter(b >= 8).drop("doc_id")
-    model, threshold = get_document_scorer(spark)
-    cfg = replace(_DOC_CFG, match_threshold=threshold)
+    history, delta = files.filter(b < 8), files.filter(b >= 8)
 
-    full = ERPipeline(spark, cfg, scorer_model=model).run(files.drop("doc_id"))
-    hist_res = ERPipeline(spark, cfg, scorer_model=model).run(history)
-    inc = ERPipeline(spark, cfg, scorer_model=model).run_incremental(
+    full = _flagship_pipeline(spark).run(files)
+    hist_res = _flagship_pipeline(spark).run(history)
+    inc = _flagship_pipeline(spark).run_incremental(
         history, delta, hist_res.clusters,
         history_normalized=hist_res.normalized,
     )

@@ -654,7 +654,7 @@ def _jobs_in_group(spark, group, fn):
 
 #: Spark jobs measured at local[4] (the test session); the asserts allow
 #: 2 more for AQE's run-to-run jitter
-ER_RUN_JOBS, ER_RUN_NO_SNAPSHOT_JOBS, CC_ROUND_THEN_FINISH_JOBS = 19, 14, 24
+ER_RUN_JOBS, ER_RUN_NO_SNAPSHOT_JOBS, CC_ROUND_THEN_FINISH_JOBS = 19, 12, 24
 #: the dd03/dd09/sim02/sim03/sim04/er04 queries, built and collected at
 #: sf0.001
 DD03_JOBS, DD09_JOBS, SIM04_JOBS = 9, 11, 11

@@ -103,6 +103,21 @@ def test_er_pair_stage_payload_joins_broadcast(spark):
     assert plan.count("BroadcastHashJoin [right_id#") == 1, plan
 
 
+def test_er01_er02_read_no_documents_scan(spark):
+    """er01 and er02 map record ids to doc ids through the flagship
+    run's own normalize stage, which carries doc_id: once
+    run_document_er has run, the frames they return read only its
+    materialized stages and never scan documents (or any parquet file)
+    again."""
+    from smaph_spark.ops.er_docs import run_document_er
+
+    run_document_er(spark, SF)
+    for name in ("er01_document_clusters", "er02_document_match_pairs"):
+        plan = _plan(spark, name)
+        scans = [l for l in plan.splitlines() if "FileScan parquet" in l]
+        assert not scans, (name, scans)
+
+
 def test_band_dedup_queries_equi_join_only(spark):
     """dd03/dd04/dd06 pair through the banded equi self-join, never a
     cross product."""
