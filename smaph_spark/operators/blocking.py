@@ -16,6 +16,10 @@ Skew control (north_rule, and SURVEY §4 item 1): a popular path
 (bounded recall loss, counted and logged like the reference logs its
 binding caps — DefaultBindingGenerator.java:135-136); blocks larger
 than ``max_block_size * block_salt_buckets`` are dropped entirely.
+Both callers record the counts through ``obs.record``, which logs a
+WARNING when a block was dropped: the ER pipeline under
+``er_pipeline`` (its ``s2_block_caps``) and each dd query under its own
+name.
 
 The cap is shared: the standalone band self-joins (dedup dd03
 ``minhash_lsh_pairs``, dd04 ``simhash_pairs``, dd06

@@ -28,23 +28,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: output feature columns, reference names (GreedyFeaturePack
-#: getFeatureNamesStatic:138-155), minus the segment-LP trio whose
-#: inputs (query segmentations) have no ER analogue
-GREEDY_FEATURES = [
-    "covered_tokens_incr",
-    "covered_tokens_incr_ratio",
-    "covered_tokens_after",
-    "max_relatedness_before",
-    "avg_relatedness_before",
-    "min_relatedness",
-    "max_relatedness",
-    "avg_relatedness",
-    "min_relatedness_diff",
-    "avg_relatedness_diff",
-    "max_relatedness_diff",
-]
-
 
 def greedy_step_features(
     cand: DataFrame,

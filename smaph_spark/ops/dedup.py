@@ -12,14 +12,13 @@ SMAPH-graft blocking stage applied to a second corpus.
 
 from __future__ import annotations
 
-import logging
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from smaph_spark import obs
 from smaph_spark.config import ERConfig
 from smaph_spark.operators.blocking import cap_and_salt_blocks
 from smaph_spark.operators.normalize import make_minhash_udf
@@ -28,34 +27,28 @@ from smaph_spark.plans.star_queries import WS_RE, load, register, widen
 from smaph_spark.session import checkpoint
 
 
-_LOG = logging.getLogger("smaph_spark.dedup")
-
-#: per-query cap metrics of the LAST run of each standalone dedup query
-#: (no-silent-caps rule): {query: {salted_band_keys, dropped_band_keys,
-#: records_in_dropped_bands}} — the standalone analogue of the
-#: pipeline's s2_block_caps stage metric (pipeline.py).
-CAP_METRICS: dict[str, dict] = {}
+#: read by perfbench/workloads.py and bench.py; package code uses obs.METRICS
+CAP_METRICS = obs.METRICS
 
 
 def capped_blocks(query: str, keys: DataFrame, cfg: ERConfig) -> DataFrame:
     """Cap and salt ``keys(block_key, record_id)`` (cap_and_salt_blocks)
     and materialize the salted key table with one eager local
     checkpoint. Its cap counts are observed on that checkpoint's job
-    (no job runs only to count them) and are recorded in
-    CAP_METRICS[query] and LOGGED (round-2 VERDICT: dd03/dd04/dd06
-    computed these counts and discarded them — a silent cap)."""
-    obs = Observation()
-    salted, _ = cap_and_salt_blocks(keys, cfg, observation=obs)
+    (no job runs only to count them) and are recorded under
+    obs.METRICS[query] (a WARNING when a band key was dropped) — the
+    standalone analogue of the pipeline's s2_block_caps (round-2
+    VERDICT: dd03/dd04/dd06 computed these counts and discarded them —
+    a silent cap)."""
+    caps = Observation()
+    salted, _ = cap_and_salt_blocks(keys, cfg, observation=caps)
     salted, _ = checkpoint(salted)
-    counts = obs.get
-    out = {
+    counts = caps.get
+    obs.record(query, {
         "salted_band_keys": counts["salted_blocks"],
         "dropped_band_keys": counts["dropped_blocks"],
         "records_in_dropped_bands": counts["records_in_dropped_blocks"],
-    }
-    CAP_METRICS[query] = out
-    level = logging.WARNING if out["dropped_band_keys"] else logging.INFO
-    _LOG.log(level, "%s band-cap metrics: %s", query, out)
+    }, warn=bool(counts["dropped_blocks"]))
     return salted
 
 
@@ -237,7 +230,7 @@ def minhash_lsh_pairs(fp: DataFrame, cfg: ERConfig) -> DataFrame:
     """fp(doc_id, minhash, bands) -> pairs(a_doc, b_doc, jaccard_est).
 
     Band self-join guarded by the hot-key cap (capped_blocks, counts in
-    CAP_METRICS["dd03_minhash_lsh_pairs"]) so a degenerate band key
+    obs.METRICS["dd03_minhash_lsh_pairs"]) so a degenerate band key
     stays bounded; estimated Jaccard from the full signatures is the
     rerank. The signatures are materialized once, so the key table and
     the pair payload both read them without re-running the UDF."""
@@ -331,7 +324,7 @@ def simhash_pairs(
 ) -> DataFrame:
     """sig(doc_id, sim) -> pairs(a_doc, b_doc, hamming). Banded hamming
     join on 4×16-bit chunks, hot-chunk keys capped/salted like dd03
-    (counts in CAP_METRICS["dd04_simhash_pairs"]). The signatures are
+    (counts in obs.METRICS["dd04_simhash_pairs"]). The signatures are
     materialized once for the key table and the pair payload."""
     sig, _ = checkpoint(sig.select(F.col("doc_id").alias("record_id"), "sim"))
     salted = capped_blocks(
@@ -522,7 +515,7 @@ def cosine_near_dup_lsh(e: DataFrame, threshold: float) -> DataFrame:
     embeddings (the testdata contract, TESTDATA.md): 32-plane
     hyperplane-LSH signatures in 8 bands of 4 bits (hot bands
     capped/salted like dd03, counts in
-    CAP_METRICS["dd06_embedding_dup_lsh"]) + exact cosine rerank at
+    obs.METRICS["dd06_embedding_dup_lsh"]) + exact cosine rerank at
     ``threshold``. Returns pairs(a_vec, b_vec, cos).
 
     The scale alternative to the exact block-matrix ``cosine_self_join``
@@ -790,7 +783,7 @@ def cdc_containment_pairs(
     where Jaccard dilutes it). The chunk-hash self-join is guarded by
     the SAME hot-key cap as the LSH band joins (cap_and_salt_blocks): a
     chunk shared by thousands of docs (a common license header) is
-    salted or dropped with counts in CAP_METRICS[metrics_query] instead
+    salted or dropped with counts in obs.METRICS[metrics_query] instead
     of going quadratic — bounded recall, never silent."""
     # checkpointed: the sizes agg and the capped key table would
     # otherwise each re-run the chunker UDF over the full corpus

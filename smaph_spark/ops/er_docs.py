@@ -74,9 +74,9 @@ def documents_as_files(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _flagship_pipeline(spark: SparkSession) -> ERPipeline:
-    """THE flagship recipe, shared by er01/er02, the incremental
-    flagship and its equivalence test: _DOC_CFG at the committed
-    scorer's threshold, scored by that scorer."""
+    """THE flagship recipe, shared by er01/er02 and the incremental
+    flagship's equivalence test: _DOC_CFG at the committed scorer's
+    threshold, scored by that scorer."""
     model, threshold = get_document_scorer(spark)
     return ERPipeline(
         spark, replace(_DOC_CFG, match_threshold=threshold), scorer_model=model
@@ -443,8 +443,8 @@ def er_incremental_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the DuckDB recursive CTE recomputes — any membership regression in
     the incremental merge path breaks the hash. The MinHash+GBT
     incremental flagship (run_incremental over documents_as_files)
-    stays pytest-pinned to er01 row-equality in tests/test_er_docs.py
-    via `incremental_minhash_membership`."""
+    stays pytest-pinned to er01 row-equality in
+    tests/test_er_docs.py::test_er04_incremental_equals_full_flagship."""
     from smaph_spark.ops.sampling import hash_bucket
 
     t = _tokenband_docs(spark, sf_dir)
@@ -466,26 +466,6 @@ def er_incremental_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         all_records=t.select(F.col("doc_id").alias("record_id")),
     )
     return _membership_rows(labels.withColumnRenamed("record_id", "doc_id"))
-
-
-def incremental_minhash_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The MinHash+GBT incremental flagship (formerly the er04 gate
-    query, now pytest-pinned — the gate slot carries the deterministic
-    oracle-paired variant above): delta batch resolved against the
-    resolved 80% history via ERPipeline.run_incremental with history
-    normalize-output reuse, membership rows like er01."""
-    from smaph_spark.ops.sampling import hash_bucket
-
-    files = documents_as_files(spark, sf_dir)
-    b = hash_bucket(F.col("doc_id"), 10)
-    history, delta = files.filter(b < 8), files.filter(b >= 8)
-    hist_res = _flagship_pipeline(spark).run(history)
-    return _cluster_membership(_flagship_pipeline(spark).run_incremental(
-        history, delta, hist_res.clusters,
-        # the production path: history's normalize output is reused,
-        # the Arrow minhash pass runs over the delta only
-        history_normalized=hist_res.normalized,
-    ))
 
 
 @register(

@@ -9,7 +9,6 @@ exact baseline is asserted in tests).
 from __future__ import annotations
 
 import json
-import logging
 import os
 
 import numpy as np
@@ -19,6 +18,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from smaph_spark import obs
 from smaph_spark.plans.star_queries import load, register, widen
 from smaph_spark.session import checkpoint
 
@@ -128,31 +128,25 @@ def make_hyperplane_udf():
     return signature.asNondeterministic()
 
 
-_LOG = logging.getLogger("smaph_spark.similarity")
-
-#: candidate-scan stats of the LAST run of each approximate query
-#: (no-silent-caps rule: the scanned fraction IS the speed/recall trade)
-SCAN_METRICS: dict[str, dict] = {}
+#: read by perfbench/workloads.py; package code uses obs.METRICS
+SCAN_METRICS = obs.METRICS
 
 
 def _scanned_topk(key: str, cand: DataFrame, k: int, counts, **extra) -> DataFrame:
     """Exact top-k rerank of the candidate pairs ``cand``, materialized
     by one eager checkpoint whose job also counts the candidates. The
-    scan is recorded in SCAN_METRICS[key] and logged; ``counts()``,
-    called after that job, gives the input's ``queries`` and
-    ``vectors``."""
-    obs = Observation()
+    scan is recorded under obs.METRICS[key] (no-silent-caps rule: the
+    scanned fraction IS the speed/recall trade); ``counts()``, called
+    after that job, gives the input's ``queries`` and ``vectors``."""
+    seen = Observation()
     result, _ = checkpoint(
-        _exact_topk(cand.observe(obs, F.count(F.lit(1)).alias("n")), k)
+        _exact_topk(cand.observe(seen, F.count(F.lit(1)).alias("n")), k)
     )
-    n_cand, n_q, n_vecs = obs.get["n"], counts()["queries"], counts()["vectors"]
-    frac = n_cand / max(n_q * (n_vecs - 1), 1)
-    SCAN_METRICS[key] = {
+    n_cand, n_q, n_vecs = seen.get["n"], counts()["queries"], counts()["vectors"]
+    obs.record(key, {
         "candidates": n_cand, "queries": n_q, "vectors": n_vecs, **extra,
-        "scan_fraction": round(frac, 4),
-    }
-    _LOG.info("%s candidate scan fraction: %.4f (%d of %d possible)",
-              key, frac, n_cand, n_q * (n_vecs - 1))
+        "scan_fraction": round(n_cand / max(n_q * (n_vecs - 1), 1), 4),
+    })
     return result
 
 
@@ -545,17 +539,12 @@ def pq_topk(
     # lookups per vector instead of 8*dim bytes; the shortlist cap
     # bounds what reaches the exact rerank
     code_bits = m * max(int(np.ceil(np.log2(n_centroids))), 1)
-    SCAN_METRICS["sim04_pq_topk"] = {
+    obs.record("sim04_pq_topk", {
         "queries": len(q_rows), "vectors": n_vecs,
         "scan_fraction": 1.0, "rerank_shortlist": rerank,
         "code_bits_per_vector": code_bits,
         "compression_ratio": round(dim * 64 / code_bits, 1),
-    }
-    _LOG.info(
-        "sim04_pq_topk PQ-ADC scan: %d codes x %d queries at %d "
-        "bits/vector (%.0fx compression), rerank shortlist %d",
-        n_vecs, len(q_rows), code_bits, dim * 64 / code_bits, rerank,
-    )
+    })
     return result
 
 

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from smaph_spark import obs
 from smaph_spark.plans.star_queries import load, register
 
 
@@ -72,10 +73,6 @@ def sk_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # even though the sketch itself is partition-order dependent.
 # (Misra & Gries 1982; the "frequent" algorithm.)
 # ---------------------------------------------------------------------------
-
-#: last-run stats of the sketch phase (no-silent-caps discipline)
-SKETCH_METRICS: dict[str, dict] = {}
-
 
 def _mg_reduce(counters: dict, k: int) -> None:
     """Shrink `counters` to <= k entries by the batched MG step:
@@ -165,10 +162,11 @@ def heavy_hitters(
         r[key_col]
         for r in summaries.select(key_col).distinct().collect()
     ]
-    SKETCH_METRICS[metrics_key] = {
+    # the sketch phase's stats (no-silent-caps discipline)
+    obs.record(metrics_key, {
         "rows": n, "threshold": threshold, "mg_capacity": k,
         "candidates": len(cand_keys),
-    }
+    })
     exact = (
         events.filter(F.col(key_col).isin(cand_keys))
         .groupBy(key_col)

@@ -7,11 +7,13 @@ features → stage 4 threshold filter → stage 5 CC (contraction rounds,
 then one driver union-find) → clusters sink.
 
 Resumability (north_rule): when ``checkpoint_dir`` is set, every stage
-writes a parquet snapshot + ``_metrics.json`` (row count, elapsed
-seconds, snapshot path). A re-run with the same
-config fingerprint reads the snapshot instead of recomputing; the
-per-row invariant sha256(content) is verified against the source table
-after every stage that carries content columns.
+writes a parquet snapshot, then ``_metrics.json`` (row count, elapsed
+seconds, snapshot path), the stage's completion marker. A re-run with
+the same config and input fingerprint reads a snapshot that has the
+marker instead of recomputing, and reports the marker's ``rows`` (not
+its ``elapsed_sec``: a resumed stage computes nothing); the per-row
+invariant sha256(content) is verified against the source table after
+every stage that carries content columns.
 
 Every stage is materialized once, where it is computed: by its
 snapshot write, or without ``checkpoint_dir`` by the eager observed
@@ -22,7 +24,9 @@ stage 2's cap counts (``s2_block_caps``) and the delta's
 ``s2_delta_key_rows``, observed on the key table. A stage's
 ``elapsed_sec`` is its own compute plus its write or checkpoint. The
 counts that keep a job of their own are the history/delta overlap check
-and ``verify_content_sha``.
+and ``verify_content_sha``. Each run's ``stage_metrics`` is recorded
+under ``obs.METRICS["er_pipeline"]``, and logged at WARNING when stage
+2 dropped a block.
 """
 
 from __future__ import annotations
@@ -37,6 +41,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from smaph_spark import obs
 from smaph_spark.config import ERConfig
 from smaph_spark.operators.blocking import cap_and_salt_blocks, generate_blocks
 from smaph_spark.operators.clustering import connected_components, history_pseudo_edges
@@ -96,11 +101,9 @@ class ERPipeline:
         review). In-memory frames fall back to a content hash, one
         aggregation job, so it is computed only when ``checkpoint_dir``
         is set: snapshot paths are its only reader."""
+        plan = re.sub(r"#\d+", "", files._jdf.queryExecution().logical().toString())
         paths = sorted(files.inputFiles())
         if paths:
-            plan = re.sub(
-                r"#\d+", "", files._jdf.queryExecution().logical().toString()
-            )
             basis = ";".join(paths) + "|" + plan
         else:
             # in-memory source (no backing files): plan strings are
@@ -118,7 +121,6 @@ class ERPipeline:
                 F.sum(F.pmod("h", F.lit(1_000_000_007))).alias("s"),
                 F.count("*").alias("n"),
             ).collect()[0]
-            plan = re.sub(r"#\d+", "", files._jdf.queryExecution().logical().toString())
             basis = f"{plan}|{row['x']}|{row['s']}|{row['n']}"
         return hashlib.sha256(basis.encode()).hexdigest()[:12]
 
@@ -142,27 +144,36 @@ class ERPipeline:
         without one by an eager local checkpoint. ``rows`` is observed
         by that action (no count job), so it is read here in both
         modes, and ``elapsed_sec`` is the stage's own compute plus its
-        write (snapshot) or checkpoint (no snapshot)."""
+        write (snapshot) or checkpoint (no snapshot).
+
+        ``_metrics.json``, written after the snapshot's ``_SUCCESS``, is
+        the completion marker: a stage resumes only from a snapshot that
+        has one, and reports its ``rows``."""
         if path is None:
             path = self._stage_path(stage)
-        if path and os.path.exists(os.path.join(path, "_SUCCESS")):
-            self._metrics[stage] = {"resumed_from_snapshot": True, "path": path}
+        marker = path and os.path.join(path, "_metrics.json")
+        if marker and os.path.exists(marker):
+            with open(marker) as fh:
+                rows = json.load(fh)["rows"]
+            self._metrics[stage] = {
+                "resumed_from_snapshot": True, "path": path, "rows": rows,
+            }
             return self.spark.read.parquet(path)
         t0 = time.time()
         df = compute()
         if path:
-            obs = Observation()
-            df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+            seen = Observation()
+            df.observe(seen, F.count(F.lit(1)).alias("rows")).write.mode(
                 "overwrite"
             ).parquet(path)
             df = self.spark.read.parquet(path)
-            rows = obs.get["rows"]
+            rows = seen.get["rows"]
         else:
             df, rows = checkpoint(df, F.count(F.lit(1)))
         m = {"elapsed_sec": round(time.time() - t0, 3), "rows": rows}
         if path:
             m["path"] = path
-            with open(os.path.join(path, "_metrics.json"), "w") as fh:
+            with open(marker, "w") as fh:
                 json.dump(m, fh)
         self._metrics[stage] = m
         return df
@@ -358,13 +369,16 @@ class ERPipeline:
             return clusters
 
         clusters = self._load_or_compute("s5_clusters", _clusters)
+        dropped = self._metrics.get("s2_block_caps", {}).get("dropped_blocks")
         return PipelineResult(
             normalized=normalized,
             blocks=salted,
             pairs_scored=pairs_scored,
             matches=matches,
             clusters=clusters,
-            stage_metrics=dict(self._metrics),
+            stage_metrics=obs.record(
+                "er_pipeline", dict(self._metrics), warn=bool(dropped)
+            ),
         )
 
     # -- invariant -------------------------------------------------------------

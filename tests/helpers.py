@@ -1,7 +1,7 @@
 """Test-only references and fixture encoders: the exact twins and Python
-twins the package's operators are checked against, and the image
-encoders that build the decoders' test payloads. Nothing in the package
-calls them."""
+twins the package's operators are checked against, the image encoders
+that build the decoders' test payloads, and the per-job-group Spark job
+counter the job budgets use. Nothing in the package calls them."""
 
 from __future__ import annotations
 
@@ -27,6 +27,17 @@ def stage_metrics_resumed(stage_metrics: dict) -> bool:
     return bool(snapshot_stages) and all(
         stage_metrics[k].get("resumed_from_snapshot") for k in snapshot_stages
     )
+
+
+def jobs_in_group(spark, group: str, fn):
+    """(fn(), number of Spark jobs fn started), counted per job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def cap_counts(block_metrics: DataFrame) -> tuple[int, int, int]:

@@ -9,8 +9,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from smaph_spark.config import ERConfig
+from smaph_spark.obs import METRICS
 from smaph_spark.ops.dedup import (
-    CAP_METRICS,
     _make_simhash_udf,
     cosine_self_join,
     minhash_lsh_pairs,
@@ -33,7 +33,7 @@ def test_minhash_lsh_hot_band_capped(spark):
         rows, "doc_id long, minhash array<int>, bands array<long>"
     )
     pairs = minhash_lsh_pairs(fp, cfg)
-    caps = CAP_METRICS["dd03_minhash_lsh_pairs"]
+    caps = METRICS["dd03_minhash_lsh_pairs"]
     assert caps["salted_band_keys"] + caps["dropped_band_keys"] > 0, (
         "hot band must be logged"
     )
@@ -51,7 +51,7 @@ def test_simhash_hot_chunk_capped(spark):
         [(i, 0x1234_5678_9ABC_DEF0) for i in range(n)], "doc_id long, sim long"
     )
     pairs = simhash_pairs(sig, cfg)
-    caps = CAP_METRICS["dd04_simhash_pairs"]
+    caps = METRICS["dd04_simhash_pairs"]
     assert caps["salted_band_keys"] + caps["dropped_band_keys"] > 0, (
         "hot chunk keys must be logged"
     )
@@ -184,8 +184,6 @@ def test_standalone_dedup_queries_log_cap_metrics(spark, tmp_path):
     """The registered dd03/dd04/dd06 queries must SURFACE their band-cap
     counts (round-2 VERDICT item 5: the counts were computed and
     discarded). Planted hot key: every doc shares one band."""
-    import smaph_spark.ops.dedup as dd
-
     n = 40
     rows = [(i, [i, i, i, i], [7777, 1000 + i]) for i in range(n)]
     fp = spark.createDataFrame(
@@ -193,14 +191,14 @@ def test_standalone_dedup_queries_log_cap_metrics(spark, tmp_path):
     )
     cfg = ERConfig(max_block_size=10, block_salt_buckets=4, lsh_bands=2,
                    num_minhash=4)
-    dd.CAP_METRICS.clear()
+    METRICS.clear()
     minhash_lsh_pairs(fp, cfg)
-    out = dd.CAP_METRICS["dd03_minhash_lsh_pairs"]
+    out = METRICS["dd03_minhash_lsh_pairs"]
     assert out["salted_band_keys"] + out["dropped_band_keys"] > 0
-    # and the registered driver queries populate CAP_METRICS end-to-end
-    dd.CAP_METRICS.clear()
+    # and the registered driver queries populate obs.METRICS end-to-end
+    METRICS.clear()
     QUERIES["dd03_minhash_lsh_pairs"].fn(spark, "/root/testdata/sf0.001").count()
-    assert "dd03_minhash_lsh_pairs" in dd.CAP_METRICS
+    assert "dd03_minhash_lsh_pairs" in METRICS
 
 
 # ---------------------------------------------------------------------------
@@ -416,7 +414,7 @@ def test_cdc_containment_hot_chunk_capped_and_logged(spark):
     from dataclasses import replace
 
     from smaph_spark.config import ERConfig
-    from smaph_spark.ops.dedup import CAP_METRICS, cdc_containment_pairs
+    from smaph_spark.ops.dedup import cdc_containment_pairs
 
     # a long SHARED random prefix: content-defined boundaries fall
     # inside it, so every doc carries the same ~dozen prefix chunks
@@ -433,7 +431,7 @@ def test_cdc_containment_hot_chunk_capped_and_logged(spark):
     cdc_containment_pairs(
         df, min_containment=0.0, cfg=cfg, metrics_query="dd09test"
     ).collect()
-    m = CAP_METRICS["dd09test"]
+    m = METRICS["dd09test"]
     assert m["dropped_band_keys"] > 0  # 30 docs/chunk > drop limit 10
 
     # SALTED band (count in (max_block_size, drop_limit]) — the branch
@@ -443,7 +441,7 @@ def test_cdc_containment_hot_chunk_capped_and_logged(spark):
     out = cdc_containment_pairs(
         df8, min_containment=0.0, cfg=cfg, metrics_query="dd09salt"
     ).collect()
-    ms = CAP_METRICS["dd09salt"]
+    ms = METRICS["dd09salt"]
     assert ms["salted_band_keys"] > 0 and ms["dropped_band_keys"] == 0
     assert out  # pairs still produced from the salted sub-buckets
 
@@ -457,14 +455,14 @@ def test_dd03_dd09_empty_input_records_zero_caps(spark):
 
     zero = {"salted_band_keys": 0, "dropped_band_keys": 0,
             "records_in_dropped_bands": 0}
-    CAP_METRICS.clear()
+    METRICS.clear()
     fp = spark.createDataFrame(
         [], "doc_id long, minhash array<int>, bands array<long>"
     )
     cfg = ERConfig(shingle_k=5, num_minhash=64, lsh_bands=16,
                    max_block_size=500, block_salt_buckets=8)
     assert minhash_lsh_pairs(fp, cfg).count() == 0
-    assert CAP_METRICS["dd03_minhash_lsh_pairs"] == zero
+    assert METRICS["dd03_minhash_lsh_pairs"] == zero
     docs = spark.createDataFrame([], "doc_id long, text string")
     assert cdc_containment_pairs(docs, metrics_query="dd09empty").count() == 0
-    assert CAP_METRICS["dd09empty"] == zero
+    assert METRICS["dd09empty"] == zero

@@ -133,10 +133,10 @@ def test_er01_er02_share_one_pipeline_run(spark):
     executing both must pay blocking+scoring once (round-2 VERDICT
     item 6): the PipelineResult is cached per (app, sf_dir), and the
     cached call starts no Spark job."""
-    from tests.test_pipeline import _jobs_in_group
+    from tests.helpers import jobs_in_group
 
     res1 = er_docs.run_document_er(spark, SF)
-    res2, n_jobs = _jobs_in_group(
+    res2, n_jobs = jobs_in_group(
         spark, "er_cached", lambda: er_docs.run_document_er(spark, SF)
     )
     assert res1 is res2
@@ -146,15 +146,18 @@ def test_er01_er02_share_one_pipeline_run(spark):
 def test_er04_incremental_equals_full_flagship(spark):
     """Folding the 20% delta into the resolved 80% history must yield
     EXACTLY the full-batch flagship clustering (same GBT scorer path),
-    and er04's summary must agree with the full run's."""
-    from smaph_spark.ops.er_docs import _flagship_pipeline, documents_as_files
+    and its membership rows must be er01's. The full run is er01's
+    own (``run_document_er``), so er01 reuses it from the cache."""
+    from smaph_spark.ops.er_docs import (
+        _cluster_membership, _flagship_pipeline, documents_as_files,
+    )
     from smaph_spark.ops.sampling import hash_bucket
 
     files = documents_as_files(spark, SF)
     b = hash_bucket(F.col("doc_id"), 10)
     history, delta = files.filter(b < 8), files.filter(b >= 8)
 
-    full = _flagship_pipeline(spark).run(files)
+    full = er_docs.run_document_er(spark, SF)
     hist_res = _flagship_pipeline(spark).run(history)
     inc = _flagship_pipeline(spark).run_incremental(
         history, delta, hist_res.clusters,
@@ -170,7 +173,7 @@ def test_er04_incremental_equals_full_flagship(spark):
     # sizes, and member lists all agree
     inc_rows = {
         (r["canonical_doc"], r["cluster_size"], r["member_docs"])
-        for r in er_docs.incremental_minhash_membership(spark, SF).collect()
+        for r in _cluster_membership(inc).collect()
     }
     er01_rows = {
         (r["canonical_doc"], r["cluster_size"], r["member_docs"])

@@ -19,20 +19,20 @@ def test_lsh_ann_recall_vs_bruteforce(spark):
     guarantee) and must LOG its candidate-scan fraction — the
     recall/scan trade is surfaced, never silent. Measured on this
     corpus: single-probe 0.62, 1-bit multi-probe 1.0."""
-    import smaph_spark.ops.similarity as sim
+    from smaph_spark import obs
 
     exact = {
         (r["q_vec"], r["n_vec"])
         for r in QUERIES["sim01_bruteforce_topk"].fn(spark, SF).collect()
     }
-    sim.SCAN_METRICS.clear()
+    obs.METRICS.clear()
     approx = {
         (r["q_vec"], r["n_vec"])
         for r in QUERIES["sim02_lsh_topk"].fn(spark, SF).collect()
     }
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.9, f"LSH ANN recall {recall:.2f}"
-    scan = sim.SCAN_METRICS["sim02_lsh_topk"]
+    scan = obs.METRICS["sim02_lsh_topk"]
     assert 0 < scan["scan_fraction"] <= 1.0
     assert scan["candidates"] > 0
 
@@ -458,18 +458,18 @@ def test_pq_codebook_artifact_roundtrip_and_mismatch_retrain(spark, tmp_path):
 
 def test_sim03_sim04_scan_metrics_populated(spark):
     """Round-3 VERDICT item 5: sim03/sim04 must record their
-    candidate-scan stats in SCAN_METRICS like sim02 (no silent caps)."""
-    from smaph_spark.ops.similarity import SCAN_METRICS
+    candidate-scan stats in obs.METRICS like sim02 (no silent caps)."""
+    from smaph_spark.obs import METRICS
     from smaph_spark.plans.star_queries import QUERIES
 
-    SCAN_METRICS.pop("sim03_ivf_topk", None)
-    SCAN_METRICS.pop("sim04_pq_topk", None)
+    METRICS.pop("sim03_ivf_topk", None)
+    METRICS.pop("sim04_pq_topk", None)
     QUERIES["sim03_ivf_topk"].fn(spark, SF).collect()
     QUERIES["sim04_pq_topk"].fn(spark, SF).collect()
-    ivf = SCAN_METRICS["sim03_ivf_topk"]
+    ivf = METRICS["sim03_ivf_topk"]
     assert ivf["candidates"] > 0 and 0 < ivf["scan_fraction"] <= 1
     assert ivf["probed_cell_fraction"] == 0.25  # 4 of 16 cells
-    pq = SCAN_METRICS["sim04_pq_topk"]
+    pq = METRICS["sim04_pq_topk"]
     assert pq["scan_fraction"] == 1.0 and pq["rerank_shortlist"] == 64
     assert pq["code_bits_per_vector"] == 64  # 16 subspaces x 4 bits
 

@@ -10,7 +10,7 @@ from smaph_spark.config import ERConfig
 from smaph_spark.operators.metrics import clusters_pairwise_prf, pairwise_prf
 from smaph_spark.pipeline import ERPipeline
 from smaph_spark.sources.synthetic import generate_files_corpus
-from tests.helpers import cap_counts, stage_metrics_resumed
+from tests.helpers import cap_counts, jobs_in_group, stage_metrics_resumed
 
 
 @pytest.fixture(scope="module")
@@ -91,7 +91,8 @@ def test_cluster_id_is_min_record_id(result):
 
 def test_checkpoint_resume_reproduces(spark, corpus, tmp_path_factory):
     """Resume from stage snapshots reproduces identical cluster output
-    (north_rule resumability)."""
+    (north_rule resumability), and each resumed stage reports the
+    ``rows`` its first run wrote to the stage's ``_metrics.json``."""
     files, _, _ = corpus
     ckpt = str(tmp_path_factory.mktemp("er_ckpt"))
     cfg = ERConfig()
@@ -101,6 +102,10 @@ def test_checkpoint_resume_reproduces(spark, corpus, tmp_path_factory):
     )
     res2 = ERPipeline(spark, cfg, checkpoint_dir=ckpt).run(files)
     assert stage_metrics_resumed(res2.stage_metrics), "second run should resume"
+    for stage in ("s1_normalized", "s2_blocks", "s3_pairs_scored",
+                  "s4_matches", "s5_clusters"):
+        assert (res2.stage_metrics[stage].get("rows")
+                == res1.stage_metrics[stage]["rows"]), stage
     second = sorted(
         (r["record_id"], r["cluster_id"]) for r in res2.clusters.collect()
     )
@@ -137,13 +142,15 @@ def _cap_reference(normalized, cfg):
     ))
 
 
-def test_block_cap_metrics_logged(spark, tmp_path):
+def test_block_cap_metrics_logged(spark, tmp_path, caplog):
     """Oversized blocks are salted/dropped with logged counts, never
     silently (reference logs binding caps,
-    DefaultBindingGenerator.java:135-136). The counts observed on the
-    key table equal ``cap_counts`` over the same key table, with
-    snapshots (observed by the stage-2 write) and without (observed by
-    the stage-2 checkpoint)."""
+    DefaultBindingGenerator.java:135-136): a run that drops blocks logs
+    exactly one WARNING, which carries its ``s2_block_caps``. The
+    counts observed on the key table equal ``cap_counts`` over the
+    same key table, with snapshots (observed by the stage-2 write) and
+    without (observed by the stage-2 checkpoint)."""
+    import logging
     # 90% of the files share a handful of hot paths: their name keys
     # are dropped, and near-duplicate clusters salt LSH band keys
     files_pdf, _, _ = generate_files_corpus(
@@ -154,8 +161,14 @@ def test_block_cap_metrics_logged(spark, tmp_path):
     bucket = F.pmod(F.xxhash64("repo", "path", "commit"), F.lit(5))
     history, delta = files.filter(bucket < 4), files.filter(bucket >= 4)
     for ckpt in (None, str(tmp_path)):
-        res = ERPipeline(spark, cfg, checkpoint_dir=ckpt).run(files)
+        caplog.clear()
+        with caplog.at_level(logging.INFO, logger="smaph_spark"):
+            res = ERPipeline(spark, cfg, checkpoint_dir=ckpt).run(files)
         caps = res.stage_metrics["s2_block_caps"]
+        warned = [r for r in caplog.records if r.name == "smaph_spark"
+                  and r.levelno >= logging.WARNING]
+        assert len(warned) == 1, (ckpt, warned)
+        assert warned[0].args[1]["s2_block_caps"] == caps, ckpt
         assert caps == _cap_reference(res.normalized, cfg), ckpt
         assert caps["salted_blocks"] > 0 and caps["dropped_blocks"] > 0
         assert caps["records_in_dropped_blocks"] > caps["dropped_blocks"]
@@ -641,17 +654,6 @@ def test_incremental_overlap_guard_index_and_skip(spark):
     assert res.clusters.count() == files.count()
 
 
-def _jobs_in_group(spark, group, fn):
-    """(fn(), number of Spark jobs fn started), counted per job group."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 #: Spark jobs measured at local[4] (the test session); the asserts allow
 #: 2 more for AQE's run-to-run jitter
 ER_RUN_JOBS, ER_RUN_NO_SNAPSHOT_JOBS, CC_ROUND_THEN_FINISH_JOBS = 19, 12, 24
@@ -679,9 +681,9 @@ def test_spark_job_counts(spark, tmp_path):
     files_pdf, _, _ = generate_files_corpus(n_clusters=80, seed=43)
     files = spark.createDataFrame(files_pdf)
     pipe = ERPipeline(spark, ERConfig(), checkpoint_dir=str(tmp_path))
-    _, n_run = _jobs_in_group(spark, "er_run", lambda: pipe.run(files))
+    _, n_run = jobs_in_group(spark, "er_run", lambda: pipe.run(files))
     assert n_run <= ER_RUN_JOBS + 2
-    _, n_plain = _jobs_in_group(
+    _, n_plain = jobs_in_group(
         spark, "er_run_no_snapshot", lambda: ERPipeline(spark, ERConfig()).run(files)
     )
     assert n_plain <= ER_RUN_NO_SNAPSHOT_JOBS + 2
@@ -692,7 +694,7 @@ def test_spark_job_counts(spark, tmp_path):
     edges = spark.createDataFrame(pairs, "left_id long, right_id long")
     recs = spark.createDataFrame([(i,) for i in range(100)], "record_id long")
     cfg = replace(ERConfig(), cc_local_threshold=3)
-    (_, hist), n_cc = _jobs_in_group(
+    (_, hist), n_cc = jobs_in_group(
         spark, "cc_round_then_finish",
         lambda: connected_components(edges, cfg, all_records=recs),
     )
@@ -710,7 +712,7 @@ def test_spark_job_counts(spark, tmp_path):
                         (sim_ivf_topk, SIM03_JOBS),
                         (sim_pq_topk, SIM04_JOBS),
                         (er_incremental_clusters, ER04_JOBS)):
-        _, n_q = _jobs_in_group(
+        _, n_q = jobs_in_group(
             spark, query.__name__, lambda: query(spark, SF).collect()
         )
         assert n_q <= jobs + 2, (query.__name__, n_q)

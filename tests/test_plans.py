@@ -215,3 +215,36 @@ def test_one_checkpoint_helper():
     }
     assert sites == {"session.py"}, sites
     assert ".count()" not in (root / "ops" / "similarity.py").read_text()
+
+
+def test_one_metrics_sink():
+    """Run metrics have one store and one logger: ``logging.getLogger(``
+    and module-level metrics dicts appear only in obs.py, and the two
+    old names perfbench and bench.py read are that store itself."""
+    import ast
+    import pathlib
+
+    import smaph_spark
+    from smaph_spark import obs
+    from smaph_spark.ops import dedup, similarity
+
+    root = pathlib.Path(smaph_spark.__file__).parent
+    loggers, stores = set(), set()
+    for p in root.rglob("*.py"):
+        src, name = p.read_text(), str(p.relative_to(root))
+        if "logging.getLogger(" in src:
+            loggers.add(name)
+        for node in ast.parse(src).body:
+            if isinstance(node, ast.Assign):
+                targets = node.targets
+            elif isinstance(node, ast.AnnAssign):
+                targets = [node.target]
+            else:
+                continue
+            if isinstance(node.value, ast.Dict) and any(
+                "METRICS" in getattr(t, "id", "") for t in targets
+            ):
+                stores.add(name)
+    assert loggers == {"obs.py"}, loggers
+    assert stores == {"obs.py"}, stores
+    assert dedup.CAP_METRICS is similarity.SCAN_METRICS is obs.METRICS

@@ -183,7 +183,8 @@ def test_heavy_hitters_exact_on_skewed_corpus(spark):
     order dependent; the verified OUTPUT must not be)."""
     import math
 
-    from smaph_spark.ops.sketches import SKETCH_METRICS, heavy_hitters
+    from smaph_spark.obs import METRICS
+    from smaph_spark.ops.sketches import heavy_hitters
 
     rows = (
         [("hot",)] * 3000 + [("warm",)] * 800
@@ -201,7 +202,7 @@ def test_heavy_hitters_exact_on_skewed_corpus(spark):
             ).collect()
         }
         assert got == expect, (parts, got)
-        m = SKETCH_METRICS["sk02test"]
+        m = METRICS["sk02test"]
         assert m["threshold"] == thr and m["candidates"] >= len(expect)
         # bounded state: candidate set is sketch-sized, not key-space-sized
         assert m["candidates"] <= m["mg_capacity"] * parts
@@ -212,7 +213,8 @@ def test_heavy_hitters_exact_boundary_threshold(spark):
     0.05 * 200 floats to 10.000000000000002 and a naive ceil drops the
     10-count key (round-4 review); the DuckDB oracle's DECIMAL
     arithmetic is exact, so the Spark side must be too."""
-    from smaph_spark.ops.sketches import SKETCH_METRICS, heavy_hitters
+    from smaph_spark.obs import METRICS
+    from smaph_spark.ops.sketches import heavy_hitters
 
     rows = [("edge",)] * 10 + [(f"k{i}",) for i in range(190)]
     df = spark.createDataFrame(rows, "event_type string")
@@ -220,7 +222,7 @@ def test_heavy_hitters_exact_boundary_threshold(spark):
         (r["event_type"], r["n"])
         for r in heavy_hitters(df, metrics_key="sk02edge").collect()
     }
-    assert SKETCH_METRICS["sk02edge"]["threshold"] == 10
+    assert METRICS["sk02edge"]["threshold"] == 10
     assert ("edge", 10) in got
 
 
@@ -228,12 +230,13 @@ def test_heavy_hitters_ignores_null_keys(spark):
     """NULL keys are excluded by contract on both engines (round-4
     review): a NULL-heavy corpus must not emit a NULL row, and the
     threshold is computed over non-null rows only."""
-    from smaph_spark.ops.sketches import SKETCH_METRICS, heavy_hitters
+    from smaph_spark.obs import METRICS
+    from smaph_spark.ops.sketches import heavy_hitters
 
     rows = [(None,)] * 50 + [("hot",)] * 30 + [(f"k{i}",) for i in range(20)]
     df = spark.createDataFrame(rows, "event_type string")
     got = heavy_hitters(df, min_freq_fraction=0.5, metrics_key="sk02null").collect()
-    assert SKETCH_METRICS["sk02null"]["rows"] == 50  # non-null only
+    assert METRICS["sk02null"]["rows"] == 50  # non-null only
     assert [(r["event_type"], r["n"]) for r in got] == [("hot", 30)]
 
 
