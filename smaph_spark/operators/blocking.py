@@ -21,6 +21,10 @@ WARNING when a block was dropped: the ER pipeline under
 ``er_pipeline`` (its ``s2_block_caps``) and each dd query under its own
 name.
 
+The key recipes live here once: ``lsh_band_keys`` (the ``L:`` family,
+also dd03's band keys) and ``bit_band_keys`` (the bit bands of a long
+signature: dd04, dd06 and both sides of sim02's bucket join).
+
 The cap is shared: the standalone band self-joins (dedup dd03
 ``minhash_lsh_pairs``, dd04 ``simhash_pairs``, dd06
 ``cosine_near_dup_lsh``, dd09 ``cdc_containment_pairs``) cap their
@@ -39,10 +43,42 @@ frame in a collect of its own.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from smaph_spark.config import ERConfig
+
+
+def lsh_band_keys(cfg: ERConfig) -> Column:
+    """THE MinHash band keys of a row's ``bands`` array:
+    ``"L:<i>:<h>"`` for band i with key h — tagged with the band index
+    so bands don't collide (the ER ``L:`` family and dedup dd03)."""
+    return F.zip_with(
+        F.col("bands"),
+        F.array([F.lit(i) for i in range(cfg.lsh_bands)]),
+        lambda h, i: F.concat(
+            F.lit("L:"), i.cast("string"), F.lit(":"), h.cast("string")
+        ),
+    )
+
+
+def bit_band_keys(
+    sig: str, n_bands: int, bits: int, probe: bool = False
+) -> Column:
+    """THE bit-band keys of a long signature column ``sig``:
+    ``"<i>:" + ((sig >>> bits*i) & mask)`` for band i < n_bands (dedup
+    dd04's SimHash chunks and dd06's / sim02's hyperplane bands).
+    ``probe`` adds, after each band's own key, the keys one bit-flip
+    away — sim02's multi-probed query side."""
+    mask = (1 << bits) - 1
+    keys = []
+    for i in range(n_bands):
+        base = F.shiftrightunsigned(sig, bits * i).bitwiseAND(F.lit(mask))
+        variants = [base]
+        if probe:
+            variants += [base.bitwiseXOR(F.lit(1 << j)) for j in range(bits)]
+        keys += [F.concat(F.lit(f"{i}:"), v.cast("string")) for v in variants]
+    return F.array(*keys)
 
 
 def generate_blocks(normalized: DataFrame, cfg: ERConfig) -> DataFrame:
@@ -54,23 +90,15 @@ def generate_blocks(normalized: DataFrame, cfg: ERConfig) -> DataFrame:
     name_key = F.array(
         F.concat(F.lit("N:"), F.col("lang"), F.lit(":"), F.col("name"))
     )
-    # tag each band key with its band index so bands don't collide;
     # empty/null content gets NO LSH keys (all empty files would
     # otherwise share one sentinel minhash and form a single quadratic
     # block — exact dups are still caught by the name family + sha
     # shortcut)
-    band_keys = F.zip_with(
-        F.col("bands"),
-        F.array([F.lit(i) for i in range(cfg.lsh_bands)]),
-        lambda h, i: F.concat(
-            F.lit("L:"), i.cast("string"), F.lit(":"), h.cast("string")
-        ),
-    )
     all_keys = F.concat(
         name_key,
-        F.when(F.coalesce(F.col("n_chars"), F.lit(0)) > 0, band_keys).otherwise(
-            F.array().cast("array<string>")
-        ),
+        F.when(
+            F.coalesce(F.col("n_chars"), F.lit(0)) > 0, lsh_band_keys(cfg)
+        ).otherwise(F.array().cast("array<string>")),
     )
     # No dropDuplicates (round-6): the key families are disjoint by
     # construction — the name key is "N:"-prefixed and unique per

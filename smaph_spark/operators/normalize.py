@@ -125,6 +125,14 @@ def make_minhash_udf(cfg: ERConfig):
     return minhash_udf.asNondeterministic()
 
 
+def minhash_signature(text: Column, cfg: ERConfig) -> Column:
+    """THE content fingerprint of ``text``: whitespace runs collapsed to
+    one space, lower-cased, through the seeded MinHash UDF — a
+    struct(minhash, bands). The ER normalize stage and dedup dd03 both
+    read it."""
+    return make_minhash_udf(cfg)(F.lower(F.regexp_replace(text, WS_RE, " ")))
+
+
 def record_id(prefix: str = "") -> Column:
     """THE record id of a ``files`` row: xxhash64(repo, path, commit).
     ``prefix`` reads one side of a labeled pair (``l_``/``r_``)."""
@@ -145,8 +153,6 @@ def normalize_files(files: DataFrame, cfg: ERConfig) -> DataFrame:
     is a no-op; the width tracks defaultParallelism, never a local
     constant."""
     files = widen(files)
-    minhash_udf = make_minhash_udf(cfg)
-    norm_content = F.lower(F.regexp_replace(F.col("content"), WS_RE, " "))
     base = (
         files.withColumn("record_id", record_id())
         .withColumn("content_sha", F.sha2(F.col("content"), 256))
@@ -157,7 +163,7 @@ def normalize_files(files: DataFrame, cfg: ERConfig) -> DataFrame:
         )
         .withColumn("n_chars", F.length("content"))
         .withColumn("n_tokens", F.size(F.split(F.trim(F.col("content")), WS_RE)))
-        .withColumn("_fp", minhash_udf(norm_content))
+        .withColumn("_fp", minhash_signature(F.col("content"), cfg))
         .withColumn("minhash", F.col("_fp.minhash"))
         .withColumn("bands", F.col("_fp.bands"))
         .drop("_fp")

@@ -10,16 +10,17 @@ Feature pack mirrors the reference's fixed-schema discipline
 (EntityFeaturePack.java:33-74 — static feature-name array, checked):
 FEATURE_COLS is the single source of truth for the scorer schema.
 
-JVM-vs-Python split: size ratios, lang and sha equality are pure
-`pyspark.sql.functions` (whole-stage codegen); the minhash Jaccard
-estimate and the two string-edit kernels (Jaro-Winkler on names,
-normalized Levenshtein on paths) cross into Arrow-batched numpy in one
-UDF, `_pair_kernel_udf` (functions/kernels.py, batch-vectorized DP).
+JVM-vs-Python split: the minhash Jaccard estimate
+(``minhash_agreement``, shared with dedup dd03), size ratios, lang and
+sha equality are `pyspark.sql.functions`; only the two string-edit
+kernels (Jaro-Winkler on names, normalized Levenshtein on paths) cross
+into Arrow-batched numpy, in one UDF, `_pair_kernel_udf`
+(functions/kernels.py, batch-vectorized DP). The signatures never cross
+Arrow (CIDR'22: every Python evaluation pays serialization both ways).
 """
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -43,35 +44,39 @@ FEATURE_COLS = [
 @F.pandas_udf(
     T.StructType(
         [
-            T.StructField("jaccard_est", T.DoubleType()),
             T.StructField("name_jw", T.DoubleType()),
             T.StructField("path_ned", T.DoubleType()),
         ]
     )
 )
 def _pair_kernel_udf(
-    l_mh: pd.Series, r_mh: pd.Series,
     l_name: pd.Series, r_name: pd.Series,
     l_path: pd.Series, r_path: pd.Series,
 ) -> pd.DataFrame:
-    """ALL Python-side pair features in ONE Arrow exchange: positional
-    minhash agreement (the unbiased MinHash estimator — one vectorized
-    numpy compare, vs ~50µs/pair of interpreted JVM array_intersect
-    hash-set builds measured as the pair stage's CPU hog), batched
-    Jaro-Winkler, batched normalized edit distance. One UDF = one
-    serialization round-trip instead of three plan nodes."""
-    A = np.stack(l_mh.to_numpy())
-    B = np.stack(r_mh.to_numpy())
+    """The Python-side pair features in ONE Arrow exchange: batched
+    Jaro-Winkler and batched normalized edit distance. One UDF = one
+    serialization round-trip instead of two plan nodes."""
     return pd.DataFrame(
         {
-            "jaccard_est": (A == B).mean(axis=1) if A.size else
-            np.zeros(len(l_mh)),
             "name_jw": K.jaro_winkler_batch(l_name.to_numpy(), r_name.to_numpy()),
             "path_ned": K.norm_edit_distance_batch(
                 l_path.to_numpy(), r_path.to_numpy()
             ),
         }
     )
+
+
+def minhash_agreement(l: str | Column, r: str | Column) -> Column:
+    """THE MinHash Jaccard estimate of two equal-width signatures: the
+    positional agreement rate (the unbiased MinHash estimator), an
+    integer count over the width as a double. A JVM expression —
+    ``zip_with`` + ``aggregate`` build no hash set, unlike
+    ``array_intersect`` — used by the ER pair features and dedup dd03."""
+    agree = F.aggregate(
+        F.zip_with(l, r, lambda a, b: (a == b).cast("int")),
+        F.lit(0), lambda acc, x: acc + x,
+    )
+    return F.try_divide(agree.cast("double"), F.size(l).cast("double"))
 
 
 def block_pairs(salted: DataFrame, *aggs: Column) -> DataFrame:
@@ -158,45 +163,31 @@ def attach_pair_features(
         # up to ~1 GB; at 10^12 rows set broadcast_payload=False and
         # pre-bucket `normalized` on record_id instead.
         payload = F.broadcast(payload)
-    df = attach_sides(pairs, payload)
+    df = attach_sides(pairs, payload).withColumn(
+        "_pf", _pair_kernel_udf("l_name", "r_name", "l_path", "r_path")
+    )
+
     # try_divide: empty/null content makes the denominators 0 — ANSI mode
     # (Spark 4 default) would throw DIVIDE_BY_ZERO on plain `/`
-    df = (
-        df.withColumn(
-            "_pf",
-            _pair_kernel_udf(
-                "l_minhash", "r_minhash", "l_name", "r_name",
-                "l_path", "r_path",
+    def ratio(c: str) -> Column:
+        return F.coalesce(
+            F.try_divide(
+                F.least(f"l_{c}", f"r_{c}").cast("double"),
+                F.greatest(f"l_{c}", f"r_{c}").cast("double"),
             ),
+            F.lit(0.0),
         )
-        .withColumn("jaccard_est", F.col("_pf.jaccard_est"))
-        .withColumn("name_jw", F.col("_pf.name_jw"))
-        .withColumn("path_ned", F.col("_pf.path_ned"))
-        .withColumn(
-            "size_ratio",
-            F.coalesce(
-                F.try_divide(
-                    F.least("l_n_chars", "r_n_chars").cast("double"),
-                    F.greatest("l_n_chars", "r_n_chars").cast("double"),
-                ),
-                F.lit(0.0),
-            ),
-        )
-        .withColumn(
-            "token_ratio",
-            F.coalesce(
-                F.try_divide(
-                    F.least("l_n_tokens", "r_n_tokens").cast("double"),
-                    F.greatest("l_n_tokens", "r_n_tokens").cast("double"),
-                ),
-                F.lit(0.0),
-            ),
-        )
-        .withColumn(
-            "same_lang", (F.col("l_lang") == F.col("r_lang")).cast("double")
-        )
-        .withColumn(
-            "sha_eq", (F.col("l_sha_pfx") == F.col("r_sha_pfx")).cast("double")
-        )
+
+    feats = {
+        "jaccard_est": minhash_agreement("l_minhash", "r_minhash"),
+        "name_jw": F.col("_pf.name_jw"),
+        "path_ned": F.col("_pf.path_ned"),
+        "size_ratio": ratio("n_chars"),
+        "token_ratio": ratio("n_tokens"),
+        "same_lang": (F.col("l_lang") == F.col("r_lang")).cast("double"),
+        "sha_eq": (F.col("l_sha_pfx") == F.col("r_sha_pfx")).cast("double"),
+    }
+    return df.select(
+        "left_id", "right_id", "block_key",
+        *[feats[c].alias(c) for c in FEATURE_COLS],
     )
-    return df.select("left_id", "right_id", "block_key", *FEATURE_COLS)

@@ -20,9 +20,13 @@ from pyspark.sql import types as T
 
 from smaph_spark import obs
 from smaph_spark.config import ERConfig
-from smaph_spark.operators.blocking import cap_and_salt_blocks
-from smaph_spark.operators.normalize import make_minhash_udf
-from smaph_spark.operators.pairs import attach_sides, block_pairs
+from smaph_spark.operators.blocking import (
+    bit_band_keys, cap_and_salt_blocks, lsh_band_keys,
+)
+from smaph_spark.operators.normalize import minhash_signature
+from smaph_spark.operators.pairs import (
+    attach_sides, block_pairs, minhash_agreement,
+)
 from smaph_spark.plans.star_queries import WS_RE, load, register, widen
 from smaph_spark.session import checkpoint
 
@@ -56,22 +60,12 @@ def bit_band_blocks(
     sigs: DataFrame, sig: str, n_bands: int, bits: int
 ) -> DataFrame:
     """sigs(record_id, <sig> long) -> blocks(record_id, block_key), one
-    row per band: ``"<i>:" + ((sig >>> bits*i) & mask)`` for i <
-    n_bands — dd04's 4×16-bit SimHash chunks and dd06's hyperplane
-    bands."""
-    mask = (1 << bits) - 1
-    keys = F.array(
-        *[
-            F.concat(
-                F.lit(f"{i}:"),
-                F.shiftrightunsigned(sig, bits * i)
-                .bitwiseAND(F.lit(mask))
-                .cast("string"),
-            )
-            for i in range(n_bands)
-        ]
+    row per band key (blocking.bit_band_keys) — dd04's 4×16-bit SimHash
+    chunks and dd06's hyperplane bands."""
+    return sigs.select(
+        "record_id",
+        F.explode(bit_band_keys(sig, n_bands, bits)).alias("block_key"),
     )
-    return sigs.select("record_id", F.explode(keys).alias("block_key"))
 
 
 # ---------------------------------------------------------------------------
@@ -213,11 +207,9 @@ def dd_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _doc_minhash(spark: SparkSession, sf_dir: str, cfg: ERConfig) -> DataFrame:
     d = widen(load(spark, sf_dir, "documents"))
-    mh = make_minhash_udf(cfg)
-    norm = F.lower(F.regexp_replace(F.col("text"), WS_RE, " "))
     return (
         d.filter(F.length(F.trim("text")) > 0)
-        .withColumn("_fp", mh(norm))
+        .withColumn("_fp", minhash_signature(F.col("text"), cfg))
         .select(
             "doc_id",
             F.col("_fp.minhash").alias("minhash"),
@@ -238,26 +230,12 @@ def minhash_lsh_pairs(fp: DataFrame, cfg: ERConfig) -> DataFrame:
         fp.select(F.col("doc_id").alias("record_id"), "minhash", "bands")
     )
     keys = fp.select(
-        "record_id",
-        F.explode(
-            F.zip_with(
-                "bands",
-                F.array([F.lit(i) for i in range(cfg.lsh_bands)]),
-                lambda h, i: F.concat(i.cast("string"), F.lit(":"), h.cast("string")),
-            )
-        ).alias("block_key"),
+        "record_id", F.explode(lsh_band_keys(cfg)).alias("block_key")
     )
     salted = capped_blocks("dd03_minhash_lsh_pairs", keys, cfg)
-    # positional agreement rate (the unbiased MinHash Jaccard estimate)
-    # as a JVM expression: no Arrow round trip per candidate pair
-    agree = F.aggregate(
-        F.zip_with("l_minhash", "r_minhash", lambda a, b: (a == b).cast("int")),
-        F.lit(0), lambda acc, x: acc + x,
-    )
     return (
         attach_sides(block_pairs(salted), fp.select("record_id", "minhash"))
-        .withColumn("jaccard_est", F.try_divide(
-            agree.cast("double"), F.size("l_minhash").cast("double")))
+        .withColumn("jaccard_est", minhash_agreement("l_minhash", "r_minhash"))
         .filter(F.col("jaccard_est") >= 0.5)
         .select(
             F.col("left_id").alias("a_doc"),

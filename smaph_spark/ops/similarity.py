@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from smaph_spark import obs
+from smaph_spark.operators.blocking import bit_band_keys
 from smaph_spark.plans.star_queries import load, register, widen
 from smaph_spark.session import checkpoint
 
@@ -161,8 +162,6 @@ def lsh_topk(e: DataFrame, query_filter, k: int = 5) -> DataFrame:
     (index stays one key per band per vector), so the candidate set
     grows ~(1 + band_bits)x while recall climbs the union of s-curves —
     the standard recall lever that does not require re-indexing."""
-    band_bits = 4
-    mask = (1 << band_bits) - 1
     # materialized once: both sides of the band join read the signature
     # without re-running the UDF, and the input counts ride this job
     sig, counts = checkpoint(
@@ -170,30 +169,13 @@ def lsh_topk(e: DataFrame, query_filter, k: int = 5) -> DataFrame:
         F.struct(F.count(F.lit(1)).alias("vectors"),
                  F.count_if(query_filter).alias("queries")),
     )
-
-    def band_keys(probe: bool):
-        keys = []
-        for b in range(8):
-            base = F.shiftrightunsigned("sig", band_bits * b).bitwiseAND(
-                F.lit(mask)
-            )
-            variants = [base]
-            if probe:
-                variants += [
-                    base.bitwiseXOR(F.lit(1 << i)) for i in range(band_bits)
-                ]
-            keys += [
-                F.concat(F.lit(f"{b}:"), v.cast("string")) for v in variants
-            ]
-        return F.explode(F.array(*keys)).alias("band_key")
-
     n = sig.select(
         F.col("vec_id").alias("n_vec"), F.col("emb").alias("n_emb"),
-        band_keys(False),
+        F.explode(bit_band_keys("sig", 8, 4)).alias("band_key"),
     )
     q = sig.filter(query_filter).select(
         F.col("vec_id").alias("q_vec"), F.col("emb").alias("q_emb"),
-        band_keys(True),
+        F.explode(bit_band_keys("sig", 8, 4, probe=True)).alias("band_key"),
     )
     cand = (
         q.join(n, "band_key")

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from smaph_spark.operators.normalize import _shingle_hashes
 from smaph_spark.plans.star_queries import WS_CHARS, WS_RE, load, register
 # (widen() deliberately NOT used here: the tx queries' split+partial-agg
 # stages are cheap enough that the widening shuffle of the text column
@@ -178,19 +179,14 @@ def make_fingerprint_udf():
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def fingerprint(texts: pd.Series) -> pd.Series:
         out = []
-        B = np.uint64(1099511628211)
         for t in texts:
             t = (t or "").lower()
-            data = np.frombuffer(t.encode("utf-8"), dtype=np.uint8).astype(np.uint64)
-            n = data.shape[0]
-            if n < k:
+            # texts shorter than one shingle have no fingerprint
+            if len(t.encode("utf-8")) < k:
                 out.append([])
                 continue
-            m = n - k + 1
-            h = np.zeros(m, dtype=np.uint64)
-            for j in range(k):
-                h = h * B + data[j : j + m]
-            if m <= window:
+            h = _shingle_hashes(t, k)
+            if h.shape[0] <= window:
                 sel = np.array([h.min()], dtype=np.uint64)
             else:
                 from numpy.lib.stride_tricks import sliding_window_view

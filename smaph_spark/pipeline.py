@@ -75,7 +75,6 @@ class ERPipeline:
         self.cfg = cfg or ERConfig()
         self.checkpoint_dir = checkpoint_dir
         self.scorer_model = scorer_model
-        self._metrics: dict = {}
         # scorer identity keys the snapshots too: a retrained model with
         # a coincidentally-equal threshold must not resume pair scores
         # produced by the old model (round-2 ADVICE). Spark ML stage
@@ -181,6 +180,9 @@ class ERPipeline:
     # -- stages ----------------------------------------------------------------
     def run(self, files: DataFrame) -> PipelineResult:
         cfg = self.cfg
+        # each run reports its own stages only: a resumed stage records
+        # no caps or CC iterations, so nothing may carry over
+        self._metrics: dict = {}
         if self.checkpoint_dir:
             self._input_fp = self._input_fingerprint(files)
 
@@ -229,6 +231,7 @@ class ERPipeline:
         effectively disabled (large ``max_block_size``) it is exact.
         """
         cfg = self.cfg
+        self._metrics = {}
         # history/delta record ids must be disjoint (the O(delta) key
         # union would keep an overlapping record twice, duplicating its
         # pairs) — verify up front instead of assuming. One narrow

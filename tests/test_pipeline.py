@@ -89,6 +89,30 @@ def test_cluster_id_is_min_record_id(result):
     assert bad == 0
 
 
+def test_jaccard_est_is_positional_agreement(result):
+    """ER's jaccard_est, a JVM expression, equals numpy's positional
+    agreement ``(A == B).mean()`` over the slim int32 signatures the
+    pair stage joins (the first ``pair_minhash_width`` slots masked to
+    31 bits) for every scored pair."""
+    import numpy as np
+
+    pipe, res = result
+    width = min(pipe.cfg.pair_minhash_width, pipe.cfg.num_minhash)
+    sigs = {
+        r["record_id"]: (
+            np.array(r["minhash"][:width], dtype=np.int64) & 0x7FFFFFFF
+        ).astype(np.int32)
+        for r in res.normalized.select("record_id", "minhash").collect()
+    }
+    rows = res.pairs_scored.select(
+        "left_id", "right_id", "jaccard_est"
+    ).collect()
+    assert rows
+    for r in rows:
+        want = (sigs[r["left_id"]] == sigs[r["right_id"]]).mean()
+        assert r["jaccard_est"] == want, (r, want)
+
+
 def test_checkpoint_resume_reproduces(spark, corpus, tmp_path_factory):
     """Resume from stage snapshots reproduces identical cluster output
     (north_rule resumability), and each resumed stage reports the
@@ -149,7 +173,10 @@ def test_block_cap_metrics_logged(spark, tmp_path, caplog):
     exactly one WARNING, which carries its ``s2_block_caps``. The
     counts observed on the key table equal ``cap_counts`` over the
     same key table, with snapshots (observed by the stage-2 write) and
-    without (observed by the stage-2 checkpoint)."""
+    without (observed by the stage-2 checkpoint). A second run of the
+    same pipeline object that resumes every stage reports only its own
+    stages: no caps and no WARNING, as a fresh pipeline over the same
+    snapshots."""
     import logging
     # 90% of the files share a handful of hot paths: their name keys
     # are dropped, and near-duplicate clusters salt LSH band keys
@@ -160,18 +187,33 @@ def test_block_cap_metrics_logged(spark, tmp_path, caplog):
     cfg = ERConfig(max_block_size=4, block_salt_buckets=2)
     bucket = F.pmod(F.xxhash64("repo", "path", "commit"), F.lit(5))
     history, delta = files.filter(bucket < 4), files.filter(bucket >= 4)
+
+    def warnings():
+        return [r for r in caplog.records if r.name == "smaph_spark"
+                and r.levelno >= logging.WARNING]
+
     for ckpt in (None, str(tmp_path)):
         caplog.clear()
+        pipe = ERPipeline(spark, cfg, checkpoint_dir=ckpt)
         with caplog.at_level(logging.INFO, logger="smaph_spark"):
-            res = ERPipeline(spark, cfg, checkpoint_dir=ckpt).run(files)
+            res = pipe.run(files)
         caps = res.stage_metrics["s2_block_caps"]
-        warned = [r for r in caplog.records if r.name == "smaph_spark"
-                  and r.levelno >= logging.WARNING]
+        warned = warnings()
         assert len(warned) == 1, (ckpt, warned)
         assert warned[0].args[1]["s2_block_caps"] == caps, ckpt
         assert caps == _cap_reference(res.normalized, cfg), ckpt
         assert caps["salted_blocks"] > 0 and caps["dropped_blocks"] > 0
         assert caps["records_in_dropped_blocks"] > caps["dropped_blocks"]
+
+        if ckpt:
+            caplog.clear()
+            with caplog.at_level(logging.INFO, logger="smaph_spark"):
+                again = pipe.run(files)
+            assert stage_metrics_resumed(again.stage_metrics)
+            assert "s2_block_caps" not in again.stage_metrics
+            assert not warnings(), warnings()
+            fresh = ERPipeline(spark, cfg, checkpoint_dir=ckpt).run(files)
+            assert again.stage_metrics.keys() == fresh.stage_metrics.keys()
 
         # the delta path caps the same union key table, so it logs the
         # same counts as the batch run over history ∪ delta

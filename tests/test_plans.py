@@ -82,25 +82,46 @@ def test_er05_banded_equi_join_only(spark):
     assert plan.count("BroadcastExchange") >= 1
 
 
+def _er_pair_plan(spark):
+    """Executed plan of the ER pair stage over a small corpus."""
+    cfg = ERConfig()
+    files, _, _ = generate_files_corpus(n_clusters=10, seed=3)
+    norm = normalize_files(spark.createDataFrame(files), cfg).drop("content")
+    salted, _ = cap_and_salt_blocks(generate_blocks(norm, cfg), cfg)
+    feat = attach_pair_features(generate_pairs(salted, cfg), norm, cfg)
+    return feat._jdf.queryExecution().executedPlan().toString()
+
+
 def test_er_pair_stage_payload_joins_broadcast(spark):
     """Under the default ERConfig both payload joins of the ER pair
     stage are map-side: the broadcast hint on the payload must survive
     attach_sides's per-side projection. Size-based broadcasting is off,
     so only the hint can produce them."""
-    cfg = ERConfig()
-    files, _, _ = generate_files_corpus(n_clusters=10, seed=3)
-    norm = normalize_files(spark.createDataFrame(files), cfg).drop("content")
-    salted, _ = cap_and_salt_blocks(generate_blocks(norm, cfg), cfg)
     key = "spark.sql.autoBroadcastJoinThreshold"
     old = spark.conf.get(key)
     spark.conf.set(key, "-1")
     try:
-        feat = attach_pair_features(generate_pairs(salted, cfg), norm, cfg)
-        plan = feat._jdf.queryExecution().executedPlan().toString()
+        plan = _er_pair_plan(spark)
     finally:
         spark.conf.set(key, old)
     assert plan.count("BroadcastHashJoin [left_id#") == 1, plan
     assert plan.count("BroadcastHashJoin [right_id#") == 1, plan
+
+
+def test_er_pair_stage_ships_no_signatures_to_python(spark):
+    """The ER pair stage's one Python UDF evaluation takes the four
+    strings of its two string kernels (names, paths); the MinHash
+    agreement is a JVM expression, so no signature column crosses
+    Arrow (CIDR'22)."""
+    import re
+
+    nodes = [l for l in _er_pair_plan(spark).splitlines()
+             if "ArrowEvalPython" in l and "_pair_kernel_udf(" in l]
+    assert len(nodes) == 1, nodes
+    args = re.search(r"_pair_kernel_udf\((.*?)\)#", nodes[0]).group(1)
+    names = [re.sub(r"#\d+L?$", "", a.strip()) for a in args.split(",")]
+    assert names == ["l_name", "r_name", "l_path", "r_path"], nodes[0]
+    assert "minhash" not in nodes[0], nodes[0]
 
 
 def test_er01_er02_read_no_documents_scan(spark):
@@ -215,6 +236,39 @@ def test_one_checkpoint_helper():
     }
     assert sites == {"session.py"}, sites
     assert ".count()" not in (root / "ops" / "similarity.py").read_text()
+
+
+def test_one_home_per_signature_recipe():
+    """Each signature recipe has one definition: only
+    normalize.minhash_signature builds the MinHash UDF, and only
+    blocking.bit_band_keys cuts a long signature into bit bands."""
+    import ast
+    import pathlib
+
+    import smaph_spark
+
+    root = pathlib.Path(smaph_spark.__file__).parent
+    sites = {"make_minhash_udf": set(), "shiftrightunsigned": set()}
+
+    def visit(node, where):
+        # each call is credited to its innermost enclosing function
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.FunctionDef):
+                visit(child, f"{where.split('.')[0]}.{child.name}")
+                continue
+            if isinstance(child, ast.Call):
+                f = child.func
+                name = getattr(f, "attr", getattr(f, "id", None))
+                if name in sites:
+                    sites[name].add(where)
+            visit(child, where)
+
+    for p in root.rglob("*.py"):
+        visit(ast.parse(p.read_text()), p.stem)
+    assert sites == {
+        "make_minhash_udf": {"normalize.minhash_signature"},
+        "shiftrightunsigned": {"blocking.bit_band_keys"},
+    }, sites
 
 
 def test_one_metrics_sink():
