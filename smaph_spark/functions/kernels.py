@@ -388,15 +388,16 @@ def _stem_tokens(s: str) -> list[str]:
     ]
 
 
-def fragmentation(bolds: Sequence[str], bold: str, power: float = 1.0) -> float:
-    """boldCount / (fragments**power + boldCount); fragments = shorter
-    bolds that are strict sublists of `bold`.
+def fragmentation(bolds: Sequence[str], bold: str) -> float:
+    """boldCount / (fragments + boldCount); fragments = shorter bolds
+    that are strict sublists of `bold`.
 
     Semantics of SmaphUtils.getFragmentation (:556-584). NOTE: the
     reference source applies Math.pow(fragmentsCount, 1.4), but its own
     committed goldens (SmaphUtilsTest.java:279-301, e.g. 3/7 and 1/5)
     are only reachable with exponent 1.0 — the tests encode the intended
-    semantics, so 1.0 is our default and the exponent is a parameter.
+    semantics, so the count enters unexponentiated (here, in
+    :func:`aggregation` and in both batch kernels).
     """
     tb = _stem_tokens(bold)
     bold_count = 0
@@ -409,12 +410,12 @@ def fragmentation(bolds: Sequence[str], bold: str, power: float = 1.0) -> float:
             frag_count += 1
     if bold_count == 0:
         return 0.0
-    return bold_count / (frag_count**power + bold_count)
+    return bold_count / (frag_count + bold_count)
 
 
-def aggregation(bolds: Sequence[str], bold: str, power: float = 1.0) -> float:
-    """boldCount / (containers**power + boldCount); containers = longer
-    bolds containing `bold` as a strict sublist
+def aggregation(bolds: Sequence[str], bold: str) -> float:
+    """boldCount / (containers + boldCount); containers = longer bolds
+    containing `bold` as a strict sublist
     (SmaphUtils.getAggregation, :595-622; exponent note as in
     :func:`fragmentation`, goldens SmaphUtilsTest.java:303-327)."""
     tb = _stem_tokens(bold)
@@ -428,7 +429,7 @@ def aggregation(bolds: Sequence[str], bold: str, power: float = 1.0) -> float:
             agg_count += 1
     if bold_count == 0:
         return 0.0
-    return bold_count / (agg_count**power + bold_count)
+    return bold_count / (agg_count + bold_count)
 
 
 def weighted_geometric_average(vals: Sequence[float], weights: Sequence[float]) -> float:
@@ -510,8 +511,9 @@ def accept_title(title: str) -> bool:
 # ---------------------------------------------------------------------------
 
 
-def jaro_winkler(a: str, b: str, prefix_weight: float = 0.1) -> float:
-    """Jaro-Winkler similarity in [0,1] (standard public definition)."""
+def jaro_winkler(a: str, b: str) -> float:
+    """Jaro-Winkler similarity in [0,1] (standard public definition,
+    prefix weight 0.1 as in :func:`jaro_winkler_batch`)."""
     if a == b:
         return 1.0
     la, lb = len(a), len(b)
@@ -548,7 +550,7 @@ def jaro_winkler(a: str, b: str, prefix_weight: float = 0.1) -> float:
             prefix += 1
         else:
             break
-    return jaro + prefix * prefix_weight * (1.0 - jaro)
+    return jaro + prefix * 0.1 * (1.0 - jaro)
 
 
 def jaro_winkler_batch(a: Sequence[str], b: Sequence[str]) -> np.ndarray:
@@ -798,13 +800,14 @@ def min_edit_dist_batch(
     return out
 
 
-def fragmentation_batch(
-    bolds_lists: Sequence[Sequence[str]], bolds: Sequence[str],
-    power: float = 1.0,
+def _bold_ratio_batch(
+    bolds_lists: Sequence[Sequence[str]], bolds: Sequence[str], related,
 ) -> np.ndarray:
-    """Batch fragmentation with a per-batch stem-token cache (bold
-    strings repeat heavily across rows, so stemming each distinct
-    string once dominates)."""
+    """THE batch loop of fragmentation and aggregation: per row,
+    boldCount / (related + boldCount), where ``related(t, tb)`` says a
+    list bold's stems ``t`` count against the row bold's stems ``tb``.
+    A per-batch stem-token cache (bold strings repeat heavily across
+    rows, so stemming each distinct string once dominates)."""
     cache: dict[str, list[str]] = {}
 
     def stems(s: str) -> list[str]:
@@ -816,44 +819,34 @@ def fragmentation_batch(
     for i, (lst, bold) in enumerate(zip(bolds_lists, bolds)):
         tb = stems(bold)
         bold_count = 0
-        frag_count = 0
+        rel_count = 0
         for b in lst:
             t = stems(b)
             if t == tb:
                 bold_count += 1
-            elif is_sub_token(t, tb):
-                frag_count += 1
+            elif related(t, tb):
+                rel_count += 1
         if bold_count:
-            out[i] = bold_count / (frag_count**power + bold_count)
+            out[i] = bold_count / (rel_count + bold_count)
     return out
+
+
+def fragmentation_batch(
+    bolds_lists: Sequence[Sequence[str]], bolds: Sequence[str]
+) -> np.ndarray:
+    """Batch :func:`fragmentation`: list bolds that are strict sublists
+    of the row bold."""
+    return _bold_ratio_batch(bolds_lists, bolds, is_sub_token)
 
 
 def aggregation_batch(
-    bolds_lists: Sequence[Sequence[str]], bolds: Sequence[str],
-    power: float = 1.0,
+    bolds_lists: Sequence[Sequence[str]], bolds: Sequence[str]
 ) -> np.ndarray:
-    """Batch aggregation (see fragmentation_batch)."""
-    cache: dict[str, list[str]] = {}
-
-    def stems(s: str) -> list[str]:
-        if s not in cache:
-            cache[s] = _stem_tokens(s)
-        return cache[s]
-
-    out = np.zeros(len(bolds), dtype=np.float64)
-    for i, (lst, bold) in enumerate(zip(bolds_lists, bolds)):
-        tb = stems(bold)
-        bold_count = 0
-        agg_count = 0
-        for b in lst:
-            t = stems(b)
-            if t == tb:
-                bold_count += 1
-            elif is_sub_token(tb, t):
-                agg_count += 1
-        if bold_count:
-            out[i] = bold_count / (agg_count**power + bold_count)
-    return out
+    """Batch :func:`aggregation`: list bolds that contain the row bold
+    as a strict sublist."""
+    return _bold_ratio_batch(
+        bolds_lists, bolds, lambda t, tb: is_sub_token(tb, t)
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -5,6 +5,14 @@ Reference analogue: SolutionComputer macro/micro P/R/F1 with TP/FP/FN
 RunBenchmark.printMetricsResultSet:240-247). Here the unit is the
 record pair (BASELINE.json: pairwise F1 ≥ 0.99 on labeled same-block
 pairs).
+
+Like the reference's one counting core, each count has one home here:
+``_confusion`` is the TP/FP/FN join of the pair metrics
+(``pairwise_prf``, ``grouped_prf``) and ``_contingency`` the
+clusters × gold cell table of the cluster metrics
+(``clusters_pairwise_prf``, ``bcubed_prf``). Each metric keeps its own
+empty-set rule: P = R = 0 in ``pairwise_prf``, BAT's 1.0 elsewhere
+(``_prf_from_counts``).
 """
 
 from __future__ import annotations
@@ -15,26 +23,33 @@ from pyspark.sql import functions as F
 from smaph_spark.session import checkpoint
 
 
-def pairwise_prf(predicted: DataFrame, gold: DataFrame) -> dict:
-    """predicted(left_id, right_id [, is_match]) vs
-    gold(left_id, right_id, is_match). Pairs are canonical
-    (left_id < right_id). Gold pairs missing from `predicted` count as
+def _confusion(predicted: DataFrame, gold: DataFrame, by: tuple) -> DataFrame:
+    """THE pair confusion count of every pair metric: predicted(*by,
+    left_id, right_id [, is_match]) full-outer-joined to gold(*by,
+    left_id, right_id, is_match) on all those keys, summed to
+    (*by, tp, fp, fn). Gold pairs missing from ``predicted`` count as
     negative predictions (blocking loss shows up as FN, mirroring the
     reference's upper-bound oracles that separate candidate loss from
     scorer loss — SmaphAnnotator.java:820-911)."""
+    keys = [*by, "left_id", "right_id"]
     pred = predicted
     if "is_match" in pred.columns:
         pred = pred.filter(F.col("is_match"))
-    pred = pred.select("left_id", "right_id").withColumn("pred", F.lit(True))
-    joined = gold.join(pred, ["left_id", "right_id"], "full_outer").select(
-        F.coalesce(F.col("is_match"), F.lit(False)).alias("gold"),
-        F.coalesce(F.col("pred"), F.lit(False)).alias("pred"),
+    pred = pred.select(*keys).withColumn("pred", F.lit(True))
+    g = F.coalesce(F.col("is_match"), F.lit(False))
+    p = F.coalesce(F.col("pred"), F.lit(False))
+    return gold.join(pred, keys, "full_outer").groupBy(*by).agg(
+        F.sum((p & g).cast("long")).alias("tp"),
+        F.sum((p & ~g).cast("long")).alias("fp"),
+        F.sum((~p & g).cast("long")).alias("fn"),
     )
-    row = joined.agg(
-        F.sum((F.col("pred") & F.col("gold")).cast("long")).alias("tp"),
-        F.sum((F.col("pred") & ~F.col("gold")).cast("long")).alias("fp"),
-        F.sum((~F.col("pred") & F.col("gold")).cast("long")).alias("fn"),
-    ).collect()[0]
+
+
+def pairwise_prf(predicted: DataFrame, gold: DataFrame) -> dict:
+    """predicted(left_id, right_id [, is_match]) vs
+    gold(left_id, right_id, is_match), canonical pairs
+    (left_id < right_id). An empty side scores P = R = 0."""
+    row = _confusion(predicted, gold, ()).collect()[0]
     tp, fp, fn = row["tp"] or 0, row["fp"] or 0, row["fn"] or 0
     p = tp / (tp + fp) if tp + fp else 0.0
     r = tp / (tp + fn) if tp + fn else 0.0
@@ -42,32 +57,35 @@ def pairwise_prf(predicted: DataFrame, gold: DataFrame) -> dict:
     return {"tp": tp, "fp": fp, "fn": fn, "precision": p, "recall": r, "f1": f1}
 
 
-def clusters_pairwise_prf(clusters: DataFrame, gold_clusters: DataFrame) -> dict:
-    """Pairwise P/R/F1 induced by two clusterings over the same records.
-    Computed via same-cluster self-join counts (no materialized pair
-    explosion for the agreement term: sum of C(n,2) per intersection
-    cell — all aggregations)."""
-    merged = clusters.alias("p").join(
-        gold_clusters.alias("g"), "record_id"
-    ).select(
-        F.col("p.cluster_id").alias("pc"), F.col("g.cluster_id").alias("gc")
+def _contingency(clusters: DataFrame, gold_clusters: DataFrame) -> DataFrame:
+    """THE contingency table of two clusterings (record_id, cluster_id):
+    one row per (pc, gc) cell with its record count n_cell."""
+    return (
+        clusters.alias("p").join(gold_clusters.alias("g"), "record_id")
+        .groupBy(F.col("p.cluster_id").alias("pc"),
+                 F.col("g.cluster_id").alias("gc"))
+        .agg(F.count("*").alias("n_cell"))
     )
 
-    def pairs_sum(df: DataFrame, cols: list[str]) -> int:
-        row = (
-            df.groupBy(*cols)
-            .agg(F.count("*").alias("n"))
-            .agg(F.sum(F.col("n") * (F.col("n") - 1) / 2).alias("s"))
-            .collect()[0]
-        )
-        return int(row["s"] or 0)
 
-    tp = pairs_sum(merged, ["pc", "gc"])
-    pred_pairs = pairs_sum(merged, ["pc"])
-    gold_pairs = pairs_sum(merged, ["gc"])
-    p = tp / pred_pairs if pred_pairs else 1.0
-    r = tp / gold_pairs if gold_pairs else 1.0
-    f1 = 2 * p * r / (p + r) if p + r else 0.0
+def clusters_pairwise_prf(clusters: DataFrame, gold_clusters: DataFrame) -> dict:
+    """Pairwise P/R/F1 induced by two clusterings over the same records,
+    with no pair materialized: the agreeing pairs are the sum of
+    C(n, 2) over the contingency cells, the predicted and gold pairs
+    the same sum over the cells' row and column totals. One grouping-
+    sets aggregation reads all three sums in one collect."""
+    totals = (
+        _contingency(clusters, gold_clusters)
+        .groupingSets([["pc", "gc"], ["pc"], ["gc"]], "pc", "gc")
+        .agg(F.grouping_id().alias("gid"), F.sum("n_cell").alias("n"))
+        .groupBy("gid")
+        .agg(F.sum(F.col("n") * (F.col("n") - 1) / 2).alias("s"))
+        .collect()
+    )
+    # grouping_id: 0 = the (pc, gc) cells, 1 = by pc alone, 2 = by gc alone
+    s = {r["gid"]: int(r["s"]) for r in totals}
+    tp, pred_pairs, gold_pairs = s.get(0, 0), s.get(1, 0), s.get(2, 0)
+    p, r, f1 = _prf_from_counts(tp, pred_pairs - tp, gold_pairs - tp)
     return {
         "tp_pairs": tp,
         "pred_pairs": pred_pairs,
@@ -114,25 +132,8 @@ def grouped_prf(
     distributed)."""
     import numpy as np
 
-    pred = predicted
-    if "is_match" in pred.columns:
-        pred = pred.filter(F.col("is_match"))
-    pred = pred.select(group_col, "left_id", "right_id").withColumn(
-        "pred", F.lit(True)
-    )
-    joined = gold.join(pred, [group_col, "left_id", "right_id"], "full_outer")
-    per_group = (
-        joined.select(
-            F.col(group_col).alias("g"),
-            F.coalesce(F.col("is_match"), F.lit(False)).alias("gold"),
-            F.coalesce(F.col("pred"), F.lit(False)).alias("p"),
-        )
-        .groupBy("g")
-        .agg(
-            F.sum((F.col("p") & F.col("gold")).cast("long")).alias("tp"),
-            F.sum((F.col("p") & ~F.col("gold")).cast("long")).alias("fp"),
-            F.sum((~F.col("p") & F.col("gold")).cast("long")).alias("fn"),
-        )
+    per_group = _confusion(predicted, gold, (group_col,)).withColumnRenamed(
+        group_col, "g"
     )
     # the driver collects ONE ROW PER GROUP for the bootstrap — fine for
     # benchmark group counts, unbounded against 10^8 query groups. Guard:
@@ -256,15 +257,10 @@ def bcubed_prf(clusters: DataFrame, gold_clusters: DataFrame) -> DataFrame:
 
     n_c, d_c = _coverage(clusters, "clusters")
     n_g, d_g = _coverage(gold_clusters, "gold_clusters")
-    merged = clusters.alias("p").join(
-        gold_clusters.alias("g"), "record_id"
-    ).select(
-        F.col("p.cluster_id").alias("pc"), F.col("g.cluster_id").alias("gc")
-    )
     # the joined record count rides the checkpoint of the cells, which
     # every later read (both size aggs, the final join) reuses
     cells, n_m = checkpoint(
-        merged.groupBy("pc", "gc").agg(F.count("*").alias("n_cell")),
+        _contingency(clusters, gold_clusters),
         F.coalesce(F.sum("n_cell"), F.lit(0)),
     )
     if not (n_c == d_c and n_g == d_g and n_c == n_g == n_m):

@@ -153,19 +153,21 @@ def normalize_files(files: DataFrame, cfg: ERConfig) -> DataFrame:
     is a no-op; the width tracks defaultParallelism, never a local
     constant."""
     files = widen(files)
-    base = (
-        files.withColumn("record_id", record_id())
-        .withColumn("content_sha", F.sha2(F.col("content"), 256))
-        .withColumn("basename", F.element_at(F.split(F.col("path"), "/"), -1))
-        .withColumn(
-            "name",
-            F.lower(F.regexp_replace(F.col("basename"), r"\.[A-Za-z0-9]+$", "")),
-        )
-        .withColumn("n_chars", F.length("content"))
-        .withColumn("n_tokens", F.size(F.split(F.trim(F.col("content")), WS_RE)))
-        .withColumn("_fp", minhash_signature(F.col("content"), cfg))
-        .withColumn("minhash", F.col("_fp.minhash"))
-        .withColumn("bands", F.col("_fp.bands"))
-        .drop("_fp")
+    basename = F.element_at(F.split(F.col("path"), "/"), -1)
+    # the signature struct is unpacked in a second select: naming the
+    # nondeterministic UDF call twice would evaluate it twice
+    derived = files.select(
+        "*",
+        record_id().alias("record_id"),
+        F.sha2(F.col("content"), 256).alias("content_sha"),
+        basename.alias("basename"),
+        F.lower(F.regexp_replace(basename, r"\.[A-Za-z0-9]+$", "")).alias("name"),
+        F.length("content").alias("n_chars"),
+        F.size(F.split(F.trim(F.col("content")), WS_RE)).alias("n_tokens"),
+        minhash_signature(F.col("content"), cfg).alias("_fp"),
     )
-    return base
+    return derived.select(
+        *[c for c in derived.columns if c != "_fp"],
+        F.col("_fp.minhash").alias("minhash"),
+        F.col("_fp.bands").alias("bands"),
+    )

@@ -6,6 +6,14 @@ input shape (BASELINE.json input_hint): repo=source, path=doc_id,
 commit=md5(text), content=text, plus doc_id, which the normalize stage
 carries through — then the five pipeline stages run unchanged
 (normalize → block → pair → score → cluster).
+
+The token-band queries (er03-er07) run over a deterministic graph on
+the same documents, so DuckDB can check them: same-(lang, source)
+documents whose token counts differ by at most ``_BAND_DELTA``. The
+Spark side builds it with one banded equi-join
+(``_banded_tokenjoin``); the DuckDB twins share one SQL prefix
+(``_TOKENBAND_LABELS_SQL``: the token table, the band predicate and
+the recursive label-min CTE).
 """
 
 from __future__ import annotations
@@ -142,28 +150,45 @@ def er_document_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _cluster_membership(run_document_er(spark, sf_dir))
 
 
-#: engine-vs-engine oracle for connected components itself (round-2
-#: VERDICT item 2): a DETERMINISTIC, SQL-expressible pair graph —
-#: same-(lang, source) docs whose whitespace token counts differ by <= 2
-#: — clustered by the pipeline's hash-min CC on the Spark side and by a
-#: recursive label-min CTE on the DuckDB side. The graph chains across
-#: token counts, so components are multi-hop (real transitive closure,
-#: not cliques).
-_ER03_SQL = rf"""
-    WITH RECURSIVE t AS (
+#: the ONE home of the token-band predicate (round-5 review: er04's
+#: delta generator had re-inlined these constants): pairs qualify iff
+#: same (lang, source) and |Δn_toks| <= _BAND_DELTA; the banded
+#: equi-join uses buckets of width _BAND_DELTA+1 with the b-side
+#: exploding k-1,k,k+1 so each qualifying pair matches EXACTLY one
+#: bucket key (no post-join dedup). Load-bearing for the er03/er04/er05
+#: oracles — the DuckDB twins below read the same constant.
+_BAND_DELTA = 2
+
+#: the token-band graph in DuckDB SQL: the non-empty token table ``t``
+#: and the band predicate over its self-join aliases ``a``/``b``
+_TOKENS_SQL = rf"""t AS (
       SELECT doc_id, lang, source,
              len(string_split_regex(trim(text), '{WS_RE}')) AS n_toks
-      FROM documents WHERE length(trim(text)) > 0),
+      FROM documents WHERE length(trim(text)) > 0)"""
+_BAND_SQL = ("a.lang = b.lang AND a.source = b.source"
+             f" AND abs(a.n_toks - b.n_toks) <= {_BAND_DELTA}")
+
+#: engine-vs-engine oracle prefix for connected components itself
+#: (round-2 VERDICT item 2): a DETERMINISTIC, SQL-expressible pair
+#: graph — same-(lang, source) docs whose whitespace token counts
+#: differ by <= _BAND_DELTA — clustered by the pipeline's hash-min CC
+#: on the Spark side and by this recursive label-min CTE on the DuckDB
+#: side, ending in labels(doc_id, cluster_id). The graph chains across
+#: token counts, so components are multi-hop (real transitive closure,
+#: not cliques). er03/er04 and er07 append their tails.
+_TOKENBAND_LABELS_SQL = f"""
+    WITH RECURSIVE {_TOKENS_SQL},
     edges AS (
       SELECT a.doc_id AS src, b.doc_id AS dst
-      FROM t a JOIN t b ON a.lang = b.lang AND a.source = b.source
-       AND abs(a.n_toks - b.n_toks) <= 2 AND a.doc_id <> b.doc_id),
+      FROM t a JOIN t b ON {_BAND_SQL} AND a.doc_id <> b.doc_id),
     walk(node, label) AS (
       SELECT doc_id, doc_id FROM t
       UNION
       SELECT e.src, w.label FROM edges e JOIN walk w ON w.node = e.dst),
     labels AS (
-      SELECT node AS doc_id, MIN(label) AS cluster_id FROM walk GROUP BY node)
+      SELECT node AS doc_id, MIN(label) AS cluster_id FROM walk GROUP BY node)"""
+
+_ER03_SQL = _TOKENBAND_LABELS_SQL + """
     SELECT cluster_id AS canonical_doc, COUNT(*) AS cluster_size,
            string_agg(doc_id, ',' ORDER BY doc_id) AS member_docs
     FROM labels GROUP BY cluster_id
@@ -186,16 +211,6 @@ def _tokenband_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "lang", "source",
         F.size(F.split(F.trim("text"), WS_RE)).alias("n_toks"),
     ))[0]
-
-
-#: the ONE home of the token-band predicate (round-5 review: er04's
-#: delta generator had re-inlined these constants): pairs qualify iff
-#: same (lang, source) and |Δn_toks| <= _BAND_DELTA; the banded
-#: equi-join uses buckets of width _BAND_DELTA+1 with the b-side
-#: exploding k-1,k,k+1 so each qualifying pair matches EXACTLY one
-#: bucket key (no post-join dedup). Load-bearing for the er03/er04/er05
-#: oracles — the DuckDB twins hardcode the same <= 2.
-_BAND_DELTA = 2
 
 
 def _banded_tokenjoin(a: DataFrame, b: DataFrame,
@@ -316,18 +331,14 @@ def er_tokenband_graph_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _membership_rows(labels.withColumnRenamed("record_id", "doc_id"))
 
 
-_ER05_SQL = rf"""
-    WITH t AS (
-      SELECT doc_id, lang, source,
-             len(string_split_regex(trim(text), '{WS_RE}')) AS n_toks
-      FROM documents WHERE length(trim(text)) > 0),
+_ER05_SQL = f"""
+    WITH {_TOKENS_SQL},
     g AS (
       SELECT lang, source, COUNT(*) AS n_records
       FROM t GROUP BY lang, source),
     cand AS (
       SELECT a.lang, a.source, COUNT(*) AS n_candidate_pairs
-      FROM t a JOIN t b ON a.lang = b.lang AND a.source = b.source
-       AND abs(a.n_toks - b.n_toks) <= 2 AND a.doc_id < b.doc_id
+      FROM t a JOIN t b ON {_BAND_SQL} AND a.doc_id < b.doc_id
       GROUP BY a.lang, a.source)
     SELECT g.lang, g.source, g.n_records,
            COALESCE(c.n_candidate_pairs, 0) AS n_candidate_pairs,
@@ -538,21 +549,7 @@ def er_greedy_step_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: DuckDB twin for er07 (pytest-pinned, window full): er03's recursive
 #: CTE labels vs a cross-cutting hash-bucket partition as gold, reduced
 #: to the one-row B-cubed summary via contingency-cell aggregation
-ER07_SQL = rf"""
-    WITH RECURSIVE t AS (
-      SELECT doc_id, lang, source,
-             len(string_split_regex(trim(text), '{WS_RE}')) AS n_toks
-      FROM documents WHERE length(trim(text)) > 0),
-    edges AS (
-      SELECT a.doc_id AS src, b.doc_id AS dst
-      FROM t a JOIN t b ON a.lang = b.lang AND a.source = b.source
-       AND abs(a.n_toks - b.n_toks) <= 2 AND a.doc_id <> b.doc_id),
-    walk(node, label) AS (
-      SELECT doc_id, doc_id FROM t
-      UNION
-      SELECT e.src, w.label FROM edges e JOIN walk w ON w.node = e.dst),
-    labels AS (
-      SELECT node AS doc_id, MIN(label) AS pc FROM walk GROUP BY node),
+ER07_SQL = _TOKENBAND_LABELS_SQL + """,
     gold AS (
       -- hash-bucketed groups CROSS-CUT the token-band clusters, so
       -- BOTH precision and recall are non-trivial at the gate (a
@@ -560,7 +557,7 @@ ER07_SQL = rf"""
       -- identically 1.0 -- round-5 review)
       SELECT doc_id, doc_id % 7 AS gc FROM t),
     merged AS (
-      SELECT l.pc, g.gc FROM labels l JOIN gold g USING (doc_id)),
+      SELECT l.cluster_id AS pc, g.gc FROM labels l JOIN gold g USING (doc_id)),
     cells AS (
       SELECT pc, gc, COUNT(*) AS n_cell FROM merged GROUP BY pc, gc),
     ps AS (SELECT pc, COUNT(*) AS n_p FROM merged GROUP BY pc),

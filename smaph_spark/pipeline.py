@@ -258,14 +258,20 @@ class ERPipeline:
                 "history first (e.g. dd07-style digest anti-join) or "
                 "run a full batch"
             )
+        hist_path = None
         if self.checkpoint_dir:
-            # the history/delta SPLIT is part of the snapshot key: two
-            # runs over the same union but different splits produce
-            # different s1_normalized (delta-only rows) and
-            # s3_pairs_scored (delta-touching pairs only)
-            self._input_fp = (
-                self._input_fingerprint(history_files.unionByName(new_files))
-                + "-new" + self._input_fingerprint(new_files)
+            # the history/delta SPLIT is the snapshot key: two runs over
+            # the same union but different splits produce different
+            # s1_normalized (delta-only rows) and s3_pairs_scored
+            # (delta-touching pairs only); the history and delta
+            # fingerprints tell the splits apart. The history's alone
+            # keys the block-key table shared across delta batches.
+            hist_fp = self._input_fingerprint(history_files)
+            self._input_fp = hist_fp + "-new" + self._input_fingerprint(new_files)
+            hist_path = os.path.join(
+                self.checkpoint_dir,
+                f"fp={cfg.fingerprint()}-hist={hist_fp}",
+                "s2_history_keys",
             )
         new_norm = self._load_or_compute(
             "s1_normalized",
@@ -280,14 +286,6 @@ class ERPipeline:
         # block_key on disk between runs). Only the delta's keys are
         # generated fresh; cap/salt counts still see the union, so
         # capping decisions match the full-batch run exactly.
-        hist_path = None
-        if self.checkpoint_dir:
-            hist_fp = self._input_fingerprint(history_files)
-            hist_path = os.path.join(
-                self.checkpoint_dir,
-                f"fp={cfg.fingerprint()}-hist={hist_fp}",
-                "s2_history_keys",
-            )
         hist_keys = self._load_or_compute(
             "s2_history_keys",
             lambda: generate_blocks(history_normalized, cfg)

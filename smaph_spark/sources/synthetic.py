@@ -34,6 +34,9 @@ _WORDS = (
 
 _COMMENT = {"py": "#", "java": "//", "js": "//", "go": "//", "md": ">"}
 
+#: lines per seed file and mutations per planted duplicate
+_N_LINES, _MUTATION_STRENGTH = 30, 3
+
 
 def _ident(rng: np.random.Generator) -> str:
     return "_".join(rng.choice(_WORDS, size=2, replace=True))
@@ -120,10 +123,7 @@ def _gen_cluster_rows(
 def generate_files_corpus_spark(
     spark,
     n_clusters: int,
-    n_lines: int = 30,
-    mutation_strength: int = 3,
     singleton_fraction: float = 0.5,
-    hot_path_fraction: float = 0.05,
     seed: int = 42,
 ):
     """Distributed corpus generation: clusters fan out over executors
@@ -137,8 +137,8 @@ def generate_files_corpus_spark(
             for ci in pdf["id"]:
                 rows.extend(
                     _gen_cluster_rows(
-                        seed, int(ci), n_lines, mutation_strength,
-                        singleton_fraction, hot_path_fraction,
+                        seed, int(ci), _N_LINES, _MUTATION_STRENGTH,
+                        singleton_fraction, hot_path_fraction=0.05,
                     )
                 )
             yield pd.DataFrame(
@@ -161,9 +161,7 @@ def generate_files_corpus_spark(
 def generate_files_corpus(
     n_clusters: int = 100,
     singleton_fraction: float = 0.5,
-    mutation_strength: int = 3,
     hot_path_fraction: float = 0.05,
-    n_lines: int = 30,
     seed: int = 42,
 ) -> tuple[pd.DataFrame, pd.DataFrame, pd.DataFrame]:
     """Returns (files, labeled_pairs, clusters_gold) pandas frames.
@@ -185,7 +183,7 @@ def generate_files_corpus(
             size = min(2 + int(rng.zipf(2.2)), 24)
         cluster_sizes.append(size)
         lang = _LANGS[int(rng.integers(0, len(_LANGS)))]
-        base = _base_content(rng, lang, n_lines)
+        base = _base_content(rng, lang, _N_LINES)
         stem = _ident(rng)
         hot = rng.random() < hot_path_fraction
         for m in range(size):
@@ -197,7 +195,7 @@ def generate_files_corpus(
                 path = f"{sub}/{stem}.{lang}"
             commit = hashlib.sha1(f"{seed}:{ci}:{m}".encode()).hexdigest()
             content = "\n".join(
-                base if m == 0 else _mutate(rng, base, lang, mutation_strength)
+                base if m == 0 else _mutate(rng, base, lang, _MUTATION_STRENGTH)
             )
             rows.append((repo, path, commit, lang, content))
             gold.append((repo, path, commit, ci))

@@ -1,13 +1,16 @@
 """Test-only references and fixture encoders: the exact twins and Python
-twins the package's operators are checked against, the image encoders
+twins the package's operators are checked against (CC, the pair and
+cluster metrics), the image encoders
 that build the decoders' test payloads, and the per-job-group Spark job
 counter the job budgets use. Nothing in the package calls them."""
 
 from __future__ import annotations
 
+import itertools
 import re
 import struct
 import zlib
+from collections import Counter
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -65,6 +68,85 @@ def exact_event_stats(events: DataFrame) -> DataFrame:
             "percentile_disc(0.95) WITHIN GROUP (ORDER BY value)"
         ).alias("exact_p95"),
     )
+
+
+def reference_components(edges, records) -> dict:
+    """Plain-Python union-find: {record: min record of its component}."""
+    comp = {r: {r} for r in records}
+    for a, b in edges:
+        if comp[a] is not comp[b]:
+            merged = comp[a] | comp[b]
+            for r in merged:
+                comp[r] = merged
+    return {r: min(c) for r, c in comp.items()}
+
+
+def reference_confusion(predicted, gold) -> tuple[int, int, int]:
+    """(tp, fp, fn) of ``(key, is_match)`` rows, by the full-outer-join
+    multiset rule the pair metrics use: predicted rows with a false
+    is_match are dropped; a key on both sides yields one (gold, True)
+    row per combination, a key on one side one row per row with the
+    other side False; a NULL gold label counts as False."""
+    pred = Counter(k for k, m in predicted if m)
+    gold_by: dict = {}
+    for k, m in gold:
+        gold_by.setdefault(k, []).append(bool(m))
+    tp = fp = fn = 0
+    for k in set(pred) | set(gold_by):
+        for g, p in itertools.product(gold_by.get(k, [False]),
+                                      [True] * pred[k] or [False]):
+            tp += g and p
+            fp += p and not g
+            fn += g and not p
+    return tp, fp, fn
+
+
+def reference_pairwise_prf(predicted, gold) -> dict:
+    """``metrics.pairwise_prf`` in plain Python (empty side: P = R = 0)."""
+    tp, fp, fn = reference_confusion(predicted, gold)
+    p = tp / (tp + fp) if tp + fp else 0.0
+    r = tp / (tp + fn) if tp + fn else 0.0
+    f1 = 2 * p * r / (p + r) if p + r else 0.0
+    return {"tp": tp, "fp": fp, "fn": fn, "precision": p, "recall": r, "f1": f1}
+
+
+def reference_clusters_pairwise_prf(clusters: dict, gold: dict) -> dict:
+    """``metrics.clusters_pairwise_prf`` by enumerating every record pair
+    of the records both {record: cluster} maps hold (empty: P = R = 1)."""
+    recs = sorted(clusters.keys() & gold.keys())
+    tp = pred_pairs = gold_pairs = 0
+    for a, b in itertools.combinations(recs, 2):
+        same_p, same_g = clusters[a] == clusters[b], gold[a] == gold[b]
+        tp += same_p and same_g
+        pred_pairs += same_p
+        gold_pairs += same_g
+    p = tp / pred_pairs if pred_pairs else 1.0
+    r = tp / gold_pairs if gold_pairs else 1.0
+    f1 = 2 * p * r / (p + r) if p + r else 0.0
+    return {"tp_pairs": tp, "pred_pairs": pred_pairs, "gold_pairs": gold_pairs,
+            "precision": p, "recall": r, "f1": f1}
+
+
+def reference_bcubed(clusters: dict, gold: dict) -> tuple:
+    """(n_records, precision, recall, f1) of B-cubed over two
+    {record: cluster} maps of the same records, record by record
+    (Bagga & Baldwin 1998); all None without records, as SQL sums over
+    no rows are NULL."""
+    members_p: dict = {}
+    members_g: dict = {}
+    for r in clusters:
+        members_p.setdefault(clusters[r], set()).add(r)
+        members_g.setdefault(gold[r], set()).add(r)
+    n = len(clusters)
+    if not n:
+        return None, None, None, None
+    ps = rs = 0.0
+    for r in clusters:
+        both = len(members_p[clusters[r]] & members_g[gold[r]])
+        ps += both / len(members_p[clusters[r]])
+        rs += both / len(members_g[gold[r]])
+    p, r = ps / n, rs / n
+    return n, p, r, 2 * p * r / (p + r)
 
 
 def clean_abbrev_py(s: str) -> str:

@@ -1,9 +1,19 @@
 """A9 parity: macro vs micro P/R/F1 + bootstrap std on a hand-built
-fixture (SolutionComputer.java:33-184, RunBenchmark.java:240-247)."""
+fixture (SolutionComputer.java:33-184, RunBenchmark.java:240-247), the
+B-cubed contract, and property tests of the four metrics against the
+plain-Python references in tests/helpers.py."""
 
 import pytest
+from hypothesis import Phase, given, settings
+from hypothesis import strategies as st
 
-from smaph_spark.operators.metrics import grouped_prf
+from smaph_spark.operators.metrics import (
+    bcubed_prf, clusters_pairwise_prf, grouped_prf, pairwise_prf,
+)
+from tests.helpers import (
+    reference_bcubed, reference_clusters_pairwise_prf, reference_components,
+    reference_confusion, reference_pairwise_prf,
+)
 
 
 def _fixture(spark):
@@ -168,3 +178,89 @@ def test_bcubed_rejects_null_record_ids(spark):
     )
     with _pytest.raises(ValueError, match="NULL record_id"):
         bcubed_prf(pred, gold)
+
+
+# --- property tests: small random clusterings --------------------------------
+# Graphs are unions of chains, stars and doubled pairs over a few
+# records (BTS, ICDE'24: chains and stars are CC's hard inputs); a
+# clustering is the graph's components, so singletons arise too.
+
+_N_RECORDS = 9
+#: no shrinking: each shrink step reruns Spark jobs, so a failure would
+#: take minutes to shrink; the drawn inputs are small enough to read
+_PHASES = (Phase.explicit, Phase.reuse, Phase.generate)
+
+
+@st.composite
+def _edges(draw):
+    edges = []
+    for _ in range(draw(st.integers(0, 3))):
+        kind = draw(st.sampled_from(["chain", "star", "pair"]))
+        ids = draw(st.lists(st.integers(0, _N_RECORDS - 1), min_size=2,
+                            max_size=_N_RECORDS, unique=True))
+        if kind == "chain":
+            edges += zip(ids, ids[1:])
+        elif kind == "star":
+            edges += [(ids[0], i) for i in ids[1:]]
+        else:
+            edges += [(ids[0], ids[1])] * 2  # the same pair twice
+    return edges
+
+
+@st.composite
+def _pair_rows(draw, labels):
+    """(group, left_id, right_id, is_match) rows, one per edge
+    (duplicates kept), canonical left_id < right_id."""
+    return [
+        (draw(st.integers(0, 2)), min(a, b), max(a, b), draw(labels))
+        for a, b in draw(_edges())
+    ]
+
+
+def _pairs_df(spark, rows):
+    return spark.createDataFrame(
+        rows, "grp long, left_id long, right_id long, is_match boolean"
+    )
+
+
+@settings(max_examples=6, deadline=None, phases=_PHASES)
+@given(_pair_rows(st.booleans()), _pair_rows(st.sampled_from([True, False, None])))
+def test_pair_metrics_match_python_reference(spark, pred_rows, gold_rows):
+    """pairwise_prf and grouped_prf's micro counts equal the
+    full-outer-join count in plain Python, duplicate pairs and NULL
+    gold labels included."""
+    pred, gold = _pairs_df(spark, pred_rows), _pairs_df(spark, gold_rows)
+    flat = pairwise_prf(pred.drop("grp"), gold.drop("grp"))
+    assert flat == reference_pairwise_prf(
+        [((l, r), m) for _, l, r, m in pred_rows],
+        [((l, r), m) for _, l, r, m in gold_rows],
+    )
+    grouped = grouped_prf(pred, gold, "grp", n_bootstrap=0)
+    keyed = ([((g, l, r), m) for g, l, r, m in pred_rows],
+             [((g, l, r), m) for g, l, r, m in gold_rows])
+    assert (grouped["tp"], grouped["fp"], grouped["fn"]) == \
+        reference_confusion(*keyed)
+    groups = {g for g, *_, m in pred_rows if m} | {g for g, *_ in gold_rows}
+    assert grouped["n_groups"] == len(groups)
+
+
+@settings(max_examples=4, deadline=None, phases=_PHASES)
+@given(_edges(), _edges(), st.integers(0, _N_RECORDS))
+def test_cluster_metrics_match_python_reference(spark, pred_edges,
+                                                gold_edges, n):
+    """clusters_pairwise_prf and bcubed_prf over the components of two
+    random graphs on the first ``n`` records equal their record-by-
+    record references."""
+    recs = range(n)
+    pred = reference_components([e for e in pred_edges if max(e) < n], recs)
+    gold = reference_components([e for e in gold_edges if max(e) < n], recs)
+    schema = "record_id long, cluster_id long"
+    pred_df = spark.createDataFrame(sorted(pred.items()), schema)
+    gold_df = spark.createDataFrame(sorted(gold.items()), schema)
+    assert clusters_pairwise_prf(pred_df, gold_df) == \
+        reference_clusters_pairwise_prf(pred, gold)
+    row = bcubed_prf(pred_df, gold_df).collect()[0]
+    want = reference_bcubed(pred, gold)
+    assert row["n_records"] == want[0]
+    for got, ref in zip(row[1:], want[1:]):
+        assert got == (None if ref is None else pytest.approx(ref, abs=2e-6))

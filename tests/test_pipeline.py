@@ -10,7 +10,9 @@ from smaph_spark.config import ERConfig
 from smaph_spark.operators.metrics import clusters_pairwise_prf, pairwise_prf
 from smaph_spark.pipeline import ERPipeline
 from smaph_spark.sources.synthetic import generate_files_corpus
-from tests.helpers import cap_counts, jobs_in_group, stage_metrics_resumed
+from tests.helpers import (
+    cap_counts, jobs_in_group, reference_components, stage_metrics_resumed,
+)
 
 
 @pytest.fixture(scope="module")
@@ -340,17 +342,6 @@ def test_no_snapshot_run_caches_nothing(spark):
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
-def _reference_components(edges, records):
-    """Plain-Python union-find: {record: min record of its component}."""
-    comp = {r: {r} for r in records}
-    for a, b in edges:
-        if comp[a] is not comp[b]:
-            merged = comp[a] | comp[b]
-            for r in merged:
-                comp[r] = merged
-    return {r: min(c) for r, c in comp.items()}
-
-
 @pytest.mark.parametrize("threshold", [0, 3, 100_000],
                          ids=["rounds", "round_then_finish", "union_find"])
 def test_cc_local_and_distributed_paths_agree(spark, threshold):
@@ -375,7 +366,7 @@ def test_cc_local_and_distributed_paths_agree(spark, threshold):
     cfg = replace(ERConfig(), cc_local_threshold=threshold)
     labels, hist = connected_components(edges, cfg, all_records=recs)
     got = {r["record_id"]: r["cluster_id"] for r in labels.collect()}
-    assert got == _reference_components(pairs, records)
+    assert got == reference_components(pairs, records)
 
     assert hist[-1] == {"converged": True}
     # the observed counts: the same history as counting each checkpoint
@@ -648,6 +639,39 @@ def test_file_backed_splits_fingerprint_differently(spark, tmp_path):
     assert fp_a == ERPipeline._input_fingerprint(base.filter(bucket < 4))
 
 
+def test_run_incremental_fingerprints_each_input_once(spark, tmp_path,
+                                                     monkeypatch):
+    """With snapshots, run_incremental fingerprints the history and the
+    delta once each: together they key the run's snapshots, and the
+    history's alone keys the shared block-key table. No fingerprint of
+    their union is taken (for in-memory inputs, an aggregation job over
+    all the history), and only the shared table's directory carries
+    ``-hist=``."""
+    import os
+
+    files_pdf, _, _ = generate_files_corpus(n_clusters=10, seed=56)
+    files = spark.createDataFrame(files_pdf)
+    bucket = F.pmod(F.xxhash64("repo", "path", "commit"), F.lit(5))
+    history, delta = files.filter(bucket < 4), files.filter(bucket >= 4)
+    hist_res = ERPipeline(spark, ERConfig()).run(history)
+    calls = []
+    fingerprint = ERPipeline._input_fingerprint
+
+    def counting(df):
+        calls.append(df)
+        return fingerprint(df)
+
+    monkeypatch.setattr(ERPipeline, "_input_fingerprint", staticmethod(counting))
+    ERPipeline(spark, ERConfig(), checkpoint_dir=str(tmp_path)).run_incremental(
+        history, delta, hist_res.clusters,
+        history_normalized=hist_res.normalized,
+    )
+    assert len(calls) == 2
+    shared = [d for d in os.listdir(tmp_path) if "-hist=" in d]
+    assert len(shared) == 1
+    assert os.listdir(tmp_path / shared[0]) == ["s2_history_keys"]
+
+
 def test_incremental_rejects_history_delta_overlap(spark):
     """Round-4 review: the O(delta) blocking path assumes disjoint
     history/delta record ids — an overlapping record must raise, not
@@ -703,6 +727,8 @@ ER_RUN_JOBS, ER_RUN_NO_SNAPSHOT_JOBS, CC_ROUND_THEN_FINISH_JOBS = 19, 12, 24
 #: sf0.001
 DD03_JOBS, DD09_JOBS, SIM04_JOBS = 9, 11, 11
 SIM02_JOBS, SIM03_JOBS, ER04_JOBS = 8, 28, 16
+#: clusters_pairwise_prf of the module's ER run against its gold
+CLUSTERS_PRF_JOBS = 5
 
 
 def test_spark_job_counts(spark, tmp_path):
@@ -758,6 +784,19 @@ def test_spark_job_counts(spark, tmp_path):
             spark, query.__name__, lambda: query(spark, SF).collect()
         )
         assert n_q <= jobs + 2, (query.__name__, n_q)
+
+
+def test_clusters_pairwise_prf_job_budget(spark, corpus, result):
+    """clusters_pairwise_prf reads its three pair sums in one collect,
+    so the clusters x gold join runs once, not once per sum."""
+    _, _, gold_ids = corpus
+    _, res = result
+    m, n = jobs_in_group(
+        spark, "clusters_pairwise_prf",
+        lambda: clusters_pairwise_prf(res.clusters, gold_ids),
+    )
+    assert m["f1"] >= 0.99, m
+    assert n <= CLUSTERS_PRF_JOBS + 2, n
 
 
 def test_repeated_calls_compile_no_new_code(spark, monkeypatch):

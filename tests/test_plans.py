@@ -208,16 +208,25 @@ def test_python_udfs_run_once_per_call(spark):
     """Each Python UDF call is evaluated by one ArrowEvalPython node
     over all the jobs one query call runs (CIDR'22: every evaluation
     pays an Arrow round trip): dd03/dd04/sim02 materialize their
-    signatures once for both sides of the band join, and sim03's cell
+    signatures once for both sides of the band join, sim03's cell
     UDFs are nondeterministic, so the cell join's inferred not-null
-    filter cannot copy them."""
-    for name in ("dd03_minhash_lsh_pairs", "dd04_simhash_pairs",
-                 "sim02_lsh_topk", "sim03_ivf_topk", "sim04_pq_topk"):
-        calls = _python_udf_evals(
-            spark, lambda: QUERIES[name].fn(spark, SF).collect()
-        )
+    filter cannot copy them, and normalize_files names its signature
+    UDF once, unpacking the struct in a second select."""
+    files, _, _ = generate_files_corpus(n_clusters=10, seed=3)
+    norm = normalize_files(spark.createDataFrame(files), ERConfig())
+    builds = {name: QUERIES[name].fn for name in (
+        "dd03_minhash_lsh_pairs", "dd04_simhash_pairs",
+        "sim02_lsh_topk", "sim03_ivf_topk", "sim04_pq_topk")}
+    builds["normalize_files"] = lambda spark, sf: norm
+    for name, build in builds.items():
+        calls = _python_udf_evals(spark, lambda: build(spark, SF).collect())
         assert calls, name
         assert max(calls.values()) == 1, (name, calls)
+    assert norm.columns == [
+        "repo", "path", "commit", "lang", "content", "record_id",
+        "content_sha", "basename", "name", "n_chars", "n_tokens",
+        "minhash", "bands",
+    ]
 
 
 def test_one_checkpoint_helper():
@@ -302,3 +311,24 @@ def test_one_metrics_sink():
     assert loggers == {"obs.py"}, loggers
     assert stores == {"obs.py"}, stores
     assert dedup.CAP_METRICS is similarity.SCAN_METRICS is obs.METRICS
+
+
+def test_one_home_per_twin_recipe():
+    """The DuckDB token-band graph has one definition: er_docs.py spells
+    one recursive CTE and one band predicate, built from _BAND_DELTA,
+    which every twin reads; metrics.py has one pair confusion join and
+    one clusters x gold join."""
+    import pathlib
+
+    from smaph_spark.operators import metrics
+    from smaph_spark.ops import er_docs
+
+    src = pathlib.Path(er_docs.__file__).read_text()
+    assert src.count("WITH RECURSIVE") == 1
+    assert src.count("abs(a.n_toks - b.n_toks)") == 1
+    band = f"abs(a.n_toks - b.n_toks) <= {er_docs._BAND_DELTA}"
+    for sql in (er_docs._ER03_SQL, er_docs._ER05_SQL, er_docs.ER07_SQL):
+        assert sql.count(band) == 1
+    msrc = pathlib.Path(metrics.__file__).read_text()
+    assert msrc.count('"full_outer"') == 1
+    assert msrc.count('gold_clusters.alias("g")') == 1
