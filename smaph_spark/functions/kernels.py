@@ -10,6 +10,10 @@ layer can call them from Arrow-batched pandas UDFs (no per-row Python
 at the Spark row level; the batch variants vectorize the DP across the
 whole Arrow batch).
 
+The content fingerprint is not here: its k-char shingle hash has one
+home, ``operators.normalize._shingle_hashes``, which the ER pipeline's
+MinHash, dd03 and tx04 share.
+
 No code is copied from the reference (Java, different algorithms); only
 input/output behavior is preserved, verified by the golden values in
 ``tests/test_kernels.py`` (ported from ``SmaphUtilsTest.java``).
@@ -49,8 +53,6 @@ __all__ = [
     "stem_word",
     "jaro_winkler",
     "jaro_winkler_batch",
-    "shingles",
-    "jaccard",
 ]
 
 # ---------------------------------------------------------------------------
@@ -96,7 +98,8 @@ def levenshtein_batch(a: Sequence[str], b: Sequence[str]) -> np.ndarray:
     vectorized ACROSS the batch (numpy ops over the batch axis), so a
     pandas UDF wrapping this does O(maxlen^2) numpy calls per Arrow
     batch instead of per-row Python DP.  Intended for short fields
-    (tokens, paths, names); long content is compared via shingles.
+    (tokens, paths, names); long content is compared by MinHash over
+    ``normalize._shingle_hashes``.
     """
     a = ["" if x is None else str(x) for x in a]
     b = ["" if x is None else str(x) for x in b]
@@ -506,8 +509,7 @@ def accept_title(title: str) -> bool:
 
 
 # ---------------------------------------------------------------------------
-# Similarity kernels new to the ER graft (north_star): Jaro-Winkler,
-# char shingles, Jaccard.
+# Similarity kernel new to the ER graft (north_star): Jaro-Winkler.
 # ---------------------------------------------------------------------------
 
 
@@ -623,48 +625,6 @@ def jaro_winkler_batch(a: Sequence[str], b: Sequence[str]) -> np.ndarray:
     out[m == 0] = 0.0
     out[exact] = 1.0
     return out
-
-
-def shingles(text: str, k: int = 5) -> set[int]:
-    """Set of 64-bit hashes of the k-char shingles of `text` (content
-    fingerprint for Jaccard / MinHash). Deterministic (no PYTHONHASHSEED
-    dependence): polynomial rolling hash mod 2^61-1."""
-    if text is None:
-        return set()
-    n = len(text)
-    if n == 0:
-        return set()
-    if n < k:
-        return {_poly_hash(text)}
-    MOD = (1 << 61) - 1
-    BASE = 1_000_003
-    power = pow(BASE, k - 1, MOD)
-    h = 0
-    out = set()
-    for i, c in enumerate(text):
-        h = (h * BASE + ord(c)) % MOD
-        if i >= k - 1:
-            out.add(h)
-            h = (h - ord(text[i - k + 1]) * power) % MOD
-    return out
-
-
-def _poly_hash(s: str) -> int:
-    MOD = (1 << 61) - 1
-    BASE = 1_000_003
-    h = 0
-    for c in s:
-        h = (h * BASE + ord(c)) % MOD
-    return h
-
-
-def jaccard(a: set, b: set) -> float:
-    if not a and not b:
-        return 1.0
-    if not a or not b:
-        return 0.0
-    inter = len(a & b)
-    return inter / (len(a) + len(b) - inter)
 
 
 # ---------------------------------------------------------------------------

@@ -30,12 +30,14 @@ def _confusion(predicted: DataFrame, gold: DataFrame, by: tuple) -> DataFrame:
     (*by, tp, fp, fn). Gold pairs missing from ``predicted`` count as
     negative predictions (blocking loss shows up as FN, mirroring the
     reference's upper-bound oracles that separate candidate loss from
-    scorer loss — SmaphAnnotator.java:820-911)."""
+    scorer loss — SmaphAnnotator.java:820-911). A pair predicted more
+    than once counts once, as in the reference's candidate HashSets
+    (DefaultBindingGenerator.java:123-127)."""
     keys = [*by, "left_id", "right_id"]
     pred = predicted
     if "is_match" in pred.columns:
         pred = pred.filter(F.col("is_match"))
-    pred = pred.select(*keys).withColumn("pred", F.lit(True))
+    pred = pred.select(*keys).distinct().withColumn("pred", F.lit(True))
     g = F.coalesce(F.col("is_match"), F.lit(False))
     p = F.coalesce(F.col("pred"), F.lit(False))
     return gold.join(pred, keys, "full_outer").groupBy(*by).agg(

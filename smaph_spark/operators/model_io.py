@@ -29,6 +29,11 @@ from pyspark.sql import functions as F
 
 from smaph_spark.config import ERConfig
 from smaph_spark.operators.pairs import FEATURE_COLS
+from smaph_spark.operators.scoring import (
+    apply_normalizer, check_model_family, fit_normalizer, gbt_score,
+    scorer_stages, sweep_threshold, train_gbt_scorer, train_linear_scorer,
+    with_label,
+)
 from smaph_spark.session import checkpoint
 
 
@@ -115,9 +120,7 @@ def labeled_pair_features(
     normalized = normalize_files(files, cfg).drop("content")
     salted, _ = cap_and_salt_blocks(generate_blocks(normalized, cfg), cfg)
     feat = attach_pair_features(generate_pairs(salted, cfg), normalized, cfg)
-    return feat.join(labeled_ids, ["left_id", "right_id"]).withColumn(
-        "label", F.col("is_match").cast("double")
-    )
+    return with_label(feat.join(labeled_ids, ["left_id", "right_id"]))
 
 
 # ---------------------------------------------------------------------------
@@ -153,51 +156,27 @@ def tune_gbt_scorer(
     report) where report records per-subset CV metrics — the analogue
     of the reference's printed tune table."""
     from pyspark.ml import Pipeline
-    from pyspark.ml.classification import GBTClassifier
     from pyspark.ml.evaluation import BinaryClassificationEvaluator
-    from pyspark.ml.feature import VectorAssembler
     from pyspark.ml.tuning import CrossValidator, ParamGridBuilder
 
-    from smaph_spark.operators.scoring import (
-        linear_classifier, make_scaler_stage,
-    )
-
-    if model_family not in ("gbt", "linear"):
-        raise ValueError(f"unknown model_family {model_family!r}")
     subsets = feature_subsets or DEFAULT_FEATURE_SUBSETS
-    train = labeled_feat
-    if "label" not in train.columns:
-        train = train.withColumn("label", F.col("is_match").cast("double"))
+    train = with_label(labeled_feat)
     evaluator = BinaryClassificationEvaluator(
         labelCol="label", metricName="areaUnderPR"
     )
+    axes = {
+        "gbt": {"maxDepth": list(max_depths), "maxIter": list(max_iters)},
+        "linear": {"regParam": [0.001, 0.01, 0.1],
+                   "elasticNetParam": [0.0, 0.5]},
+    }
     best = None
     report = {"subsets": [], "model_family": model_family}
     for cols in subsets:
-        if model_family == "gbt":
-            assembler = VectorAssembler(inputCols=list(cols), outputCol="features")
-            gbt = GBTClassifier(
-                labelCol="label", featuresCol="features", seed=42
-            )
-            grid = (
-                ParamGridBuilder()
-                .addGrid(gbt.maxDepth, list(max_depths))
-                .addGrid(gbt.maxIter, list(max_iters))
-                .build()
-            )
-            stages = [assembler, gbt]
-        else:
-            assembler = VectorAssembler(inputCols=list(cols),
-                                        outputCol="raw_features")
-            scaler = make_scaler_stage(normalizer)
-            lr = linear_classifier(labelCol="label", featuresCol="features")
-            grid = (
-                ParamGridBuilder()
-                .addGrid(lr.regParam, [0.001, 0.01, 0.1])
-                .addGrid(lr.elasticNetParam, [0.0, 0.5])
-                .build()
-            )
-            stages = [assembler, scaler, lr]
+        stages, est = scorer_stages(model_family, cols, normalizer)
+        builder = ParamGridBuilder()
+        for name, values in axes[model_family].items():
+            builder.addGrid(est.getParam(name), values)
+        grid = builder.build()
         cv = CrossValidator(
             estimator=Pipeline(stages=stages),
             estimatorParamMaps=grid,
@@ -234,12 +213,9 @@ def train_default_scorer(spark: SparkSession, cfg: ERConfig | None = None,
     sidecar stats table and, for the linear family, the in-pipeline
     scaler stage. Returns (model, threshold, normalizer_stats, report)."""
     from smaph_spark.operators.normalize import record_id
-    from smaph_spark.operators.scoring import (
-        fit_normalizer, gbt_score, sweep_threshold, train_gbt_scorer,
-        train_linear_scorer,
-    )
     from smaph_spark.sources.synthetic import generate_files_corpus
 
+    check_model_family(model_family)
     cfg = cfg or ERConfig()
     files_pdf, labeled_pdf, _ = generate_files_corpus(
         n_clusters=n_clusters, seed=seed
@@ -292,8 +268,6 @@ def dump_examples_libsvm(
     lines are built with JVM expressions and written through the text
     sink; the per-group sort becomes sortWithinPartitions after
     repartitioning by the group key."""
-    from smaph_spark.operators.scoring import apply_normalizer
-
     cols = feature_cols or FEATURE_COLS
     df = labeled_feat
     if zscore_stats:

@@ -142,20 +142,49 @@ def apply_normalizer(df: DataFrame, kind: str, stats: dict) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def with_label(labeled_feat: DataFrame) -> DataFrame:
+    """``label`` = ``is_match`` as a double: the column every scorer fit
+    and the tune's evaluator read."""
+    return labeled_feat.withColumn("label", F.col("is_match").cast("double"))
+
+
+def check_model_family(family: str) -> None:
+    """Raise ``ValueError`` unless :func:`scorer_stages` builds
+    ``family`` — never a silent default family."""
+    if family not in ("gbt", "linear"):
+        raise ValueError(f"unknown model_family {family!r}")
+
+
+def scorer_stages(family: str, cols: list[str], normalizer: str = "zscore"):
+    """THE estimator recipe of every scorer fit (the single fits below
+    and ``model_io.tune_gbt_scorer``'s grid, the TuneModelLibSvm.java
+    model-family switch): returns (stages, estimator). 'gbt' assembles
+    ``cols`` into ``features`` for a GBTClassifier (seed 42); 'linear'
+    assembles them into ``raw_features``, scales them with the
+    ``normalizer`` stage (:func:`make_scaler_stage`) and feeds
+    :func:`linear_classifier`. Callers set fixed params on the
+    estimator or grid over it."""
+    from pyspark.ml.classification import GBTClassifier
+    from pyspark.ml.feature import VectorAssembler
+
+    check_model_family(family)
+    if family == "gbt":
+        est = GBTClassifier(labelCol="label", featuresCol="features", seed=42)
+        assembler = VectorAssembler(inputCols=list(cols), outputCol="features")
+        return [assembler, est], est
+    est = linear_classifier(labelCol="label", featuresCol="features")
+    assembler = VectorAssembler(inputCols=list(cols), outputCol="raw_features")
+    return [assembler, make_scaler_stage(normalizer), est], est
+
+
 def train_gbt_scorer(labeled_feat: DataFrame, max_iter: int = 30):
     """Fit a GBTClassifier on (features…, is_match). Returns the fitted
     pipeline model; scoring via :func:`gbt_score`."""
     from pyspark.ml import Pipeline
-    from pyspark.ml.classification import GBTClassifier
-    from pyspark.ml.feature import VectorAssembler
 
-    assembler = VectorAssembler(inputCols=FEATURE_COLS, outputCol="features")
-    gbt = GBTClassifier(
-        labelCol="label", featuresCol="features", maxIter=max_iter,
-        maxDepth=4, seed=42,
-    )
-    train = labeled_feat.withColumn("label", F.col("is_match").cast("double"))
-    return Pipeline(stages=[assembler, gbt]).fit(train)
+    stages, gbt = scorer_stages("gbt", FEATURE_COLS)
+    gbt.setParams(maxIter=max_iter, maxDepth=4)
+    return Pipeline(stages=stages).fit(with_label(labeled_feat))
 
 
 def make_scaler_stage(normalizer: str):
@@ -180,13 +209,13 @@ def make_scaler_stage(normalizer: str):
 def linear_classifier(**params):
     """``LogisticRegression(**params)`` whose fitted models carry no
     training summary — the one estimator every in-session linear fit
-    goes through (``train_linear_scorer`` and the tune grid in
-    ``model_io``). Spark 4.1's summary holds the SparkSession, whose
-    ``observationManager`` is not transient, so once any Observation
-    has run in the session (the ER pipeline's counts) transforming with
-    a summary-bearing model fails with ``NotSerializableException:
-    ObservationManager``. Nothing here reads ``.summary``. Works under
-    ``Pipeline.fit``, ``CrossValidator`` and save/load."""
+    goes through (built only by :func:`scorer_stages`). Spark 4.1's
+    summary holds the SparkSession, whose ``observationManager`` is not
+    transient, so once any Observation has run in the session (the ER
+    pipeline's counts) transforming with a summary-bearing model fails
+    with ``NotSerializableException: ObservationManager``. Nothing here
+    reads ``.summary``. Works under ``Pipeline.fit``, ``CrossValidator``
+    and save/load."""
     from pyspark.ml.classification import LogisticRegression
 
     class _SummaryFreeLR(LogisticRegression):
@@ -211,16 +240,10 @@ def train_linear_scorer(labeled_feat: DataFrame, normalizer: str = "zscore"):
     ScaleFeatureNormalizer.java:62-66. Score via :func:`gbt_score`
     (probability column, same contract)."""
     from pyspark.ml import Pipeline
-    from pyspark.ml.feature import VectorAssembler
 
-    assembler = VectorAssembler(inputCols=FEATURE_COLS, outputCol="raw_features")
-    scaler = make_scaler_stage(normalizer)
-    lr = linear_classifier(
-        labelCol="label", featuresCol="features", regParam=0.01,
-        elasticNetParam=0.0, maxIter=100,
-    )
-    train = labeled_feat.withColumn("label", F.col("is_match").cast("double"))
-    return Pipeline(stages=[assembler, scaler, lr]).fit(train)
+    stages, lr = scorer_stages("linear", FEATURE_COLS, normalizer)
+    lr.setParams(regParam=0.01, elasticNetParam=0.0, maxIter=100)
+    return Pipeline(stages=stages).fit(with_label(labeled_feat))
 
 
 def gbt_score(model, pairs_feat: DataFrame) -> DataFrame:

@@ -27,6 +27,7 @@ from smaph_spark.operators.normalize import minhash_signature
 from smaph_spark.operators.pairs import (
     attach_sides, block_pairs, minhash_agreement,
 )
+from smaph_spark.ops.sampling import MD5_PREFIX_INT_SQL, hash_bucket
 from smaph_spark.plans.star_queries import WS_RE, load, register, widen
 from smaph_spark.session import checkpoint
 
@@ -565,11 +566,9 @@ def incremental_new_texts(history: DataFrame, batch: DataFrame) -> DataFrame:
 
 @register(
     "dd07_incremental_new_docs",
-    """
+    f"""
     WITH bucketed AS (
-      SELECT doc_id, text,
-             CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))
-                  AS BIGINT) % 10 AS b
+      SELECT doc_id, text, {MD5_PREFIX_INT_SQL} % 10 AS b
       FROM documents),
     h AS (SELECT DISTINCT md5(text) AS m FROM bucketed WHERE b < 8),
     batch AS (SELECT doc_id, md5(text) AS text_md5
@@ -584,8 +583,6 @@ def incremental_new_texts(history: DataFrame, batch: DataFrame) -> DataFrame:
 def dd_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver recast: the ds01 hash split plays history (80%) vs
     incoming batch (20%) over the same documents table."""
-    from smaph_spark.ops.sampling import hash_bucket
-
     d = load(spark, sf_dir, "documents").withColumn(
         "b", hash_bucket(F.col("doc_id"), 10)
     )

@@ -29,6 +29,13 @@ def md5_prefix_int(col) -> F.Column:
     ).cast("long")
 
 
+#: :func:`md5_prefix_int` of ``doc_id`` in DuckDB SQL — the one spelling
+#: the SQL twins (ds01, ds02, ``DS04_SQL``, dd07) are built from
+MD5_PREFIX_INT_SQL = (
+    "CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)"
+)
+
+
 def hash_bucket(col, n_buckets: int = 10):
     """Engine-portable deterministic bucket in [0, n_buckets) — see
     :func:`md5_prefix_int` for the digest recipe and why md5."""
@@ -49,14 +56,12 @@ def deterministic_split(df: DataFrame, id_col: str) -> DataFrame:
 
 @register(
     "ds01_train_val_test_split",
-    """
+    f"""
     SELECT doc_id, b AS bucket,
            CASE WHEN b < 8 THEN 'train'
                 WHEN b < 9 THEN 'val'
                 ELSE 'test' END AS split
-    FROM (SELECT doc_id,
-                 CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))
-                      AS BIGINT) % 10 AS b
+    FROM (SELECT doc_id, {MD5_PREFIX_INT_SQL} % 10 AS b
           FROM documents)
     """,
     survey_ref="deterministic hash split (beyond-reference training-data "
@@ -162,11 +167,9 @@ def ds_temporal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ds02_stratified_sample",
-    """
+    f"""
     SELECT doc_id, lang FROM (
-      SELECT doc_id, lang,
-             CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))
-                  AS BIGINT) % 100 AS b,
+      SELECT doc_id, lang, {MD5_PREFIX_INT_SQL} % 100 AS b,
              CASE lang WHEN 'en' THEN 50 WHEN 'de' THEN 20 ELSE 10 END
                AS keep_below
       FROM documents)
@@ -235,13 +238,12 @@ def weighted_sample(
 
 
 #: DuckDB twin (pytest-pinned — driver window full; same ln(u)/w key)
-DS04_SQL = """
+DS04_SQL = f"""
     SELECT lang, doc_id, n_chars, sample_rank FROM (
       SELECT lang, doc_id, n_chars,
              ROW_NUMBER() OVER (
                PARTITION BY lang
-               ORDER BY ln((CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))
-                                 AS BIGINT) + 1.0) / 4294967297.0)
+               ORDER BY ln(({MD5_PREFIX_INT_SQL} + 1.0) / 4294967297.0)
                         / CAST(n_chars AS DOUBLE) DESC,
                         doc_id) AS sample_rank
       FROM documents WHERE n_chars > 0)

@@ -37,6 +37,9 @@ _COMMENT = {"py": "#", "java": "//", "js": "//", "go": "//", "md": ">"}
 #: lines per seed file and mutations per planted duplicate
 _N_LINES, _MUTATION_STRENGTH = 30, 3
 
+#: one row of ``_gen_cluster_rows``, the columns of both generators
+_CORPUS_COLS = ["repo", "path", "commit", "lang", "content", "cluster_idx"]
+
 
 def _ident(rng: np.random.Generator) -> str:
     return "_".join(rng.choice(_WORDS, size=2, replace=True))
@@ -141,10 +144,7 @@ def generate_files_corpus_spark(
                         singleton_fraction, hot_path_fraction=0.05,
                     )
                 )
-            yield pd.DataFrame(
-                rows,
-                columns=["repo", "path", "commit", "lang", "content", "cluster_idx"],
-            )
+            yield pd.DataFrame(rows, columns=_CORPUS_COLS)
 
     cpus = spark.sparkContext.defaultParallelism
     return (
@@ -166,42 +166,32 @@ def generate_files_corpus(
 ) -> tuple[pd.DataFrame, pd.DataFrame, pd.DataFrame]:
     """Returns (files, labeled_pairs, clusters_gold) pandas frames.
 
+    Each cluster is ``_gen_cluster_rows(seed, ci, ...)``, so files
+    joined to clusters_gold are the rows ``generate_files_corpus_spark``
+    yields for the same seed and ``singleton_fraction`` (its hot-path
+    fraction is this default, 0.05).
+
     files: repo, path, commit, lang, content  (+ record_id, cluster id
     live only in clusters_gold — derived ids use the same recipe as the
     Spark side: xxhash64 is applied later; here we key gold by
-    (repo,path,commit) and join on the Spark side).
+    (repo,path,commit) and join on the Spark side). The hard-negative
+    sample of labeled_pairs draws from its own ``(seed, n_clusters)``
+    stream.
     """
-    rng = np.random.default_rng(seed)
-    rows = []
-    gold = []  # (repo, path, commit, cluster_idx)
-    cluster_sizes = []
-    for ci in range(n_clusters):
-        if rng.random() < singleton_fraction:
-            size = 1
-        else:
-            # Zipf-ish heavy tail, capped
-            size = min(2 + int(rng.zipf(2.2)), 24)
-        cluster_sizes.append(size)
-        lang = _LANGS[int(rng.integers(0, len(_LANGS)))]
-        base = _base_content(rng, lang, _N_LINES)
-        stem = _ident(rng)
-        hot = rng.random() < hot_path_fraction
-        for m in range(size):
-            repo = f"org{int(rng.integers(0, 50))}/proj{int(rng.integers(0, 200))}"
-            if hot:
-                path = _HOT_PATHS[int(rng.integers(0, len(_HOT_PATHS)))]
-            else:
-                sub = ["src", "lib", "core", "util"][int(rng.integers(0, 4))]
-                path = f"{sub}/{stem}.{lang}"
-            commit = hashlib.sha1(f"{seed}:{ci}:{m}".encode()).hexdigest()
-            content = "\n".join(
-                base if m == 0 else _mutate(rng, base, lang, _MUTATION_STRENGTH)
+    corpus = pd.DataFrame(
+        [
+            row
+            for ci in range(n_clusters)
+            for row in _gen_cluster_rows(
+                seed, ci, _N_LINES, _MUTATION_STRENGTH,
+                singleton_fraction, hot_path_fraction,
             )
-            rows.append((repo, path, commit, lang, content))
-            gold.append((repo, path, commit, ci))
-
-    files = pd.DataFrame(rows, columns=["repo", "path", "commit", "lang", "content"])
-    gold_df = pd.DataFrame(gold, columns=["repo", "path", "commit", "cluster_idx"])
+        ],
+        columns=_CORPUS_COLS,
+    )
+    files = corpus.drop(columns="cluster_idx")
+    gold_df = corpus.drop(columns=["lang", "content"])
+    gold = list(gold_df.itertuples(index=False, name=None))
 
     # labeled pairs: all intra-cluster positives + hard negatives
     # (same-path different-cluster pairs, i.e. what blocking will co-block)
@@ -213,6 +203,7 @@ def generate_files_corpus(
         for i, j in itertools.combinations(members, 2):
             pos.append((i, j, True))
 
+    rng = np.random.default_rng([seed, n_clusters])
     neg = []
     by_path: dict[str, list[int]] = {}
     for idx, (_, path, _, _) in enumerate(gold):
@@ -231,16 +222,8 @@ def generate_files_corpus(
             cand = [cand[k] for k in sel]
         neg.extend((i, j, False) for i, j in cand)
 
-    def key(idx: int) -> tuple[str, str, str]:
-        r = gold[idx]
-        return (r[0], r[1], r[2])
-
-    pair_rows = []
-    for i, j, is_match in pos + neg:
-        li, ri = key(i), key(j)
-        pair_rows.append(li + ri + (is_match,))
     labeled = pd.DataFrame(
-        pair_rows,
+        [gold[i][:3] + gold[j][:3] + (m,) for i, j, m in pos + neg],
         columns=[
             "l_repo", "l_path", "l_commit",
             "r_repo", "r_path", "r_commit", "is_match",

@@ -10,7 +10,6 @@ import itertools
 import re
 import struct
 import zlib
-from collections import Counter
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -83,18 +82,19 @@ def reference_components(edges, records) -> dict:
 
 def reference_confusion(predicted, gold) -> tuple[int, int, int]:
     """(tp, fp, fn) of ``(key, is_match)`` rows, by the full-outer-join
-    multiset rule the pair metrics use: predicted rows with a false
-    is_match are dropped; a key on both sides yields one (gold, True)
-    row per combination, a key on one side one row per row with the
-    other side False; a NULL gold label counts as False."""
-    pred = Counter(k for k, m in predicted if m)
+    rule the pair metrics use: predicted rows with a false is_match are
+    dropped and each predicted key counts once; a key on both sides
+    yields one (gold, True) row per gold row, a key on one side one row
+    per row with the other side False; a NULL gold label counts as
+    False."""
+    pred = {k for k, m in predicted if m}
     gold_by: dict = {}
     for k, m in gold:
         gold_by.setdefault(k, []).append(bool(m))
     tp = fp = fn = 0
-    for k in set(pred) | set(gold_by):
-        for g, p in itertools.product(gold_by.get(k, [False]),
-                                      [True] * pred[k] or [False]):
+    for k in pred | set(gold_by):
+        p = k in pred
+        for g in gold_by.get(k, [False]):
             tp += g and p
             fp += p and not g
             fn += g and not p

@@ -331,17 +331,6 @@ def test_jaro_winkler_batch_mixed():
     np.testing.assert_allclose(got, want, atol=1e-12)
 
 
-def test_shingles_jaccard():
-    a = K.shingles("the quick brown fox", 5)
-    b = K.shingles("the quick brown fox", 5)
-    assert a == b
-    assert K.jaccard(a, b) == 1.0
-    c = K.shingles("a completely different text", 5)
-    assert K.jaccard(a, c) < 0.2
-    assert K.jaccard(set(), set()) == 1.0
-    assert K.jaccard(a, set()) == 0.0
-
-
 # --- X15: getBoldsEDCapitalizedWordcount (EntityFeaturePack.java:274-291) --
 def test_bolds_ed_capitalized_wordcount_goldens():
     """Hand-derived from the Java source (no committed reference test

@@ -75,6 +75,23 @@ def test_perfect_prediction_zero_std(spark):
     assert m["bootstrap_std"]["macro"]["f1"] == 0.0
 
 
+def test_pair_predicted_twice_counts_once(spark):
+    """A repeated prediction is one prediction: gold {(1,2), (3,4)} with
+    (1,2) predicted twice has recall 1/2, not the per-copy 2/3."""
+    gold = spark.createDataFrame(
+        [("A", 1, 2, True), ("A", 3, 4, True)],
+        "g string, left_id long, right_id long, is_match boolean",
+    )
+    pred = spark.createDataFrame(
+        [("A", 1, 2), ("A", 1, 2)], "g string, left_id long, right_id long"
+    )
+    flat = pairwise_prf(pred.drop("g"), gold.drop("g"))
+    assert (flat["tp"], flat["fp"], flat["fn"]) == (1, 0, 1)
+    assert flat["recall"] == 0.5 and flat["precision"] == 1.0
+    grouped = grouped_prf(pred, gold, "g", n_bootstrap=0)
+    assert (grouped["tp"], grouped["fp"], grouped["fn"]) == (1, 0, 1)
+
+
 def test_grouped_prf_caps_driver_collect(spark):
     """Above max_groups the driver-side bootstrap runs on a
     deterministic hash-sample of groups, with a warning — never an

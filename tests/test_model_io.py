@@ -110,6 +110,19 @@ def test_train_default_scorer_untuned(spark):
     assert report == {"tuned": False}
 
 
+def test_train_default_scorer_rejects_unknown_family(spark, monkeypatch):
+    """A misspelt model_family raises before any corpus or feature is
+    built, instead of silently training a GBT."""
+    from smaph_spark.sources import synthetic
+
+    def never(*a, **k):
+        raise AssertionError("no corpus may be generated")
+
+    monkeypatch.setattr(synthetic, "generate_files_corpus", never)
+    with pytest.raises(ValueError, match="unknown model_family 'lienar'"):
+        train_default_scorer(spark, n_clusters=10, model_family="lienar")
+
+
 def test_libsvm_dump_format(spark, tmp_path):
     """M6 (ExampleGatherer.dumpExamplesLibSvm:276-309): gold %.5f, then
     1-indexed `i:%.9f` features, ` #id=<group>`, lines sorted within a

@@ -247,20 +247,19 @@ def test_one_checkpoint_helper():
     assert ".count()" not in (root / "ops" / "similarity.py").read_text()
 
 
-def test_one_home_per_signature_recipe():
-    """Each signature recipe has one definition: only
-    normalize.minhash_signature builds the MinHash UDF, and only
-    blocking.bit_band_keys cuts a long signature into bit bands."""
+def _call_sites(*names) -> dict:
+    """{name: the functions under smaph_spark/ that call ``name(``},
+    each call credited to its innermost enclosing function as
+    ``module.function``."""
     import ast
     import pathlib
 
     import smaph_spark
 
     root = pathlib.Path(smaph_spark.__file__).parent
-    sites = {"make_minhash_udf": set(), "shiftrightunsigned": set()}
+    sites = {n: set() for n in names}
 
     def visit(node, where):
-        # each call is credited to its innermost enclosing function
         for child in ast.iter_child_nodes(node):
             if isinstance(child, ast.FunctionDef):
                 visit(child, f"{where.split('.')[0]}.{child.name}")
@@ -274,9 +273,27 @@ def test_one_home_per_signature_recipe():
 
     for p in root.rglob("*.py"):
         visit(ast.parse(p.read_text()), p.stem)
+    return sites
+
+
+def test_one_home_per_signature_recipe():
+    """Each signature recipe has one definition: only
+    normalize.minhash_signature builds the MinHash UDF, and only
+    blocking.bit_band_keys cuts a long signature into bit bands."""
+    sites = _call_sites("make_minhash_udf", "shiftrightunsigned")
     assert sites == {
         "make_minhash_udf": {"normalize.minhash_signature"},
         "shiftrightunsigned": {"blocking.bit_band_keys"},
+    }, sites
+
+
+def test_one_home_per_estimator_recipe():
+    """Every scorer fit (the two single fits and both tune families)
+    gets its assembler and estimator from scoring.scorer_stages."""
+    sites = _call_sites("VectorAssembler", "GBTClassifier", "linear_classifier")
+    assert sites == {
+        name: {"scoring.scorer_stages"}
+        for name in ("VectorAssembler", "GBTClassifier", "linear_classifier")
     }, sites
 
 
@@ -317,7 +334,8 @@ def test_one_home_per_twin_recipe():
     """The DuckDB token-band graph has one definition: er_docs.py spells
     one recursive CTE and one band predicate, built from _BAND_DELTA,
     which every twin reads; metrics.py has one pair confusion join and
-    one clusters x gold join."""
+    one clusters x gold join; the md5-prefix integer has one DuckDB
+    spelling, beside sampling.md5_prefix_int."""
     import pathlib
 
     from smaph_spark.operators import metrics
@@ -332,3 +350,15 @@ def test_one_home_per_twin_recipe():
     msrc = pathlib.Path(metrics.__file__).read_text()
     assert msrc.count('"full_outer"') == 1
     assert msrc.count('gold_clusters.alias("g")') == 1
+    # the md5-prefix integer has one DuckDB spelling, which each of its
+    # four SQL twins is built from
+    from smaph_spark.ops.sampling import DS04_SQL, MD5_PREFIX_INT_SQL
+
+    root = pathlib.Path(metrics.__file__).parents[1]
+    assert sum(
+        p.read_text().count("substr(md5(") for p in root.rglob("*.py")
+    ) == 1
+    for sql in (QUERIES["ds01_train_val_test_split"].sql,
+                QUERIES["ds02_stratified_sample"].sql,
+                QUERIES["dd07_incremental_new_docs"].sql, DS04_SQL):
+        assert sql.count(MD5_PREFIX_INT_SQL) == 1

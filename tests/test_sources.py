@@ -2,8 +2,15 @@
 (S6 TSV ETL shape), JSON sink + scan (S10 NIF/JSON result sink), and
 parquet roundtrip with partition pruning."""
 
+from collections import Counter
+
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from smaph_spark.sources.synthetic import (
+    generate_files_corpus, generate_files_corpus_spark,
+)
 
 
 def test_csv_tsv_roundtrip_grouped_etl(spark, tmp_path):
@@ -177,3 +184,16 @@ def test_csv_ingest_quarantines_bad_lines(spark, tmp_path):
     assert bad.count() == 1
     # the parsed feed is a checkpoint: nothing cached to release
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+@pytest.mark.parametrize("seed, n_clusters", [(3, 10), (42, 150)])
+def test_pandas_and_spark_corpora_agree(spark, seed, n_clusters):
+    """Both synthetic generators build each cluster with one recipe, so
+    the pandas files joined to clusters_gold are, as a multiset, the
+    rows the Spark generator yields for the same seed."""
+    files, _, gold = generate_files_corpus(n_clusters=n_clusters, seed=seed)
+    joined = files.merge(gold, on=["repo", "path", "commit"])
+    got = Counter(joined.itertuples(index=False, name=None))
+    sdf = generate_files_corpus_spark(spark, n_clusters, seed=seed)
+    want = Counter(tuple(r) for r in sdf.select(*joined.columns).collect())
+    assert got == want
