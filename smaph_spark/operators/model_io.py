@@ -173,10 +173,10 @@ def tune_gbt_scorer(
     report = {"subsets": [], "model_family": model_family}
     for cols in subsets:
         stages, est = scorer_stages(model_family, cols, normalizer)
-        builder = ParamGridBuilder()
+        pgrid = ParamGridBuilder()
         for name, values in axes[model_family].items():
-            builder.addGrid(est.getParam(name), values)
-        grid = builder.build()
+            pgrid.addGrid(est.getParam(name), values)
+        grid = pgrid.build()
         cv = CrossValidator(
             estimator=Pipeline(stages=stages),
             estimatorParamMaps=grid,
